@@ -17,12 +17,10 @@ Pipeline.process (layout-on path, /root/reference/glmocr/pipeline/pipeline.py:28
   -> ResultFormatter semantics (T/J/A ops)    result_formatter.py:135-212
 
 Per-turn work is pure and independent: the Spark layer runs this inside
-mapInPandas with zero shuffle.
+mapInArrow with zero shuffle.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 from glm_ocr_spark.config import (
     LABEL2ID,
@@ -38,10 +36,8 @@ from glm_ocr_spark.kernel import geometry_py as gpy
 from glm_ocr_spark.kernel.formatter import (
     finalize_page,
     format_bullet_points,
-    format_page,
     merge_formula_numbers,
     merge_text_blocks,
-    serialize_page,
 )
 from glm_ocr_spark.kernel.textproc import format_content, map_label
 from glm_ocr_spark.kernel.recognize import recognize
@@ -50,7 +46,7 @@ from glm_ocr_spark.kernel.segment import segment, segment_rows
 _IMAGE_CLS_ID = LABEL2ID["image"]
 id2label = {v: k for k, v in LABEL2ID.items()}
 
-# dense per-class lookup tables for the fused default path (cls ids are
+# dense per-class lookup tables for the region build (cls ids are
 # 0..len-1 by construction in config.LABEL2ID)
 _N_CLS = max(LABEL2ID.values()) + 1
 _TASK_BY_CLS = [None] * _N_CLS
@@ -149,204 +145,116 @@ def extract_turn(payload: str | None, *, segmenter=None,
     BaseLayoutDetector ABC glmocr/layout/base.py:13-52, custom
     ResultFormatter/BasePostProcessor README.md:292-309, task prompt
     dispatch config.yaml:124-133):
-      segmenter(payload) -> (page_w, page_h, [Block])  — detector override
+      segmenter(payload) -> (page_w, page_h, rows, spans, has_order)
+          detector override; rows = [(cls_id, score, x1, y1, x2, y2,
+          order)], spans the parallel (start, end) char offsets, has_order
+          False to order by XY-cut
       recognizer(payload, span, task_type) -> str|None — per-task content
-      formatter(regions) -> regions                    — post-process override
+      formatter(regions) -> regions — post-process hook over the final
+          formatted regions (index, label, native_label, content, bbox_2d,
+          span), run before serialization
     Defaults reproduce GLM-OCR semantics; overrides swap one stage without
     touching the distributed plumbing.
     """
     if not payload:
         return dict(_EMPTY)
 
-    fast = segment_rows(payload) if segmenter is None else None
-    if fast is not None:
-        # ---- tuple fast path: rows/spans straight from the one-pass
-        # parser, F1 threshold filter applied in place ----
-        page_w, page_h, rows, spans, has_order = fast
-        if not rows:
+    if segmenter is None:
+        page_w, page_h, rows, spans, has_order = (
+            segment_rows(payload) or segment(payload))
+    else:
+        page_w, page_h, rows, spans, has_order = segmenter(payload)
+    if not rows:
+        return dict(_EMPTY)
+
+    # ---- F1: score threshold (global + per-class), applied in place ----
+    thr_by_class = config.score_threshold_by_class
+    thr = config.score_threshold
+    if thr_by_class:
+        idx = [i for i, r in enumerate(rows)
+               if r[1] >= thr_by_class.get(r[0], thr)]
+        if not idx:
             return dict(_EMPTY)
-        thr_by_class = config.score_threshold_by_class
-        thr = config.score_threshold
-        if thr_by_class:
-            idx = [i for i, r in enumerate(rows)
-                   if r[1] >= thr_by_class.get(r[0], thr)]
-            if not idx:
-                return dict(_EMPTY)
-            if len(idx) != len(rows):
-                rows = [rows[i] for i in idx]
-                spans = [spans[i] for i in idx]
-        elif not all(r[1] >= thr for r in rows):
-            # the all-pass common case costs one scan, no index list
-            idx = [i for i, r in enumerate(rows) if r[1] >= thr]
-            if not idx:
-                return dict(_EMPTY)
+        if len(idx) != len(rows):
             rows = [rows[i] for i in idx]
             spans = [spans[i] for i in idx]
-    else:
-        page_w, page_h, blocks = (segmenter or segment)(payload)
-        if not blocks:
+    elif not all(r[1] >= thr for r in rows):
+        # the all-pass common case costs one scan, no index list
+        idx = [i for i, r in enumerate(rows) if r[1] >= thr]
+        if not idx:
             return dict(_EMPTY)
+        rows = [rows[i] for i in idx]
+        spans = [spans[i] for i in idx]
 
-        # ---- F1: score threshold (global + per-class) ----
-        thr_by_class = config.score_threshold_by_class
-        kept = [
-            b for b in blocks
-            if b.score >= thr_by_class.get(b.cls_id, config.score_threshold)
-        ]
-        if not kept:
-            return dict(_EMPTY)
-
-        has_order = all(b.order is not None for b in kept)
-        spans = [b.span for b in kept]
-        rows = [
-            (float(b.cls_id), float(b.score), float(b.bbox[0]),
-             float(b.bbox[1]), float(b.bbox[2]), float(b.bbox[3]),
-             float(b.order if b.order is not None else 0))
-            for b in kept
-        ]
-
-    if len(rows) <= gpy.SMALL_N:
-        # ---- pure-Python small-n path (numpy per-call overhead dominates
-        # at typical page block counts; identical IEEE-double semantics,
-        # equivalence enforced by tests/test_geometry_paths.py): the whole
-        # NMS -> filters -> order -> clamp chain fused in one index-based
-        # pass ----
-        survivors = gpy.survivors_small(rows, spans, config, _IMAGE_CLS_ID,
-                                        page_w, page_h, has_order)
-    else:
-        # ---- vectorized path for pathological block counts ----
-        arr = np.array(rows, dtype=np.float64)
-
-        def _take(idx) -> None:
-            nonlocal arr, spans
-            arr = arr[idx]
-            spans = [spans[int(i)] for i in idx]
-
-        if config.nms_enabled:
-            _take(geo.nms(arr))
-        _take(geo.filter_oversized_images(arr, _IMAGE_CLS_ID, page_w, page_h))
-        _take(geo.apply_merge_modes(arr, config.merge_modes,
-                                    config.preserve_ids))
-        if len(arr) == 0:
-            return dict(_EMPTY)
-        if has_order:
-            _take(np.argsort(arr[:, geo.ORDER], kind="stable"))
-        else:
-            _take(geo.xy_cut_order(arr[:, geo.X1:geo.Y2 + 1]))
-        arr = geo.unclip(arr, config.unclip_ratio)
-        arr, keep = geo.clamp_and_validate(arr, page_w, page_h)
-        _take(keep)
-        survivors = [
-            (int(arr[i, geo.CLS]), float(arr[i, geo.SCORE]),
-             float(arr[i, geo.X1]), float(arr[i, geo.Y1]),
-             float(arr[i, geo.X2]), float(arr[i, geo.Y2]), spans[i])
-            for i in range(len(arr))
-        ]
-
+    # ---- geometry: the fused pure-Python chain at typical block counts
+    # (numpy's per-call overhead dominates there), the vectorized chain on
+    # dense pages; identical IEEE-double semantics, equivalence enforced by
+    # tests/test_geometry_paths.py ----
+    geometry = (gpy.survivors_small if len(rows) <= gpy.SMALL_N
+                else geo.survivors_numpy)
+    survivors = geometry(rows, spans, config, _IMAGE_CLS_ID,
+                         page_w, page_h, has_order)
     if not survivors:
         return dict(_EMPTY)
 
+    # ---- task mapping + abandon drop + 0-1000 normalize + recognition
+    # (F7: skip -> None) + ResultFormatter's per-region body in ONE pass,
+    # regions built directly in their final shape (no dict copies, no
+    # re-sort — survivors are already in reading order and indices dense
+    # by construction). The three sequence merges are gated on flags
+    # computed during the pass; each gate is exact: gate False implies the
+    # merge function is the identity. Parity with the oracle is enforced
+    # by tests/test_extract_vs_oracle.py and
+    # tests/test_fuzz_kernel_vs_oracle.py. ----
     rec = recognizer or recognize
-    if formatter is None:
-        # ---- fused default path: task mapping + abandon drop + 0-1000
-        # normalize + recognition + the format_page per-region body in ONE
-        # pass, regions built directly in their final shape (no dict
-        # copies, no re-sort — survivors are already in reading order and
-        # indices dense by construction). The three sequence merges are
-        # gated on flags computed during the pass; each gate is exact:
-        # gate False implies the merge function is the identity (empty
-        # serialize matches _EMPTY byte-for-byte, so no special-casing).
-        # Semantics identical to the formatter branch below — enforced by
-        # the oracle gate + tests/test_fuzz_kernel_vs_oracle.py. ----
-        task_by_cls = _TASK_BY_CLS
-        vis_by_cls = _VIS_BY_CLS
-        nat_by_cls = id2label
-        page: list[dict] = []
-        has_fnum = has_hyphen = has_bullet = False
-        vi = 0
-        for cls_id, score, x1, y1, x2, y2, span in survivors:
-            task_type = task_by_cls[cls_id]
-            if task_type is None or task_type == "abandon":
+    task_by_cls = _TASK_BY_CLS
+    vis_by_cls = _VIS_BY_CLS
+    nat_by_cls = id2label
+    page: list[dict] = []
+    has_fnum = has_hyphen = has_bullet = False
+    vi = 0
+    for cls_id, score, x1, y1, x2, y2, span in survivors:
+        task_type = task_by_cls[cls_id]
+        if task_type is None or task_type == "abandon":
+            continue
+        native = nat_by_cls[cls_id]
+        label = vis_by_cls[cls_id]
+        content = format_content(rec(payload, span, task_type),
+                                 label, native)
+        if content is not None:
+            if content.strip() == "":
                 continue
-            native = nat_by_cls[cls_id]
-            label = vis_by_cls[cls_id]
-            content = format_content(rec(payload, span, task_type),
-                                     label, native)
-            if content is not None:
-                if content.strip() == "":
-                    continue
-                if label == "text":
-                    if content.endswith("-"):
-                        has_hyphen = True
-                if native == "text" and content.startswith("- "):
-                    has_bullet = True
-            if native == "formula_number":
-                has_fnum = True
-            page.append({
-                "index": vi,
-                "label": label,
-                "native_label": native,
-                "content": content,
-                "bbox_2d": [
-                    int(x1 / page_w * 1000),
-                    int(y1 / page_h * 1000),
-                    int(x2 / page_w * 1000),
-                    int(y2 / page_h * 1000),
-                ],
-                "span": span,
-            })
-            vi += 1
-        if has_fnum:
-            page = merge_formula_numbers(page)
-        if has_hyphen:
-            page = merge_text_blocks(page)
-        if has_bullet and len(page) >= 3:
-            page = format_bullet_points(page)
-    else:
-        # ---- pluggable-formatter path (extension surface) ----
-        regions: list[dict] = []
-        valid_index = 0
-        for cls_id, score, x1, y1, x2, y2, span in survivors:
-            label = id2label[cls_id]
-            task_type = LABEL_TO_TASK.get(label)
-            if task_type is None or task_type == "abandon":
-                continue
-            bbox_norm = [
+            if label == "text":
+                if content.endswith("-"):
+                    has_hyphen = True
+            if native == "text" and content.startswith("- "):
+                has_bullet = True
+        if native == "formula_number":
+            has_fnum = True
+        page.append({
+            "index": vi,
+            "label": label,
+            "native_label": native,
+            "content": content,
+            "bbox_2d": [
                 int(x1 / page_w * 1000),
                 int(y1 / page_h * 1000),
                 int(x2 / page_w * 1000),
                 int(y2 / page_h * 1000),
-            ]
-            regions.append({
-                "index": valid_index,
-                "label": label,
-                "score": score,
-                "bbox_2d": bbox_norm,
-                "task_type": task_type,
-                "span": span,
-            })
-            valid_index += 1
-        if not regions:
-            return dict(_EMPTY)
+            ],
+            "span": span,
+        })
+        vi += 1
+    if has_fnum:
+        page = merge_formula_numbers(page)
+    if has_hyphen:
+        page = merge_text_blocks(page)
+    if has_bullet and len(page) >= 3:
+        page = format_bullet_points(page)
+    if formatter is not None:
+        page = formatter(page)
 
-        # ---- recognition (F7: skip -> None) ----
-        for r in regions:
-            r["content"] = rec(payload, r["span"], r["task_type"])
-
-        page = formatter(regions)
-
-    if formatter is None:
-        json_str, markdown_str, extracted_text, out_spans = \
-            finalize_page(page)
-    else:
-        json_str, markdown_str = serialize_page(page)
-        extracted_text = "\n\n".join(
-            r["content"] for r in page
-            if r.get("label") != "image" and r.get("content")
-        )
-        out_spans = [
-            (int(r["span"][0]), int(r["span"][1]), r["label"]) for r in page
-        ]
+    json_str, markdown_str, extracted_text, out_spans = finalize_page(page)
     return {
         "extracted_text": extracted_text,
         "markdown": markdown_str,

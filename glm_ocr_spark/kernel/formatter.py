@@ -1,4 +1,5 @@
-"""Result formatting: per-page region list -> (json_str, markdown_str).
+"""Result formatting: per-page region list -> sequence merges, then
+(json_str, markdown_str, extracted_text, spans).
 
 Behavioral parity with ResultFormatter
 (/root/reference/glmocr/postprocess/result_formatter.py):
@@ -21,11 +22,7 @@ from glm_ocr_spark.config import (
     BULLET_LEFT_ALIGN_THRESHOLD,
     HYPHEN_MERGE_ZIPF_THRESHOLD,
 )
-from glm_ocr_spark.kernel.textproc import (
-    clean_formula_number,
-    format_content,
-    map_label,
-)
+from glm_ocr_spark.kernel.textproc import clean_formula_number
 from glm_ocr_spark.wordfreq_snapshot import zipf_frequency
 
 
@@ -165,58 +162,24 @@ def format_bullet_points(regions: list[dict],
     return regions
 
 
-def format_page(regions: list[dict]) -> list[dict]:
-    """Format one page's regions (the per-page body of
-    result_formatter.py:147-191): sort by index, map labels, format content,
-    drop empties, reindex, then the three sequence merges."""
-    regions = sorted(regions, key=lambda r: r.get("index", 0))
-    out: list[dict] = []
-    valid_idx = 0
-    for item in regions:
-        r = dict(item)
-        r["native_label"] = r.get("label", "text")
-        r["label"] = map_label(r["label"])
-        r["content"] = format_content(r.get("content"), r["label"],
-                                      r["native_label"])
-        content = r.get("content")
-        if isinstance(content, str) and content.strip() == "":
-            continue
-        r["index"] = valid_idx
-        r.pop("task_type", None)
-        r.pop("score", None)
-        valid_idx += 1
-        out.append(r)
-
-    out = merge_formula_numbers(out)
-    out = merge_text_blocks(out)
-    out = format_bullet_points(out)
-    return out
-
-
-def render_page_markdown(page_regions: list[dict], page_idx: int = 0) -> str:
-    """Markdown for one page: image refs as placeholders, blocks joined
-    '\\n\\n' (result_formatter.py:196-206)."""
-    parts: list[str] = []
-    for r in page_regions:
-        content = r.get("content")
-        if r.get("label") == "image":
-            parts.append(f"![](page={page_idx},bbox={r.get('bbox_2d', [])})")
-        elif content:
-            parts.append(content)
-    return "\n\n".join(parts)
-
-
 _json_esc = json.encoder.encode_basestring  # C impl; == dumps(ensure_ascii=False)
 
 
 def finalize_page(page_regions: list[dict]
                   ) -> tuple[str, str, str, list[tuple]]:
-    """(json_str, markdown_str, extracted_text, out_spans) in ONE pass —
-    the default-path fusion of serialize_page + render_page_markdown + the
-    extracted-text join + the span projection (semantics identical to
-    calling them separately; exact-type surprises fall back to those
-    functions). Only extract_turn's default path calls this; the
-    pluggable-formatter path keeps the separate functions."""
+    """(json_str, markdown_str, extracted_text, out_spans) for a one-page
+    unit in ONE pass: the reference's json nesting (list of pages) with
+    ensure_ascii=False (result_formatter.py:208-210), markdown with image
+    refs as placeholders and blocks joined '\\n\\n' (:196-206), the
+    non-image contents joined '\\n\\n', and the (start, end, label) span
+    projection.
+
+    A region's JSON is rendered directly (same separators/escaping as
+    json.dumps with ensure_ascii=False — the string escaper IS the json
+    module's C escaper) when every field has the expected exact type; any
+    surprise (a custom formatter emitting floats, bools, nested values)
+    falls back to json.dumps for that region, byte-identical to dumping the
+    whole page for the conforming case by construction."""
     jparts: list[str] = []
     mdparts: list[str] = []
     tparts: list[str] = []
@@ -226,14 +189,12 @@ def finalize_page(page_regions: list[dict]
         label = r["label"]
         content = r.get("content")
         bbox = r.get("bbox_2d")
-        if type(idx) is not int or type(label) is not str:
-            break
         if content is None:
             cs = "null"
         elif type(content) is str:
             cs = _json_esc(content)
         else:
-            break
+            cs = None
         if bbox is None:
             bs = "null"
         elif (type(bbox) is list and len(bbox) == 4
@@ -241,9 +202,15 @@ def finalize_page(page_regions: list[dict]
               and type(bbox[2]) is int and type(bbox[3]) is int):
             bs = "[%d, %d, %d, %d]" % (bbox[0], bbox[1], bbox[2], bbox[3])
         else:
-            break
-        jparts.append('{"index": %d, "label": %s, "content": %s, '
-                      '"bbox_2d": %s}' % (idx, _json_esc(label), cs, bs))
+            bs = None
+        if (cs is None or bs is None or type(idx) is not int
+                or type(label) is not str):
+            jparts.append(json.dumps(
+                {"index": idx, "label": label, "content": content,
+                 "bbox_2d": bbox}, ensure_ascii=False))
+        else:
+            jparts.append('{"index": %d, "label": %s, "content": %s, '
+                          '"bbox_2d": %s}' % (idx, _json_esc(label), cs, bs))
         if label == "image":
             mdparts.append(f"![](page=0,bbox={r.get('bbox_2d', [])})")
         elif content:
@@ -251,69 +218,5 @@ def finalize_page(page_regions: list[dict]
             tparts.append(content)
         sp = r["span"]
         spans.append((int(sp[0]), int(sp[1]), label))
-    else:
-        return ("[[" + ", ".join(jparts) + "]]", "\n\n".join(mdparts),
-                "\n\n".join(tparts), spans)
-
-    json_str, markdown_str = serialize_page(page_regions)
-    extracted_text = "\n\n".join(
-        r["content"] for r in page_regions
-        if r.get("label") != "image" and r.get("content")
-    )
-    out_spans = [
-        (int(r["span"][0]), int(r["span"][1]), r["label"])
-        for r in page_regions
-    ]
-    return json_str, markdown_str, extracted_text, out_spans
-
-
-def serialize_page(page_regions: list[dict]) -> tuple[str, str]:
-    """(json_str, markdown_str) for a one-page unit, matching the reference's
-    nesting (list of pages) and ensure_ascii=False (result_formatter.py:208-210).
-
-    The JSON is rendered directly (same separators/escaping as json.dumps
-    with ensure_ascii=False — the string escaper IS the json module's C
-    escaper) when every field has the expected exact type; any surprise
-    (custom formatter emitting floats, bools, nested values) falls back to
-    json.dumps over the equivalent public dicts, byte-identical for the
-    conforming case by construction."""
-    parts = []
-    for r in page_regions:
-        idx = r["index"]
-        label = r["label"]
-        content = r.get("content")
-        bbox = r.get("bbox_2d")
-        if type(idx) is not int or type(label) is not str:
-            break
-        if content is None:
-            cs = "null"
-        elif type(content) is str:
-            cs = _json_esc(content)
-        else:
-            break
-        if bbox is None:
-            bs = "null"
-        elif (type(bbox) is list and len(bbox) == 4
-              and type(bbox[0]) is int and type(bbox[1]) is int
-              and type(bbox[2]) is int and type(bbox[3]) is int):
-            bs = "[%d, %d, %d, %d]" % (bbox[0], bbox[1], bbox[2], bbox[3])
-        else:
-            break
-        parts.append('{"index": %d, "label": %s, "content": %s, '
-                     '"bbox_2d": %s}' % (idx, _json_esc(label), cs, bs))
-    else:
-        return ("[[" + ", ".join(parts) + "]]",
-                render_page_markdown(page_regions, 0))
-
-    public = [
-        {
-            "index": r["index"],
-            "label": r["label"],
-            "content": r.get("content"),
-            "bbox_2d": r.get("bbox_2d"),
-        }
-        for r in page_regions
-    ]
-    json_str = json.dumps([public], ensure_ascii=False)
-    markdown_str = render_page_markdown(page_regions, 0)
-    return json_str, markdown_str
+    return ("[[" + ", ".join(jparts) + "]]", "\n\n".join(mdparts),
+            "\n\n".join(tparts), spans)

@@ -174,24 +174,26 @@ def unclip(boxes: np.ndarray,
     """
     if ratio is None or ratio == (1.0, 1.0):
         return boxes
+    if not isinstance(ratio, dict):
+        return _scale_about_center(boxes, ratio)
+    out = boxes.copy()
+    cls = boxes[:, CLS].astype(np.int64)
+    for cid, pair in ratio.items():
+        if pair != (1.0, 1.0):
+            m = cls == cid
+            out[m] = _scale_about_center(boxes[m], pair)
+    return out
+
+
+def _scale_about_center(boxes: np.ndarray,
+                        ratio: tuple[float, float]) -> np.ndarray:
     out = boxes.copy()
     w = boxes[:, X2] - boxes[:, X1]
     h = boxes[:, Y2] - boxes[:, Y1]
     cx = boxes[:, X1] + w / 2
     cy = boxes[:, Y1] + h / 2
-    if isinstance(ratio, dict):
-        cls = boxes[:, CLS].astype(np.int64)
-        rw = np.ones(len(boxes))
-        rh = np.ones(len(boxes))
-        for cid, (wr, hr) in ratio.items():
-            m = cls == cid
-            rw[m] = wr
-            rh[m] = hr
-        nw = w * rw
-        nh = h * rh
-    else:
-        nw = w * ratio[0]
-        nh = h * ratio[1]
+    nw = w * ratio[0]
+    nh = h * ratio[1]
     out[:, X1] = cx - nw / 2
     out[:, Y1] = cy - nh / 2
     out[:, X2] = cx + nw / 2
@@ -272,3 +274,37 @@ def xy_cut_order(boxes: np.ndarray) -> np.ndarray:
         return list(sub[order])
 
     return np.asarray(_rec(idx, 0), dtype=np.int64)
+
+
+def survivors_numpy(rows: list[tuple], spans: list, config,
+                    image_cls_id: int, page_w: float, page_h: float,
+                    has_order: bool) -> list[tuple]:
+    """The geometry chain (NMS -> oversized filter -> merge modes ->
+    reading order -> unclip -> clamp/validate) stage by stage on one
+    (n, 7) array: the dense-page counterpart of geometry_py.survivors_small,
+    same arguments and result, [(cls_id:int, score, x1, y1, x2, y2, span)]
+    with clamped int-truncated float coords in final reading order.
+    Equivalence is enforced by tests/test_geometry_paths.py."""
+    arr = np.array(rows, dtype=np.float64)
+    pos = np.arange(len(arr))
+
+    def take(idx) -> None:
+        nonlocal arr, pos
+        arr = arr[idx]
+        pos = pos[idx]
+
+    if config.nms_enabled:
+        take(nms(arr))
+    take(filter_oversized_images(arr, image_cls_id, page_w, page_h))
+    take(apply_merge_modes(arr, config.merge_modes, config.preserve_ids))
+    if len(arr) == 0:
+        return []
+    if has_order:
+        take(np.argsort(arr[:, ORDER], kind="stable"))
+    else:
+        take(xy_cut_order(arr[:, X1:Y2 + 1]))
+    arr, keep = clamp_and_validate(unclip(arr, config.unclip_ratio),
+                                   page_w, page_h)
+    take(keep)
+    return [(int(r[CLS]), r[SCORE], r[X1], r[Y1], r[X2], r[Y2], spans[i])
+            for r, i in zip(arr.tolist(), pos.tolist())]

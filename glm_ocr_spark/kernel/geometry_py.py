@@ -1,14 +1,15 @@
 """Small-n geometry fast path (pure Python, tuple-based).
 
 Layout pages carry ~5-30 blocks; at that size numpy's per-call overhead
-costs more than the math. This module mirrors glm_ocr_spark.kernel.geometry
+costs more than the math, while on dense pages the vectorized chain wins.
+survivors_small mirrors glm_ocr_spark.kernel.geometry.survivors_numpy
 exactly (same IEEE-double arithmetic, same tie-breaking, same thresholds)
 on parallel tuples instead of arrays; extract_turn dispatches here for
-n <= SMALL_N and to the vectorized path above it. Equivalence between the
+n <= SMALL_N and to the vectorized chain above it. Equivalence between the
 two paths is enforced by a dedicated randomized test
 (tests/test_geometry_paths.py) on top of the kernel-vs-oracle gate.
 
-Row format: tuple (cls_id, score, x1, y1, x2, y2, order) of Python floats.
+Row format: tuple (cls_id, score, x1, y1, x2, y2, order) of Python numbers.
 """
 
 from __future__ import annotations
@@ -22,61 +23,6 @@ from glm_ocr_spark.config import (
 )
 
 SMALL_N = 64
-
-
-def iou(a, b) -> float:
-    """+1-pixel IoU (layout_postprocess_utils.py:7-28 convention)."""
-    ix1 = a[2] if a[2] > b[2] else b[2]
-    iy1 = a[3] if a[3] > b[3] else b[3]
-    ix2 = a[4] if a[4] < b[4] else b[4]
-    iy2 = a[5] if a[5] < b[5] else b[5]
-    iw = ix2 - ix1 + 1
-    ih = iy2 - iy1 + 1
-    if iw <= 0 or ih <= 0:
-        inter = 0.0
-    else:
-        inter = iw * ih
-    a1 = (a[4] - a[2] + 1) * (a[5] - a[3] + 1)
-    a2 = (b[4] - b[2] + 1) * (b[5] - b[3] + 1)
-    den = a1 + a2 - inter
-    if den == 0:
-        # zero-area pair under the +1 convention: the vectorized path yields
-        # NaN here (0/0), and NaN < thr is False -> suppressed; match that
-        return float("nan")
-    return inter / den
-
-
-def nms(rows: list[tuple], iou_same: float = NMS_IOU_SAME,
-        iou_diff: float = NMS_IOU_DIFF) -> list[int]:
-    """Greedy dual-threshold NMS; np.argsort(score)[::-1] tie order (later
-    index first on equal scores)."""
-    order = sorted(range(len(rows)), key=lambda i: (-rows[i][1], -i))
-    kept: list[int] = []
-    while order:
-        cur = order[0]
-        kept.append(cur)
-        rest = []
-        cur_row = rows[cur]
-        cc, cx1, cy1, cx2, cy2 = (cur_row[0], cur_row[2], cur_row[3],
-                                  cur_row[4], cur_row[5])
-        ca = (cx2 - cx1 + 1) * (cy2 - cy1 + 1)
-        for i in order[1:]:
-            b = rows[i]
-            # iou() inlined (the O(n^2) hot loop); same arithmetic and
-            # division form, NaN (den==0) suppresses exactly as iou() does
-            ix1 = cx1 if cx1 > b[2] else b[2]
-            iy1 = cy1 if cy1 > b[3] else b[3]
-            ix2 = cx2 if cx2 < b[4] else b[4]
-            iy2 = cy2 if cy2 < b[5] else b[5]
-            iw = ix2 - ix1 + 1
-            ih = iy2 - iy1 + 1
-            inter = iw * ih if iw > 0 and ih > 0 else 0.0
-            den = ca + (b[4] - b[2] + 1) * (b[5] - b[3] + 1) - inter
-            if den != 0 and inter / den < (
-                    iou_same if b[0] == cc else iou_diff):
-                rest.append(i)
-        order = rest
-    return kept
 
 
 def _contained_in(a, b) -> bool:
@@ -93,145 +39,23 @@ def _contained_in(a, b) -> bool:
     return (iw * ih) / area >= CONTAINMENT_OVERLAP_RATIO
 
 
-def apply_merge_modes(rows: list[tuple], merge_modes: dict[int, str],
-                      preserve_ids: frozenset[int]) -> list[int]:
-    n = len(rows)
-    if n == 0:
-        return []
-    large = {c for c, m in merge_modes.items() if m == "large"}
-    small = [c for c, m in merge_modes.items() if m == "small"]
-    keep = [True] * n
-    large_js = [j for j in range(n) if int(rows[j][0]) in large]
-    ratio = CONTAINMENT_OVERLAP_RATIO
-    # 'large' pass: drop i if contained in any box whose class is large-mode
-    # (containment math inlined — this is the O(n^2) hot loop)
-    for i in range(n):
-        ri = rows[i]
-        if int(ri[0]) in preserve_ids:
-            continue
-        ax1, ay1, ax2, ay2 = ri[2], ri[3], ri[4], ri[5]
-        area = (ax2 - ax1) * (ay2 - ay1)
-        if area <= 0:
-            continue
-        for j in large_js:
-            if i == j:
-                continue
-            rj = rows[j]
-            iw = (ax2 if ax2 < rj[4] else rj[4]) - (ax1 if ax1 > rj[2] else rj[2])
-            if iw <= 0:
-                continue
-            ih = (ay2 if ay2 < rj[5] else rj[5]) - (ay1 if ay1 > rj[3] else rj[3])
-            if ih <= 0:
-                continue
-            # same division form as _contained_in / the numpy path: the
-            # rearranged iw*ih >= area*ratio differs in the last ulp
-            if (iw * ih) / area >= ratio:
-                keep[i] = False
-                break
-    for category in small:
-        contained_by_other = [False] * n
-        contains_other = [False] * n
-        for i in range(n):
-            ri = rows[i]
-            if int(ri[0]) != category or int(ri[0]) in preserve_ids:
-                continue
-            for j in range(n):
-                if i == j:
-                    continue
-                if _contained_in(ri, rows[j]):
-                    contained_by_other[i] = True
-                    contains_other[j] = True
-        for i in range(n):
-            keep[i] = keep[i] and ((not contains_other[i])
-                                   or contained_by_other[i])
-    return [i for i in range(n) if keep[i]]
-
-
-def filter_oversized_images(rows: list[tuple], image_cls_id: int,
-                            page_w: float, page_h: float) -> list[int]:
-    n = len(rows)
-    if n <= 1:
-        return list(range(n))
-    thr = (OVERSIZE_AREA_THRESHOLD_LANDSCAPE if page_w > page_h
-           else OVERSIZE_AREA_THRESHOLD_PORTRAIT)
-    limit = thr * page_w * page_h
-    out = []
-    for i, r in enumerate(rows):
-        if int(r[0]) == image_cls_id:
-            x1 = r[2] if r[2] > 0 else 0.0
-            y1 = r[3] if r[3] > 0 else 0.0
-            x2 = r[4] if r[4] < page_w else page_w
-            y2 = r[5] if r[5] < page_h else page_h
-            if (x2 - x1) * (y2 - y1) <= limit:
-                out.append(i)
-        else:
-            out.append(i)
-    return out if out else list(range(n))
-
-
-def unclip(rows: list[tuple], ratio) -> list[tuple]:
-    """ratio: None | (w,h) | {cls_id: (w,h)} — see geometry.unclip."""
-    if ratio is None or ratio == (1.0, 1.0):
-        return rows
-    per_class = isinstance(ratio, dict)
-    out = []
-    for r in rows:
-        if per_class:
-            pair = ratio.get(int(r[0]))
-            if pair is None:
-                out.append(r)
-                continue
-            rw, rh = pair
-        else:
-            rw, rh = ratio
-        w = r[4] - r[2]
-        h = r[5] - r[3]
-        cx = r[2] + w / 2
-        cy = r[3] + h / 2
-        nw = w * rw
-        nh = h * rh
-        out.append((r[0], r[1], cx - nw / 2, cy - nh / 2,
-                    cx + nw / 2, cy + nh / 2, r[6]))
-    return out
-
-
-def clamp_and_validate(rows: list[tuple], page_w: float,
-                       page_h: float) -> tuple[list[tuple], list[int]]:
-    """Clamp, drop degenerate, truncate to int — returns (surviving rows
-    with int coords, their original indices), order preserved."""
-    out = []
-    kept = []
-    for i, r in enumerate(rows):
-        x1 = min(max(r[2], 0.0), page_w)
-        x2 = min(max(r[4], 0.0), page_w)
-        y1 = min(max(r[3], 0.0), page_h)
-        y2 = min(max(r[5], 0.0), page_h)
-        if x1 >= x2 or y1 >= y2:
-            continue
-        out.append((r[0], r[1], float(int(x1)), float(int(y1)),
-                    float(int(x2)), float(int(y2)), r[6]))
-        kept.append(i)
-    return out, kept
-
-
 def survivors_small(rows: list[tuple], spans: list, config,
                     image_cls_id: int, page_w: float, page_h: float,
                     has_order: bool) -> list[tuple]:
     """The whole small-n geometry pipeline (NMS -> oversized filter ->
     merge modes -> reading order -> unclip -> clamp/validate) fused into
-    one index-based pass: stage-identical semantics to calling nms /
-    filter_oversized_images / apply_merge_modes / sort-or-xy_cut / unclip /
-    clamp_and_validate in sequence with list rebuilds between stages
-    (equivalence enforced by tests/test_geometry_paths.py::test_fused),
-    but with a single survivors materialization at the end.
+    one index-based pass: stage-identical semantics to
+    geometry.survivors_numpy (equivalence enforced by
+    tests/test_geometry_paths.py), but with a single survivors
+    materialization at the end.
 
     Returns [(cls_id:int, score, x1, y1, x2, y2, span), ...] with clamped
     int-truncated float coords, in final reading order.
     """
     n = len(rows)
 
-    # ---- NMS (the working order becomes score-desc, as after
-    # _pick(nms(rows))) ----
+    # ---- NMS (the working order becomes the score-desc pick order of
+    # geometry.nms; a zero-union pair suppresses, as its NaN IoU does) ----
     if config.nms_enabled:
         iou_same = NMS_IOU_SAME
         iou_diff = NMS_IOU_DIFF
@@ -266,7 +90,9 @@ def survivors_small(rows: list[tuple], spans: list, config,
                 ih = iy2 - iy1 + 1
                 inter = iw * ih if iw > 0 and ih > 0 else 0.0
                 den = areas[k] + ba - inter
-                if den == 0 or inter / den >= (
+                # phrased as NOT(iou < thr), as in geometry.nms: a NaN IoU
+                # (inf - inf on unbounded boxes) suppresses
+                if den == 0 or not inter / den < (
                         iou_same if bc == a[0] else iou_diff):
                     break
             else:
@@ -275,7 +101,8 @@ def survivors_small(rows: list[tuple], spans: list, config,
         idx = list(range(n))
 
     # ---- oversized-image filter (keeps working order; all-oversized
-    # degenerate case keeps everything, as in filter_oversized_images) ----
+    # degenerate case keeps everything, as in
+    # geometry.filter_oversized_images) ----
     if len(idx) > 1:
         thr = (OVERSIZE_AREA_THRESHOLD_LANDSCAPE if page_w > page_h
                else OVERSIZE_AREA_THRESHOLD_PORTRAIT)
@@ -296,23 +123,16 @@ def survivors_small(rows: list[tuple], spans: list, config,
             idx = out
 
     # ---- containment merge modes (positional keep flags over the current
-    # working list, exactly like apply_merge_modes on a materialized list:
-    # the small pass pairs over ALL current members, not just large-pass
-    # survivors) ----
+    # working list, exactly like geometry.apply_merge_modes on a
+    # materialized list: the small pass pairs over ALL current members, not
+    # just large-pass survivors) ----
     m = len(idx)
     if m > 1:  # a single box can neither contain nor be contained
         preserve_ids = config.preserve_ids
-        # large/small id sets: precomputed on ExtractConfig; derived here
-        # for plain carriers (tests). Membership checks drop the int()
-        # casts — float cls ids hash/compare equal to their int values.
-        large = getattr(config, "merge_large_ids", None)
-        if large is None:
-            large = {c for c, md in config.merge_modes.items()
-                     if md == "large"}
-        small = getattr(config, "merge_small_ids", None)
-        if small is None:
-            small = [c for c, md in config.merge_modes.items()
-                     if md == "small"]
+        # membership checks drop the int() casts — float cls ids
+        # hash/compare equal to their int values
+        large = config.merge_large_ids
+        small = config.merge_small_ids
         keep = [True] * m
         large_ps = [p for p in range(m) if rows[idx[p]][0] in large]
         ratio = CONTAINMENT_OVERLAP_RATIO
@@ -368,23 +188,31 @@ def survivors_small(rows: list[tuple], spans: list, config,
         sub = [rows[i] for i in idx]
         idx = [idx[p] for p in xy_cut_order(sub)]
 
-    # ---- unclip (default no-op) + clamp/validate + survivors ----
-    ratio_cfg = config.unclip_ratio
-    unclipped = ratio_cfg is not None and ratio_cfg != (1.0, 1.0)
+    # ---- unclip (default no-op; per-class dict form leaves unlisted
+    # classes untouched) + clamp/validate + survivors ----
+    ratio = config.unclip_ratio
+    if ratio == (1.0, 1.0):
+        ratio = None
+    per_class = isinstance(ratio, dict)
     out_rows: list[tuple] = []
     for i in idx:
         r = rows[i]
-        if unclipped:
-            r = unclip([r], ratio_cfg)[0]
-        v = r[2]
-        x1 = 0.0 if v < 0.0 else (page_w if v > page_w else v)
-        v = r[4]
-        x2 = 0.0 if v < 0.0 else (page_w if v > page_w else v)
-        v = r[3]
-        y1 = 0.0 if v < 0.0 else (page_h if v > page_h else v)
-        v = r[5]
-        y2 = 0.0 if v < 0.0 else (page_h if v > page_h else v)
-        if x1 >= x2 or y1 >= y2:
+        ax1, ay1, ax2, ay2 = r[2], r[3], r[4], r[5]
+        pair = ratio.get(int(r[0])) if per_class else ratio
+        if pair is not None and pair != (1.0, 1.0):
+            w = ax2 - ax1
+            h = ay2 - ay1
+            cx = ax1 + w / 2
+            cy = ay1 + h / 2
+            nw = w * pair[0]
+            nh = h * pair[1]
+            ax1, ay1, ax2, ay2 = (cx - nw / 2, cy - nh / 2,
+                                  cx + nw / 2, cy + nh / 2)
+        x1 = 0.0 if ax1 < 0.0 else (page_w if ax1 > page_w else ax1)
+        x2 = 0.0 if ax2 < 0.0 else (page_w if ax2 > page_w else ax2)
+        y1 = 0.0 if ay1 < 0.0 else (page_h if ay1 > page_h else ay1)
+        y2 = 0.0 if ay2 < 0.0 else (page_h if ay2 > page_h else ay2)
+        if not (x1 < x2 and y1 < y2):  # degenerate, or NaN from unclip
             continue
         out_rows.append((int(r[0]), r[1], float(int(x1)), float(int(y1)),
                          float(int(x2)), float(int(y2)), spans[i]))

@@ -14,41 +14,26 @@ payload is an HTML-ish document in one of two forms:
    inferred from tags/content, scores from Arc90/trafilatura-style
    text-length + link-density features, geometry synthesized top-to-bottom.
 
-Both paths emit the same Block records: (cls_id, label, score, bbox in page
-coords, order or None, char span (start, end) into the payload).
+Both forms yield the same tuple: (page_w, page_h, rows, spans, has_order),
+rows = [(cls_id, score, x1, y1, x2, y2, order)] in page coords, spans the
+parallel (start, end) char offsets of each block's content in the payload,
+has_order False when the page carries no complete reading order.
 """
 
 from __future__ import annotations
 
 import math
 import re
-from dataclasses import dataclass
 
 from glm_ocr_spark.config import LABEL2ID, PAGE_HEIGHT, PAGE_WIDTH
-
-
-@dataclass(slots=True)
-class Block:
-    cls_id: int
-    label: str
-    score: float
-    bbox: tuple[float, float, float, float]
-    order: int | None  # reading order from payload annotation; None -> XY-cut
-    span: tuple[int, int]  # char offsets of the block content in the payload
-
 
 _PAGE_RE = re.compile(r'<page\s+w="(\d+)"\s+h="(\d+)"\s*/>')
 _BLOCK_RE = re.compile(r"<block\s+([^>]*?)>(.*?)</block>", re.DOTALL)
 _ATTR_RE = re.compile(r'(\w+)="([^"]*)"')
-# fast path for the canonical attribute layout (label, score, bbox[, order]
-# in that order, double-quoted, no extras) — one fullmatch replaces
-# findall + dict build in the hot loop; any other layout falls back to the
-# generic parse, so semantics are unchanged (parity-fuzzed)
-_ATTRS_FAST_RE = re.compile(
-    r'label="([^"]*)" score="([^"]*)" bbox="([^"]*)"(?: order="([^"]*)")?')
-# one-pass combined block+attrs+content regex for the same canonical layout:
-# segment_rows uses it when it provably consumes every '<block' opener in
-# the payload (count check), else falls back to the generic two-pass parse
+# one-pass combined block+attrs+content regex for the canonical attribute
+# layout (label, score, bbox[, order] in that order, double-quoted, no
+# extras): segment_rows uses it when it provably consumes every '<block'
+# opener in the payload (count check), else the generic segment() parses
 _BLOCK_FAST_RE = re.compile(
     r'<block label="([^"]*)" score="([^"]*)" bbox="([^"]*)"'
     r'(?: order="([^"]*)")?>(.*?)</block>', re.DOTALL)
@@ -92,7 +77,7 @@ def parse_page_size(payload: str) -> tuple[float, float]:
 def link_density(fragment: str, visible: str | None = None) -> float:
     """Fraction of visible characters inside <a> anchors (Arc90-style).
     `visible` is the precomputed tag-stripped fragment (identical regex) —
-    segment() computes it once per block instead of 3x."""
+    _plain_rows computes it once per block instead of 3x."""
     total = len(_TAG_STRIP_RE.sub("", fragment) if visible is None
                 else visible)
     if total == 0:
@@ -142,68 +127,51 @@ def _classify_plain(tag: str | None, fragment: str,
     return "text"
 
 
-def segment(payload: str) -> tuple[float, float, list[Block]]:
-    """Segment one turn payload into candidate blocks.
+def segment(payload: str):
+    """Generic parse of one turn payload: (page_w, page_h, rows, spans,
+    has_order), the same tuple segment_rows returns, with
+    rows = [(cls_id, score, x1, y1, x2, y2, order), ...] and spans the
+    parallel char offsets of each block's content.
 
-    Returns (page_w, page_h, blocks). Annotated form takes precedence; a
-    payload with no recognizable block structure yields a single text block
-    covering the whole payload (the reference's OCR-only analog would treat
-    the page as one region).
+    Annotated form takes precedence (any attribute layout); a page with one
+    block missing its order has no model order at all (has_order False,
+    order 0 everywhere -> XY-cut). A payload with no annotated blocks takes
+    the plain-DOM form.
     """
     page_w, page_h = parse_page_size(payload)
-
     annotated = list(_BLOCK_RE.finditer(payload))
-    if annotated:
-        blocks: list[Block] = []
-        any_missing_order = False
-        for m in annotated:
-            fast = _ATTRS_FAST_RE.fullmatch(m.group(1))
-            if fast is not None:
-                label, score_s, bbox_s, order_s = fast.groups()
-            else:
-                attrs = dict(_ATTR_RE.findall(m.group(1)))
-                label = attrs.get("label", "text")
-                score_s = attrs.get("score", "1.0")
-                bbox_s = attrs.get("bbox", "")
-                order_s = attrs.get("order")
-            if label not in LABEL2ID:
-                label = "text"
-            try:
-                score = float(score_s)
-            except ValueError:  # malformed annotation: trust-nothing default
-                score = 1.0
-            try:
-                x1, y1, x2, y2 = (float(v) for v in bbox_s.split(","))
-            except ValueError:
-                x1, y1, x2, y2 = 0.0, 0.0, page_w, page_h
-            try:
-                order = int(order_s) if order_s is not None else None
-            except ValueError:
-                order = None
-            if order is None:
-                any_missing_order = True
-            blocks.append(Block(
-                cls_id=LABEL2ID[label], label=label, score=score,
-                bbox=(x1, y1, x2, y2), order=order,
-                span=(m.start(2), m.end(2)),
-            ))
-        if any_missing_order:
-            for b in blocks:
-                b.order = None
-        return page_w, page_h, blocks
+    if not annotated:
+        return (page_w, page_h, *_plain_rows(payload), True)
 
-    # Plain-DOM form: alternate tagged elements and untagged paragraph runs.
-    blocks = [
-        Block(cls_id=c, label=lab, score=s, bbox=b, order=o, span=sp)
-        for c, lab, s, b, o, sp in _plain_records(payload)
-    ]
-    return page_w, page_h, blocks
+    text_id = LABEL2ID["text"]
+    rows: list[tuple] = []
+    spans: list[tuple[int, int]] = []
+    missing = False
+    for m in annotated:
+        attrs = dict(_ATTR_RE.findall(m.group(1)))
+        try:
+            score = float(attrs.get("score", "1.0"))
+        except ValueError:  # malformed annotation: trust-nothing default
+            score = 1.0
+        try:
+            x1, y1, x2, y2 = (float(v)
+                              for v in attrs.get("bbox", "").split(","))
+        except ValueError:
+            x1, y1, x2, y2 = 0.0, 0.0, page_w, page_h
+        try:
+            order = int(attrs["order"])
+        except (KeyError, ValueError):
+            missing = True
+            order = 0
+        rows.append((LABEL2ID.get(attrs.get("label", "text"), text_id), score,
+                     x1, y1, x2, y2, order))
+        spans.append(m.span(2))
+    return page_w, page_h, rows, spans, not missing
 
 
-def _plain_records(payload: str) -> list[tuple]:
-    """Plain-DOM block records (cls_id, label, score, bbox, order, span) —
-    the single implementation behind segment()'s plain branch and
-    segment_rows()'s tuple fast path."""
+def _plain_rows(payload: str) -> tuple[list[tuple], list[tuple[int, int]]]:
+    """Plain-DOM (rows, spans): tagged elements and untagged paragraph runs
+    alternate, geometry synthesized top-to-bottom in document order."""
     pos = 0
     pieces: list[tuple[str | None, int, int]] = []  # (tag, start, end)
     for m in _DOM_RE.finditer(payload):
@@ -218,7 +186,8 @@ def _plain_records(payload: str) -> list[tuple]:
         pieces.append((None, para_start, para_end))
 
     n = len(pieces)
-    records = []
+    rows = []
+    spans = []
     for k, (tag, start, end) in enumerate(pieces):
         fragment = payload[start:end]
         # tag-strip only when a tag can exist (sub() is a full regex scan
@@ -226,20 +195,17 @@ def _plain_records(payload: str) -> list[tuple]:
         visible = _TAG_STRIP_RE.sub("", fragment) if "<" in fragment \
             else fragment
         label = _classify_plain(tag, fragment, visible)
-        score = plain_block_score(fragment, visible)
         y1 = (k * 1000.0) / n
         y2 = y1 + max(1.0, 1000.0 / n - 5.0)
-        records.append((LABEL2ID[label], label, score,
-                        (50.0, y1, 950.0, min(y2, 1000.0)), k + 1,
-                        (start, end)))
-    return records
+        rows.append((LABEL2ID[label], plain_block_score(fragment, visible),
+                     50.0, y1, 950.0, min(y2, 1000.0), k + 1))
+        spans.append((start, end))
+    return rows, spans
 
 
 def segment_rows(payload: str):
-    """One-pass tuple segmentation for extract_turn's default (no custom
-    segmenter) path: returns (page_w, page_h, rows, spans, has_order) with
-    rows = [(cls_id, score, x1, y1, x2, y2, order), ...] and spans parallel,
-    or None when the payload needs the generic segment() parse.
+    """One-pass segmentation for the canonical payload layout: the
+    segment() tuple, or None when the payload needs the generic parse.
 
     Semantics identical to segment(): the combined regex is only trusted
     when it provably consumed every '<block' opener (count check) and no
@@ -247,59 +213,49 @@ def segment_rows(payload: str):
     have carved differently). Equivalence is enforced by the oracle gate
     plus tests/test_fuzz_kernel_vs_oracle.py."""
     n_open = payload.count("<block")
-    if n_open:
-        ms = _BLOCK_FAST_RE.finditer(payload)
-        l2i = LABEL2ID
-        text_id = l2i["text"]
-        page_w, page_h = parse_page_size(payload)
-        rows: list[tuple] = []
-        spans: list[tuple[int, int]] = []
-        missing = False
-        n_fast = 0
-        for m in ms:
-            n_fast += 1
-            label, score_s, bbox_s, order_s = m.group(1, 2, 3, 4)
-            if ">" in label or ">" in score_s or ">" in bbox_s or (
-                    order_s is not None and ">" in order_s):
-                return None  # attr crossed the open tag's '>': generic parse
+    if not n_open:
+        return (*parse_page_size(payload), *_plain_rows(payload), True)
+    l2i = LABEL2ID
+    text_id = l2i["text"]
+    page_w, page_h = parse_page_size(payload)
+    rows: list[tuple] = []
+    spans: list[tuple[int, int]] = []
+    missing = False
+    n_fast = 0
+    for m in _BLOCK_FAST_RE.finditer(payload):
+        n_fast += 1
+        label, score_s, bbox_s, order_s = m.group(1, 2, 3, 4)
+        if ">" in label or ">" in score_s or ">" in bbox_s or (
+                order_s is not None and ">" in order_s):
+            return None  # attr crossed the open tag's '>': generic parse
+        try:
+            score = float(score_s)
+        except ValueError:  # malformed annotation: trust-nothing default
+            score = 1.0
+        b = bbox_s.split(",")
+        try:
+            if len(b) != 4:
+                raise ValueError
+            x1 = float(b[0])
+            y1 = float(b[1])
+            x2 = float(b[2])
+            y2 = float(b[3])
+        except ValueError:
+            x1, y1, x2, y2 = 0.0, 0.0, page_w, page_h
+        if order_s is None:
+            missing = True
+            order = 0
+        else:
             try:
-                score = float(score_s)
-            except ValueError:  # malformed annotation: trust-nothing default
-                score = 1.0
-            b = bbox_s.split(",")
-            try:
-                if len(b) != 4:
-                    raise ValueError
-                x1 = float(b[0])
-                y1 = float(b[1])
-                x2 = float(b[2])
-                y2 = float(b[3])
+                order = int(order_s)
             except ValueError:
-                x1, y1, x2, y2 = 0.0, 0.0, page_w, page_h
-            if order_s is None:
                 missing = True
                 order = 0
-            else:
-                try:
-                    order = int(order_s)
-                except ValueError:
-                    missing = True
-                    order = 0
-            rows.append((l2i.get(label, text_id), score, x1, y1, x2, y2,
-                         order))
-            spans.append(m.span(5))
-        if n_fast != n_open:
-            return None  # non-canonical layout (or '<blockquote'): generic
-        return page_w, page_h, rows, spans, not missing
-
-    page_w, page_h = parse_page_size(payload)
-    rows = []
-    spans = []
-    for cls_id, _label, score, bbox, order, span in _plain_records(payload):
-        rows.append((cls_id, score, bbox[0], bbox[1], bbox[2], bbox[3],
-                     order))
-        spans.append(span)
-    return page_w, page_h, rows, spans, True
+        rows.append((l2i.get(label, text_id), score, x1, y1, x2, y2, order))
+        spans.append(m.span(5))
+    if n_fast != n_open:
+        return None  # non-canonical layout (or '<blockquote'): generic
+    return page_w, page_h, rows, spans, not missing
 
 
 _PARA_RE = re.compile(r"[^\n](?:.*[^\s])?", re.DOTALL)

@@ -1,7 +1,7 @@
 """Spark extraction pipeline: transcripts table -> extracted table.
 
 Design (SURVEY.md §7.0): per-turn work is pure and independent, so the whole
-extraction is a single `mapInPandas` — a shuffle-free narrow map. The only
+extraction is a single `mapInArrow` — a shuffle-free narrow map. The only
 data that ever needs to cross the wire downstream is the extracted output
 (spans + text), never the raw payloads, satisfying the north rule's
 "shuffle volume bounded by map-side block scoring".
@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,7 +95,7 @@ def get_spark(app: str = "glm-ocr-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.extraJavaOptions", "-XX:MaxDirectMemorySize=2g")
         .config("spark.sql.session.timeZone", "UTC")
-        # CPU-bound pandas-UDF extraction wants far smaller input splits than
+        # CPU-bound Arrow-UDF extraction wants far smaller input splits than
         # the 128 MB scan default: one split must be minutes of CPU, not
         # hours, and there must be >= cores splits for small inputs too.
         .config("spark.sql.files.maxPartitionBytes", "8m")
@@ -113,67 +112,18 @@ def get_spark(app: str = "glm-ocr-spark", master: str | None = None,
     return b.getOrCreate()
 
 
-def _extract_batches(batches, passthrough=(), extractor=None):
-    """mapInPandas body: vectorized over Arrow batches; per-turn kernel calls
-    inside the batch (the reference also loops per page within a GPU batch,
-    layout_detector.py:186-251). Turns with a non-empty `tool` are the
-    skip-task analog (FIXTURES.md §1): kept, but content is None. A turn
-    whose extraction raises is dead-lettered into the `error` column instead
-    of failing the task."""
-    fn = extractor or extract_turn
-    for pdf in batches:
-        # tolist() once per batch: per-element .iat[] pays pandas indexing
-        # overhead on every row (~10% of worker time at these payload sizes)
-        texts = pdf["text"].tolist()
-        tools = pdf["tool"].tolist()
-        n = len(pdf)
-        ext = [None] * n
-        md = [None] * n
-        js = [None] * n
-        spans: list = [[] for _ in range(n)]
-        nb = [0] * n
-        err = [None] * n
-        for i in range(n):
-            tool = tools[i]
-            if tool is not None and tool != "":
-                js[i] = "[[]]"
-                continue
-            try:
-                r = fn(texts[i])
-            except Exception as e:  # noqa: BLE001 - dead-letter, never fatal
-                js[i] = "[[]]"
-                err[i] = f"{type(e).__name__}: {e}"[:500]
-                continue
-            ext[i] = r["extracted_text"]
-            md[i] = r["markdown"]
-            js[i] = r["json"]
-            spans[i] = [
-                {"start": s, "end": e, "label": lab} for s, e, lab in r["spans"]
-            ]
-            nb[i] = r["n_blocks"]
-        out = {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"],
-            "role": pdf["role"],
-            "extracted_text": ext,
-            "markdown": md,
-            "json": js,
-            "spans": spans,
-            "n_blocks": nb,
-            "error": err,
-        }
-        for col in passthrough:
-            out[col] = pdf[col]
-        yield pd.DataFrame(out)
-
-
 def _extract_arrow_batches(batches, passthrough=(), extractor=None):
-    """mapInArrow body: same per-turn dataflow as _extract_batches but on
-    raw Arrow record batches — key columns (conv_id, turn_idx, role, any
-    passthrough) are forwarded zero-copy instead of round-tripping through
-    pandas, payloads cross the boundary once (to_pylist), and outputs are
-    built by pyarrow's C++ converters (spans as list<struct> straight from
-    the kernel's (start, end, label) tuples, no per-span dicts)."""
+    """mapInArrow body over Arrow record batches of (conv_id, turn_idx,
+    role, text, tool, *passthrough); per-turn kernel calls inside the batch
+    (the reference also loops per page within a GPU batch,
+    layout_detector.py:186-251). Key and passthrough columns are forwarded
+    zero-copy, payloads cross the boundary once (to_pylist), and outputs
+    are built by pyarrow's C++ converters (spans as list<struct> straight
+    from the kernel's (start, end, label) tuples, no per-span dicts).
+
+    Turns with a non-empty `tool` are the skip-task analog (FIXTURES.md
+    §1): kept, but content is None. A turn whose extraction raises is
+    dead-lettered into the `error` column instead of failing the task."""
     import pyarrow as pa
 
     fn = extractor or extract_turn
@@ -245,7 +195,12 @@ def extract_transcripts(df: DataFrame,
     schema = T.StructType(EXTRACTED_SCHEMA.fields + [
         df.schema[c] for c in passthrough
     ])
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", *passthrough]
+    # the body forwards the key columns as-is, so they must already carry
+    # the output types (a bigint turn_idx would abort the job at read
+    # time); same-type casts are dropped by the optimizer
+    keys = [F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in EXTRACTED_SCHEMA.fields[:3]]
+    cols = [*keys, "text", "tool", *passthrough]
 
     def body(batches):
         yield from _extract_arrow_batches(batches, passthrough=passthrough,

@@ -6,7 +6,7 @@ X1-X4 of SURVEY.md §2.8) maps onto Structured Streaming:
 
   - bounded queues / backpressure  -> micro-batch sizing
     (maxFilesPerTrigger / maxOffsetsPerTrigger)
-  - per-page recognition fan-out   -> the same zero-shuffle mapInPandas
+  - per-page recognition fan-out   -> the same zero-shuffle mapInArrow
     extraction, applied per micro-batch
   - per-unit readiness + ordered emission (A3/X4: emit a unit when all its
     pages are done) -> event-time watermark + per-conversation windowed

@@ -2,7 +2,6 @@
 
 from glm_ocr_spark.kernel.canonicalize import canonicalize_payload
 from glm_ocr_spark.kernel.extract import extract_turn
-from glm_ocr_spark.kernel.segment import Block
 
 
 PAYLOAD = (
@@ -21,10 +20,10 @@ class TestPluggability:
 
     def test_custom_segmenter(self):
         def whole_page(payload):
-            return 1000.0, 1000.0, [Block(
-                cls_id=22, label="text", score=1.0,
-                bbox=(0.0, 0.0, 1000.0, 1000.0), order=1,
-                span=(0, len(payload)))]
+            # (page_w, page_h, rows, spans, has_order); a row is
+            # (cls_id, score, x1, y1, x2, y2, order)
+            return (1000.0, 1000.0, [(22, 1.0, 0.0, 0.0, 1000.0, 1000.0, 1)],
+                    [(0, len(payload))], True)
 
         r = extract_turn("raw content here", segmenter=whole_page)
         assert r["n_blocks"] == 1
@@ -37,6 +36,20 @@ class TestPluggability:
         r = extract_turn(PAYLOAD, formatter=drop_everything)
         assert r["n_blocks"] == 0
         assert r["json"] == "[[]]"
+
+    def test_formatter_runs_over_final_regions(self):
+        seen = []
+
+        def spy(regions):
+            seen.extend(regions)
+            return regions
+
+        title = PAYLOAD.replace('label="text"', 'label="doc_title"')
+        assert extract_turn(title, formatter=spy) == extract_turn(title)
+        start = title.index("hello")
+        assert [(r["label"], r["native_label"], r["content"], r["span"])
+                for r in seen] == [("text", "doc_title", "# hello world",
+                                    (start, start + 11))]
 
     def test_defaults_unchanged(self):
         assert extract_turn(PAYLOAD)["extracted_text"] == "hello world"

@@ -70,7 +70,7 @@ class TestKernelVsOracle:
 
 @pytest.mark.usefixtures("spark")
 class TestSparkVsOracle:
-    """Distributed pipeline equality: Spark mapInPandas output must match the
+    """Distributed pipeline equality: Spark mapInArrow output must match the
     oracle row-for-row under stable (conv_id, turn_idx) ordering."""
 
     def test_extract_pipeline_sf0001_sample(self, spark):
@@ -97,6 +97,31 @@ class TestSparkVsOracle:
                 if bad == 1:
                     first = (row["conv_id"], row["turn_idx"])
             assert bad == 0, f"first mismatch at {first}"
+
+    def test_wide_key_columns_cast_to_schema(self, spark):
+        """A bigint turn_idx (what a JSON or pandas source infers) is cast to
+        the output schema's int instead of aborting the job; correctly typed
+        keys plan without a cast."""
+        from glm_ocr_spark.pipeline import extract_transcripts
+
+        cid = conv_id_of(0)
+        rows = [(cid, t, *gen_turn_payload(cid, t)) for t in range(4)]
+        wide = spark.createDataFrame(
+            rows, "conv_id string, turn_idx bigint, role string, "
+                  "text string, tool string")
+        out = extract_transcripts(wide)
+        assert out.schema["turn_idx"].dataType.simpleString() == "int"
+        got = sorted(out.collect(), key=lambda r: r["turn_idx"])
+        assert [r["turn_idx"] for r in got] == [0, 1, 2, 3]
+        for r in got:
+            assert r["error"] is None
+            assert r["json"] == _oracle_for(cid, r["turn_idx"])["json"]
+
+        typed = extract_transcripts(wide.selectExpr(
+            "conv_id", "CAST(turn_idx AS INT) AS turn_idx", "role", "text",
+            "tool").localCheckpoint())
+        plan = typed._jdf.queryExecution().optimizedPlan().toString()
+        assert "cast(" not in plan.lower()
 
     def test_ordering_stable(self, spark):
         from glm_ocr_spark.pipeline import extract_transcripts

@@ -214,18 +214,3 @@ class TestUnclip:
         out = geo.unclip(b, {22: (2.0, 1.5)})
         assert out[0, geo.X1:geo.Y2 + 1].tolist() == [0, 5, 40, 35]
         assert out[1, geo.X1:geo.Y2 + 1].tolist() == [10, 10, 30, 30]
-
-    def test_per_class_dict_paths_agree(self):
-        """Vectorized and small-n pure-Python paths must agree on the
-        per-class form (path-equivalence invariant of the kernel)."""
-        from glm_ocr_spark.kernel import geometry_py as gpy
-
-        rows = [(22, 0.9, 10.0, 10.0, 30.0, 30.0, 1),
-                (5, 0.8, 0.0, 0.0, 12.0, 8.0, 2),
-                (7, 0.7, 4.0, 4.0, 6.0, 16.0, 3)]
-        ratio = {22: (2.0, 1.5), 7: (0.5, 3.0)}
-        b = boxes([list(r) for r in rows])
-        vec = geo.unclip(b, ratio)
-        py = gpy.unclip(rows, ratio)
-        for i in range(len(rows)):
-            assert vec[i, geo.X1:geo.Y2 + 1].tolist() == list(py[i][2:6])

@@ -1,21 +1,26 @@
-"""Equivalence of the two geometry paths: pure-Python small-n fast path vs
-vectorized numpy path, on randomized box sets (including degenerate,
-inverted, overlapping, out-of-page geometry)."""
+"""Equivalence of the two production geometry paths: the fused pure-Python
+survivors_small and the vectorized survivors_numpy, on randomized box sets
+(including degenerate, inverted, overlapping, out-of-page geometry), under
+the default config and the non-default knobs ExtractConfig exposes."""
 
 import random
 
-import numpy as np
 import pytest
 
-from glm_ocr_spark.config import (
-    LABEL2ID,
-    LAYOUT_MERGE_BBOXES_MODE,
-    PRESERVE_CLASS_IDS,
-)
+from glm_ocr_spark.config import LABEL2ID
 from glm_ocr_spark.kernel import geometry as geo
 from glm_ocr_spark.kernel import geometry_py as gpy
+from glm_ocr_spark.kernel.extract import DEFAULT_CONFIG, ExtractConfig
 
 IMG = LABEL2ID["image"]
+
+CONFIGS = {
+    "nms_off": ExtractConfig(nms_enabled=False),
+    "no_merge": ExtractConfig(merge_modes={}),
+    "unclip_scalar": ExtractConfig(unclip_ratio=(1.3, 0.8)),
+    "unclip_per_class": ExtractConfig(
+        unclip_ratio={22: (2.0, 1.5), 20: (0.5, 3.0)}),
+}
 
 
 def random_rows(rng, n):
@@ -38,105 +43,74 @@ def random_rows(rng, n):
     return rows
 
 
-def run_python(rows, page_w=1000.0, page_h=1000.0, use_order=True):
-    idx = list(range(len(rows)))
-
-    def pick(sel):
-        nonlocal rows, idx
-        rows = [rows[i] for i in sel]
-        idx = [idx[i] for i in sel]
-
-    pick(gpy.nms(rows))
-    pick(gpy.filter_oversized_images(rows, IMG, page_w, page_h))
-    pick(gpy.apply_merge_modes(rows, LAYOUT_MERGE_BBOXES_MODE,
-                               PRESERVE_CLASS_IDS))
-    if rows:
-        if use_order:
-            pick(sorted(range(len(rows)), key=lambda i: rows[i][6]))
-        else:
-            pick(gpy.xy_cut_order(rows))
-        rows2, kept = gpy.clamp_and_validate(rows, page_w, page_h)
-        idx = [idx[i] for i in kept]
-        rows = rows2
-    return idx, [(r[2], r[3], r[4], r[5]) for r in rows]
-
-
-def run_numpy(rows, page_w=1000.0, page_h=1000.0, use_order=True):
-    arr = np.array(rows, dtype=np.float64)
-    idx = np.arange(len(rows))
-
-    def take(sel):
-        nonlocal arr, idx
-        arr = arr[sel]
-        idx = idx[sel]
-
-    take(geo.nms(arr))
-    take(geo.filter_oversized_images(arr, IMG, page_w, page_h))
-    take(geo.apply_merge_modes(arr, LAYOUT_MERGE_BBOXES_MODE,
-                               PRESERVE_CLASS_IDS))
-    if len(arr):
-        if use_order:
-            take(np.argsort(arr[:, geo.ORDER], kind="stable"))
-        else:
-            take(geo.xy_cut_order(arr[:, geo.X1:geo.Y2 + 1]))
-        arr, keep = geo.clamp_and_validate(arr, page_w, page_h)
-        take(keep)
-    return list(idx), [tuple(arr[i, geo.X1:geo.Y2 + 1]) for i in range(len(arr))]
+def assert_paths_agree(rows, config=DEFAULT_CONFIG, use_order=True,
+                       page_w=1000.0, page_h=1000.0):
+    """Both paths on the same input: identical survivors, spans included."""
+    spans = [(i * 10, i * 10 + 5) for i in range(len(rows))]
+    args = (config, IMG, page_w, page_h, use_order)
+    small = gpy.survivors_small(list(rows), list(spans), *args)
+    dense = geo.survivors_numpy(list(rows), list(spans), *args)
+    assert small == dense
+    return small
 
 
 @pytest.mark.parametrize("seed", range(40))
 @pytest.mark.parametrize("use_order", [True, False])
 def test_paths_equivalent(seed, use_order):
     rng = random.Random(seed)
-    n = rng.randint(1, 30)
-    rows = random_rows(rng, n)
-    pi, pb = run_python(list(rows), use_order=use_order)
-    ni, nb = run_numpy(list(rows), use_order=use_order)
-    assert pi == ni, (seed, use_order)
-    assert pb == nb, (seed, use_order)
-
-
-def test_large_n_equivalent():
-    rng = random.Random(123)
-    rows = random_rows(rng, 120)  # above SMALL_N: both paths must still agree
-    pi, pb = run_python(list(rows))
-    ni, nb = run_numpy(list(rows))
-    assert pi == ni
-    assert pb == nb
-
-
-def test_infinite_coords_agree():
-    rows = [
-        (22.0, 0.9, 0.0, 0.0, float("inf"), 100.0, 1.0),
-        (22.0, 0.8, 10.0, 10.0, 500.0, 90.0, 2.0),
-    ]
-    pi, _ = run_python(list(rows))
-    ni, _ = run_numpy(list(rows))
-    assert pi == ni
-
-
-class _FusedCfg:
-    """Minimal config carrier for survivors_small."""
-    nms_enabled = True
-    merge_modes = LAYOUT_MERGE_BBOXES_MODE
-    preserve_ids = PRESERVE_CLASS_IDS
-    unclip_ratio = (1.0, 1.0)
+    rows = random_rows(rng, rng.randint(1, 30))
+    assert_paths_agree(rows, use_order=use_order)
 
 
 @pytest.mark.parametrize("seed", range(40))
 @pytest.mark.parametrize("use_order", [True, False])
 def test_fused(seed, use_order):
-    """survivors_small (the fused index-based pipeline) must match the
-    staged nms -> filters -> order -> clamp chain exactly, spans included."""
+    """Non-default configs: each seed runs every ExtractConfig variant."""
     rng = random.Random(seed + 7000)
-    n = rng.randint(1, 30)
-    rows = random_rows(rng, n)
-    spans = [(i * 10, i * 10 + 5) for i in range(n)]
-    pi, pb = run_python(list(rows), use_order=use_order)
-    staged = [
-        (int(rows_i[0]), float(rows_i[1]), b[0], b[1], b[2], b[3], spans[i])
-        for i, rows_i, b in ((i, rows[i], pb[k]) for k, i in enumerate(pi))
+    rows = random_rows(rng, rng.randint(1, 30))
+    for name, config in CONFIGS.items():
+        try:
+            assert_paths_agree(rows, config, use_order)
+        except AssertionError:
+            pytest.fail(f"paths disagree under {name} (seed {seed})")
+
+
+def test_large_n_equivalent():
+    # above SMALL_N, where extract_turn takes the numpy path
+    n = 120
+    assert n > gpy.SMALL_N
+    for config in (DEFAULT_CONFIG, *CONFIGS.values()):
+        rng = random.Random(123)
+        assert_paths_agree(random_rows(rng, n), config)
+        assert_paths_agree(random_rows(rng, n), config, use_order=False)
+
+
+def test_infinite_coords_agree():
+    inf = float("inf")
+    pages = [
+        [(22.0, 0.9, 0.0, 0.0, inf, 100.0, 1.0),
+         (22.0, 0.8, 10.0, 10.0, 500.0, 90.0, 2.0)],
+        # two unbounded boxes: their IoU is inf/inf = NaN
+        [(22.0, 0.9, 0.0, 0.0, inf, 100.0, 1.0),
+         (22.0, 0.8, 10.0, 10.0, inf, 90.0, 2.0),
+         (5.0, 0.7, -inf, 200.0, 300.0, 260.0, 3.0)],
     ]
-    fused = gpy.survivors_small(list(rows), list(spans), _FusedCfg, IMG,
-                                1000.0, 1000.0, use_order)
-    assert fused == staged, (seed, use_order)
+    for rows in pages:
+        for config in (DEFAULT_CONFIG, *CONFIGS.values()):
+            assert_paths_agree(rows, config)
+            assert_paths_agree(rows, config, use_order=False)
+
+
+def test_unclip_per_class_agree():
+    """Per-class unclip (reference unclip_boxes dict form,
+    layout_postprocess_utils.py:116-157): listed classes expand about their
+    centers, others pass through, identically on both paths."""
+    rows = [(22, 0.9, 10.0, 10.0, 30.0, 30.0, 1),
+            (5, 0.8, 0.0, 40.0, 12.0, 48.0, 2),
+            (20, 0.7, 4.0, 60.0, 6.0, 76.0, 3)]
+    config = ExtractConfig(unclip_ratio={22: (2.0, 1.5), 20: (0.5, 3.0)},
+                           merge_modes={})
+    got = assert_paths_agree(rows, config)
+    assert [r[2:6] for r in got] == [(0.0, 5.0, 40.0, 35.0),
+                                     (0.0, 40.0, 12.0, 48.0),
+                                     (4.0, 44.0, 5.0, 92.0)]

@@ -77,10 +77,11 @@ class TestSparkModes:
                   "tool string, ts timestamp")
 
         def body(batches):
-            yield from pl._extract_batches(batches, extractor=poisoned)
+            yield from pl._extract_arrow_batches(batches, extractor=poisoned)
 
-        out = df.mapInPandas(body, schema=pl.EXTRACTED_SCHEMA) \
-                .orderBy("turn_idx").collect()
+        out = (df.select("conv_id", "turn_idx", "role", "text", "tool")
+               .mapInArrow(body, schema=pl.EXTRACTED_SCHEMA)
+               .orderBy("turn_idx").collect())
         assert out[0]["error"] is None
         assert out[0]["extracted_text"] == "fine text"
         assert out[1]["error"] == "ValueError: injected kernel bug"
