@@ -661,7 +661,7 @@ def write_bench_md(result: dict) -> None:
         return [
             "",
             "## MinHash-rewrite adjudication: HEAD vs %s "
-            "(tools/ab_minhash.py)" % ab["ref"],
+            "(tools/ab_minhash.py, since deleted)" % ab["ref"],
             "",
             "The two sf1 data-scaling runs straddling the one-shuffle "
             "bucket-grouping rewrite (efdc3d8) disagreed on dedup cold "
@@ -700,7 +700,7 @@ def write_bench_md(result: dict) -> None:
         out = [
             "",
             "## MinHash band-strategy tradeoff, measured on both axes "
-            "(tools/ab_minhash.py --mode strategy)",
+            "(tools/ab_minhash.py --mode strategy, since deleted)",
             "",
             "Both strategies at HEAD (value-identical, pair-set equality "
             "tested and pair counts asserted per run), wall time AND "
@@ -746,12 +746,9 @@ def write_bench_md(result: dict) -> None:
             "cost dominates once buckets are large, while the self-join's "
             "extra exchange input is memcpy on a single box. Group "
             f"consistently moves fewer shuffle bytes ({byte_lo}-{byte_hi}"
-            "x, one wire crossing, no persist). Hence the default is "
-            "\"join\" (the measured wall winner on the CPU-bound shape); "
-            "\"group\" stays selectable for genuinely network-bound "
-            "clusters where the byte saving can out-weigh the codegen "
-            "loss — a claim we flag as unmeasured here (no real network "
-            "in this sandbox).",
+            "x, one wire crossing, no persist). The join plan, the "
+            "measured wall winner, is the only candidate plan; the group "
+            "plan was removed.",
         ]
         return out
 
@@ -785,7 +782,7 @@ def write_bench_md(result: dict) -> None:
                 f"{a['vecs_per_sec']} |")
         out += [
             "",
-            f"Per-vector cost ratio at 4x data (matmul strategy) = "
+            f"Per-vector cost ratio at 4x data (matmul kernel) = "
             f"**{sd['per_vector_cost_ratio_4x']}** (flat = 1.0; the "
             "global-quadratic strawman would read ~4.0).",
         ]
@@ -797,8 +794,9 @@ def write_bench_md(result: dict) -> None:
                 "the join strategy materializes two 64-double arrays per "
                 "candidate pair through the SMJ (~1 KB x n_c^2 rows), "
                 "while matmul moves each row once and runs the quadratic "
-                "part as chunked per-cell BLAS inside applyInPandas; the "
-                "measured winner is the operator default.",
+                "part as chunked per-cell BLAS inside applyInPandas. "
+                "Matmul is the pair kernel for every cell under "
+                "SEMDEDUP_MAX_CELL_ROWS; the join only takes hotter cells.",
             ]
         return out
 

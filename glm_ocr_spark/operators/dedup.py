@@ -282,57 +282,16 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     return docs.select("doc_id", sig(F.col("text")).alias("sig"))
 
 
-def _storage_boundary(df: DataFrame, path: str) -> DataFrame:
-    """Write-once parquet materialization boundary: the 100 TB form of the
-    in-job persist (round-5 verdict ask #5) — the dataflow lands in
-    columnar storage once and every consumer reads the table, instead of
-    pinning executor memory/disk blocks that at 10x data spill and churn
-    the block manager. Same values by construction (deterministic input,
-    lossless types)."""
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
-                            bands: int = LSH_BANDS,
-                            strategy: str = "join",
-                            materialize_dir: str | None = None) -> DataFrame:
+                            bands: int = LSH_BANDS) -> DataFrame:
     """Candidate (id1, id2) pairs from banded LSH. Each doc emits `bands`
     (band_idx, band_hash) rows — shuffle volume is linear in corpus size,
     never all-pairs across buckets; a bucket of s docs emits s(s-1)/2
-    ordered pairs under either strategy (pair-set equality is tested).
-
-    Two physical strategies, an honest measured tradeoff at TWO data
-    scales (tools/ab_minhash.py --mode strategy, 630k- and 6.3M-doc
-    corpora, local[32], fresh-JVM cold, interleaved; BENCH.md "MinHash
-    band-strategy tradeoff"):
-
-    - "join" (default): persist the band entries once, equality self-join
-      on the band key. The band-entry dataflow crosses the wire TWICE (two
-      exchange inputs), but pair expansion runs inside codegen sort-merge
-      join. At 630k docs wall is tied with "group" (21.9 vs 20.0 s best,
-      inside box noise); at 6.3M docs join wins decisively (486.8 vs
-      708.9 s — group = 1.456x) because large buckets make the
-      non-codegen aggregate the dominant cost while the extra exchange
-      input is memcpy on a single box.
-    - "group": groupBy the band key, collect_list the bucket, stream pairs
-      out via chained posexplode + explode(slice(...)) — the dataflow
-      crosses the wire exactly ONCE (~0.81x the shuffle bytes at both
-      scales, no persist), but collect_list plans as ObjectHashAggregate
-      (no codegen) and pays for it in wall time as buckets grow. Kept
-      selectable for genuinely network-bound clusters where ~19% fewer
-      wire bytes can out-weigh the codegen loss (unmeasured here — no
-      real network in this sandbox).
-
-    Memory shape on a hot bucket is O(s) per task under both: the join
-    streams matches; the group path pins (ids, id1) with posexplode and
-    generates partners row-at-a-time from explode(slice(ids, i+2, ...)) —
-    the only materialized array is the s-element id list (a single nested
-    transform+flatten would materialize all s(s-1)/2 pair structs in one
-    row and break past s~65k). Degenerate corpora still pay O(s^2) OUTPUT
-    rows — that is the LSH contract."""
-    if strategy not in ("join", "group"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+    ordered pairs, streamed by the sort-merge self-join (O(s) memory per
+    task). Degenerate corpora still pay O(s^2) OUTPUT rows — that is the
+    LSH contract. A one-shuffle collect_list plan and a parquet band table
+    were measured no faster and removed (BENCH_ab_strategy*.json,
+    BENCH_ab_bandtable.json)."""
     r = k // bands
     sigs = minhash_signatures(docs, n, k)
     band_entries = sigs.select(
@@ -347,57 +306,26 @@ def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
             ])
         ).alias("band_idx", "band_hash"),
     )
-    if strategy == "join":
-        # materialize the band entries ONCE before the self-join: both
-        # join sides reference this dataflow, and without a boundary Spark
-        # plans two full scans — the expensive signature UDF twice over
-        # the whole corpus (measured 2x wall on a 6.3M-doc corpus). At
-        # 100 TB you'd persist signatures as a TABLE — materialize_dir is
-        # that form (write-once parquet, storage-backed); persist() is
-        # the in-job default (LRU-evictable, spills to disk).
-        if materialize_dir is not None:
-            import os as _os
-
-            band_entries = _storage_boundary(
-                band_entries, _os.path.join(materialize_dir, "band_entries"))
-        else:
-            _pin(band_entries)
-        a = band_entries.alias("a")
-        b = band_entries.alias("b")
-        return (
-            a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_hash") == F.col("b.band_hash"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id1"),
-                    F.col("b.doc_id").alias("id2"))
-            .dropDuplicates(["id1", "id2"])
-        )
-    # "group": one shuffle buckets members per band key, pairs streamed
-    # row-locally. sort_array fixes collect_list's nondeterministic order
-    # AND yields id1 < id2 for free; the same pair found in several bands
-    # still needs the final dropDuplicates. posexplode's pos is 0-based
-    # and slice's start is 1-based, so partners-after-i start at i+2;
-    # explode of an empty slice (last element) emits nothing.
+    # materialize the band entries ONCE before the self-join: both join
+    # sides reference this dataflow, and without a boundary Spark plans
+    # two full scans — the expensive signature UDF twice over the whole
+    # corpus (measured 2x wall on a 6.3M-doc corpus)
+    _pin(band_entries)
+    a = band_entries.alias("a")
+    b = band_entries.alias("b")
     return (
-        band_entries
-        .groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "id1"))
-        .select(
-            "id1",
-            F.explode(
-                F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("id2"))
+        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
+               & (F.col("a.band_hash") == F.col("b.band_hash"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id1"),
+                F.col("b.doc_id").alias("id2"))
         .dropDuplicates(["id1", "id2"])
     )
 
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
                       bands: int = LSH_BANDS,
-                      threshold: float = 0.5,
-                      strategy: str = "join",
-                      materialize_dir: str | None = None) -> DataFrame:
+                      threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs: banded LSH candidates verified by **exact** Jaccard.
 
     The verify stage joins candidates back to per-doc shingle arrays and
@@ -406,26 +334,18 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     the same threshold (at the shipped parameters recall ≈ 1 for j >= 0.5;
     miss prob (1-j^2)^16). Candidates are tiny relative to the corpus, so
     the two verify joins move only candidate rows + their shingle arrays.
-    `strategy` selects the candidate-generation physical shape — see
-    minhash_band_candidates for the measured join-vs-group tradeoff.
 
-    Lifetime note: this pins the band entries (join strategy) and the
-    shingle arrays with persist() for the duration of the caller's
-    action; long-lived sessions should call `release_persisted()` after
-    consuming the result (see the note at `_PERSISTED`).
+    Lifetime note: this pins the band entries and the shingle arrays with
+    persist() for the duration of the caller's action; long-lived sessions
+    should call `release_persisted()` after consuming the result (see the
+    note at `_PERSISTED`).
     """
-    cands = minhash_band_candidates(docs, n, k, bands, strategy,
-                                    materialize_dir)
+    cands = minhash_band_candidates(docs, n, k, bands)
     sh = docs.select("doc_id", shingles_udf(n)(F.col("text")).alias("sh"))
     # same single-evaluation boundary as the band entries above: s1 and s2
     # both read this dataflow, and unpersisted the shingle UDF would run
     # two more full corpus passes
-    if materialize_dir is not None:
-        import os as _os
-
-        sh = _storage_boundary(sh, _os.path.join(materialize_dir, "shingles"))
-    else:
-        _pin(sh)
+    _pin(sh)
     s1 = sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
     s2 = sh.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     common = F.size(F.array_intersect("sh1", "sh2"))

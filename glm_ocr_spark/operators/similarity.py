@@ -200,12 +200,12 @@ IVF_NPROBE = 32
 IVF_TRAIN_SAMPLE = 16384
 
 
-# Hot-cell guard for the matmul strategy (round-5 verdict ask #1): a cell's
+# Hot-cell guard for the matmul kernel (round-5 verdict ask #1): a cell's
 # rows arrive as ONE applyInPandas group, so a degenerate hot cell (dense
 # semantic cluster, or n_cells too small for the corpus) would OOM an
 # executor with no actionable message. Cells above this population are
-# routed to the "join" strategy for that cell only — pure-JVM sort-merge
-# join, spills gracefully, 10-40x slower per pair but memory-safe. 64k
+# routed to the JVM join for that cell only — sort-merge join, spills
+# gracefully, 10-40x slower per pair but memory-safe. 64k
 # rows x 64 doubles ≈ 32 MB per group stack plus the 2048-row gram chunk —
 # comfortable against a multi-GB executor share.
 SEMDEDUP_MAX_CELL_ROWS = 65536
@@ -513,10 +513,7 @@ def ivf_cell_sim_udf(centroids: np.ndarray):
 def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.9,
                          n_cells: int = IVF_CELLS,
                          centroids: np.ndarray | None = None,
-                         order: str = "vec_id",
-                         strategy: str = "matmul",
-                         max_cell_rows: int | None = SEMDEDUP_MAX_CELL_ROWS,
-                         ) -> DataFrame:
+                         order: str = "vec_id") -> DataFrame:
     """(drop_id, keep_id, cell, cos_sim) for every within-cell pair at
     cosine >= threshold where keep_id precedes drop_id in the dedup order.
 
@@ -531,31 +528,27 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.9,
                    points FAR from the centroid survive).
 
     Physical shape: cell assignment is one map-side Arrow matmul (zero
-    shuffle); the pair join shuffles each side once hash-partitioned on
-    `cell` (linear bytes — embeddings cross the wire exactly twice), and
-    the quadratic comparison runs only within a cell. Skew note: a hot
-    cell is quadratic in ITS population; the mitigation is more cells
+    shuffle); the rows shuffle once hash-partitioned on `cell` and the
+    quadratic comparison runs only within a cell (`_semdedup_drop_pairs`
+    routes each cell by population). Skew note: a hot cell is quadratic
+    in ITS population; the mitigation is more cells
     (n_cells scales with corpus size — salting cannot apply because every
     within-cell pair must meet). Materializing via `ivf_write_partitioned`
     gives partition PRUNING (process a cell subset without scanning the
     rest), but NOT exchange elimination — a plain-parquet partitioned
     read reports no output partitioning to Catalyst, so the self-join
     still shuffles; exchange-free needs `bucketBy(cell).saveAsTable` or a
-    DSv2 storage-partitioned-join source (e.g. Iceberg) — see SCALE.md. The cosine is materialized ONCE via
-    withColumn before the threshold filter (Filter/Project CSE boundary —
-    same fix as embedding_neardup_pairs, SCALE.md). The assignment UDF is
-    deliberately NOT persisted even though the self-join evaluates it once
-    per side: it is one Arrow matmul over a column scan (no explosion),
-    and a pinned MEMORY_AND_DISK copy of the corpus would cost more than
-    the recompute (the minhash persist lesson applies only to dataflows
-    whose recompute is a multi-pass UDF explosion)."""
+    DSv2 storage-partitioned-join source (e.g. Iceberg) — see SCALE.md.
+    The assignment UDF is deliberately NOT persisted: it is one Arrow
+    matmul over a column scan (no explosion), and a pinned MEMORY_AND_DISK
+    copy of the corpus would cost more than the recompute (the minhash
+    persist lesson applies only to dataflows whose recompute is a
+    multi-pass UDF explosion)."""
     _check_order(order)
-    _check_strategy(strategy)
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_cells)
     cells = _semdedup_assign(emb, centroids, order)
-    return _semdedup_drop_pairs(cells, threshold, order, strategy,
-                                max_cell_rows)
+    return _semdedup_drop_pairs(cells, threshold, order)
 
 
 def _check_order(order: str) -> None:
@@ -587,27 +580,32 @@ def _semdedup_assign(emb: DataFrame, centroids: np.ndarray,
     raise AssertionError("unreachable")
 
 
-def _check_strategy(strategy: str) -> None:
-    if strategy not in ("matmul", "join"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+def _semdedup_drop_pairs(cells: DataFrame, threshold: float,
+                         order: str) -> DataFrame:
+    """The within-cell pair kernel, routed per cell by population; both
+    routes emit the same (drop_id, keep_id, cell, cos_sim) rows
+    (equivalence-tested) and cells are disjoint, so the union is exactly
+    the unrouted pair set.
 
-
-def _split_hot_cells(cells: DataFrame, threshold: float, order: str,
-                     max_cell_rows: int) -> DataFrame:
-    """Route each cell by population: matmul kernel for bounded cells,
-    streaming JVM join for hot ones (strategies are value-equivalent —
-    equivalence-tested — and cells are disjoint, so the union is exactly
-    the unguarded pair set). The pre-pass is one map-side-partial count
-    per cell, O(n_cells) on the driver."""
+    Cells of at most `SEMDEDUP_MAX_CELL_ROWS` rows take the matmul kernel
+    (`_semdedup_drop_pairs_matmul`): ONE shuffle of the corpus rows and
+    the quadratic part as chunked BLAS per cell — 10-40x faster than the
+    JVM join, which materializes two 64-double arrays per candidate pair
+    (BENCH_semdedup.json). Hotter cells, whose input stack alone could
+    OOM an Arrow group, take the JVM self-join
+    (`_semdedup_drop_pairs_join`), which streams through sort-merge join
+    and spills."""
+    # read at call time (not bound as a default argument), so patching the
+    # module constant reroutes cells
+    cap = SEMDEDUP_MAX_CELL_ROWS
     # exact short-circuit: when the whole corpus fits the cap no cell can
     # exceed it — and this count is column-pruned (the assignment UDF's
     # output is unreferenced, so Catalyst drops the Python eval and the
     # count reads parquet metadata), so small/medium runs pay ~nothing
-    if cells.count() <= max_cell_rows:
+    if cells.count() <= cap:
         return _semdedup_drop_pairs_matmul(cells, threshold)
     counts = cells.groupBy("cell").agg(F.count("*").alias("_n"))
-    hot = [r["cell"] for r in
-           counts.filter(F.col("_n") > max_cell_rows).collect()]
+    hot = [r["cell"] for r in counts.filter(F.col("_n") > cap).collect()]
     if not hot:
         return _semdedup_drop_pairs_matmul(cells, threshold)
     cold_df = cells.filter(~F.col("cell").isin(hot))
@@ -616,48 +614,15 @@ def _split_hot_cells(cells: DataFrame, threshold: float, order: str,
         _semdedup_drop_pairs_join(hot_df, threshold, order))
 
 
-def _semdedup_drop_pairs(cells: DataFrame, threshold: float,
-                         order: str, strategy: str = "matmul",
-                         max_cell_rows: int | None = SEMDEDUP_MAX_CELL_ROWS,
-                         ) -> DataFrame:
-    """Dispatch the within-cell pair kernel. Both strategies emit the
-    same (drop_id, keep_id, cell, cos_sim) rows — equivalence-tested:
-
-    "matmul" (default — the measured winner, see BENCH.md): group rows by
-      cell (ONE shuffle of the corpus rows, no pair materialization) and
-      compute the pair cosines as chunked NumPy matmuls per cell inside
-      applyInPandas. The join strategy materializes two 64-double arrays
-      per candidate pair (~1 KB x O(n_c^2) rows through the join); this
-      one moves each row once and does the quadratic part as BLAS.
-      Memory: one cell's vectors must fit an Arrow group (the bounded-
-      cell premise of SemDeDup); the gram matrix is chunked to
-      2048 x n_c so a hot cell cannot allocate n_c^2 doubles at once —
-      and cells whose POPULATION exceeds `max_cell_rows` are routed to
-      the join strategy per cell (`_split_hot_cells`), closing the
-      one remaining OOM risk: the input stack itself. Pass
-      max_cell_rows=None to skip the count pre-pass when the cell
-      distribution is known bounded.
-    "join": pure-JVM self-join on cell + per-pair aggregate-fold cosine —
-      no Python in the pair path, but pays pair materialization; kept
-      selectable as the no-Arrow fallback, as the A/B reference, and as
-      the hot-cell fallback (it streams through sort-merge join and
-      spills instead of stacking the cell in one executor's memory).
-    """
-    _check_strategy(strategy)
-    if strategy == "matmul":
-        if max_cell_rows is not None:
-            return _split_hot_cells(cells, threshold, order, max_cell_rows)
-        return _semdedup_drop_pairs_matmul(cells, threshold)
-    return _semdedup_drop_pairs_join(cells, threshold, order)
-
-
 def _semdedup_drop_pairs_matmul(cells: DataFrame,
                                 threshold: float) -> DataFrame:
     """applyInPandas per cell: sort by (_ord, vec_id) — the same strict
-    total order as the join strategy's precedes predicate — then emit
+    total order as the join route's precedes predicate — then emit
     (drop, keep) for every pair where the keep's sort index precedes the
-    drop's and cosine >= threshold. Zero vectors are masked explicitly
-    (never drop, never dropped), mirroring the join strategy's guard."""
+    drop's and cosine >= threshold. The gram matrix is chunked to
+    2048 x n_c so a cell never allocates n_c^2 doubles at once. Zero
+    vectors are masked explicitly (never drop, never dropped), mirroring
+    the join route's guard."""
     import pandas as pd  # local: similarity.py is importable without Arrow
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -699,6 +664,10 @@ def _semdedup_drop_pairs_matmul(cells: DataFrame,
 
 def _semdedup_drop_pairs_join(cells: DataFrame, threshold: float,
                               order: str) -> DataFrame:
+    """Pure-JVM self-join on cell + per-pair aggregate-fold cosine, with
+    the cosine materialized ONCE via withColumn before the threshold
+    filter (Filter/Project CSE boundary — same fix as
+    embedding_neardup_pairs, SCALE.md)."""
     k = cells.alias("k")
     d = cells.alias("d")
     precedes = F.col("k._ord") < F.col("d._ord")
@@ -758,11 +727,7 @@ def _assigned_with_ord(assigned: DataFrame, order: str) -> DataFrame:
 
 def semantic_dedup_pairs_from_assigned(assigned: DataFrame,
                                        threshold: float = 0.9,
-                                       order: str = "vec_id",
-                                       strategy: str = "matmul",
-                                       max_cell_rows: int | None =
-                                       SEMDEDUP_MAX_CELL_ROWS,
-                                       ) -> DataFrame:
+                                       order: str = "vec_id") -> DataFrame:
     """`semantic_dedup_pairs` over a table whose cell assignment ALREADY
     ran at write time — the deployment shape: assign once (the same
     centroids serve the IVF ANN index), persist as a
@@ -772,25 +737,18 @@ def semantic_dedup_pairs_from_assigned(assigned: DataFrame,
     plans with NO shuffle Exchange at all — plan-asserted in
     tests/test_semantic_dedup.py (a plain partitionBy-parquet read gives
     pruning but still exchanges; see SCALE.md)."""
-    _check_strategy(strategy)
     return _semdedup_drop_pairs(
-        _assigned_with_ord(assigned, order), threshold, order, strategy,
-        max_cell_rows)
+        _assigned_with_ord(assigned, order), threshold, order)
 
 
 def semantic_dedup_from_assigned(assigned: DataFrame,
                                  threshold: float = 0.9,
-                                 order: str = "vec_id",
-                                 strategy: str = "matmul",
-                                 max_cell_rows: int | None =
-                                 SEMDEDUP_MAX_CELL_ROWS) -> DataFrame:
+                                 order: str = "vec_id") -> DataFrame:
     """`semantic_dedup` survivors over a pre-assigned table — see
     semantic_dedup_pairs_from_assigned for when and why. Value-identical
     to semantic_dedup with the same centroids (parity-tested)."""
-    _check_strategy(strategy)
     cells = _assigned_with_ord(assigned, order)
-    dropped = (_semdedup_drop_pairs(cells, threshold, order, strategy,
-                                    max_cell_rows)
+    dropped = (_semdedup_drop_pairs(cells, threshold, order)
                .select(F.col("drop_id").alias("vec_id")).distinct())
     return cells.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
 
@@ -798,28 +756,26 @@ def semantic_dedup_from_assigned(assigned: DataFrame,
 def semantic_dedup(emb: DataFrame, threshold: float = 0.9,
                    n_cells: int = IVF_CELLS,
                    centroids: np.ndarray | None = None,
-                   order: str = "vec_id",
-                   strategy: str = "matmul",
-                   max_cell_rows: int | None = SEMDEDUP_MAX_CELL_ROWS,
-                   ) -> DataFrame:
+                   order: str = "vec_id") -> DataFrame:
     """SemDeDup survivors: (vec_id, cell) for every embedding NOT dropped
     by `semantic_dedup_pairs` — one left-anti join against the distinct
     drop set (ids only on the wire). See semantic_dedup_pairs for the
     algorithm, determinism, and the per-cell cost bound that makes this
     the semantic-dedup shape that survives 100 TB.
 
-    Cost note: the assignment UDF evaluates THREE times here (both pair-
-    join sides + the survivor side; the survivor side's shuffle carries
-    only (vec_id, cell) — embedding is pruned). Still cheaper than
-    pinning a corpus-sized MEMORY_AND_DISK cache for one extra matmul
-    pass over a column scan; callers that persist `emb` themselves get
-    the scan amortized across all three."""
+    Cost note: the assignment UDF evaluates TWICE per row here — once
+    feeding the per-cell matmul kernel and once for the survivor side of
+    the left-anti join (whose shuffle carries only (vec_id, cell) —
+    embedding is pruned); the cap pre-pass count is column-pruned and
+    evaluates nothing (past the cap, the per-cell counts that find hot
+    cells add a third pass). Still cheaper than pinning a corpus-sized
+    MEMORY_AND_DISK cache for one extra matmul pass over a column scan;
+    callers that persist `emb` themselves get the scan amortized across
+    both."""
     _check_order(order)
-    _check_strategy(strategy)
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_cells)
     cells = _semdedup_assign(emb, centroids, order)
-    dropped = (_semdedup_drop_pairs(cells, threshold, order, strategy,
-                                    max_cell_rows)
+    dropped = (_semdedup_drop_pairs(cells, threshold, order)
                .select(F.col("drop_id").alias("vec_id")).distinct())
     return cells.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")

@@ -624,9 +624,12 @@ def oracle_extract_turn(payload, tool=""):
     else:
         blocks = _xy_cut(blocks)
 
-    # clamp + degenerate drop + int truncation
+    # clamp + degenerate drop + int truncation; a NaN coordinate drops the
+    # box (it compares false against every bound), infinities clamp
     survivors = []
     for b in blocks:
+        if any(v != v for v in b["bbox"]):
+            continue
         x1 = max(0.0, min(b["bbox"][0], page_w))
         y1 = max(0.0, min(b["bbox"][1], page_h))
         x2 = max(0.0, min(b["bbox"][2], page_w))

@@ -112,20 +112,35 @@ def test_minhash_lsh_equals_exact_jaccard(spark):
     assert len(exact) > 0
 
 
-def test_minhash_band_strategies_identical_pairs(spark):
-    """The two candidate-generation physical strategies (codegen self-join
-    vs one-shuffle bucket grouping) must be value-identical — they differ
-    only in where the s(s-1)/2 per-bucket expansion happens (see the
-    measured tradeoff in minhash_band_candidates' docstring)."""
-    from glm_ocr_spark.operators.dedup import minhash_band_candidates
+def test_minhash_band_candidates_match_python_reference(spark):
+    """The band self-join must emit exactly the id1 < id2 pairs that share
+    at least one of the LSH_BANDS band keys, recomputed here in Python from
+    the collected signatures with the same r = k // bands slices (exact
+    slice tuples, so this reference has no band-hash collisions)."""
+    from itertools import combinations
+
+    from glm_ocr_spark.operators.dedup import (
+        LSH_BANDS,
+        MINHASH_K,
+        minhash_band_candidates,
+        minhash_signatures,
+    )
 
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
-    join_pairs = {(r.id1, r.id2) for r in
-                  minhash_band_candidates(docs, strategy="join").collect()}
-    group_pairs = {(r.id1, r.id2) for r in
-                   minhash_band_candidates(docs, strategy="group").collect()}
-    assert join_pairs == group_pairs
-    assert len(join_pairs) > 0
+    r = MINHASH_K // LSH_BANDS
+    buckets: dict = {}
+    for row in minhash_signatures(docs).collect():
+        sig = list(row["sig"])
+        assert len(sig) == MINHASH_K
+        for bi in range(LSH_BANDS):
+            key = (bi, tuple(sig[bi * r:(bi + 1) * r]))
+            buckets.setdefault(key, []).append(row["doc_id"])
+    want = {pair for ids in buckets.values()
+            for pair in combinations(sorted(ids), 2)}
+    got = {(row.id1, row.id2)
+           for row in minhash_band_candidates(docs).collect()}
+    assert got == want
+    assert len(want) > 0
 
 
 def test_release_persisted_frees_minhash_caches(spark):

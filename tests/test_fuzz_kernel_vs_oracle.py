@@ -7,10 +7,12 @@ random attributes, broken geometry, nested/overlapping boxes, unicode,
 stray markup — and the invariant is pure equality.
 """
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from glm_ocr_spark.config import ID2LABEL
 from glm_ocr_spark.kernel.extract import extract_turn
+from glm_ocr_spark.kernel.geometry_py import SMALL_N
 from tests.oracle import oracle_extract_turn
 
 FIELDS = ("extracted_text", "markdown", "json", "spans", "n_blocks")
@@ -29,6 +31,7 @@ coord = st.one_of(
     st.integers(min_value=-200, max_value=1400),
     st.floats(min_value=-100, max_value=1200, allow_nan=False,
               allow_infinity=False),
+    st.sampled_from([float("nan"), float("inf"), float("-inf")]),
 )
 
 
@@ -92,6 +95,42 @@ def test_zero_area_boxes_regression():
     o = oracle_extract_turn(p, "")
     for f in FIELDS:
         assert k[f] == o[f]
+
+
+def _page_with_bad_box(n_blocks, slot, value, ordered):
+    """A page of `n_blocks` stacked text boxes whose middle box has `value`
+    in bbox slot `slot` and the top score, so NMS (where its NaN IoU
+    suppresses every other box) leaves it the only box reaching the
+    clamp."""
+    bad = n_blocks // 2
+    blocks = []
+    for i in range(n_blocks):
+        coords = ["10", str(10 + 12 * i), "900", str(18 + 12 * i)]
+        score = "0.9"
+        if i == bad:
+            coords[slot] = value
+            score = "0.95"
+        order = f' order="{i}"' if ordered else ""
+        blocks.append(f'<block label="text" score="{score}" '
+                      f'bbox="{",".join(coords)}"{order}>row {i}</block>')
+    return '<page w="1000" h="1200"/>' + "\n".join(blocks)
+
+
+@pytest.mark.parametrize("n_blocks", [1, 8, SMALL_N, SMALL_N + 1, 2 * SMALL_N])
+@pytest.mark.parametrize("slot", range(4))
+@pytest.mark.parametrize("ordered", [True, False])
+def test_non_finite_bbox_rule(n_blocks, slot, ordered):
+    """One rule for non-finite coordinates on both geometry paths (pages on
+    each side of SMALL_N) and the oracle: a NaN in any bbox slot drops the
+    box; an infinite coordinate clamps to the page edge."""
+    for value in ("nan", "NaN", "inf", "-inf"):
+        p = _page_with_bad_box(n_blocks, slot, value, ordered)
+        k = extract_turn(p)
+        o = oracle_extract_turn(p, "")
+        for f in FIELDS:
+            assert k[f] == o[f], (f, value)
+        if value.lower() == "nan":
+            assert k["n_blocks"] == 0
 
 
 @settings(max_examples=100, deadline=None)

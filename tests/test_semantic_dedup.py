@@ -6,9 +6,18 @@ decision sits within float-noise of the boundary)."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
+
+from glm_ocr_spark.operators import similarity
+
+# Patching the hot-cell cap to 0 makes every cell "hot", so the whole pair
+# kernel runs on the JVM self-join route; the tests below check that route
+# against the same oracles as the matmul kernel this way.
+ALL_CELLS_HOT = 0
 
 SF1 = "/root/testdata/sf0.001"
 SF2 = "/root/testdata/sf0.01"
@@ -90,12 +99,12 @@ def test_semantic_dedup_matches_numpy_oracle_trained_centroids(spark):
     _assert_engine_margins(emb, cents, threshold=0.4)
     cells, dropped = _np_semdedup(ids, emb, cents, 0.4)
     want = {(i, cells[i]) for i in cells if i not in dropped}
-    for strategy in ("matmul", "join"):
-        got = {(r["vec_id"], r["cell"])
-               for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
-                                       centroids=cents,
-                                       strategy=strategy).collect()}
-        assert got == want, strategy
+    for cap in (similarity.SEMDEDUP_MAX_CELL_ROWS, ALL_CELLS_HOT):
+        with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", cap):
+            got = {(r["vec_id"], r["cell"])
+                   for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
+                                           centroids=cents).collect()}
+        assert got == want, cap
     # the threshold must actually drop something on the raw corpus, or this
     # test proves only the trivial identity (0.4: 23 in-cell drops at
     # sf0.01 with 8 trained cells; no natural in-cell pair reaches 0.5)
@@ -141,11 +150,13 @@ def test_semantic_dedup_pairs_expose_drop_evidence(spark):
     assert pairs
     assert all(p["keep_id"] < p["drop_id"] and p["cos_sim"] >= 0.4
                for p in pairs)
-    join_pairs = semantic_dedup_pairs(sdf, threshold=0.4, centroids=cents,
-                                      strategy="join").collect()
+    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS",
+                           ALL_CELLS_HOT):
+        join_pairs = semantic_dedup_pairs(sdf, threshold=0.4,
+                                          centroids=cents).collect()
     as_set = lambda rows: {(p["drop_id"], p["keep_id"], p["cell"],
                             p["cos_sim"]) for p in rows}
-    assert as_set(pairs) == as_set(join_pairs)  # strategies value-identical
+    assert as_set(pairs) == as_set(join_pairs)  # routes value-identical
     survivors = {r["vec_id"] for r in semantic_dedup(
         sdf, threshold=0.4, centroids=cents).collect()}
     assert {p["drop_id"] for p in pairs}.isdisjoint(survivors)
@@ -222,8 +233,6 @@ def test_semantic_dedup_rejects_unknown_order(spark):
         semantic_dedup(_spark_emb(spark, SF1), order="nope")
     with pytest.raises(ValueError, match="unknown order"):
         semantic_dedup_pairs(_spark_emb(spark, SF1), order="nope")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        semantic_dedup(_spark_emb(spark, SF1), strategy="nope")
 
 
 def test_zero_embedding_never_drops_or_is_dropped(spark):
@@ -251,14 +260,14 @@ def test_zero_embedding_never_drops_or_is_dropped(spark):
     aug = base.unionByName(zero)
     plain = {r["vec_id"] for r in semantic_dedup(
         base, threshold=0.4, centroids=cents).collect()}
-    for strategy in ("matmul", "join"):
-        survivors = {r["vec_id"] for r in semantic_dedup(
-            aug, threshold=0.4, centroids=cents,
-            strategy=strategy).collect()}
-        assert -1 in survivors, strategy  # never dropped
+    for cap in (similarity.SEMDEDUP_MAX_CELL_ROWS, ALL_CELLS_HOT):
+        with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", cap):
+            survivors = {r["vec_id"] for r in semantic_dedup(
+                aug, threshold=0.4, centroids=cents).collect()}
+        assert -1 in survivors, cap  # never dropped
         # same centroids, zero vector planted ahead of everything in its
         # cell -> no other survivor changes (it never drops anyone)
-        assert survivors - {-1} == plain, strategy
+        assert survivors - {-1} == plain, cap
 
 
 def test_semdedup_from_assigned_bucketed_no_shuffle(spark):
@@ -292,14 +301,17 @@ def test_semdedup_from_assigned_bucketed_no_shuffle(spark):
         # path a big-corpus run would take
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         assigned = spark.table(table)
-        for strategy in ("matmul", "join"):
-            pairs = semantic_dedup_pairs_from_assigned(
-                assigned, threshold=0.4, strategy=strategy)
+        for cap in (similarity.SEMDEDUP_MAX_CELL_ROWS, ALL_CELLS_HOT):
+            with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS",
+                                   cap):
+                pairs = semantic_dedup_pairs_from_assigned(
+                    assigned, threshold=0.4)
             plan = pairs._jdf.queryExecution().executedPlan().toString()
-            # join: the bucketed scan reports HashPartitioning so the SMJ
-            # needs no shuffle; matmul: the same distribution satisfies
-            # the groupBy -> FlatMapGroupsInPandas clustering requirement
-            assert "Exchange" not in plan, (strategy, plan[:2000])
+            # join route: the bucketed scan reports HashPartitioning so
+            # the SMJ needs no shuffle; matmul: the same distribution
+            # satisfies the groupBy -> FlatMapGroupsInPandas clustering
+            # requirement
+            assert "Exchange" not in plan, (cap, plan[:2000])
         got = {(r["vec_id"], r["cell"]) for r in
                semantic_dedup_from_assigned(assigned, threshold=0.4)
                .collect()}
@@ -337,7 +349,8 @@ def _random_corpus(draw):
     dim = draw(st.integers(3, 8))
     n_cells = draw(st.integers(2, 4))
     order = draw(st.sampled_from(["vec_id", "centroid"]))
-    strategy = draw(st.sampled_from(["matmul", "join"]))
+    cap = draw(st.sampled_from([similarity.SEMDEDUP_MAX_CELL_ROWS,
+                                ALL_CELLS_HOT]))
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     emb = rng.normal(size=(n, dim))
     # centroids from the data (fixed-centroid style) keep everything
@@ -367,7 +380,7 @@ def _random_corpus(draw):
         hi = vals[i] if i < len(vals) else vals[-1] + 0.2
         assume(hi - lo >= 1e-6)
         threshold = (lo + hi) / 2.0
-    return emb, cents, threshold, order, strategy
+    return emb, cents, threshold, order, cap
 
 
 @settings(max_examples=8, deadline=None,
@@ -382,7 +395,7 @@ def test_fuzz_semdedup_matches_numpy(spark, case):
 
     from glm_ocr_spark.operators.similarity import semantic_dedup
 
-    emb, cents, threshold, order, strategy = case
+    emb, cents, threshold, order, cap = case
     ids = np.arange(len(emb))
     schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
@@ -390,12 +403,13 @@ def test_fuzz_semdedup_matches_numpy(spark, case):
     sdf = spark.createDataFrame(
         [(int(i), [float(v) for v in row]) for i, row in zip(ids, emb)],
         schema)
-    got = {(r["vec_id"], r["cell"]) for r in semantic_dedup(
-        sdf, threshold=threshold, centroids=cents, order=order,
-        strategy=strategy).collect()}
+    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", cap):
+        got = {(r["vec_id"], r["cell"]) for r in semantic_dedup(
+            sdf, threshold=threshold, centroids=cents,
+            order=order).collect()}
     cells, dropped = _np_semdedup(ids, emb, cents, threshold, order=order)
     want = {(i, cells[i]) for i in cells if i not in dropped}
-    assert got == want, (threshold, order, strategy)
+    assert got == want, (threshold, order, cap)
 
 
 def test_hot_cell_guard_value_equal_on_pathological_corpus(spark):
@@ -431,34 +445,34 @@ def test_hot_cell_guard_value_equal_on_pathological_corpus(spark):
                       "embedding": [r[1] for r in rows]}))
     cents = fixed_centroids(sdf, n_cells)
 
+    # default cap: the 120-row corpus is under it, so every cell takes
+    # the matmul kernel
     unguarded = {(r["vec_id"], r["cell"])
                  for r in semantic_dedup(sdf, threshold=0.9,
-                                         centroids=cents,
-                                         max_cell_rows=None).collect()}
-    # cap 10 << the hot cell's ~70 rows: cell 0 (and any other cell over
-    # 10) must take the join fallback; the result must not move
-    guarded = {(r["vec_id"], r["cell"])
-               for r in semantic_dedup(sdf, threshold=0.9, centroids=cents,
-                                       max_cell_rows=10).collect()}
-    assert guarded == unguarded
-    assert len(unguarded) < n  # the threshold actually dropped something
-
+                                         centroids=cents).collect()}
     pairs_un = {(r["drop_id"], r["keep_id"], r["cell"], r["cos_sim"])
                 for r in semantic_dedup_pairs(
-                    sdf, threshold=0.9, centroids=cents,
-                    max_cell_rows=None).collect()}
-    pairs_g = {(r["drop_id"], r["keep_id"], r["cell"], r["cos_sim"])
-               for r in semantic_dedup_pairs(
-                   sdf, threshold=0.9, centroids=cents,
-                   max_cell_rows=10).collect()}
+                    sdf, threshold=0.9, centroids=cents).collect()}
+    # cap 10 << the hot cell's ~70 rows: cell 0 (and any other cell over
+    # 10) must take the join fallback; the result must not move
+    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", 10):
+        guarded = {(r["vec_id"], r["cell"])
+                   for r in semantic_dedup(sdf, threshold=0.9,
+                                           centroids=cents).collect()}
+        pairs_g = {(r["drop_id"], r["keep_id"], r["cell"], r["cos_sim"])
+                   for r in semantic_dedup_pairs(
+                       sdf, threshold=0.9, centroids=cents).collect()}
+    assert guarded == unguarded
+    assert len(unguarded) < n  # the threshold actually dropped something
     assert pairs_g == pairs_un
     assert pairs_un  # non-trivial
 
 
 def test_hot_cell_guard_default_on_and_cold_path_unchanged(spark):
-    """The guard defaults ON (SEMDEDUP_MAX_CELL_ROWS); with no hot cell the
-    result equals the unguarded kernel (cold path routes everything to the
-    matmul kernel)."""
+    """The guard is always on at SEMDEDUP_MAX_CELL_ROWS; with no hot cell
+    everything takes the matmul kernel, and a cap of 10 (which sends the
+    sf0.001 cells over 10 rows to the join route) leaves the result
+    unchanged."""
     from glm_ocr_spark.operators.similarity import (
         SEMDEDUP_MAX_CELL_ROWS,
         semantic_dedup,
@@ -471,8 +485,8 @@ def test_hot_cell_guard_default_on_and_cold_path_unchanged(spark):
     got_default = {(r["vec_id"], r["cell"])
                    for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
                                            centroids=cents).collect()}
-    got_off = {(r["vec_id"], r["cell"])
-               for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
-                                       centroids=cents,
-                                       max_cell_rows=None).collect()}
-    assert got_default == got_off
+    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", 10):
+        got_capped = {(r["vec_id"], r["cell"])
+                      for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
+                                              centroids=cents).collect()}
+    assert got_default == got_capped

@@ -21,14 +21,9 @@ the comparison were globally quadratic.
 Writes BENCH_semdedup.json at the repo root (rendered into BENCH.md as a
 persistent auxiliary section) and prints one JSON line.
 
-Also adjudicates the pair-kernel strategy default ("matmul" per-cell
-NumPy gram chunks in applyInPandas vs the pure-JVM "join" self-join):
-each (arm, strategy) cell is a fresh JVM, strictly interleaved.
-
 Usage:
   python tools/bench_semdedup.py [--rounds 2]     # orchestrator
-  python tools/bench_semdedup.py --worker --n 25000 --cells 32 \
-      --strategy matmul
+  python tools/bench_semdedup.py --worker --n 25000 --cells 32
 NEVER run concurrently with other Spark work (bench contamination).
 """
 
@@ -73,7 +68,7 @@ def _ensure_vectors(spark, n: int) -> str:
     return path
 
 
-def run_worker(n: int, cells: int, strategy: str) -> None:
+def run_worker(n: int, cells: int) -> None:
     from pyspark.sql import functions as F
 
     from glm_ocr_spark.operators.similarity import (
@@ -90,8 +85,8 @@ def run_worker(n: int, cells: int, strategy: str) -> None:
     cents = train_ivf_centroids(emb, n_cells=cells)
 
     t0 = time.time()
-    survivors = semantic_dedup(emb, threshold=0.9, centroids=cents,
-                               strategy=strategy).count()
+    survivors = semantic_dedup(emb, threshold=0.9,
+                               centroids=cents).count()
     cold = time.time() - t0
 
     sizes = [r["count"] for r in emb.withColumn(
@@ -99,7 +94,7 @@ def run_worker(n: int, cells: int, strategy: str) -> None:
         .groupBy("cell").count().collect()]
     within = sum(s * (s - 1) // 2 for s in sizes)
     out = {
-        "n": n, "cells": cells, "strategy": strategy,
+        "n": n, "cells": cells,
         "cold_sec": round(cold, 2),
         "survivors": survivors,
         "vecs_per_sec": round(n / cold, 1),
@@ -111,16 +106,16 @@ def run_worker(n: int, cells: int, strategy: str) -> None:
     print(json.dumps(out))
 
 
-def _run_arm(n: int, cells: int, strategy: str) -> dict:
+def _run_arm(n: int, cells: int) -> dict:
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--worker",
-         "--n", str(n), "--cells", str(cells), "--strategy", strategy],
+         "--n", str(n), "--cells", str(cells)],
         capture_output=True, text=True, cwd=REPO, timeout=7200)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     if not lines:
         sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-4000:])
         raise SystemExit(
-            f"worker n={n} cells={cells} {strategy} produced no result")
+            f"worker n={n} cells={cells} produced no result")
     return json.loads(lines[-1])
 
 
@@ -130,23 +125,18 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=None)
     ap.add_argument("--cells", type=int, default=None)
     ap.add_argument("--rounds", type=int, default=2)
-    ap.add_argument("--strategy", default="matmul")
     args = ap.parse_args()
     if args.worker:
-        run_worker(args.n, args.cells, args.strategy)
+        run_worker(args.n, args.cells)
         return
 
     from tools.quietbox import assert_quiet
 
     assert_quiet("bench_semdedup")
-    strategies = ("matmul", "join")
-    draws: dict[str, list[dict]] = {
-        f"{n}v_{c}c_{st}": [] for n, c in ARMS for st in strategies}
+    draws: dict[str, list[dict]] = {f"{n}v_{c}c": [] for n, c in ARMS}
     for _ in range(max(1, args.rounds)):
-        # strictly interleaved across every (arm, strategy) cell
-        for n, c in ARMS:
-            for st in strategies:
-                draws[f"{n}v_{c}c_{st}"].append(_run_arm(n, c, st))
+        for n, c in ARMS:  # strictly interleaved across arms
+            draws[f"{n}v_{c}c"].append(_run_arm(n, c))
 
     arms = {}
     for key, arm_draws in draws.items():
@@ -154,21 +144,13 @@ def main() -> None:
         best["draws_cold_sec"] = [d["cold_sec"] for d in arm_draws]
         arms[key] = best
 
-    (sk, _), (lk, _) = ((f"{n}v_{c}c", None) for n, c in ARMS)
-    small, large = arms[f"{sk}_matmul"], arms[f"{lk}_matmul"]
+    small, large = (arms[f"{n}v_{c}c"] for n, c in ARMS)
     # per-vector cost ratio: 1.0 = perfectly flat (the SemDeDup claim);
     # the global-quadratic strawman would read ~4.0 at 4x the vectors
     ratio = round((large["cold_sec"] / large["n"])
                   / (small["cold_sec"] / small["n"]), 3)
-    # strategy adjudication: matmul/join wall ratio per arm (< 1.0 =
-    # matmul wins; the operator default must be the measured winner)
-    strat_ratio = {
-        key: round(arms[f"{key}_matmul"]["cold_sec"]
-                   / arms[f"{key}_join"]["cold_sec"], 3)
-        for key in (sk, lk)}
     summary = {"rounds": args.rounds, "arms": arms,
-               "per_vector_cost_ratio_4x": ratio,
-               "matmul_over_join_sec": strat_ratio}
+               "per_vector_cost_ratio_4x": ratio}
     with open(os.path.join(REPO, "BENCH_semdedup.json"), "w") as f:
         json.dump(summary, f, indent=2)
     print(json.dumps(summary))
