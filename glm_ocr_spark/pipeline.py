@@ -1,10 +1,14 @@
 """Spark extraction pipeline: transcripts table -> extracted table.
 
 Design (SURVEY.md §7.0): per-turn work is pure and independent, so the whole
-extraction is a single `mapInArrow` — a shuffle-free narrow map. The only
-data that ever needs to cross the wire downstream is the extracted output
-(spans + text), never the raw payloads, satisfying the north rule's
-"shuffle volume bounded by map-side block scoring".
+extraction is a single `mapInArrow` — a shuffle-free narrow map. The batch
+job (`run`) adds one range exchange for ordered output, and it sits below
+the kernel: it shuffles the scanned input rows, payloads included, so the
+kernel runs once per row. Outputs are ~1.48x the input bytes
+(`out_bytes_per_in_byte` on perfbench extract_batch), so the input is the
+smaller side to shuffle: 3.12 MB of sink shuffle on that workload, against
+4.09 MB when the exchange ran on the kernel output (where the range
+sampler also evaluated the kernel a second time per row).
 
 Scale notes (100 TB / 10^12 turns):
   - No groupBy/join anywhere in the hot path: throughput scales linearly with
@@ -302,20 +306,42 @@ def repartition_salted(df: DataFrame, num_partitions: int,
     )
 
 
+def _run_plan(spark: SparkSession, input_path: str, fmt: str = "parquet",
+              mode: str = "layout", config=None) -> DataFrame:
+    """The DataFrame `run` writes: scan -> range exchange on the input keys
+    -> kernel -> in-partition sort.
+
+    The exchange sits below the kernel because RangePartitioner runs a
+    sampling job over its child: above the kernel, that job evaluated the
+    kernel a second time per row. The key columns pass through the kernel
+    unchanged, so the bounds and per-file order are the same either way.
+    The explicit partition count (one per scan split) makes the exchange
+    REPARTITION_BY_NUM, which AQE never coalesces, so the kernel keeps one
+    task per input split.
+    """
+    df = spark.read.format(fmt).load(input_path)
+    n = max(1, df.rdd.getNumPartitions())
+    ranged = df.repartitionByRange(n, "conv_id", "turn_idx")
+    return (extract_transcripts(ranged, mode=mode, config=config)
+            .sortWithinPartitions("conv_id", "turn_idx"))
+
+
 def run(spark: SparkSession, input_path: str, output_path: str,
         fmt: str = "parquet", mode: str = "layout", config=None) -> None:
     """Batch job entry: read transcripts, extract, write partitioned output.
 
-    Output is ordered within files by (conv_id, turn_idx) via a range
-    repartition + in-partition sort (north-rule stable ordering) without a
-    global single-reducer sort. `mode`/`config` come from the resolution
-    chain (config_loader.load_config: kwargs > env > .env > YAML > defaults).
+    Output is ordered within files by (conv_id, turn_idx), and the files in
+    name order hold disjoint, increasing key ranges (north-rule stable
+    ordering), without a global single-reducer sort. The range exchange
+    shuffles the scanned input rows, payloads included, before the kernel
+    runs once per row; see `_run_plan`. Outputs are ~1.48x the input bytes
+    (`out_bytes_per_in_byte` on perfbench extract_batch), so this moves less
+    than shuffling the kernel output did (sink shuffle 4.09 -> 3.12 MB on
+    that workload). `mode`/`config` come from the resolution chain
+    (config_loader.load_config: kwargs > env > .env > YAML > defaults).
     """
-    df = spark.read.format(fmt).load(input_path)
-    out = extract_transcripts(df, mode=mode, config=config)
     (
-        out.repartitionByRange("conv_id", "turn_idx")
-        .sortWithinPartitions("conv_id", "turn_idx")
+        _run_plan(spark, input_path, fmt=fmt, mode=mode, config=config)
         .write.mode("overwrite")
         .format(fmt)
         .save(output_path)
