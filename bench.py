@@ -630,7 +630,8 @@ def write_bench_md(result: dict) -> None:
         d = ab["draws_sec"]
         return [
             "",
-            "## Headline-drift A/B: HEAD vs %s (tools/ab_extract.py)"
+            "## Headline-drift A/B: HEAD vs %s (round-4 record; "
+            "paired A/Bs now run through tools/ab.py)"
             % ab["ref"],
             "",
             "The full-bench headline slot declined r3->r4->r5; this "

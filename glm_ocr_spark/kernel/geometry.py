@@ -22,6 +22,8 @@ from glm_ocr_spark.config import (
     OVERSIZE_AREA_THRESHOLD_LANDSCAPE,
     OVERSIZE_AREA_THRESHOLD_PORTRAIT,
 )
+# called through this module's global: the stage tracer wraps it by name
+from glm_ocr_spark.kernel.geometry_py import xy_cut_order
 
 CLS, SCORE, X1, Y1, X2, Y2, ORDER = range(7)
 
@@ -216,66 +218,6 @@ def clamp_and_validate(boxes: np.ndarray, page_w: float,
     return out, keep.astype(np.int64)
 
 
-def xy_cut_order(boxes: np.ndarray) -> np.ndarray:
-    """Recursive XY-cut reading order over (n, 4) coords; returns a
-    permutation of row indices in reading order.
-
-    The reference's reading order comes from the detector model's order_seq
-    (layout_postprocess_utils.py:332-333); the north rule replaces the model
-    with a CPU heuristic — recursive XY-cut (alternate horizontal/vertical
-    gap splits; leaves ordered top-to-bottom then left-to-right).
-    """
-    n = len(boxes)
-    idx = np.arange(n, dtype=np.int64)
-    if n <= 1:
-        return idx
-
-    # Sanitize intervals: inverted boxes (x1 > x2 / y1 > y2) would place the
-    # cut outside every interval start, making one bucket swallow the whole
-    # group -> infinite recursion. Geometry-order uses the normalized spans;
-    # degenerate boxes are dropped later by clamp_and_validate regardless.
-    xs_lo = np.minimum(boxes[:, 0], boxes[:, 2])
-    xs_hi = np.maximum(boxes[:, 0], boxes[:, 2])
-    ys_lo = np.minimum(boxes[:, 1], boxes[:, 3])
-    ys_hi = np.maximum(boxes[:, 1], boxes[:, 3])
-
-    def _gaps(lo: np.ndarray, hi: np.ndarray) -> list[float]:
-        order = np.argsort(lo, kind="stable")
-        cuts = []
-        cover = hi[order[0]]
-        for k in order[1:]:
-            if lo[k] > cover:
-                cuts.append((cover + lo[k]) / 2.0)
-            cover = max(cover, hi[k])
-        return cuts
-
-    def _rec(sub: np.ndarray, axis_first: int) -> list[int]:
-        if len(sub) <= 1:
-            return list(sub)
-        for axis in (axis_first, 1 - axis_first):
-            lo = ys_lo[sub] if axis == 0 else xs_lo[sub]  # axis 0: split on y
-            hi = ys_hi[sub] if axis == 0 else xs_hi[sub]
-            cuts = _gaps(lo, hi)
-            if cuts:
-                groups = []
-                prev = -np.inf
-                for c in cuts + [np.inf]:
-                    mask = (lo > prev) & (lo <= c)
-                    if mask.any():
-                        groups.append(sub[mask])
-                    prev = c
-                if len(groups) >= 2:  # progress guard
-                    out: list[int] = []
-                    for g in groups:
-                        out.extend(_rec(g, 1 - axis))
-                    return out
-        # no gap on either axis: stable top-to-bottom, then left-to-right
-        order = np.lexsort((xs_lo[sub], ys_lo[sub]))
-        return list(sub[order])
-
-    return np.asarray(_rec(idx, 0), dtype=np.int64)
-
-
 def survivors_numpy(rows: list[tuple], spans: list, config,
                     image_cls_id: int, page_w: float, page_h: float,
                     has_order: bool) -> list[tuple]:
@@ -302,7 +244,7 @@ def survivors_numpy(rows: list[tuple], spans: list, config,
     if has_order:
         take(np.argsort(arr[:, ORDER], kind="stable"))
     else:
-        take(xy_cut_order(arr[:, X1:Y2 + 1]))
+        take(xy_cut_order(arr.tolist()))
     arr, keep = clamp_and_validate(unclip(arr, config.unclip_ratio),
                                    page_w, page_h)
     take(keep)

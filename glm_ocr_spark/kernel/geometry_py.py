@@ -8,6 +8,8 @@ on parallel tuples instead of arrays; extract_turn dispatches here for
 n <= SMALL_N and to the vectorized chain above it. Equivalence between the
 two paths is enforced by a dedicated randomized test
 (tests/test_geometry_paths.py) on top of the kernel-vs-oracle gate.
+xy_cut_order is the one reading-order implementation; the numpy chain
+calls it too.
 
 Row format: tuple (cls_id, score, x1, y1, x2, y2, order) of Python numbers.
 """
@@ -220,10 +222,21 @@ def survivors_small(rows: list[tuple], spans: list, config,
 
 
 def xy_cut_order(rows: list[tuple]) -> list[int]:
-    """Same XY-cut spec as geometry.xy_cut_order, tuple-based."""
+    """Recursive XY-cut reading order over (cls, score, x1, y1, x2, y2,
+    ...) rows; returns a permutation of row indices in reading order. Both
+    geometry paths use it.
+
+    The reference's reading order comes from the detector model's order_seq
+    (layout_postprocess_utils.py:332-333); the north rule replaces the model
+    with a CPU heuristic: alternate horizontal/vertical gap splits, leaves
+    ordered top-to-bottom then left-to-right.
+    """
     n = len(rows)
     if n <= 1:
         return list(range(n))
+    # normalized spans: an inverted box (x1 > x2) would put the cut outside
+    # every interval start, so one group would swallow the whole set and
+    # the recursion would never end
     xs = [(min(r[2], r[4]), max(r[2], r[4])) for r in rows]
     ys = [(min(r[3], r[5]), max(r[3], r[5])) for r in rows]
 

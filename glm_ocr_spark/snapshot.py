@@ -381,7 +381,8 @@ def run_with_snapshots(
         batch = pending[i:i + chunk]
         part = src.filter(F.col("bucket").isin(batch))
         staged = store.staging_dir()
-        (extract_transcripts(part, passthrough=("bucket",))
+        (extract_transcripts(part, passthrough=("bucket",), mode=mode,
+                             config=config)
          .write.mode("overwrite").partitionBy("bucket").parquet(staged))
         if fail_before_commit_n is not None and \
                 commits + 1 >= fail_before_commit_n:

@@ -9,6 +9,7 @@ import numpy as np
 
 from glm_ocr_spark.config import LABEL2ID, PRESERVE_CLASS_IDS
 from glm_ocr_spark.kernel import geometry as geo
+from glm_ocr_spark.kernel.geometry_py import xy_cut_order
 
 
 def boxes(rows):
@@ -150,43 +151,46 @@ class TestClamp:
         assert list(keep) == [2]
 
 
+def _rows(coords):
+    """(x1, y1, x2, y2) boxes as geometry rows (cls, score, *coords, order)."""
+    return [(22, 0.9, *c, 0) for c in coords]
+
+
 class TestXYCut:
     def test_two_columns(self):
         # staggered columns (no page-wide horizontal gap): split on x first,
         # left column read top-to-bottom, then right column
-        coords = np.array([
-            [600, 50, 900, 150],    # right top
-            [0, 0, 400, 100],       # left top
-            [0, 120, 400, 300],     # left bottom
-            [600, 170, 900, 280],   # right bottom
-        ], dtype=np.float64)
-        order = list(geo.xy_cut_order(coords))
-        assert order == [1, 2, 0, 3]
+        rows = _rows([
+            (600, 50, 900, 150),    # right top
+            (0, 0, 400, 100),       # left top
+            (0, 120, 400, 300),     # left bottom
+            (600, 170, 900, 280),   # right bottom
+        ])
+        assert xy_cut_order(rows) == [1, 2, 0, 3]
 
     def test_row_major_when_row_gaps(self):
         # page-wide horizontal gaps: rows split first -> row-major order
-        coords = np.array([
-            [600, 0, 900, 100],    # top right
-            [0, 0, 400, 100],      # top left
-            [0, 200, 400, 300],    # bottom left
-            [600, 200, 900, 300],  # bottom right
-        ], dtype=np.float64)
-        order = list(geo.xy_cut_order(coords))
-        assert order == [1, 0, 2, 3]
+        rows = _rows([
+            (600, 0, 900, 100),    # top right
+            (0, 0, 400, 100),      # top left
+            (0, 200, 400, 300),    # bottom left
+            (600, 200, 900, 300),  # bottom right
+        ])
+        assert xy_cut_order(rows) == [1, 0, 2, 3]
 
     def test_rows_first(self):
-        coords = np.array([
-            [0, 500, 900, 600],  # bottom row
-            [0, 0, 900, 100],    # top row
-        ], dtype=np.float64)
-        assert list(geo.xy_cut_order(coords)) == [1, 0]
+        rows = _rows([
+            (0, 500, 900, 600),  # bottom row
+            (0, 0, 900, 100),    # top row
+        ])
+        assert xy_cut_order(rows) == [1, 0]
 
-    def test_no_gaps_falls_back_to_lexsort(self):
-        coords = np.array([
-            [10, 10, 500, 500],
-            [5, 5, 495, 495],
-        ], dtype=np.float64)
-        assert list(geo.xy_cut_order(coords)) == [1, 0]
+    def test_no_gaps_falls_back_to_top_left_sort(self):
+        rows = _rows([
+            (10, 10, 500, 500),
+            (5, 5, 495, 495),
+        ])
+        assert xy_cut_order(rows) == [1, 0]
 
 
 class TestUnclip:

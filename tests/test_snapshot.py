@@ -8,6 +8,8 @@ import os
 import pytest
 
 from glm_ocr_spark.data.gen import transcripts_df
+from glm_ocr_spark.kernel.extract import ExtractConfig
+from glm_ocr_spark.pipeline import extract_transcripts
 from glm_ocr_spark.snapshot import SnapshotStore, run_with_snapshots
 
 N_BUCKETS = 8
@@ -77,6 +79,26 @@ def test_crash_before_commit_is_invisible(spark, small_transcripts, tmp_path):
     root2 = str(tmp_path / "cat2")
     run_with_snapshots(spark, small_transcripts, root2, n_buckets=N_BUCKETS)
     assert _logical(spark, store) == _logical(spark, SnapshotStore(root2))
+
+
+@pytest.mark.parametrize("kwargs", [
+    {"mode": "ocr_only"},
+    {"config": ExtractConfig(unclip_ratio=(1.3, 0.8), nms_enabled=False)},
+], ids=["ocr_only", "config"])
+def test_mode_and_config_reach_the_kernel(spark, small_transcripts, tmp_path,
+                                          kwargs):
+    """The snapshot path extracts exactly like extract_transcripts given the
+    same mode and config (both used to be dropped, so the job silently
+    wrote default layout output)."""
+    root = str(tmp_path / "cat")
+    run_with_snapshots(spark, small_transcripts, root, n_buckets=4, **kwargs)
+    cols = ["conv_id", "turn_idx", "extracted_text", "markdown", "json",
+            "n_blocks"]
+    got = SnapshotStore(root).read_output(spark).select(cols).collect()
+    want = extract_transcripts(small_transcripts, **kwargs).select(
+        cols).collect()
+    default = extract_transcripts(small_transcripts).select(cols).collect()
+    assert sorted(got) == sorted(want) != sorted(default)
 
 
 def test_time_travel(spark, small_transcripts, tmp_path):
