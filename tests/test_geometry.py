@@ -185,7 +185,7 @@ class TestXYCut:
         ])
         assert xy_cut_order(rows) == [1, 0]
 
-    def test_no_gaps_falls_back_to_top_left_sort(self):
+    def test_no_gaps_falls_back_to_lexsort(self):
         rows = _rows([
             (10, 10, 500, 500),
             (5, 5, 495, 495),

@@ -4,8 +4,8 @@
         --pairs 10 --trace 0
     python3 tools/ab.py --base REF --head REF --workload parity
 
-Each ref is checked out in its own `git worktree` (`.ab_<sha>/`, ignored by
-git; one tree when both refs name the same commit) and runs its own
+Each ref is checked out in its own `git worktree` (`.ab_<sha[:12]>/`,
+ignored by git; one tree when both refs name the same commit) and runs its own
 `perfbench/run.py`, so neither side imports the other's code. Pair i uses
 seed i; the base runs first on odd i, the head on even i. `--trace 1`
 follows every untraced run with a traced run of the same side and seed, for
@@ -178,7 +178,6 @@ def first_difference(base, head) -> tuple | None:
 def parity(trees: dict[str, str]) -> dict:
     import pyarrow as pa
 
-    sys.path.insert(0, REPO)
     from perfbench.inputs import TRANSCRIPT_SCHEMA, transcript_rows
 
     rows, planted = transcript_rows(PARITY_SEED, PARITY_ROWS)
@@ -187,18 +186,16 @@ def parity(trees: dict[str, str]) -> dict:
     in_path = os.path.join(OUT_DIR, "parity-in.arrow")
     with pa.OSFile(in_path, "wb") as f, pa.ipc.new_file(f, schema) as w:
         w.write_table(src)
-    tables, seconds = {}, {}
+    tables = {}
     for side, tree in trees.items():
         out_path = os.path.join(OUT_DIR, f"parity-{side}.arrow")
-        t0 = time.perf_counter()
         subprocess.run([sys.executable, "-c", _PARITY_BODY, in_path, out_path,
                         str(PARITY_BATCH)], cwd=tree, check=True,
                        timeout=RUN_TIMEOUT_S)
-        seconds[side] = round(time.perf_counter() - t0, 2)
         tables[side] = pa.ipc.open_file(out_path).read_all()
     diff = first_difference(tables["base"], tables["head"])
     return {"rows": src.num_rows, "planted": len(planted),
-            "seconds": seconds, "identical": diff is None,
+            "identical": diff is None,
             "first_difference": diff and dict(zip(
                 ("conv_id", "turn_idx", "column"), diff))}
 
@@ -301,8 +298,9 @@ def print_report(rep: dict) -> None:
     print(f"{'metric':<32}{'base median (IQR)':>22}{'head median (IQR)':>22}"
           f"{'wins':>7}  verdict")
     for name, c in rep["end_to_end"].items():
-        print(f"{name:<32}{_fmt(c['base_median']):>12} ({_fmt(c['base_iqr'])})"
-              f"{_fmt(c['head_median']):>12} ({_fmt(c['head_iqr'])})"
+        base = f"{_fmt(c['base_median'])} ({_fmt(c['base_iqr'])})"
+        head = f"{_fmt(c['head_median'])} ({_fmt(c['head_iqr'])})"
+        print(f"{name:<32}{base:>22}{head:>22}"
               f"{c['wins']:>4}/{c['pairs']}  {c['verdict']}")
         print("    ratios " + " ".join(_fmt(r) for r in c["ratios"]))
     if rep["per_layer"]:
