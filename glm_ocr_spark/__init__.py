@@ -10,6 +10,5 @@ __all__ = [
     "config_loader",
     "pipeline",
     "snapshot",
-    "state",
     "wordfreq_snapshot",
 ]

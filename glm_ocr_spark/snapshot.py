@@ -49,8 +49,28 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 MANIFEST_FMT = "manifest-%012d.json"
+
+
+def bucket_col(n_buckets: int):
+    """The bucket of a row: pmod(xxhash64(conv_id), n_buckets). A pure
+    function of the key, so any bucket can be recomputed on its own."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+def _check_bucketing(manifest: dict | None, n_buckets: int | None,
+                     action: str) -> int | None:
+    """The table's recorded n_buckets; raises when `n_buckets` disagrees
+    with it — a mismatched writer would hash a key into a different bucket
+    than its existing row and duplicate it across two buckets."""
+    table_nb = manifest.get("n_buckets") if manifest else None
+    if table_nb is not None and n_buckets is not None \
+            and n_buckets != table_nb:
+        raise ValueError(f"table is bucketed with n_buckets={table_nb}, "
+                         f"{action} with n_buckets={n_buckets}")
+    return table_nb
 
 
 class SnapshotStore:
@@ -102,20 +122,13 @@ class SnapshotStore:
         Each entry: {"files": [...], "rows_out": n, "bytes_out": n}.
         `n_buckets` records the table's bucketing in the manifest (carried
         forward from the parent when None) so later writers can validate
-        they hash keys with the same layout — a mismatched writer would
-        rewrite the wrong bucket and duplicate keys across two buckets.
+        they hash keys with the same layout (`_check_bucketing`).
         Retries on concurrent-commit collision (CAS loop)."""
         while True:
             cur = self.manifest()
             buckets = dict(cur["buckets"]) if cur else {}
-            recorded_nb = n_buckets if n_buckets is not None else (
-                cur.get("n_buckets") if cur else None)
-            if (cur and cur.get("n_buckets") is not None
-                    and n_buckets is not None
-                    and n_buckets != cur["n_buckets"]):
-                raise ValueError(
-                    f"table is bucketed with n_buckets={cur['n_buckets']}, "
-                    f"commit attempted with n_buckets={n_buckets}")
+            table_nb = _check_bucketing(cur, n_buckets, "commit attempted")
+            recorded_nb = n_buckets if n_buckets is not None else table_nb
             now = dt.datetime.now(dt.timezone.utc).isoformat()
             for b, entry in bucket_entries.items():
                 buckets[str(b)] = {**entry, "input_snapshot": input_snapshot,
@@ -164,10 +177,8 @@ class SnapshotStore:
                     snapshot_id: int | None = None) -> DataFrame:
         """The committed output table as of a snapshot (time travel).
 
-        The `bucket` partition column is preserved (round-2 advice: plain
-        leaf-file reads silently dropped it, diverging from the
-        run_with_checkpoint output schema): committed files are grouped by
-        their staging dir and each group is read with that dir as
+        The `bucket` partition column is preserved (plain leaf-file reads
+        would drop it): committed files are grouped by their staging dir and each group is read with that dir as
         `basePath`, so Spark re-infers bucket=N from the file paths. One
         read per commit batch (manifest-bounded), unioned by name —
         exactly the manifest's file list, never a directory listing."""
@@ -203,7 +214,7 @@ class SnapshotStore:
         intact.
 
         The data-file sweep goes through `pyarrow.fs` (like
-        state._partition_stats), so the same GC runs against s3:// /
+        `_staged_parquet_stats`), so the same GC runs against s3:// /
         hdfs:// / gs:// data roots; only the manifest CAS itself is
         POSIX-bound (module docstring)."""
         import time as _time
@@ -302,8 +313,8 @@ class SnapshotStore:
 
 def _fs_and_path(path: str):
     """(pyarrow filesystem, normalized path) — s3://, hdfs://, gs:// or
-    local. Mirrors state._partition_stats so all data-file I/O in the
-    snapshot store is object-store-capable; only the manifest CAS is
+    local. All data-file I/O in the snapshot store goes through it, so it
+    is object-store-capable; only the manifest CAS is
     POSIX-bound (module docstring)."""
     from pyarrow import fs as pafs
 
@@ -356,20 +367,24 @@ def run_with_snapshots(
     mode: str = "layout",
     config=None,
 ) -> dict:
-    """Checkpointed extraction with atomic multi-table snapshot commits.
+    """Checkpointed, resumable extraction with atomic snapshot commits.
 
-    Like state.run_with_checkpoint, but output data and state watermarks
-    are published together through SnapshotStore.commit — the Iceberg-
-    protocol path (SURVEY §7.3.5). `fail_before_commit_n` crashes after
-    the Nth batch's data files are staged but BEFORE its commit: the
-    atomicity test — those files must stay invisible.
+    Rows are split into `n_buckets` buckets (`bucket_col`); the buckets
+    not yet completed for `input_snapshot` are extracted in one Spark job
+    per `buckets_per_commit` buckets (default: all pending in one job, one
+    input scan), written `partitionBy("bucket")` to a staging dir, and
+    published with their watermarks (rows/bytes from the parquet footers)
+    in one SnapshotStore.commit — output data and state become visible in
+    the same atomic step (SURVEY §7.3.5). A killed run resumes having lost
+    at most one uncommitted batch. A rerun with a different `n_buckets`
+    than the table's raises before any Spark work. `fail_before_commit_n`
+    crashes after the Nth batch's data files are staged but BEFORE its
+    commit: the atomicity test — those files must stay invisible.
     """
-    from pyspark.sql import functions as F
-
     from glm_ocr_spark.pipeline import extract_transcripts
-    from glm_ocr_spark.state import bucket_col
 
     store = SnapshotStore(catalog_root)
+    _check_bucketing(store.manifest(), n_buckets, "run attempted")
     done = store.completed_buckets(input_snapshot)
     pending = [b for b in range(n_buckets) if b not in done]
     chunk = buckets_per_commit or len(pending) or 1
@@ -446,23 +461,13 @@ def merge_upsert(
     raise (real Iceberg MERGE fails validation on multiple matches; a
     silent union would leave multiple rows per key). Returns merge stats.
     """
-    from pyspark.sql import functions as F
-
-    from glm_ocr_spark.state import bucket_col
-
-    cur = store.manifest()
-    table_nb = cur.get("n_buckets") if cur else None
+    table_nb = _check_bucketing(store.manifest(), n_buckets, "merge called")
     if n_buckets is None:
         if table_nb is None:
             raise ValueError(
                 "n_buckets not recorded in the manifest (pre-upgrade table "
                 "or empty store) — pass it explicitly")
         n_buckets = table_nb
-    elif table_nb is not None and n_buckets != table_nb:
-        raise ValueError(
-            f"table is bucketed with n_buckets={table_nb}, merge called "
-            f"with n_buckets={n_buckets} — updates would land in the "
-            "wrong buckets")
 
     # localCheckpoint pins the update rows: `updates` is evaluated once,
     # so a nondeterministic source (limit over multiple partitions) cannot

@@ -1,17 +1,22 @@
-"""spark-submit entry: checkpointed transcript extraction.
+"""spark-submit entry: transcript extraction, single-shot or checkpointed.
 
   spark-submit --py-files glm_ocr_spark.zip jobs/extract_job.py \
-      --input <transcripts path> --output <dir> --state <dir> \
+      --input <transcripts path> (--output <dir> | --snapshot-catalog <dir>) \
       [--buckets 256] [--snapshot v1] [--format parquet] \
       [--config extract.yaml] [--mode layout|ocr_only]
+
+`--output` runs the single-shot path (pipeline.run). `--snapshot-catalog`
+runs the checkpointed, resumable path (snapshot.run_with_snapshots): output
+and per-bucket watermarks are committed together, and a rerun skips the
+buckets already completed for `--snapshot`.
 
 Extraction knobs resolve through the reference-style chain (glmocr/
 config.py:293-364): CLI flags > GLMOCR_SPARK_* env > .env > --config YAML >
 defaults (glm_ocr_spark.config_loader.load_config).
 
 On a cluster, --buckets should be ~2-4x the executor count: each bucket is
-one resumable unit of work (state-table row), and a killed run loses at most
-one bucket. With no --state, runs the single-shot path (pipeline.run).
+one resumable unit of work, and a killed run loses at most one uncommitted
+batch of buckets.
 """
 
 from __future__ import annotations
@@ -20,46 +25,32 @@ import argparse
 
 from glm_ocr_spark.config_loader import load_config
 from glm_ocr_spark.pipeline import get_spark, run
-from glm_ocr_spark.state import run_with_checkpoint
+from glm_ocr_spark.snapshot import run_with_snapshots
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
-    ap.add_argument("--output", default=None,
-                    help="required unless --snapshot-catalog is used")
-    ap.add_argument("--state", default=None)
+    out = ap.add_mutually_exclusive_group(required=True)
+    out.add_argument("--output", help="single-shot output dir")
+    out.add_argument("--snapshot-catalog",
+                     help="checkpointed snapshot catalog root (snapshot.py)")
     ap.add_argument("--buckets", type=int, default=256)
     ap.add_argument("--snapshot", default="v1")
     ap.add_argument("--format", default="parquet")
     ap.add_argument("--config", default=None, help="extraction YAML")
     ap.add_argument("--mode", default=None, choices=["layout", "ocr_only"])
     ap.add_argument("--score-threshold", type=float, default=None)
-    ap.add_argument("--snapshot-catalog", default=None,
-                    help="use Iceberg-protocol atomic snapshot commits "
-                         "(snapshot.py) instead of --output/--state")
     args = ap.parse_args()
-    if not args.snapshot_catalog and not args.output:
-        ap.error("--output is required unless --snapshot-catalog is used")
 
     cfg, job = load_config(config_path=args.config, mode=args.mode,
                            score_threshold=args.score_threshold)
 
     spark = get_spark(app="glm-ocr-extract")
     if args.snapshot_catalog:
-        from glm_ocr_spark.snapshot import run_with_snapshots
-
         df = spark.read.format(args.format).load(args.input)
         metrics = run_with_snapshots(
             spark, df, args.snapshot_catalog,
-            n_buckets=args.buckets, input_snapshot=args.snapshot,
-            mode=job["mode"], config=cfg,
-        )
-        print(f"extract_job: {metrics}")
-    elif args.state:
-        df = spark.read.format(args.format).load(args.input)
-        metrics = run_with_checkpoint(
-            spark, df, args.output, args.state,
             n_buckets=args.buckets, input_snapshot=args.snapshot,
             mode=job["mode"], config=cfg,
         )

@@ -38,15 +38,16 @@ def test_full_run_and_state(spark, small_transcripts, tmp_path):
     store = SnapshotStore(root)
     out = store.read_output(spark)
     assert out.count() == small_transcripts.count()
-    # the bucket partition column must survive the snapshot read path —
-    # consumers switching between run_with_checkpoint output and the
-    # snapshot path must see the same schema (round-2 advice)
+    # the bucket partition column must survive the snapshot read path
     assert "bucket" in out.columns
     assert out.select("bucket").distinct().count() == N_BUCKETS
     state = store.state_rows()
     assert len(state) == N_BUCKETS
     assert sum(r["rows_out"] for r in state) == small_transcripts.count()
     assert all(r["bytes_out"] > 0 for r in state)
+    assert all(r["status"] == "completed" for r in state)
+    assert all(r["input_snapshot"] == "v1" for r in state)
+    assert all(r["completed_at"] is not None for r in state)
 
 
 def test_crash_before_commit_is_invisible(spark, small_transcripts, tmp_path):
@@ -103,8 +104,9 @@ def test_mode_and_config_reach_the_kernel(spark, small_transcripts, tmp_path,
 
 def test_time_travel(spark, small_transcripts, tmp_path):
     root = str(tmp_path / "cat")
-    run_with_snapshots(spark, small_transcripts, root,
-                       n_buckets=N_BUCKETS, buckets_per_commit=4)
+    m = run_with_snapshots(spark, small_transcripts, root,
+                           n_buckets=N_BUCKETS, buckets_per_commit=4)
+    assert m["commits"] == 2
     store = SnapshotStore(root)
     assert store.current_id() == 1
     early = store.read_output(spark, snapshot_id=0).count()
@@ -172,6 +174,38 @@ def test_rerun_is_noop(spark, small_transcripts, tmp_path):
     assert m["resumed_buckets"] == 4
     assert m["processed_buckets"] == 0
     assert m["commits"] == 0
+
+
+def test_snapshot_change_invalidates(spark, small_transcripts, tmp_path):
+    """Buckets completed for input snapshot v1 are not completed for v2."""
+    root = str(tmp_path / "cat")
+    run_with_snapshots(spark, small_transcripts, root, n_buckets=4,
+                       input_snapshot="v1")
+    m = run_with_snapshots(spark, small_transcripts, root, n_buckets=4,
+                           input_snapshot="v2")
+    assert m["resumed_buckets"] == 0
+    assert m["processed_buckets"] == 4
+    assert {r["input_snapshot"] for r in SnapshotStore(root).state_rows()} \
+        == {"v2"}
+
+
+def test_bucket_count_mismatch_fails_before_spark_work(spark,
+                                                       small_transcripts,
+                                                       tmp_path):
+    """A rerun with a different n_buckets than the table's must raise
+    before it extracts or stages any data file."""
+    root = str(tmp_path / "cat")
+    run_with_snapshots(spark, small_transcripts, root, n_buckets=4)
+
+    def parquet_dirs():
+        return {d for d, _, fs in os.walk(os.path.join(root, "data"))
+                if any(f.endswith(".parquet") for f in fs)}
+
+    before = parquet_dirs()
+    with pytest.raises(ValueError, match="bucketed with n_buckets=4"):
+        run_with_snapshots(spark, small_transcripts, root, n_buckets=8)
+    assert parquet_dirs() == before
+    assert SnapshotStore(root).current_id() == 0
 
 
 def test_merge_upsert_update_insert_and_cow(spark, small_transcripts,
