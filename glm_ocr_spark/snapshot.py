@@ -178,8 +178,9 @@ class SnapshotStore:
         """The committed output table as of a snapshot (time travel).
 
         The `bucket` partition column is preserved (plain leaf-file reads
-        would drop it): committed files are grouped by their staging dir and each group is read with that dir as
-        `basePath`, so Spark re-infers bucket=N from the file paths. One
+        would drop it): committed files are grouped by their staging dir
+        and each group is read with that dir as `basePath`, so Spark
+        re-infers bucket=N from the file paths. One
         read per commit batch (manifest-bounded), unioned by name —
         exactly the manifest's file list, never a directory listing."""
         files = self.output_files(snapshot_id)
@@ -314,8 +315,8 @@ class SnapshotStore:
 def _fs_and_path(path: str):
     """(pyarrow filesystem, normalized path) — s3://, hdfs://, gs:// or
     local. All data-file I/O in the snapshot store goes through it, so it
-    is object-store-capable; only the manifest CAS is
-    POSIX-bound (module docstring)."""
+    is object-store-capable; only the manifest CAS is POSIX-bound (module
+    docstring)."""
     from pyarrow import fs as pafs
 
     if "://" in path:
