@@ -1,14 +1,15 @@
 """Checkpoint/resume tests (north rule: "resumable from checkpoint with
 per-partition lineage + metrics"; SURVEY.md §5.4: kill mid-run, rerun,
-assert no recomputation of completed partitions and identical output)."""
+assert no recomputation of completed partitions and identical output).
+
+The resumable path is `snapshot.run_with_snapshots`: each commit is one
+Spark job over the pending buckets of its batch, so one commit is one
+input scan, and the per-bucket watermarks are the snapshot's state rows."""
 
 import pytest
 
 from glm_ocr_spark.data.gen import transcripts_df
-from glm_ocr_spark.state import (
-    read_completed_buckets,
-    run_with_checkpoint,
-)
+from glm_ocr_spark.snapshot import SnapshotStore, run_with_snapshots
 
 N_BUCKETS = 8
 
@@ -21,8 +22,8 @@ def small_transcripts(spark):
     df.unpersist()
 
 
-def _collect_output(spark, path):
-    rows = spark.read.parquet(path).collect()
+def _collect_output(spark, root):
+    rows = SnapshotStore(root).read_output(spark).collect()
     return sorted(
         (r["conv_id"], r["turn_idx"], r["extracted_text"], r["json"])
         for r in rows
@@ -30,41 +31,38 @@ def _collect_output(spark, path):
 
 
 def test_kill_and_resume_identical_output(spark, small_transcripts, tmp_path):
-    out_a = str(tmp_path / "out_single")
-    st_a = str(tmp_path / "state_single")
-    out_b = str(tmp_path / "out_resumed")
-    st_b = str(tmp_path / "state_resumed")
+    cat_a = str(tmp_path / "cat_single")
+    cat_b = str(tmp_path / "cat_resumed")
 
     # uninterrupted run
-    m = run_with_checkpoint(spark, small_transcripts, out_a, st_a,
-                            n_buckets=N_BUCKETS)
+    m = run_with_snapshots(spark, small_transcripts, cat_a,
+                           n_buckets=N_BUCKETS)
     assert m["processed_buckets"] == N_BUCKETS
 
-    # killed run: crash injected after 3 buckets
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_with_checkpoint(spark, small_transcripts, out_b, st_b,
-                            n_buckets=N_BUCKETS, fail_after_buckets=3)
-    done_after_kill = read_completed_buckets(spark, st_b, "v1")
+    # killed run: one bucket per commit, crash before the 4th commit
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_with_snapshots(spark, small_transcripts, cat_b,
+                           n_buckets=N_BUCKETS, buckets_per_commit=1,
+                           fail_before_commit_n=4)
+    done_after_kill = SnapshotStore(cat_b).completed_buckets("v1")
     assert len(done_after_kill) == 3
 
     # resume: completed buckets must NOT be recomputed
-    m2 = run_with_checkpoint(spark, small_transcripts, out_b, st_b,
-                             n_buckets=N_BUCKETS)
+    m2 = run_with_snapshots(spark, small_transcripts, cat_b,
+                            n_buckets=N_BUCKETS)
     assert m2["resumed_buckets"] == 3
     assert m2["processed_buckets"] == N_BUCKETS - 3
 
-    # byte-identical logical output
-    assert _collect_output(spark, out_a) == _collect_output(spark, out_b)
+    # identical logical output
+    assert _collect_output(spark, cat_a) == _collect_output(spark, cat_b)
 
 
 def test_state_metrics_recorded(spark, small_transcripts, tmp_path):
-    out = str(tmp_path / "out")
-    st = str(tmp_path / "state")
-    run_with_checkpoint(spark, small_transcripts, out, st,
-                        n_buckets=4)
-    state = spark.read.parquet(st)
-    rows = state.collect()
+    root = str(tmp_path / "cat")
+    run_with_snapshots(spark, small_transcripts, root, n_buckets=4)
+    rows = SnapshotStore(root).state_rows()
     assert len(rows) == 4
+    assert sorted(r["bucket"] for r in rows) == [0, 1, 2, 3]
     assert all(r["status"] == "completed" for r in rows)
     assert sum(r["rows_out"] for r in rows) == small_transcripts.count()
     assert all(r["bytes_out"] > 0 for r in rows)
@@ -75,39 +73,28 @@ def test_state_metrics_recorded(spark, small_transcripts, tmp_path):
 def test_single_input_scan_for_all_pending(spark, small_transcripts, tmp_path):
     """Round-1 regression: the bucket loop re-scanned the unpartitioned
     input once per bucket (~n_buckets x read amplification at scale). All
-    pending buckets must now go through ONE job / ONE input scan."""
-    out = str(tmp_path / "out")
-    st = str(tmp_path / "state")
-    m = run_with_checkpoint(spark, small_transcripts, out, st,
-                            n_buckets=N_BUCKETS)
+    pending buckets must go through ONE job / ONE input scan / ONE commit."""
+    root = str(tmp_path / "cat")
+    m = run_with_snapshots(spark, small_transcripts, root,
+                           n_buckets=N_BUCKETS)
     assert m["processed_buckets"] == N_BUCKETS
-    assert m["input_scans"] == 1
+    assert m["commits"] == 1
 
 
 def test_buckets_per_job_bounds_scans(spark, small_transcripts, tmp_path):
-    out = str(tmp_path / "out")
-    st = str(tmp_path / "state")
-    m = run_with_checkpoint(spark, small_transcripts, out, st,
-                            n_buckets=N_BUCKETS, buckets_per_job=4)
+    root = str(tmp_path / "cat")
+    m = run_with_snapshots(spark, small_transcripts, root,
+                           n_buckets=N_BUCKETS, buckets_per_commit=4)
     assert m["processed_buckets"] == N_BUCKETS
-    assert m["input_scans"] == 2
+    assert m["commits"] == 2
 
 
 def test_rerun_completed_is_noop(spark, small_transcripts, tmp_path):
-    out = str(tmp_path / "out")
-    st = str(tmp_path / "state")
-    run_with_checkpoint(spark, small_transcripts, out, st, n_buckets=4)
-    m = run_with_checkpoint(spark, small_transcripts, out, st, n_buckets=4)
+    root = str(tmp_path / "cat")
+    run_with_snapshots(spark, small_transcripts, root, n_buckets=4)
+    sid = SnapshotStore(root).current_id()
+    m = run_with_snapshots(spark, small_transcripts, root, n_buckets=4)
     assert m["resumed_buckets"] == 4
     assert m["processed_buckets"] == 0
-
-
-def test_snapshot_change_invalidates(spark, small_transcripts, tmp_path):
-    out = str(tmp_path / "out")
-    st = str(tmp_path / "state")
-    run_with_checkpoint(spark, small_transcripts, out, st, n_buckets=4,
-                        input_snapshot="v1")
-    m = run_with_checkpoint(spark, small_transcripts, out, st, n_buckets=4,
-                            input_snapshot="v2")
-    assert m["resumed_buckets"] == 0
-    assert m["processed_buckets"] == 4
+    # no new snapshot is published for a no-op rerun
+    assert m["snapshot_id"] == sid
