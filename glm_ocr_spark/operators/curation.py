@@ -214,13 +214,14 @@ def curation_pipeline(docs: DataFrame, benchmark_sources: list[str],
     100 TB shape: one broadcast join (benchmark n-grams), one map-side-
     partial aggregate on doc_id, then the window shuffles. The fingerprint
     window is hash-keyed (no skew by construction); the source quota is
-    NOT — one crawl domain can be 90% of the corpus — so it runs through
-    `topk_per_key_salted` (two-level salted window, same treatment as
-    `conversation_rollup`'s salted aggregate; round-3 verdict ask #8).
+    not — one crawl domain can be 90% of the corpus — but it is the same
+    single `row_number` window as `relational.quota_per_source`, whose
+    map-side `WindowGroupLimit` Partial sends at most `quota` rows per
+    source from each map partition to the hot source's reducer (while
+    `quota` <= spark.sql.optimizer.windowGroupLimitThreshold; SCALE.md).
     Catalyst pipelines the filters into the scans; nothing is materialized
     between stages.
     """
-    from glm_ocr_spark.operators.relational import topk_per_key_salted
     base = (
         docs.filter(~F.col("source").isin(benchmark_sources))
         .select("doc_id", "lang", "source", "text",
@@ -239,6 +240,9 @@ def curation_pipeline(docs: DataFrame, benchmark_sources: list[str],
         fp.withColumn("rk", F.row_number().over(w_fp))
         .filter(F.col("rk") == 1)
     )
-    return topk_per_key_salted(
-        dedup, ["source"], "doc_id", quota, rank_name="qk",
-    ).select("doc_id", "lang", "source", "n_words")
+    w_src = Window.partitionBy("source").orderBy(F.asc("doc_id"))
+    return (
+        dedup.withColumn("qk", F.row_number().over(w_src))
+        .filter(F.col("qk") <= quota)
+        .select("doc_id", "lang", "source", "n_words")
+    )

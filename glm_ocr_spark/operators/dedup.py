@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 # ----------------------------------------------------------------- shingles
 
 from glm_ocr_spark.operators.norm import (  # noqa: E402 - shared norm spec
+    _WS_RE,
     norm_text_col,
     real_words_col,
 )
@@ -66,9 +67,6 @@ def shingles_col(n: int = 3):
     )
 
 
-_WS_RE = None
-
-
 def shingles_py(text: str, n: int = 3) -> list[str]:
     """Python mirror of `shingles_col` (byte-equal — tested incl. leading/
     trailing tab/newline/unicode whitespace): trim *spaces only* (JVM/DuckDB
@@ -76,12 +74,6 @@ def shingles_py(text: str, n: int = 3) -> list[str]:
     collapses to ' ', and yields an empty leading token exactly as the JVM
     side does), collapse ASCII whitespace, lower, word n-grams,
     first-occurrence distinct; < n words -> single whole-text shingle."""
-    global _WS_RE
-    if _WS_RE is None:
-        import re
-
-        # Java \s is ASCII-only; match it (re.ASCII)
-        _WS_RE = re.compile(r"\s+", re.ASCII)
     norm = _WS_RE.sub(" ", text.strip(" ")).lower() if text else ""
     words = norm.split(" ") if norm else [""]
     if len(words) < n:
@@ -127,7 +119,10 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     shingle, count common, Jaccard = common / (|A| + |B| - common).
 
     Scale note: standalone this is the verify kernel; at 100 TB it only ever
-    runs *inside* LSH buckets (minhash_lsh_pairs), never globally.
+    runs *inside* LSH buckets (minhash_lsh_pairs), never globally. The
+    per-doc size table grows with the corpus, so its joins carry no
+    broadcast hint: AQE broadcasts it while it fits the broadcast threshold
+    and sort-merges past it.
     """
     # shingles via the pandas UDF (byte-equal to shingles_col, tested):
     # the JVM lambda re-evaluates its regex+split per element, and this
@@ -147,7 +142,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     sa = sizes.select(F.col("doc_id").alias("id1"), F.col("n_sh").alias("n1"))
     sb = sizes.select(F.col("doc_id").alias("id2"), F.col("n_sh").alias("n2"))
     return (
-        common.join(F.broadcast(sa), "id1").join(F.broadcast(sb), "id2")
+        common.join(sa, "id1").join(sb, "id2")
         .withColumn(
             "jaccard",
             F.round(F.col("n_common")

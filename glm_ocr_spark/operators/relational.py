@@ -7,9 +7,16 @@ Two families:
    window functions, so the DuckDB oracle can verify the exact semantics the
    pandas-UDF kernel implements (same regexes, same thresholds).
 
-2. Classic relational queries over the TPC-H-ish tables — aggregation, joins
-   (broadcast for small dims), windows, sessionization — demonstrating the
-   shuffle-conscious plan shapes the 100 TB deployment uses.
+2. Classic relational queries over the TPC-H-ish tables — aggregation, joins,
+   windows, sessionization — demonstrating the shuffle-conscious plan shapes
+   the 100 TB deployment uses.
+
+Join strategy follows the data: only fixed-size dimensions (`nation`,
+`region`) carry a broadcast hint. Tables that grow with the data
+(`customer`, `part`) join unhinted, so the optimizer and AQE broadcast
+them while their runtime size is under
+`spark.sql.autoBroadcastJoinThreshold` and fall back to a sort-merge join
+past it, instead of a forced broadcast running the driver out of memory.
 """
 
 from __future__ import annotations
@@ -130,11 +137,11 @@ def q1_pricing_summary(lineitem: DataFrame) -> DataFrame:
 
 
 def order_customer_join(orders: DataFrame, customer: DataFrame) -> DataFrame:
-    """Broadcast join: customer (small dim) is broadcast, orders never
-    shuffles. At 100 TB the fact side stays partition-local."""
+    """orders ⋈ customer grouped by market segment. Unhinted: customer
+    grows with the data, so it broadcasts (orders never shuffles) only
+    while it fits the broadcast threshold; past it the join sort-merges."""
     return (
-        orders.join(F.broadcast(customer),
-                    orders["o_custkey"] == customer["c_custkey"])
+        orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
         .groupBy("c_mktsegment" if "c_mktsegment" in customer.columns
                  else "c_custkey")
         .agg(F.round(F.sum("o_totalprice"), 4).alias("revenue"),
@@ -144,11 +151,11 @@ def order_customer_join(orders: DataFrame, customer: DataFrame) -> DataFrame:
 
 def revenue_by_nation(orders: DataFrame, customer: DataFrame,
                       nation: DataFrame) -> DataFrame:
-    """Two-level broadcast join: orders ⋈ customer ⋈ nation, grouped by
-    nation name."""
+    """orders ⋈ customer ⋈ nation, grouped by nation name. nation (a
+    fixed 25-row dim) is always broadcast; customer is left to the
+    optimizer's runtime size choice, as in `order_customer_join`."""
     return (
-        orders.join(F.broadcast(customer),
-                    orders["o_custkey"] == customer["c_custkey"])
+        orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
         .join(F.broadcast(nation),
               customer["c_nationkey"] == nation["n_nationkey"])
         .groupBy("n_name")
@@ -285,102 +292,25 @@ def moving_value_avg(events: DataFrame,
     )
 
 
-QUOTA_SALTS = 16
-
-
-def topk_per_key_salted(df: DataFrame, key_cols: list[str], order_col: str,
-                        k: int, rank_name: str = "rank",
-                        n_salts: int = QUOTA_SALTS,
-                        tie_cols: list[str] | None = None,
-                        validate_unique: bool = False) -> DataFrame:
-    """Keep the k rows with the smallest `order_col` per key, skew-safely.
-
-    CONTRACT (parameter-level, not prose): the effective ordering
-    `(order_col, *tie_cols)` MUST be unique within every key. Two-level
-    salting is value-identical to a single window ONLY under that
-    uniqueness — with duplicate order values a salt boundary can split a
-    tie group and stage 1 would silently drop rows a single window could
-    rank within k (review finding). Pass `tie_cols` (e.g. a unique id)
-    whenever `order_col` alone can tie; call sites with a naturally
-    unique order column (ours is doc_id) may omit it.
-
-    A plain `row_number over (partition by key)` sends EVERY row of a hot
-    key to one reducer — the straggler shape when one source dominates a
-    corpus (90%-one-source is a realistic web crawl). Two-level instead:
-
-      1. salt by `pmod(xxhash64(order_col, *tie_cols), n_salts)` and take
-         the local top-k within each (key, salt) — the hot key fans out
-         over n_salts reducers, each sorting ~1/n_salts of it;
-      2. re-rank the <= n_salts*k survivors per key globally — the second
-         window's worst partition is n_salts*k rows, a constant.
-
-    Value-identical to the single window when `(order_col, *tie_cols)` is
-    unique per key: every global top-k row is its salt group's local
-    top-k, so stage 1 never drops a winner. Same contract as
-    `conversation_rollup`'s salted two-level aggregate (SURVEY §7.3.4).
-
-    Defense in depth: Spark 4's WindowGroupLimit already pushes a
-    map-side Partial rank<=k below each exchange (plan-asserted), so
-    shuffle VOLUME per key is k x map-partitions even unsalted; what the
-    salt adds is bounding the hot key's single-reducer SORT to
-    ~1/n_salts of its rows in stage 1 and to n_salts*k rows in stage 2 —
-    at 10^6 map partitions an unsalted hot source still lands k x 10^6
-    rows on one reducer, the salted form never exceeds n_salts*k.
-    """
-    if validate_unique:
-        # debug/assert mode (round-5 advice): the uniqueness contract is
-        # otherwise unenforced and a violation is silently wrong (stage 1
-        # can split a tie group across salts and drop a global top-k
-        # row). One extra aggregate job over (key, order, ties) counts —
-        # run it in tests/first deployments, not per production call.
-        dup = (df.groupBy(*key_cols, order_col,
-                          *(tie_cols or []))
-               .count().filter(F.col("count") > 1).limit(1).collect())
-        if dup:
-            r = dup[0].asDict()
-            raise ValueError(
-                "topk_per_key_salted uniqueness contract violated: "
-                f"(order_col, *tie_cols) duplicates within a key, e.g. "
-                f"{r} — pass tie_cols with a unique id column")
-    clash = {"_salt", "_local_rk", rank_name} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"topk_per_key_salted would clobber existing column(s) "
-            f"{sorted(clash)} — rename them or pass a different rank_name")
-    ties = list(tie_cols or [])
-    order_exprs = [F.asc(order_col)] + [F.asc(c) for c in ties]
-    salt = F.pmod(
-        F.xxhash64(F.col(order_col), *[F.col(c) for c in ties]),
-        F.lit(n_salts))
-    w1 = (Window.partitionBy(*key_cols, "_salt")
-          .orderBy(*order_exprs))
-    pruned = (
-        df.withColumn("_salt", salt)
-        .withColumn("_local_rk", F.row_number().over(w1))
-        .filter(F.col("_local_rk") <= k)
-        .drop("_salt", "_local_rk")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*order_exprs)
-    return (
-        pruned.withColumn(rank_name, F.row_number().over(w2))
-        .filter(F.col(rank_name) <= k)
-    )
-
-
 def quota_per_source(docs: DataFrame, max_per_source: int = 3) -> DataFrame:
     """Domain/source quota capping: keep at most N documents per source
     (deterministic: lowest doc_id wins). The standard pre-training
     anti-domination rule ("no domain may exceed X documents").
 
-    Skew guard (round-3 verdict ask #8): source is a skewed key by nature
-    — one crawl domain can be 90% of the corpus — so the top-N runs
-    through `topk_per_key_salted` (two-level salted window) instead of a
-    single `partitionBy(source)` window; value-identical, straggler-free.
+    One `row_number` window over source, like `topk_events_per_user`.
+    Source is skewed by nature (one crawl domain can be 90% of a corpus);
+    Spark 4 plans a map-side `WindowGroupLimit` Partial below the one
+    exchange, so each map partition sends at most N rows per source and
+    the hot source's reducer never sees more than N x map partitions.
+    That bound holds while N <= spark.sql.optimizer.windowGroupLimitThreshold
+    (default 1000; see SCALE.md).
     """
-    return topk_per_key_salted(
-        docs.select("doc_id", "source", "lang"),
-        ["source"], "doc_id", max_per_source, rank_name="rank_in_source",
-    ).select("doc_id", "source", "lang", "rank_in_source")
+    w = Window.partitionBy("source").orderBy("doc_id")
+    return (
+        docs.select("doc_id", "source", "lang",
+                    F.row_number().over(w).alias("rank_in_source"))
+        .filter(F.col("rank_in_source") <= max_per_source)
+    )
 
 
 def stratified_sample(docs: DataFrame, rates: dict[str, float],
@@ -416,8 +346,9 @@ def q10_returned_items(customer: DataFrame, orders: DataFrame,
     quarter, top 20.
 
     Plan shape at scale: the lineitem⋈orders orderkey join is the one big
-    shuffle; customer and nation broadcast; the returnflag + date filters
-    push to the scans so only the quarter's returned lines ever join.
+    shuffle; nation broadcasts, customer broadcasts only while it fits the
+    broadcast threshold; the returnflag + date filters push to the scans
+    so only the quarter's returned lines ever join.
     Deterministic tiebreak on c_custkey for a stable LIMIT.
     """
     return (
@@ -425,8 +356,7 @@ def q10_returned_items(customer: DataFrame, orders: DataFrame,
         .join(orders.filter((F.col("o_orderdate") >= F.lit(date_start))
                             & (F.col("o_orderdate") < F.lit(date_end))),
               F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(customer),
-              F.col("o_custkey") == F.col("c_custkey"))
+        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation),
               F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
@@ -464,14 +394,15 @@ def q14_promo_revenue(lineitem: DataFrame, part: DataFrame,
                       month_start: str = "1995-09-01",
                       month_end: str = "1995-10-01") -> DataFrame:
     """TPC-H Q14 shape: promo-revenue share — a conditional-sum ratio over
-    one broadcast join. The date filter prunes the fact scan before the
-    join; part (the dim) broadcasts; both sums come out of one aggregate
-    pass (no second scan for the denominator)."""
+    one join. The date filter prunes the fact scan before the join; part
+    broadcasts while it fits the broadcast threshold and sort-merges past
+    it; both sums come out of one aggregate pass (no second scan for the
+    denominator)."""
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         lineitem.filter((F.col("l_shipdate") >= F.lit(month_start))
                         & (F.col("l_shipdate") < F.lit(month_end)))
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(
                 100.0 * F.sum(F.when(F.col("p_type") == "PROMO", rev)
@@ -496,7 +427,8 @@ def q19_disjunctive_revenue(lineitem: DataFrame,
     predicate triples (adapted to this schema's columns). The join is an
     equi-join on partkey with the OR-of-ANDs as a post-join filter —
     Catalyst pushes the single-table conjuncts (p_size >= 1, brand IN set)
-    into the broadcast side's scan; the fact side never shuffles."""
+    into the part scan, which then broadcasts while it fits the broadcast
+    threshold (the fact side never shuffles) and sort-merges past it."""
     conds = None
     for brand, size_hi, qty_lo, qty_hi in Q19_PREDICATES:
         c = ((F.col("p_brand") == brand)
@@ -506,7 +438,7 @@ def q19_disjunctive_revenue(lineitem: DataFrame,
         conds = c if conds is None else (conds | c)
     return (
         lineitem
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .filter(conds)
         .agg(
             F.round(F.sum(F.col("l_extendedprice")

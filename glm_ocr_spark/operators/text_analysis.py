@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from glm_ocr_spark.operators.norm import real_words_col
+from glm_ocr_spark.operators.norm import norm_text_col, real_words_col
 
 # Shared spec constants — the SQL oracles in __spark_entry__ must use the
 # same values/patterns.
@@ -91,9 +91,9 @@ def with_lang_id(docs: DataFrame) -> DataFrame:
 def with_fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized lowercase text
     (the content-hash half of the dedup family)."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     return docs.select(
-        "doc_id", F.md5(F.encode(norm, "UTF-8")).alias("fingerprint")
+        "doc_id",
+        F.md5(F.encode(norm_text_col(), "UTF-8")).alias("fingerprint")
     )
 
 

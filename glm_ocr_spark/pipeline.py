@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from glm_ocr_spark.kernel.extract import extract_turn
+from glm_ocr_spark.sources import read_transcripts
 
 SPAN_TYPE = T.ArrayType(
     T.StructType([
@@ -319,7 +320,7 @@ def _run_plan(spark: SparkSession, input_path: str, fmt: str = "parquet",
     REPARTITION_BY_NUM, which AQE never coalesces, so the kernel keeps one
     task per input split.
     """
-    df = spark.read.format(fmt).load(input_path)
+    df = read_transcripts(spark, input_path, fmt)
     n = max(1, df.rdd.getNumPartitions())
     ranged = df.repartitionByRange(n, "conv_id", "turn_idx")
     return (extract_transcripts(ranged, mode=mode, config=config)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from glm_ocr_spark.operators.norm import norm_text_col
 from glm_ocr_spark.pipeline import extract_transcripts
 
 
@@ -98,9 +99,7 @@ def streaming_exact_dedup(transcripts: DataFrame,
     the same md5(normalized text) used by `operators.dedup.exact_dedup`,
     so batch and stream agree on what counts as a duplicate.
     """
-    h = F.md5(F.encode(
-        F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")),
-        "UTF-8"))
+    h = F.md5(F.encode(norm_text_col(), "UTF-8"))
     return (
         transcripts.withColumn("content_hash", h)
         .withWatermark("ts", watermark)

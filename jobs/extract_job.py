@@ -10,6 +10,12 @@ runs the checkpointed, resumable path (snapshot.run_with_snapshots): output
 and per-bucket watermarks are committed together, and a rerun skips the
 buckets already completed for `--snapshot`.
 
+Both paths read `--input` through sources.read_transcripts: a value that
+contains `/` is a path read in `--format` (CSV with a header row and
+quoted multi-line payloads, JSON lines with the contract schema and no
+inference pass); a value without `/` is read as a catalog table and
+`--format` is ignored.
+
 Extraction knobs resolve through the reference-style chain (glmocr/
 config.py:293-364): CLI flags > GLMOCR_SPARK_* env > .env > --config YAML >
 defaults (glm_ocr_spark.config_loader.load_config).
@@ -26,6 +32,7 @@ import argparse
 from glm_ocr_spark.config_loader import load_config
 from glm_ocr_spark.pipeline import get_spark, run
 from glm_ocr_spark.snapshot import run_with_snapshots
+from glm_ocr_spark.sources import read_transcripts
 
 
 def main() -> None:
@@ -48,7 +55,7 @@ def main() -> None:
 
     spark = get_spark(app="glm-ocr-extract")
     if args.snapshot_catalog:
-        df = spark.read.format(args.format).load(args.input)
+        df = read_transcripts(spark, args.input, args.format)
         metrics = run_with_snapshots(
             spark, df, args.snapshot_catalog,
             n_buckets=args.buckets, input_snapshot=args.snapshot,

@@ -177,7 +177,8 @@ def test_curation_pipeline_stages(spark):
 
 def test_curation_pipeline_plan_shape(spark):
     """One broadcast (benchmark n-grams); the corpus side has no
-    cartesian/nested-loop join anywhere."""
+    cartesian/nested-loop join anywhere; the quota stage is one exchange on
+    source fed by WindowGroupLimit's map-side Partial top-k."""
     from glm_ocr_spark.operators.curation import curation_pipeline
 
     docs = spark.createDataFrame(
@@ -187,6 +188,12 @@ def test_curation_pipeline_plan_shape(spark):
         .executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
+    lines = plan.splitlines()
+    on_source = [i for i, ln in enumerate(lines)
+                 if "Exchange hashpartitioning(source#" in ln]
+    assert len(on_source) == 1, plan
+    below = lines[on_source[0] + 1]
+    assert "WindowGroupLimit [source#" in below and "Partial" in below, plan
 
 
 def test_c4_terminal_punct_line_terminator_parity(spark):

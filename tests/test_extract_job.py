@@ -7,6 +7,7 @@ import subprocess
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 from glm_ocr_spark.data.gen import transcripts_df
 from glm_ocr_spark.snapshot import SnapshotStore
@@ -63,6 +64,28 @@ def test_snapshot_catalog_and_output_modes(spark, transcripts_path,
     proc = _job("--input", transcripts_path, "--output", out)
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert _rows(spark.read.parquet(out)) == committed
+
+
+def test_header_csv_input_writes_the_parquet_rows(spark, transcripts_path,
+                                                 tmp_path):
+    """A header CSV whose quoted payloads span lines reads through the
+    transcripts reader on both paths: the snapshot job and `_run_plan`
+    produce the rows the parquet input produces."""
+    from glm_ocr_spark.pipeline import _run_plan
+
+    src = spark.read.parquet(transcripts_path)
+    assert src.filter(F.col("text").contains("\n")).count() > 0
+    csv = str(tmp_path / "csv")
+    (src.write.option("header", "true").option("escape", '"')
+     .option("ignoreLeadingWhiteSpace", "false")
+     .option("ignoreTrailingWhiteSpace", "false").csv(csv))
+    want = _rows(_run_plan(spark, transcripts_path))
+
+    assert _rows(_run_plan(spark, csv, fmt="csv")) == want
+    cat = str(tmp_path / "cat")
+    _metrics(_job("--input", csv, "--format", "csv", "--snapshot-catalog",
+                  cat, "--buckets", str(N_BUCKETS)))
+    assert _rows(SnapshotStore(cat).read_output(spark)) == want
 
 
 @pytest.mark.parametrize("outputs", [

@@ -99,18 +99,15 @@ def test_generation_partitions_are_uniform(spark):
 
 
 def test_salted_quota_on_90pct_one_source_corpus(spark):
-    """Round-3 verdict ask #8: `partitionBy(source)` is a skewed-key
-    shuffle when one source dominates. The salted two-level top-k must
-    (a) spread the hot source over many reducers in stage 1 — no
-    straggler partition holding the whole hot key — and (b) produce
-    exactly the single-window answer."""
+    """`partitionBy(source)` is a skewed-key shuffle when one source holds
+    90% of the corpus. The quota is one `row_number` window: it must give
+    the reference window's answer, and its plan must bound the hot source
+    with Spark 4's map-side `WindowGroupLimit` Partial below the single
+    exchange on source, so each map partition ships at most k rows per
+    source to the hot reducer."""
     from pyspark.sql import Window
 
-    from glm_ocr_spark.operators.relational import (
-        QUOTA_SALTS,
-        quota_per_source,
-        topk_per_key_salted,
-    )
+    from glm_ocr_spark.operators.relational import quota_per_source
 
     n = 20_000
     docs = spark.range(n).select(
@@ -122,6 +119,7 @@ def test_salted_quota_on_90pct_one_source_corpus(spark):
     )
     k = 5
     got = quota_per_source(docs, max_per_source=k)
+    plan = got._jdf.queryExecution().executedPlan().toString()
     w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
     want = (
         docs.select("doc_id", "source", "lang",
@@ -131,73 +129,9 @@ def test_salted_quota_on_90pct_one_source_corpus(spark):
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
 
-    # stage-1 skew evidence: per (source, salt) group the hot key's rows
-    # split into QUOTA_SALTS groups, each ~1/QUOTA_SALTS of the key — the
-    # largest sort any reducer does is bounded by the salt fan-out
-    salted = docs.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(QUOTA_SALTS)))
-    grp = salted.groupBy("source", "_salt").count().collect()
-    hot = [r["count"] for r in grp if r["source"] == "megacrawl"]
-    assert len(hot) == QUOTA_SALTS
-    assert max(hot) < 0.9 * n * 0.25  # no salt group holds the hot key
-
-    # stage-2 input is bounded: <= QUOTA_SALTS * k rows per source
-    pruned = topk_per_key_salted(docs, ["source"], "doc_id", k)
-    inter = (
-        salted.withColumn(
-            "_rk", F.row_number().over(
-                Window.partitionBy("source", "_salt")
-                .orderBy(F.asc("doc_id"))))
-        .filter(F.col("_rk") <= k)
-    )
-    per_src = inter.groupBy("source").count().collect()
-    assert max(r["count"] for r in per_src) <= QUOTA_SALTS * k
-    assert pruned.count() == got.count()
-
-
-def test_salted_topk_with_ties_needs_and_honors_tie_cols(spark):
-    """ADVICE r4: with duplicate order values a salt boundary can split a
-    tie group and stage 1 may drop rows a single window would rank within
-    k. `tie_cols` extends the effective ordering to a unique composite —
-    the salted result must then equal the single window ordered the same
-    way, even on a corpus where every order value is heavily tied."""
-    from pyspark.sql import Window
-
-    from glm_ocr_spark.operators.relational import topk_per_key_salted
-
-    docs = spark.range(5_000).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 3).alias("grp"),
-        # only 4 distinct order values -> massive ties within every key
-        (F.col("id") % 4).cast("double").alias("score"),
-    )
-    k = 7
-    got = topk_per_key_salted(docs, ["grp"], "score", k,
-                              tie_cols=["doc_id"])
-    w = Window.partitionBy("grp").orderBy(F.asc("score"), F.asc("doc_id"))
-    want = (docs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-    assert got.count() == 3 * k
-
-
-def test_topk_salted_validate_unique_catches_ties(spark):
-    """Round-5 advice: the (order_col, *tie_cols) uniqueness contract has
-    a debug mode that detects violations instead of silently dropping
-    rows; with a proper tie column it passes and matches the single
-    window."""
-    import pytest
-
-    from glm_ocr_spark.operators.relational import topk_per_key_salted
-
-    df = spark.createDataFrame(
-        [("a", 1, 10), ("a", 1, 11), ("a", 2, 12), ("b", 1, 13)],
-        ["src", "ordv", "uid"])
-    with pytest.raises(ValueError, match="uniqueness contract"):
-        topk_per_key_salted(df, ["src"], "ordv", 1,
-                            validate_unique=True).collect()
-    out = topk_per_key_salted(df, ["src"], "ordv", 1, tie_cols=["uid"],
-                              validate_unique=True)
-    assert {(r["src"], r["uid"]) for r in out.collect()} == \
-        {("a", 10), ("b", 13)}
+    exchanges = [ln for ln in plan.splitlines()
+                 if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(source#" in exchanges[0], plan
+    below = plan[plan.index("Exchange hashpartitioning"):]
+    assert "WindowGroupLimit" in below and "Partial" in below, plan
