@@ -35,8 +35,8 @@ from pyspark.sql import types as T
 # ----------------------------------------------------------------- shingles
 
 from glm_ocr_spark.operators.norm import (  # noqa: E402 - shared norm spec
-    _WS_RE,
     norm_text_col,
+    norm_text_py,
     real_words_col,
 )
 
@@ -69,12 +69,12 @@ def shingles_col(n: int = 3):
 
 def shingles_py(text: str, n: int = 3) -> list[str]:
     """Python mirror of `shingles_col` (byte-equal — tested incl. leading/
-    trailing tab/newline/unicode whitespace): trim *spaces only* (JVM/DuckDB
-    `trim` strips 0x20, not \\t/\\n — so a leading tab survives trim,
-    collapses to ' ', and yields an empty leading token exactly as the JVM
-    side does), collapse ASCII whitespace, lower, word n-grams,
-    first-occurrence distinct; < n words -> single whole-text shingle."""
-    norm = _WS_RE.sub(" ", text.strip(" ")).lower() if text else ""
+    trailing tab/newline/unicode whitespace): `norm_text_py` (trim *spaces
+    only* — JVM/DuckDB `trim` strips 0x20, not \\t/\\n — so a leading tab
+    survives trim, collapses to ' ', and yields an empty leading token
+    exactly as the JVM side does), word n-grams, first-occurrence distinct;
+    < n words -> single whole-text shingle."""
+    norm = norm_text_py(text)
     words = norm.split(" ") if norm else [""]
     if len(words) < n:
         return [norm]
@@ -84,7 +84,8 @@ def shingles_py(text: str, n: int = 3) -> list[str]:
 
 
 def shingles_udf(n: int = 3):
-    """pandas UDF: text -> shingle array, one regex pass per doc."""
+    """pandas UDF: text -> shingle array, one regex pass per doc. MinHash
+    does not use it: its signature UDF returns the shingles it hashed."""
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _sh(text: pd.Series) -> pd.Series:
         return pd.Series([shingles_py(t, n) for t in text])
@@ -163,10 +164,10 @@ LSH_BANDS = 16          # bands of r = K / BANDS rows; r=2 -> candidate prob
 # 31-bit Mersenne prime: with base < 2^31 and a,b < 2^31 the affine form
 # base*a + b stays under 2^63, so the whole family runs in JVM longs with no
 # overflow (ANSI mode safe).
-# Dataflows this module pins with persist() (band entries, shingle
-# arrays). A returned DataFrame is lazy, so the operator cannot unpersist
-# them itself — they must outlive the CALLER's action. In a job-per-run
-# deployment the JVM exit releases them; a long-lived session (the
+# Dataflows this module pins with persist() (per-doc signatures and
+# shingle arrays). A returned DataFrame is lazy, so the operator cannot
+# unpersist them itself — they must outlive the CALLER's action. In a
+# job-per-run deployment the JVM exit releases them; a long-lived session (the
 # correctness driver, a notebook, repeated dedup calls) should call
 # `release_persisted()` after consuming each result, or the
 # MEMORY_AND_DISK blocks accumulate and squeeze later shuffles (review
@@ -177,7 +178,7 @@ _PERSISTED: list = []
 # grow the registry past this, the OLDEST pin is released first. A
 # released pin is never a correctness problem — a still-lazy consumer
 # just recomputes — and 8 comfortably covers the deepest in-flight chain
-# (dedup_keep_first: 2 pins per minhash call).
+# (dedup_keep_first: 1 pin per minhash call).
 _PERSISTED_CAP = 8
 
 
@@ -224,26 +225,29 @@ def _hash_params(k: int = MINHASH_K) -> list[tuple[int, int]]:
     return params
 
 
-def _minhash_sig_udf(n: int = 3, k: int = MINHASH_K):
-    """pandas UDF: text -> minhash signature (array<bigint>[k]).
+def _minhash_sketch_udf(n: int = 3, k: int = MINHASH_K):
+    """pandas UDF: text -> struct(sig array<bigint>[k], sh array<string>),
+    the minhash signature and the shingles it was computed from.
 
     Shingling happens in Python (`shingles_py`, one regex pass per doc);
     then one numpy broadcast per doc: base = hash(shingle) % M,
     min((base x A + B) % M) column-wise over the k-member affine family.
     Token hash = two crc32 variants -> 64 bits (same family as simhash64;
     any uniform deterministic hash works — correctness is enforced by the
-    exact-Jaccard verify stage, not by signature values).
+    exact-Jaccard verify stage, not by signature values). Returning the
+    shingles too lets `minhash_lsh_pairs` verify from the same pass instead
+    of shingling every doc a second time.
     """
     params = _hash_params(k)
     av = np.array([a for a, _ in params], dtype=np.uint64)
     bv = np.array([b for _, b in params], dtype=np.uint64)
     m = np.uint64(_MERSENNE)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(text: pd.Series) -> pd.Series:
+    @F.pandas_udf("sig array<bigint>, sh array<string>")
+    def _sketch(text: pd.Series) -> pd.DataFrame:
         import zlib
 
-        out = []
+        sigs, shs = [], []
         for t in text:
             shingles = shingles_py(t, n)
             hs = np.fromiter(
@@ -252,10 +256,18 @@ def _minhash_sig_udf(n: int = 3, k: int = MINHASH_K):
                 dtype=np.uint64, count=len(shingles))
             base = hs % m
             mins = ((base[:, None] * av + bv) % m).min(axis=0)
-            out.append(mins.astype(np.int64))
-        return pd.Series(out)
+            sigs.append(mins.astype(np.int64))
+            shs.append(shingles)
+        return pd.DataFrame({"sig": sigs, "sh": shs})
 
-    return _sig
+    return _sketch
+
+
+def _sketches(docs: DataFrame, n: int, k: int) -> DataFrame:
+    """(doc_id, sig, sh): one `_minhash_sketch_udf` pass per doc."""
+    return (docs.select("doc_id",
+                        _minhash_sketch_udf(n, k)(F.col("text")).alias("_m"))
+            .select("doc_id", "_m.sig", "_m.sh"))
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3,
@@ -273,22 +285,15 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     the UDF does one regex pass + one numpy broadcast per doc and gives the
     plan a materialization boundary.
     """
-    sig = _minhash_sig_udf(n, k)
-    return docs.select("doc_id", sig(F.col("text")).alias("sig"))
+    return _sketches(docs, n, k).select("doc_id", "sig")
 
 
-def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
-                            bands: int = LSH_BANDS) -> DataFrame:
-    """Candidate (id1, id2) pairs from banded LSH. Each doc emits `bands`
-    (band_idx, band_hash) rows — shuffle volume is linear in corpus size,
-    never all-pairs across buckets; a bucket of s docs emits s(s-1)/2
-    ordered pairs, streamed by the sort-merge self-join (O(s) memory per
-    task). Degenerate corpora still pay O(s^2) OUTPUT rows — that is the
-    LSH contract. A one-shuffle collect_list plan and a parquet band table
-    were measured no faster and removed (BENCH_ab_strategy*.json,
-    BENCH_ab_bandtable.json)."""
+def _band_candidates(sigs: DataFrame, k: int, bands: int) -> DataFrame:
+    """Candidate (id1, id2) pairs from the band entries of a PINNED
+    (doc_id, sig, ...) relation: both sides of the self-join hash its
+    signatures (JVM `xxhash64`, no Python), so the signature UDF runs
+    once per doc however many times the entries are read."""
     r = k // bands
-    sigs = minhash_signatures(docs, n, k)
     band_entries = sigs.select(
         "doc_id",
         F.posexplode(
@@ -301,11 +306,6 @@ def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
             ])
         ).alias("band_idx", "band_hash"),
     )
-    # materialize the band entries ONCE before the self-join: both join
-    # sides reference this dataflow, and without a boundary Spark plans
-    # two full scans — the expensive signature UDF twice over the whole
-    # corpus (measured 2x wall on a 6.3M-doc corpus)
-    _pin(band_entries)
     a = band_entries.alias("a")
     b = band_entries.alias("b")
     return (
@@ -316,6 +316,25 @@ def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
                 F.col("b.doc_id").alias("id2"))
         .dropDuplicates(["id1", "id2"])
     )
+
+
+def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
+                            bands: int = LSH_BANDS) -> DataFrame:
+    """Candidate (id1, id2) pairs from banded LSH. Each doc emits `bands`
+    (band_idx, band_hash) rows — shuffle volume is linear in corpus size,
+    never all-pairs across buckets; a bucket of s docs emits s(s-1)/2
+    ordered pairs, streamed by the sort-merge self-join (O(s) memory per
+    task). Degenerate corpora still pay O(s^2) OUTPUT rows — that is the
+    LSH contract. A one-shuffle collect_list plan and a parquet band table
+    were measured no faster and removed (BENCH_ab_strategy*.json,
+    BENCH_ab_bandtable.json)."""
+    sigs = minhash_signatures(docs, n, k)
+    # materialize the signatures ONCE before the self-join: both join
+    # sides read them, and without a boundary Spark plans two full scans
+    # — the signature UDF twice over the whole corpus (measured 2x wall
+    # on a 6.3M-doc corpus)
+    _pin(sigs)
+    return _band_candidates(sigs, k, bands)
 
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
@@ -330,19 +349,20 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     miss prob (1-j^2)^16). Candidates are tiny relative to the corpus, so
     the two verify joins move only candidate rows + their shingle arrays.
 
-    Lifetime note: this pins the band entries and the shingle arrays with
-    persist() for the duration of the caller's action; long-lived sessions
-    should call `release_persisted()` after consuming the result (see the
-    note at `_PERSISTED`).
+    One Python pass per doc: the sketch UDF returns each doc's signature
+    and shingle array together, and that one relation is pinned; the band
+    entries and both verify sides read the pin.
+
+    Lifetime note: this pins the (doc_id, sig, sh) relation with persist()
+    for the duration of the caller's action; long-lived sessions should
+    call `release_persisted()` after consuming the result (see the note at
+    `_PERSISTED`).
     """
-    cands = minhash_band_candidates(docs, n, k, bands)
-    sh = docs.select("doc_id", shingles_udf(n)(F.col("text")).alias("sh"))
-    # same single-evaluation boundary as the band entries above: s1 and s2
-    # both read this dataflow, and unpersisted the shingle UDF would run
-    # two more full corpus passes
-    _pin(sh)
-    s1 = sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    s2 = sh.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
+    sk = _sketches(docs, n, k)
+    _pin(sk)
+    cands = _band_candidates(sk, k, bands)
+    s1 = sk.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    s2 = sk.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     common = F.size(F.array_intersect("sh1", "sh2"))
     jac = common / (F.size("sh1") + F.size("sh2") - common)
     # materialize the O(shingles) Jaccard once before filtering on it —
@@ -370,7 +390,11 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
     pointer jump). The jump gives the O(log diameter) round bound of the
     large-star/small-star family (Kiveris et al.) while keeping plain
     DataFrame joins: round 2 upgrades — a 300-node path converges in ~8
-    rounds where plain neighbor-min needed 300 (test-covered).
+    rounds where plain neighbor-min needed 300 (test-covered). Labels are
+    seeded with min(node, min neighbour), so the first hop is taken before
+    round 1: a graph of disjoint pairs (the usual near-dup shape) has its
+    final labels at the seed and returns after ONE round, the round that
+    sees no label move.
 
     Per-round cost: ONE job — the localCheckpoint is LAZY and the round's
     convergence count is the action that materializes it (an eager
@@ -409,8 +433,14 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
         )).alias("e")
     ).select("e.a", "e.b")
     edges = _ckpt(e.distinct())
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
+    # seed each node with min(itself, its neighbours): one groupBy over
+    # the edges, the same single shuffle as listing the distinct nodes.
+    # Every seed is a node id in the node's component and <= the node, so
+    # min-propagation with the pointer jump still ends at the component
+    # minimum
+    labels = (edges.groupBy("a").agg(F.min("b").alias("nmin"))
+              .select(F.col("a").alias("node"),
+                      F.least("a", "nmin").alias("label")))
     changed = -1  # sentinel: max_iter <= 0 must still raise cleanly below
     for _ in range(max_iter):
         neigh = (

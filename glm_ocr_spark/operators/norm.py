@@ -47,14 +47,16 @@ def real_words_col(col: str = "text") -> Column:
     return F.filter(norm_words_col(col), lambda w: w != "")
 
 
+def norm_text_py(text: str | None) -> str:
+    """Python mirror of norm_text_col: trim spaces only -> collapse ASCII
+    whitespace -> lower. Null or empty text normalizes to ""."""
+    return _WS_RE.sub(" ", text.strip(" ")).lower() if text else ""
+
+
 def real_words_py(text: str | None) -> list[str]:
-    """Python mirror of real_words_col (byte-equal; parity-tested): trim
-    spaces only -> collapse ASCII whitespace -> lower -> split -> drop
-    empty tokens."""
-    if not text:
-        return []
-    norm = _WS_RE.sub(" ", text.strip(" ")).lower()
-    return [w for w in norm.split(" ") if w]
+    """Python mirror of real_words_col (byte-equal; parity-tested):
+    `norm_text_py`, split, drop empty tokens."""
+    return [w for w in norm_text_py(text).split(" ") if w]
 
 
 def real_words_udf():

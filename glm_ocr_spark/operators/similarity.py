@@ -211,6 +211,23 @@ IVF_TRAIN_SAMPLE = 16384
 SEMDEDUP_MAX_CELL_ROWS = 65536
 
 
+def _arrow_matrix(col) -> np.ndarray:
+    """(rows, dim) float64 matrix from an Arrow list<float|double> column
+    of equal-length rows. `flatten()` honours sliced offsets (`.values`
+    would not)."""
+    import pyarrow.compute as pc
+
+    lst = col.combine_chunks()
+    if lst.null_count:
+        raise ValueError("null embedding in the collected rows")
+    lens = pc.list_value_length(lst).to_numpy(zero_copy_only=False)
+    if len(lens) and (lens != lens[0]).any():
+        raise ValueError(
+            f"embeddings differ in length ({lens.min()}..{lens.max()})")
+    flat = lst.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(lst), -1)
+
+
 def train_ivf_centroids(emb: DataFrame, n_cells: int = IVF_CELLS,
                         iters: int = 10,
                         sample_limit: int = IVF_TRAIN_SAMPLE) -> np.ndarray:
@@ -220,10 +237,10 @@ def train_ivf_centroids(emb: DataFrame, n_cells: int = IVF_CELLS,
     driver collect is O(sample), never O(corpus); init is deterministic
     (evenly spaced ranks of the first coordinate), so retrain == same cells.
     At 100 TB you train once on a sample and persist the centroid matrix.
+    The sample crosses to the driver as one Arrow table, not as Rows.
     """
-    rows = (emb.orderBy("vec_id").limit(sample_limit)
-            .select("embedding").collect())
-    x = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    x = _arrow_matrix(emb.orderBy("vec_id").limit(sample_limit)
+                      .select("embedding").toArrow().column("embedding"))
     idx = np.argsort(x[:, 0])[np.linspace(0, len(x) - 1, n_cells).astype(int)]
     c = x[idx].copy()
     xn = x / np.linalg.norm(x, axis=1, keepdims=True)
@@ -477,16 +494,15 @@ def fixed_centroids(emb: DataFrame, n_cells: int) -> np.ndarray:
     Requires vec_ids to be dense 0..n_cells-1 (asserted): with a gap or a
     non-zero start the positional cell labels would silently diverge from
     an external verifier's `cell = vec_id` labeling (review finding)."""
-    rows = (emb.filter(F.col("vec_id") < n_cells).orderBy("vec_id")
-            .select("vec_id", "embedding").collect())
-    ids = [r["vec_id"] for r in rows]
+    tbl = (emb.filter(F.col("vec_id") < n_cells).orderBy("vec_id")
+           .select("vec_id", "embedding").toArrow())
+    ids = tbl.column("vec_id").to_pylist()
     if ids != list(range(n_cells)):
         raise ValueError(
             f"fixed_centroids needs dense vec_ids 0..{n_cells - 1}; "
             f"got {ids[:8]}{'...' if len(ids) > 8 else ''} — positional "
             "cell labels would not match cell = vec_id")
-    return np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                     for r in rows])
+    return _arrow_matrix(tbl.column("embedding"))
 
 
 def ivf_cell_sim_udf(centroids: np.ndarray):
@@ -580,21 +596,13 @@ def _semdedup_assign(emb: DataFrame, centroids: np.ndarray,
     raise AssertionError("unreachable")
 
 
-def _semdedup_drop_pairs(cells: DataFrame, threshold: float,
-                         order: str) -> DataFrame:
-    """The within-cell pair kernel, routed per cell by population; both
-    routes emit the same (drop_id, keep_id, cell, cos_sim) rows
-    (equivalence-tested) and cells are disjoint, so the union is exactly
-    the unrouted pair set.
-
-    Cells of at most `SEMDEDUP_MAX_CELL_ROWS` rows take the matmul kernel
-    (`_semdedup_drop_pairs_matmul`): ONE shuffle of the corpus rows and
-    the quadratic part as chunked BLAS per cell — 10-40x faster than the
-    JVM join, which materializes two 64-double arrays per candidate pair
-    (BENCH_semdedup.json). Hotter cells, whose input stack alone could
-    OOM an Arrow group, take the JVM self-join
-    (`_semdedup_drop_pairs_join`), which streams through sort-merge join
-    and spills."""
+def _route_cells(cells: DataFrame, cold, hot) -> DataFrame:
+    """`cold(cells)`, except that cells holding more than
+    `SEMDEDUP_MAX_CELL_ROWS` rows go to `hot` instead and the two results
+    are unioned. Cells are disjoint, so a per-cell kernel routed this way
+    returns exactly its unrouted result. The matmul kernels must not take
+    a hot cell: its rows arrive as ONE Arrow group, and its stack alone
+    could OOM it."""
     # read at call time (not bound as a default argument), so patching the
     # module constant reroutes cells
     cap = SEMDEDUP_MAX_CELL_ROWS
@@ -603,53 +611,85 @@ def _semdedup_drop_pairs(cells: DataFrame, threshold: float,
     # output is unreferenced, so Catalyst drops the Python eval and the
     # count reads parquet metadata), so small/medium runs pay ~nothing
     if cells.count() <= cap:
-        return _semdedup_drop_pairs_matmul(cells, threshold)
+        return cold(cells)
     counts = cells.groupBy("cell").agg(F.count("*").alias("_n"))
-    hot = [r["cell"] for r in counts.filter(F.col("_n") > cap).collect()]
-    if not hot:
-        return _semdedup_drop_pairs_matmul(cells, threshold)
-    cold_df = cells.filter(~F.col("cell").isin(hot))
-    hot_df = cells.filter(F.col("cell").isin(hot))
-    return _semdedup_drop_pairs_matmul(cold_df, threshold).unionByName(
-        _semdedup_drop_pairs_join(hot_df, threshold, order))
+    ids = [r["cell"] for r in counts.filter(F.col("_n") > cap).collect()]
+    if not ids:
+        return cold(cells)
+    is_hot = F.col("cell").isin(ids)
+    return cold(cells.filter(~is_hot)).unionByName(hot(cells.filter(is_hot)))
+
+
+def _semdedup_drop_pairs(cells: DataFrame, threshold: float,
+                         order: str) -> DataFrame:
+    """The within-cell pair kernel, routed per cell by population; both
+    routes emit the same (drop_id, keep_id, cell, cos_sim) rows
+    (equivalence-tested).
+
+    Cells of at most `SEMDEDUP_MAX_CELL_ROWS` rows take the matmul kernel
+    (`_semdedup_drop_pairs_matmul`): ONE shuffle of the corpus rows and
+    the quadratic part as chunked BLAS per cell — 10-40x faster than the
+    JVM join, which materializes two 64-double arrays per candidate pair
+    (BENCH_semdedup.json). Hotter cells take the JVM self-join
+    (`_semdedup_drop_pairs_join`), which streams through sort-merge join
+    and spills."""
+    return _route_cells(
+        cells, lambda c: _semdedup_drop_pairs_matmul(c, threshold),
+        lambda h: _semdedup_drop_pairs_join(h, threshold, order))
+
+
+def _semdedup_survivors(cells: DataFrame, threshold: float,
+                        order: str) -> DataFrame:
+    """(vec_id, cell) of every row `_semdedup_drop_pairs` never names as
+    drop_id, routed the same way. Cold cells come straight out of the
+    matmul survivor kernel: no pair rows, no join. Hot cells keep the JVM
+    join route, and a left-anti join over those cells only removes its
+    drop ids."""
+    def hot(h: DataFrame) -> DataFrame:
+        dropped = _semdedup_drop_pairs_join(h, threshold, order) \
+            .select(F.col("drop_id").alias("vec_id"))
+        return h.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
+
+    return _route_cells(
+        cells, lambda c: _semdedup_survivors_matmul(c, threshold), hot)
+
+
+def _near_pairs(pdf, threshold: float):
+    """THE within-cell gram loop shared by the pair and survivor kernels.
+    `pdf` is one cell's rows already sorted by (_ord, vec_id) — the same
+    strict total order as the join route's precedes predicate. Yields, per
+    2048-row chunk of the gram matrix (a cell never allocates n_c^2
+    doubles at once), the row indices (drop, keep) and the cosine of
+    every pair where keep precedes drop and cosine >= threshold. Zero
+    vectors are masked explicitly (never drop, never dropped), mirroring
+    the join route's guard."""
+    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    nz = norms[:, 0] > 0
+    xn = x / np.where(norms == 0, 1.0, norms)
+    n = len(xn)
+    chunk = 2048
+    for s in range(0, n, chunk):
+        e = min(s + chunk, n)
+        g = xn[s:e] @ xn.T  # (chunk, n): rows = drop cands, cols = keeps
+        r, c = np.nonzero(g >= threshold)
+        gi = r + s
+        m = (c < gi) & nz[gi] & nz[c]
+        if m.any():
+            yield gi[m], c[m], g[r[m], c[m]]
 
 
 def _semdedup_drop_pairs_matmul(cells: DataFrame,
                                 threshold: float) -> DataFrame:
-    """applyInPandas per cell: sort by (_ord, vec_id) — the same strict
-    total order as the join route's precedes predicate — then emit
-    (drop, keep) for every pair where the keep's sort index precedes the
-    drop's and cosine >= threshold. The gram matrix is chunked to
-    2048 x n_c so a cell never allocates n_c^2 doubles at once. Zero
-    vectors are masked explicitly (never drop, never dropped), mirroring
-    the join route's guard."""
-    import pandas as pd  # local: similarity.py is importable without Arrow
-
+    """applyInPandas per cell: (drop, keep) for every `_near_pairs`
+    pair."""
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["_ord", "vec_id"])
         ids = pdf["vec_id"].to_numpy()
         cellv = pdf["cell"].to_numpy()
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["embedding"]])
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        nz = norms[:, 0] > 0
-        xn = x / np.where(norms == 0, 1.0, norms)
-        n = len(ids)
-        out = []
-        chunk = 2048
-        for s in range(0, n, chunk):
-            e = min(s + chunk, n)
-            g = xn[s:e] @ xn.T  # (chunk, n): rows = drop cands, cols = keeps
-            r, c = np.nonzero(g >= threshold)
-            gi = r + s
-            m = (c < gi) & nz[gi] & nz[c]
-            if not m.any():
-                continue
-            out.append(pd.DataFrame({
-                "drop_id": ids[gi[m]],
-                "keep_id": ids[c[m]],
-                "cell": cellv[gi[m]],
-                "cos_sim": np.round(g[r[m], c[m]], 6)}))
+        out = [pd.DataFrame({"drop_id": ids[d], "keep_id": ids[k],
+                             "cell": cellv[d], "cos_sim": np.round(cos, 6)})
+               for d, k, cos in _near_pairs(pdf, threshold)]
         if not out:
             return pd.DataFrame({
                 "drop_id": pd.Series([], dtype="int64"),
@@ -660,6 +700,20 @@ def _semdedup_drop_pairs_matmul(cells: DataFrame,
 
     return cells.groupBy("cell").applyInPandas(
         per_cell, "drop_id long, keep_id long, cell int, cos_sim double")
+
+
+def _semdedup_survivors_matmul(cells: DataFrame,
+                               threshold: float) -> DataFrame:
+    """applyInPandas per cell: the rows no `_near_pairs` pair drops."""
+    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["_ord", "vec_id"])
+        dropped = np.zeros(len(pdf), dtype=bool)
+        for d, _, _ in _near_pairs(pdf, threshold):
+            dropped[d] = True
+        return pdf.loc[~dropped, ["vec_id", "cell"]]
+
+    return cells.groupBy("cell").applyInPandas(
+        per_cell, cells.select("vec_id", "cell").schema)
 
 
 def _semdedup_drop_pairs_join(cells: DataFrame, threshold: float,
@@ -747,10 +801,8 @@ def semantic_dedup_from_assigned(assigned: DataFrame,
     """`semantic_dedup` survivors over a pre-assigned table — see
     semantic_dedup_pairs_from_assigned for when and why. Value-identical
     to semantic_dedup with the same centroids (parity-tested)."""
-    cells = _assigned_with_ord(assigned, order)
-    dropped = (_semdedup_drop_pairs(cells, threshold, order)
-               .select(F.col("drop_id").alias("vec_id")).distinct())
-    return cells.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
+    return _semdedup_survivors(
+        _assigned_with_ord(assigned, order), threshold, order)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.9,
@@ -758,24 +810,19 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.9,
                    centroids: np.ndarray | None = None,
                    order: str = "vec_id") -> DataFrame:
     """SemDeDup survivors: (vec_id, cell) for every embedding NOT dropped
-    by `semantic_dedup_pairs` — one left-anti join against the distinct
-    drop set (ids only on the wire). See semantic_dedup_pairs for the
-    algorithm, determinism, and the per-cell cost bound that makes this
-    the semantic-dedup shape that survives 100 TB.
+    by `semantic_dedup_pairs`. See semantic_dedup_pairs for the algorithm,
+    determinism, and the per-cell cost bound that makes this the
+    semantic-dedup shape that survives 100 TB.
 
-    Cost note: the assignment UDF evaluates TWICE per row here — once
-    feeding the per-cell matmul kernel and once for the survivor side of
-    the left-anti join (whose shuffle carries only (vec_id, cell) —
-    embedding is pruned); the cap pre-pass count is column-pruned and
-    evaluates nothing (past the cap, the per-cell counts that find hot
-    cells add a third pass). Still cheaper than pinning a corpus-sized
-    MEMORY_AND_DISK cache for one extra matmul pass over a column scan;
-    callers that persist `emb` themselves get the scan amortized across
-    both."""
+    Cost note: the assignment UDF evaluates ONCE per row. The per-cell
+    matmul kernel emits the survivors itself (a row survives iff no
+    earlier-ordered row of its cell is within the threshold), so there is
+    no drop-pair relation, no distinct and no corpus-wide left-anti join
+    reading the assignment a second time. The cap pre-pass count is
+    column-pruned and evaluates nothing; past the cap, the per-cell counts
+    that find hot cells and the hot cells' JVM join route read it again."""
     _check_order(order)
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_cells)
-    cells = _semdedup_assign(emb, centroids, order)
-    dropped = (_semdedup_drop_pairs(cells, threshold, order)
-               .select(F.col("drop_id").alias("vec_id")).distinct())
-    return cells.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
+    return _semdedup_survivors(
+        _semdedup_assign(emb, centroids, order), threshold, order)

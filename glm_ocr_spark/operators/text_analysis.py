@@ -18,7 +18,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from glm_ocr_spark.operators.norm import norm_text_col, real_words_col
+from glm_ocr_spark.operators.norm import (
+    norm_text_col,
+    norm_text_py,
+    real_words_col,
+)
 
 # Shared spec constants — the SQL oracles in __spark_entry__ must use the
 # same values/patterns.
@@ -128,9 +132,8 @@ def winnow_py(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> str:
     first 8 hex chars of md5 (string min == lexicographic, identical in
     DuckDB, so the oracle is exact)."""
     import hashlib
-    import re as _re
 
-    norm = _re.sub(r"\s+", " ", (text or "").strip(), flags=_re.ASCII).lower()
+    norm = norm_text_py(text)
     if len(norm) >= k:
         hs = [hashlib.md5(norm[i:i + k].encode("utf-8")).hexdigest()[:8]
               for i in range(len(norm) - k + 1)]

@@ -340,10 +340,11 @@ def run(spark: SparkSession, input_path: str, output_path: str,
     than shuffling the kernel output did (sink shuffle 4.09 -> 3.12 MB on
     that workload). `mode`/`config` come from the resolution chain
     (config_loader.load_config: kwargs > env > .env > YAML > defaults).
+    `fmt` names the input format only: the output is always parquet, since
+    CSV and JSON cannot hold the `spans` array of structs.
     """
     (
         _run_plan(spark, input_path, fmt=fmt, mode=mode, config=config)
         .write.mode("overwrite")
-        .format(fmt)
-        .save(output_path)
+        .parquet(output_path)
     )

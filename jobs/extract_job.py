@@ -14,7 +14,7 @@ Both paths read `--input` through sources.read_transcripts: a value that
 contains `/` is a path read in `--format` (CSV with a header row and
 quoted multi-line payloads, JSON lines with the contract schema and no
 inference pass); a value without `/` is read as a catalog table and
-`--format` is ignored.
+`--format` is ignored. Both paths write parquet whatever `--format` says.
 
 Extraction knobs resolve through the reference-style chain (glmocr/
 config.py:293-364): CLI flags > GLMOCR_SPARK_* env > .env > --config YAML >

@@ -1,3 +1,5 @@
+import contextlib
+
 import pytest
 
 
@@ -9,3 +11,29 @@ def spark():
                   shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def call_counter(spark):
+    """`with call_counter(module, "name") as acc:` — plans built inside the
+    block call `module.name` through a wrapper that adds the rows of each
+    call to `acc`: its first argument's length (an Arrow batch) or 1 (one
+    str or None). UDF closures pickle the wrapper by value, so the counts
+    come back from the Python workers."""
+    @contextlib.contextmanager
+    def counting(module, name):
+        acc = spark.sparkContext.accumulator(0)
+        original = getattr(module, name)
+
+        def counted(first, *args, **kwargs):
+            acc.add(1 if first is None or isinstance(first, str)
+                    else len(first))
+            return original(first, *args, **kwargs)
+
+        setattr(module, name, counted)
+        try:
+            yield acc
+        finally:
+            setattr(module, name, original)
+
+    return counting

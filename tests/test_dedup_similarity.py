@@ -144,8 +144,8 @@ def test_minhash_band_candidates_match_python_reference(spark):
 
 
 def test_release_persisted_frees_minhash_caches(spark):
-    """minhash pins band entries + shingle arrays with persist() and the
-    lazy return means the operator can't unpersist them itself (round-5
+    """minhash pins its one (doc_id, sig, sh) relation with persist() and
+    the lazy return means the operator can't unpersist them itself (round-5
     review finding) — release_persisted() is the caller's handle for
     long-lived sessions. It must drop exactly this module's pins and
     leave caller-created caches alone."""
@@ -160,10 +160,26 @@ def test_release_persisted_frees_minhash_caches(spark):
     mine.count()
     assert minhash_lsh_pairs(docs, threshold=0.5).count() >= 0
     released = release_persisted()
-    assert released == 2  # band entries + shingle arrays
+    assert released == 1  # the signature + shingle relation
     assert mine.storageLevel.useMemory  # caller cache untouched
     assert release_persisted() == 0  # idempotent
     mine.unpersist()
+
+
+def test_minhash_lsh_pairs_shingles_each_doc_once(spark, call_counter):
+    """One Python pass per doc: the signature UDF returns the shingles it
+    hashed, and the verify joins read that same pinned relation."""
+    from glm_ocr_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF1}/documents.parquet")
+    n_docs = docs.count()
+    try:
+        with call_counter(dedup, "shingles_py") as acc:
+            pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+        assert pairs.count() > 0
+    finally:
+        dedup.release_persisted()
+    assert acc.value == n_docs
 
 
 def test_minhash_oracle_margin_no_borderline_pairs():
@@ -246,6 +262,18 @@ def test_connected_components_raises_at_cap(spark):
         [(i, i + 1) for i in range(40)], "id1 long, id2 long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iter=2)
+
+
+def test_connected_components_disjoint_pairs_converge_in_one_round(spark):
+    """Seeded with min(node, min neighbour), a graph of disjoint pairs has
+    its final labels before round 1, which only confirms nothing moves."""
+    from glm_ocr_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(2 * i + 1, 2 * i) for i in range(50)], "id1 long, id2 long")
+    got = {r["doc_id"]: r["component_id"]
+           for r in connected_components(pairs, max_iter=1).collect()}
+    assert got == {i: i - i % 2 for i in range(100)}
 
 
 def test_dedup_components_groups_near_dups(spark):
@@ -454,6 +482,28 @@ def test_winnow_shared_substring_guarantee():
     assert winnow_py(a) == winnow_py(a)
     assert winnow_py("tiny") != ""
     assert winnow_py("") != ""
+
+
+def test_winnow_trims_spaces_only_like_the_oracle(spark):
+    """`winnow_py` normalizes as `norm_text_col` and the DuckDB `_NORM` do:
+    trim strips spaces only, so a trailing newline collapses to a trailing
+    space on every engine and the fingerprints agree."""
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as entry
+    from glm_ocr_spark.operators.text_analysis import with_winnow_fingerprint
+
+    texts = ["Hello world of winnowing here\n",
+             "Hello world of winnowing here",
+             "\t lead tab and spaces  ", "short\n", ""]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    got = {r["doc_id"]: r["winnow_fp"]
+           for r in with_winnow_fingerprint(df).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        {"doc_id": range(len(texts)), "text": texts}))
+    want = dict(con.sql(entry.oracle_sql()["winnow_fingerprint"]).fetchall())
+    assert got == want
 
 
 def test_ivf_partitioned_layout_prunes_at_source(spark, tmp_path):

@@ -157,3 +157,18 @@ def test_run_plan_one_range_exchange_below_the_kernel(spark, corpus):
     read_schema = plan[plan.index("ReadSchema: "):].splitlines()[0]
     assert "conv_id" in read_schema and "text" in read_schema
     assert "ts:" not in read_schema
+
+
+def test_run_csv_input_writes_every_row_as_parquet(spark, corpus, tmp_path):
+    """`fmt` names the input format: a header CSV reads through the
+    transcripts reader and the output is parquet, because CSV cannot hold
+    the `spans` array of structs."""
+    path, n_rows = corpus
+    csv = str(tmp_path / "csv")
+    (spark.read.parquet(path).write.option("header", "true")
+     .option("escape", '"').csv(csv))
+    out = str(tmp_path / "out")
+    pl.run(spark, csv, out, fmt="csv")
+    got = spark.read.parquet(out)
+    assert got.count() == n_rows
+    assert dict(got.dtypes)["spans"].startswith("array<struct<")
