@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -161,38 +162,48 @@ LSH_BANDS = 16          # bands of r = K / BANDS rows; r=2 -> candidate prob
                         # 1-(1-j^2)^16: ≈0.99 at j=0.5, ≈1-1e-7 at j=0.8.
                         # Verified by exact Jaccard, so extra candidates cost
                         # only join width, never precision.
-# 31-bit Mersenne prime: with base < 2^31 and a,b < 2^31 the affine form
-# base*a + b stays under 2^63, so the whole family runs in JVM longs with no
-# overflow (ANSI mode safe).
-# Dataflows this module pins with persist() (per-doc signatures and
-# shingle arrays). A returned DataFrame is lazy, so the operator cannot
-# unpersist them itself — they must outlive the CALLER's action. In a
-# job-per-run deployment the JVM exit releases them; a long-lived session (the
-# correctness driver, a notebook, repeated dedup calls) should call
-# `release_persisted()` after consuming each result, or the
-# MEMORY_AND_DISK blocks accumulate and squeeze later shuffles (review
-# finding; the interference bench_sf1 measured as 51.5 s warm vs 18.5 s
-# cold).
+# Dataflows this module pins with persist() (per-doc band keys and
+# shingle arrays). A returned DataFrame is lazy, so `minhash_lsh_pairs`
+# and `minhash_band_candidates` cannot unpersist their pins themselves —
+# they must outlive the CALLER's action. In a job-per-run deployment the
+# JVM exit releases them; a long-lived session (the correctness driver, a
+# notebook, repeated dedup calls) should call `release_persisted()` after
+# consuming each result, or the MEMORY_AND_DISK blocks accumulate and
+# squeeze later shuffles (review finding; the interference bench_sf1
+# measured as 51.5 s warm vs 18.5 s cold). `dedup_components` (and so
+# `dedup_keep_first`) consumes its pairs eagerly and releases its own pin
+# before it returns, leaving nothing here.
 _PERSISTED: list = []
 # long-lived-session leak bound (round-5 advice): when a new pin would
 # grow the registry past this, the OLDEST pin is released first. A
 # released pin is never a correctness problem — a still-lazy consumer
-# just recomputes — and 8 comfortably covers the deepest in-flight chain
-# (dedup_keep_first: 1 pin per minhash call).
+# just recomputes.
 _PERSISTED_CAP = 8
+
+
+def _release(df) -> bool:
+    try:
+        df.unpersist()
+        return True
+    except Exception:
+        return False  # session gone or block already dropped
 
 
 def _pin(df) -> None:
     from pyspark import StorageLevel
 
     while len(_PERSISTED) >= _PERSISTED_CAP:
-        old = _PERSISTED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session gone or block already dropped
+        _release(_PERSISTED.pop(0))
     df.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED.append(df)
+
+
+def _unpin(df) -> None:
+    """Release one pin now, once everything that reads it has run."""
+    for i, pinned in enumerate(_PERSISTED):
+        if pinned is df:
+            _release(_PERSISTED.pop(i))
+            return
 
 
 def release_persisted() -> int:
@@ -200,17 +211,14 @@ def release_persisted() -> int:
     returns how many were released. Safe to call at any time — only
     affects this module's internal caches, never caller-created ones
     (unlike spark.catalog.clearCache())."""
-    n = 0
-    for df in _PERSISTED:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session gone or block already dropped — nothing to free
+    n = sum(_release(df) for df in _PERSISTED)
     _PERSISTED.clear()
     return n
 
 
+# 31-bit Mersenne prime: with base < 2^31 and a,b < 2^31 the affine form
+# base*a + b stays under 2^63, so the whole family runs in JVM longs with no
+# overflow (ANSI mode safe).
 _MERSENNE = (1 << 31) - 1
 
 
@@ -225,9 +233,29 @@ def _hash_params(k: int = MINHASH_K) -> list[tuple[int, int]]:
     return params
 
 
-def _minhash_sketch_udf(n: int = 3, k: int = MINHASH_K):
-    """pandas UDF: text -> struct(sig array<bigint>[k], sh array<string>),
-    the minhash signature and the shingles it was computed from.
+def _band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
+    """(rows, k) int64 signatures -> (rows, bands) int64 LSH band keys.
+
+    A band's key folds its r = k // bands slot values, key = key * m + s,
+    in wrapping uint64 arithmetic. Slot values are below 2^31, so with
+    m = 2^31 the fold is an exact packing for r <= 2 (the shipped k=32,
+    bands=16 gives r=2: key = s0 << 31 | s1). For r > 2 the odd 64-bit m
+    makes it a polynomial hash; a collision only adds candidates, which
+    the exact-Jaccard verify drops."""
+    r = sig.shape[1] // bands
+    slots = sig[:, :bands * r].reshape(len(sig), bands, r).astype(np.uint64)
+    m = np.uint64(1 << 31) if r <= 2 else np.uint64(0x9E3779B97F4A7C15)
+    key = np.zeros((len(sig), bands), dtype=np.uint64)
+    for j in range(r):
+        key = key * m + slots[:, :, j]
+    return key.view(np.int64)
+
+
+def _minhash_sketch_udf(n: int = 3, k: int = MINHASH_K,
+                        bands: int = LSH_BANDS):
+    """pandas UDF: text -> struct(sig array<bigint>[k], sh array<string>,
+    bk array<bigint>[bands]): the minhash signature, the shingles it was
+    computed from, and its LSH band keys.
 
     Shingling happens in Python (`shingles_py`, one regex pass per doc);
     then one numpy broadcast per doc: base = hash(shingle) % M,
@@ -236,38 +264,44 @@ def _minhash_sketch_udf(n: int = 3, k: int = MINHASH_K):
     any uniform deterministic hash works — correctness is enforced by the
     exact-Jaccard verify stage, not by signature values). Returning the
     shingles too lets `minhash_lsh_pairs` verify from the same pass instead
-    of shingling every doc a second time.
+    of shingling every doc a second time; the band keys (`_band_keys`) are
+    one numpy fold over the whole batch's signature matrix, where a JVM
+    band expression was `bands` interpreted hash expressions per row.
     """
     params = _hash_params(k)
     av = np.array([a for a, _ in params], dtype=np.uint64)
     bv = np.array([b for _, b in params], dtype=np.uint64)
     m = np.uint64(_MERSENNE)
 
-    @F.pandas_udf("sig array<bigint>, sh array<string>")
+    @F.pandas_udf("sig array<bigint>, sh array<string>, bk array<bigint>")
     def _sketch(text: pd.Series) -> pd.DataFrame:
         import zlib
 
-        sigs, shs = [], []
-        for t in text:
+        sigs = np.empty((len(text), k), dtype=np.int64)
+        shs = []
+        for i, t in enumerate(text):
             shingles = shingles_py(t, n)
             hs = np.fromiter(
                 ((zlib.crc32(w) << 32) | zlib.crc32(w[::-1] + b"#")
                  for w in (s.encode("utf-8") for s in shingles)),
                 dtype=np.uint64, count=len(shingles))
             base = hs % m
-            mins = ((base[:, None] * av + bv) % m).min(axis=0)
-            sigs.append(mins.astype(np.int64))
+            sigs[i] = ((base[:, None] * av + bv) % m).min(axis=0)
             shs.append(shingles)
-        return pd.DataFrame({"sig": sigs, "sh": shs})
+        return pd.DataFrame({"sig": list(sigs), "sh": shs,
+                             "bk": list(_band_keys(sigs, bands))})
 
     return _sketch
 
 
-def _sketches(docs: DataFrame, n: int, k: int) -> DataFrame:
-    """(doc_id, sig, sh): one `_minhash_sketch_udf` pass per doc."""
+def _sketches(docs: DataFrame, n: int, k: int,
+              bands: int = LSH_BANDS) -> DataFrame:
+    """(doc_id, sig, sh, bk): one `_minhash_sketch_udf` pass per doc.
+    Callers select the columns they read before pinning."""
     return (docs.select("doc_id",
-                        _minhash_sketch_udf(n, k)(F.col("text")).alias("_m"))
-            .select("doc_id", "_m.sig", "_m.sh"))
+                        _minhash_sketch_udf(n, k, bands)(F.col("text"))
+                        .alias("_m"))
+            .select("doc_id", "_m.sig", "_m.sh", "_m.bk"))
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3,
@@ -288,29 +322,22 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     return _sketches(docs, n, k).select("doc_id", "sig")
 
 
-def _band_candidates(sigs: DataFrame, k: int, bands: int) -> DataFrame:
-    """Candidate (id1, id2) pairs from the band entries of a PINNED
-    (doc_id, sig, ...) relation: both sides of the self-join hash its
-    signatures (JVM `xxhash64`, no Python), so the signature UDF runs
-    once per doc however many times the entries are read."""
-    r = k // bands
-    band_entries = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("sig", bi * r + j + 1).cast("string")
-                           for j in range(r)]
-                ))
-                for bi in range(bands)
-            ])
-        ).alias("band_idx", "band_hash"),
-    )
+def _band_candidates(sk: DataFrame) -> DataFrame:
+    """Candidate (id1, id2) pairs from the band keys of a PINNED
+    (doc_id, bk, ...) relation. The keys come from the sketch UDF
+    (`_band_keys`, one numpy fold per batch), so both sides of the
+    self-join only posexplode a stored array: no Python and no per-row
+    hash expression, and the UDF runs once per doc however many times the
+    entries are read. At the shipped shape (r = 2) a key is the band's
+    exact slot values, so equal keys are equal bands; for r > 2 a key
+    collision only widens the candidate set."""
+    band_entries = sk.select(
+        "doc_id", F.posexplode("bk").alias("band_idx", "band_key"))
     a = band_entries.alias("a")
     b = band_entries.alias("b")
     return (
         a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.band_hash") == F.col("b.band_hash"))
+               & (F.col("a.band_key") == F.col("b.band_key"))
                & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("id1"),
                 F.col("b.doc_id").alias("id2"))
@@ -321,20 +348,45 @@ def _band_candidates(sigs: DataFrame, k: int, bands: int) -> DataFrame:
 def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
                             bands: int = LSH_BANDS) -> DataFrame:
     """Candidate (id1, id2) pairs from banded LSH. Each doc emits `bands`
-    (band_idx, band_hash) rows — shuffle volume is linear in corpus size,
+    (band_idx, band_key) rows — shuffle volume is linear in corpus size,
     never all-pairs across buckets; a bucket of s docs emits s(s-1)/2
     ordered pairs, streamed by the sort-merge self-join (O(s) memory per
     task). Degenerate corpora still pay O(s^2) OUTPUT rows — that is the
     LSH contract. A one-shuffle collect_list plan and a parquet band table
     were measured no faster and removed (BENCH_ab_strategy*.json,
     BENCH_ab_bandtable.json)."""
-    sigs = minhash_signatures(docs, n, k)
-    # materialize the signatures ONCE before the self-join: both join
+    # materialize the band keys ONCE before the self-join: both join
     # sides read them, and without a boundary Spark plans two full scans
-    # — the signature UDF twice over the whole corpus (measured 2x wall
+    # — the sketch UDF twice over the whole corpus (measured 2x wall
     # on a 6.3M-doc corpus)
-    _pin(sigs)
-    return _band_candidates(sigs, k, bands)
+    keys = _sketches(docs, n, k, bands).select("doc_id", "bk")
+    _pin(keys)
+    return _band_candidates(keys)
+
+
+def _verified_pairs(docs: DataFrame, n: int, k: int, bands: int,
+                    threshold: float) -> tuple[DataFrame, DataFrame]:
+    """(`minhash_lsh_pairs`' result, the pinned (doc_id, bk, sh) relation
+    it reads), so a caller that consumes the pairs eagerly can release the
+    pin itself."""
+    sk = _sketches(docs, n, k, bands).select("doc_id", "bk", "sh")
+    _pin(sk)
+    cands = _band_candidates(sk)
+    s1 = sk.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    s2 = sk.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
+    common = F.size(F.array_intersect("sh1", "sh2"))
+    jac = common / (F.size("sh1") + F.size("sh2") - common)
+    # materialize the O(shingles) Jaccard once before filtering on it —
+    # Filter/Project expression reuse is a codegen optimization, not a
+    # plan guarantee (SCALE.md round-4 note; same structural fix as
+    # embedding_neardup_pairs)
+    pairs = (
+        cands.join(s1, "id1").join(s2, "id2")
+        .withColumn("_jac", jac)
+        .filter(F.col("_jac") >= threshold)
+        .select("id1", "id2", F.round("_jac", 6).alias("jaccard"))
+    )
+    return pairs, sk
 
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
@@ -349,35 +401,50 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     miss prob (1-j^2)^16). Candidates are tiny relative to the corpus, so
     the two verify joins move only candidate rows + their shingle arrays.
 
-    One Python pass per doc: the sketch UDF returns each doc's signature
-    and shingle array together, and that one relation is pinned; the band
-    entries and both verify sides read the pin.
+    One Python pass per doc: the sketch UDF returns each doc's band keys
+    and shingle array together, and that one (doc_id, bk, sh) relation is
+    pinned; the band entries and both verify sides read the pin.
 
-    Lifetime note: this pins the (doc_id, sig, sh) relation with persist()
+    Lifetime note: this pins the (doc_id, bk, sh) relation with persist()
     for the duration of the caller's action; long-lived sessions should
     call `release_persisted()` after consuming the result (see the note at
-    `_PERSISTED`).
+    `_PERSISTED`). `dedup_components` consumes the pairs itself and
+    releases its pin before returning.
     """
-    sk = _sketches(docs, n, k)
-    _pin(sk)
-    cands = _band_candidates(sk, k, bands)
-    s1 = sk.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    s2 = sk.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
-    common = F.size(F.array_intersect("sh1", "sh2"))
-    jac = common / (F.size("sh1") + F.size("sh2") - common)
-    # materialize the O(shingles) Jaccard once before filtering on it —
-    # Filter/Project expression reuse is a codegen optimization, not a
-    # plan guarantee (SCALE.md round-4 note; same structural fix as
-    # embedding_neardup_pairs)
-    return (
-        cands.join(s1, "id1").join(s2, "id2")
-        .withColumn("_jac", jac)
-        .filter(F.col("_jac") >= threshold)
-        .select("id1", "id2", F.round("_jac", 6).alias("jaccard"))
-    )
+    return _verified_pairs(docs, n, k, bands, threshold)[0]
 
 
 # ------------------------------------------------------- dedup clustering
+
+# Pair graphs of at most this many directed edges (both directions of
+# every pair; about 16 MB of int64 ids) get their components on the
+# driver. Measured in pure Python on 2^20 edges: 0.8 s for disjoint
+# pairs, 1.1 s for a shuffled-id path, 2.6 s for a random graph — against
+# one or more Spark jobs per labelling round for any graph.
+CC_DRIVER_MAX_EDGES = 1 << 20
+
+
+def _union_find(a: list, b: list) -> dict:
+    """node -> min node of its component over the symmetric edge lists
+    (a[i], b[i]). Union-find with path halving where the smaller root
+    wins, so every root is its component's minimum id; the cost does not
+    depend on the graph's diameter."""
+    parent = {x: x for x in a}  # symmetric: every node is some a[i]
+
+    def find(x):
+        while (p := parent[x]) != x:
+            parent[x] = x = parent[p]  # halve the path as it is walked
+        return x
+
+    for x, y in zip(a, b):
+        if x < y:  # each undirected edge is listed both ways; union once
+            rx, ry = find(x), find(y)
+            if rx < ry:
+                parent[ry] = rx
+            elif ry < rx:
+                parent[rx] = ry
+    return {x: find(x) for x in parent}
+
 
 def connected_components(pairs: DataFrame, id1: str = "id1",
                          id2: str = "id2", max_iter: int = 25,
@@ -385,23 +452,34 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
     """(doc_id, component_id) for every doc in a similarity-pair graph;
     component_id = min doc_id in the component (the dedup keeper).
 
-    Min-label propagation with path halving: each round a node takes the
-    min over (its label, its neighbors' labels, its label's label — the
-    pointer jump). The jump gives the O(log diameter) round bound of the
-    large-star/small-star family (Kiveris et al.) while keeping plain
-    DataFrame joins: round 2 upgrades — a 300-node path converges in ~8
-    rounds where plain neighbor-min needed 300 (test-covered). Labels are
-    seeded with min(node, min neighbour), so the first hop is taken before
-    round 1: a graph of disjoint pairs (the usual near-dup shape) has its
-    final labels at the seed and returns after ONE round, the round that
-    sees no label move.
+    Two routes after one eager checkpoint of the symmetric edge set,
+    chosen by its size alone (no option):
+
+    - **At most `CC_DRIVER_MAX_EDGES` edges** (the usual near-dup graph:
+      hundreds of verified pairs per thousands of docs): one bounded
+      `limit(cap + 1).toArrow()` read brings the edges to the driver,
+      `_union_find` labels them, and the labels come back as a local
+      DataFrame of the same schema. One job where the round loop below
+      runs several per round, each an AQE plan over a few hundred rows.
+    - **Past the cap**, the Spark round loop, whose cost is the same
+      plus that one bounded read (the pairs are not computed twice):
+      min-label propagation with path halving. Each round a node takes
+      the min over (its label, its neighbors' labels, its label's label —
+      the pointer jump). The jump gives the O(log diameter) round bound of
+      the large-star/small-star family (Kiveris et al.) while keeping
+      plain DataFrame joins: a 300-node path converges in ~8 rounds where
+      plain neighbor-min needed 300 (test-covered). Labels are seeded
+      with min(node, min neighbour), so a graph of disjoint pairs has its
+      final labels at the seed and returns after ONE round, the round
+      that sees no label move.
 
     Per-round cost: ONE job — the localCheckpoint is LAZY and the round's
     convergence count is the action that materializes it (an eager
     checkpoint ran its own job first, doubling the per-round job count;
     round-6 measurement: 2.35 s -> ~1.5 s for the same 477-node graph).
     Later rounds (and the final return) read the checkpointed blocks —
-    no recompute, no extra join.
+    no recompute, no extra join. Either route's result reads only the
+    collected labels or checkpointed blocks, never `pairs`' inputs.
     Raises RuntimeError if max_iter exhausts while labels still move —
     silently returning non-converged (wrong) components would make
     dedup_keep_first retain duplicates with no signal (round-2 advice).
@@ -433,6 +511,14 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
         )).alias("e")
     ).select("e.a", "e.b")
     edges = _ckpt(e.distinct())
+    small = edges.limit(CC_DRIVER_MAX_EDGES + 1).toArrow()
+    if small.num_rows <= CC_DRIVER_MAX_EDGES:
+        labels = _union_find(small.column("a").to_pylist(),
+                             small.column("b").to_pylist())
+        id_type = small.schema.field("a").type
+        return edges.sparkSession.createDataFrame(pa.table({
+            "doc_id": pa.array(list(labels.keys()), id_type),
+            "component_id": pa.array(list(labels.values()), id_type)}))
     # seed each node with min(itself, its neighbours): one groupBy over
     # the edges, the same single shuffle as listing the distinct nodes.
     # Every seed is a node id in the node's component and <= the node, so
@@ -486,9 +572,16 @@ def dedup_components(docs: DataFrame, n: int = 3,
                      threshold: float = 0.5) -> DataFrame:
     """Near-duplicate clusters: minhash-LSH pairs (exact-Jaccard verified)
     -> connected components. The standard corpus-dedup shape: keep
-    component_id == doc_id rows, drop the rest."""
-    pairs = minhash_lsh_pairs(docs, n=n, threshold=threshold)
-    return connected_components(pairs)
+    component_id == doc_id rows, drop the rest.
+
+    `connected_components` checkpoints the pair graph eagerly and its
+    result never reads the sketch pin, so the pin is released before this
+    returns: nothing is left for `release_persisted()`."""
+    pairs, pin = _verified_pairs(docs, n, MINHASH_K, LSH_BANDS, threshold)
+    try:
+        return connected_components(pairs)
+    finally:
+        _unpin(pin)
 
 
 def dedup_keep_first(docs: DataFrame, n: int = 3,

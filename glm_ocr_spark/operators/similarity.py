@@ -239,6 +239,8 @@ def train_ivf_centroids(emb: DataFrame, n_cells: int = IVF_CELLS,
     At 100 TB you train once on a sample and persist the centroid matrix.
     The sample crosses to the driver as one Arrow table, not as Rows.
     """
+    # the top-k exchange stays: collect() (1.34 vs 1.08 s) and a mapInArrow
+    # per-partition top-k + toArrow() (0.46 vs 0.25-0.30 s) measured slower
     x = _arrow_matrix(emb.orderBy("vec_id").limit(sample_limit)
                       .select("embedding").toArrow().column("embedding"))
     idx = np.argsort(x[:, 0])[np.linspace(0, len(x) - 1, n_cells).astype(int)]

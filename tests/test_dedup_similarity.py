@@ -11,6 +11,7 @@
 
 import sys
 from pathlib import Path
+from unittest import mock
 
 import numpy as np
 import pandas as pd
@@ -114,9 +115,12 @@ def test_minhash_lsh_equals_exact_jaccard(spark):
 
 def test_minhash_band_candidates_match_python_reference(spark):
     """The band self-join must emit exactly the id1 < id2 pairs that share
-    at least one of the LSH_BANDS band keys, recomputed here in Python from
-    the collected signatures with the same r = k // bands slices (exact
-    slice tuples, so this reference has no band-hash collisions)."""
+    at least one band's exact slot values, recomputed here in Python from
+    the collected signatures with the same r = k // bands slices. At the
+    shipped shape (k=32, 16 bands, r=2) the UDF's band key IS the slot
+    pair packed into one int64, so equality is exact by construction; at
+    k=48 (r=3) the key is a 64-bit fold of the slots, held to the same
+    exact-slice reference."""
     from itertools import combinations
 
     from glm_ocr_spark.operators.dedup import (
@@ -124,23 +128,39 @@ def test_minhash_band_candidates_match_python_reference(spark):
         MINHASH_K,
         minhash_band_candidates,
         minhash_signatures,
+        release_persisted,
     )
 
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
-    r = MINHASH_K // LSH_BANDS
-    buckets: dict = {}
-    for row in minhash_signatures(docs).collect():
-        sig = list(row["sig"])
-        assert len(sig) == MINHASH_K
-        for bi in range(LSH_BANDS):
-            key = (bi, tuple(sig[bi * r:(bi + 1) * r]))
-            buckets.setdefault(key, []).append(row["doc_id"])
-    want = {pair for ids in buckets.values()
-            for pair in combinations(sorted(ids), 2)}
-    got = {(row.id1, row.id2)
-           for row in minhash_band_candidates(docs).collect()}
-    assert got == want
-    assert len(want) > 0
+    for k, bands in ((MINHASH_K, LSH_BANDS), (48, 16)):
+        r = k // bands
+        buckets: dict = {}
+        for row in minhash_signatures(docs, k=k).collect():
+            sig = list(row["sig"])
+            assert len(sig) == k
+            for bi in range(bands):
+                key = (bi, tuple(sig[bi * r:(bi + 1) * r]))
+                buckets.setdefault(key, []).append(row["doc_id"])
+        want = {pair for ids in buckets.values()
+                for pair in combinations(sorted(ids), 2)}
+        try:
+            got = {(row.id1, row.id2) for row in
+                   minhash_band_candidates(docs, k=k, bands=bands).collect()}
+        finally:
+            release_persisted()
+        assert got == want, (k, bands)
+        assert len(want) > 0
+
+
+def test_band_keys_pack_r2_exactly():
+    """r <= 2 keys are the slot values packed side by side (s0 << 31 |
+    s1), so two bands share a key only when they share their slots."""
+    from glm_ocr_spark.operators.dedup import _band_keys
+
+    top = (1 << 31) - 2
+    sig = np.array([[top, 0, 0, top], [0, top, top, 0]], dtype=np.int64)
+    assert _band_keys(sig, 2).tolist() == [[top << 31, top], [top, top << 31]]
+    assert _band_keys(sig, 4).tolist() == sig.tolist()  # r = 1: the slot
 
 
 def test_release_persisted_frees_minhash_caches(spark):
@@ -223,6 +243,55 @@ def test_minhash_oracle_margin_no_borderline_pairs():
 
 # ------------------------------------------------------------------ components
 
+def _round_loop(cap: int = 0):
+    """Patch connected_components' driver-route cap: at 0 every non-empty
+    pair graph takes the Spark round loop (-1: the empty graph too)."""
+    from glm_ocr_spark.operators import dedup
+
+    return mock.patch.object(dedup, "CC_DRIVER_MAX_EDGES", cap)
+
+
+def _reference_components(edges) -> dict:
+    """node -> min node of its component, by breadth-first search."""
+    adj: dict = {}
+    for x, y in edges:
+        adj.setdefault(x, set()).add(y)
+        adj.setdefault(y, set()).add(x)
+    out: dict = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for nb in adj[todo.pop()] - comp:
+                comp.add(nb)
+                todo.append(nb)
+        out.update(dict.fromkeys(comp, min(comp)))
+    return out
+
+
+def _graph_families(path_len: int = 12, cycle_len: int = 16) -> list:
+    """Edge lists in disjoint id ranges: a shuffled-id path, a star whose
+    centre is not its minimum, a shuffled cycle, self-loops, duplicate and
+    reversed edges, and a random graph. The default lengths keep the
+    round loop under max_iter: its rounds grow with a shuffled path's
+    length (about 68 for 300 nodes), where union-find's do not."""
+    import random
+
+    rng = random.Random(7)
+    path = rng.sample(range(100, 100 + 3 * path_len), path_len)
+    cycle = rng.sample(range(10_000, 10_000 + 3 * cycle_len), cycle_len)
+    edges = list(zip(path, path[1:]))
+    edges += [(2050, leaf) for leaf in range(2000, 2100) if leaf != 2050]
+    edges += list(zip(cycle, cycle[1:] + cycle[:1]))
+    edges += [(3000, 3000), (3001, 3001), (3002, 3001), (3003, 3003)]
+    edges += [(4001, 4000), (4000, 4001), (4001, 4000), (4002, 4001)]
+    edges += [(rng.randrange(5000, 5200), rng.randrange(5000, 5200))
+              for _ in range(150)]
+    rng.shuffle(edges)
+    return edges
+
+
 def test_connected_components_chain(spark):
     """Chain graph with diameter 3 + separate pair: label propagation must
     iterate past one hop."""
@@ -237,8 +306,9 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_long_path_converges(spark):
-    """A 300-node path (diameter 300) must converge within the default
-    max_iter=25 — evidence the path-halving jump delivers the O(log d)
+    """On the round loop (cap 0: only that route iterates), a 300-node
+    path (diameter 300) must converge within the default max_iter=25 —
+    evidence the path-halving jump delivers the O(log d)
     round bound (plain neighbor-min would need ~300 rounds and, per
     round-2 advice, used to return silently wrong labels at the cap)."""
     from glm_ocr_spark.operators.dedup import connected_components
@@ -246,34 +316,132 @@ def test_connected_components_long_path_converges(spark):
     n = 300
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id1 long, id2 long")
-    got = {r["doc_id"]: r["component_id"]
-           for r in connected_components(pairs).collect()}
+    with _round_loop():
+        got = {r["doc_id"]: r["component_id"]
+               for r in connected_components(pairs).collect()}
     assert got == {i: 0 for i in range(n + 1)}
 
 
 def test_connected_components_raises_at_cap(spark):
-    """Exhausting max_iter with labels still moving raises instead of
-    returning non-converged components."""
+    """On the round loop, exhausting max_iter with labels still moving
+    raises instead of returning non-converged components."""
     import pytest
 
     from glm_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id1 long, id2 long")
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with _round_loop(), pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iter=2)
 
 
 def test_connected_components_disjoint_pairs_converge_in_one_round(spark):
     """Seeded with min(node, min neighbour), a graph of disjoint pairs has
-    its final labels before round 1, which only confirms nothing moves."""
+    its final labels before the round loop's round 1, which only confirms
+    nothing moves."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(2 * i + 1, 2 * i) for i in range(50)], "id1 long, id2 long")
+    with _round_loop():
+        got = {r["doc_id"]: r["component_id"]
+               for r in connected_components(pairs, max_iter=1).collect()}
+    assert got == {i: i - i % 2 for i in range(100)}
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_connected_components_routes_match_reference(spark, id_type):
+    """Both routes — driver union-find under the cap, the Spark round loop
+    at cap 0 — label every family exactly as a BFS reference does, and
+    keep the id column's type."""
+    from glm_ocr_spark.operators import dedup
+
+    edges = _graph_families()
+    pairs = spark.createDataFrame(edges, f"id1 {id_type}, id2 {id_type}")
+    want = _reference_components(edges)
+    for cap in (dedup.CC_DRIVER_MAX_EDGES, 0):
+        with _round_loop(cap):
+            comp = dedup.connected_components(pairs)
+            got = {r["doc_id"]: r["component_id"] for r in comp.collect()}
+        assert got == want, cap
+        assert [(f.name, f.dataType.simpleString()) for f in comp.schema] \
+            == [("doc_id", id_type), ("component_id", id_type)], cap
+
+
+def test_connected_components_driver_route_any_diameter(spark):
+    """Under the cap, a 300-node shuffled-id path and a 60-node shuffled
+    cycle label in one pass: union-find's cost does not depend on the
+    diameter (the round loop needs about 68 rounds for such a path)."""
+    from glm_ocr_spark.operators.dedup import connected_components
+
+    edges = _graph_families(path_len=300, cycle_len=60)
+    pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     got = {r["doc_id"]: r["component_id"]
            for r in connected_components(pairs, max_iter=1).collect()}
-    assert got == {i: i - i % 2 for i in range(100)}
+    assert got == _reference_components(edges)
+
+
+def test_connected_components_empty_graph(spark):
+    """No pairs: no rows, with the id type kept, on both routes; and
+    dedup_keep_first then keeps every doc."""
+    from glm_ocr_spark.operators import dedup
+
+    pairs = spark.createDataFrame([], "id1 long, id2 long")
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(["alpha beta gamma delta",
+                                       "one two three four five",
+                                       "red green blue"])],
+        "doc_id long, text string")
+    for cap in (dedup.CC_DRIVER_MAX_EDGES, -1):
+        with _round_loop(cap):
+            comp = dedup.connected_components(pairs)
+            assert comp.collect() == [], cap
+            assert [(f.name, f.dataType.simpleString())
+                    for f in comp.schema] == [("doc_id", "bigint"),
+                                              ("component_id", "bigint")]
+            kept = dedup.dedup_keep_first(docs).select("doc_id").collect()
+        assert sorted(r[0] for r in kept) == [0, 1, 2], cap
+
+
+def test_dedup_keep_first_same_survivors_on_both_routes(spark):
+    """SF1 survivors are identical with the components on the driver and
+    on the Spark round loop, and equal the reference built from the
+    verified pairs."""
+    from glm_ocr_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF1}/documents.parquet")
+    try:
+        pairs = [(r.id1, r.id2) for r in
+                 dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()]
+    finally:
+        dedup.release_persisted()
+    losers = {d for d, c in _reference_components(pairs).items() if d != c}
+    want = {r["doc_id"] for r in docs.select("doc_id").collect()} - losers
+    assert losers
+    for cap in (dedup.CC_DRIVER_MAX_EDGES, 0):
+        with _round_loop(cap):
+            kept = [r["doc_id"] for r in
+                    dedup.dedup_keep_first(docs).select("doc_id").collect()]
+        assert sorted(kept) == sorted(want), cap
+
+
+def test_dedup_keep_first_leaves_no_pin(spark):
+    """dedup_components consumes its pairs eagerly and releases the sketch
+    pin before returning, so nothing is left for release_persisted() — and
+    the FIFO eviction in `_pin` cannot drop a pin from under it."""
+    from glm_ocr_spark.operators import dedup
+
+    dedup.release_persisted()  # clean slate from earlier tests
+    docs = spark.read.parquet(f"{SF1}/documents.parquet")
+    kept = {r["doc_id"] for r in dedup.dedup_keep_first(docs).collect()}
+    assert dedup.release_persisted() == 0
+    comp = dedup.dedup_components(docs)
+    assert dedup._PERSISTED == []
+    losers = {r["doc_id"] for r in
+              comp.filter("component_id != doc_id").collect()}
+    assert losers
+    assert kept == ({r["doc_id"] for r in docs.select("doc_id").collect()}
+                    - losers)
 
 
 def test_dedup_components_groups_near_dups(spark):
@@ -582,16 +750,17 @@ def test_ann_ivf_planted_neighbors_equal_brute_force(spark):
 def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
     """Round-5 verdict ask #3: reliable=True (checkpoint() into a set
     checkpoint dir) must converge to identical labels as the default
-    localCheckpoint path."""
+    localCheckpoint path on the round loop."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9), (10, 11), (11, 12), (12, 13)],
         ["id1", "id2"])
-    base = {(r["doc_id"], r["component_id"])
-            for r in connected_components(pairs).collect()}
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    rel = {(r["doc_id"], r["component_id"])
-           for r in connected_components(pairs, reliable=True).collect()}
+    with _round_loop():
+        base = {(r["doc_id"], r["component_id"])
+                for r in connected_components(pairs).collect()}
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        rel = {(r["doc_id"], r["component_id"])
+               for r in connected_components(pairs, reliable=True).collect()}
     assert rel == base
     assert (3, 1) in base and (13, 10) in base
