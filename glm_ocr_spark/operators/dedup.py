@@ -465,10 +465,12 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
       plus that one bounded read (the pairs are not computed twice):
       min-label propagation with path halving. Each round a node takes
       the min over (its label, its neighbors' labels, its label's label —
-      the pointer jump). The jump gives the O(log diameter) round bound of
-      the large-star/small-star family (Kiveris et al.) while keeping
-      plain DataFrame joins: a 300-node path converges in ~8 rounds where
-      plain neighbor-min needed 300 (test-covered). Labels are seeded
+      the pointer jump). On a path with ordered ids the jump converges in
+      O(log diameter) rounds with plain DataFrame joins: 300 nodes in ~8
+      rounds where plain neighbor-min needed 300 (test-covered). Ids in
+      shuffled order along a path defeat it — a Python replay of these
+      rounds needs 68 for a 300-node shuffled path — which union-find
+      does not care about. Labels are seeded
       with min(node, min neighbour), so a graph of disjoint pairs has its
       final labels at the seed and returns after ONE round, the round
       that sees no label move.
