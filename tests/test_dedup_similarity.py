@@ -307,7 +307,7 @@ def test_connected_components_chain(spark):
 
 def test_connected_components_long_path_converges(spark):
     """On the round loop (cap 0: only that route iterates), a 300-node
-    path (diameter 300) must converge within the default max_iter=25 —
+    ordered-id path (diameter 300) must converge within the default max_iter=25 —
     evidence the path-halving jump delivers the O(log d)
     round bound (plain neighbor-min would need ~300 rounds and, per
     round-2 advice, used to return silently wrong labels at the cap)."""
