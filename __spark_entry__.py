@@ -1443,7 +1443,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT a.vec_id, a.cell, v.emb
               FROM assign a JOIN aug v USING (vec_id)),
             dropped AS (
-              -- zero-norm guard mirrors _semdedup_drop_pairs: a zero
+              -- zero-norm guard mirrors similarity._near_pairs: a zero
               -- embedding is never a near-dup (cosine undefined)
               SELECT DISTINCT d.vec_id
               FROM pts k JOIN pts d

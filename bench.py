@@ -445,7 +445,7 @@ def write_bench_md(result: dict) -> None:
         out = [
             "",
             "## Data-scaling: 10x rows at fixed local[%d] cores "
-            "(tools/bench_sf1.py)" % sf1.get("cores", 32),
+            "(tools/bench_sf1.py, since deleted)" % sf1.get("cores", 32),
             "",
             "All other scaling evidence varies CORES at fixed data; this "
             "varies DATA at fixed cores — the second axis of the 100x "
@@ -496,7 +496,8 @@ def write_bench_md(result: dict) -> None:
             "",
             "Dedup/decontam input: deterministic high-entropy synthetic "
             "documents (50k-token vocabulary, 5% planted near-dups at "
-            "Jaccard ~0.5; tools/bench_sf1.py docstring). The transcript "
+            "Jaccard ~0.5; tools/bench_sf1.py docstring, since deleted). "
+            "The transcript "
             "payloads themselves are unusable for this: their template "
             "sentence bank collapses LSH bands into ~3,100-doc buckets at "
             "sf0.01 and candidate pairs go quadratic (measured 2026-08-17 "
@@ -515,7 +516,8 @@ def write_bench_md(result: dict) -> None:
         keys = list(arms)
         out = [
             "",
-            "## Weak scaling: 4x cores WITH 4x data (tools/bench_weak.py)",
+            "## Weak scaling: 4x cores WITH 4x data "
+            "(tools/bench_weak.py, since deleted)",
             "",
             "Strong scaling (fixed data, more cores) and data scaling "
             "(fixed cores, more data) are measured above; this is their "
@@ -571,7 +573,8 @@ def write_bench_md(result: dict) -> None:
             return []
         return [
             "",
-            "## Streaming path at bench scale (tools/bench_streaming.py)",
+            "## Streaming path at bench scale "
+            "(tools/bench_streaming.py, since deleted)",
             "",
             f"File-drop source over the sf0.1 corpus in "
             f"{stream['n_batches']} micro-batches of ~{stream['batch_rows']}"
@@ -761,7 +764,7 @@ def write_bench_md(result: dict) -> None:
         out = [
             "",
             "## SemDeDup data-scaling: 4x vectors WITH 4x cells "
-            "(tools/bench_semdedup.py)",
+            "(tools/bench_semdedup.py, since deleted)",
             "",
             "The operator-level measurement of the SemDeDup linear-"
             "scaling claim: grow n_cells with the corpus and per-vector "
@@ -795,9 +798,10 @@ def write_bench_md(result: dict) -> None:
                 "the join strategy materializes two 64-double arrays per "
                 "candidate pair through the SMJ (~1 KB x n_c^2 rows), "
                 "while matmul moves each row once and runs the quadratic "
-                "part as chunked per-cell BLAS inside applyInPandas. "
-                "Matmul is the pair kernel for every cell under "
-                "SEMDEDUP_MAX_CELL_ROWS; the join only takes hotter cells.",
+                "part as tiled per-cell BLAS inside applyInPandas. "
+                "Matmul is now the only pair kernel, for cells of any "
+                "size (its gram loop is tiled at GRAM_TILE rows); the join "
+                "strategy is deleted.",
             ]
         return out
 
@@ -925,10 +929,10 @@ def main() -> None:
         # another's pinned cache pressure: the dedup family persists its
         # shingle/verify dataflows (lazy API, no unpersist handle), and
         # left registered those caches squeeze every later shuffle-heavy
-        # query — bench_sf1 measured decontam at 51.5 s warm vs 18.5 s
-        # cold from exactly this interference, and the r4 slots that
-        # "regressed" (passage_dedup, top_ngrams, decontaminate,
-        # quota_per_source) all run after the dedup block.
+        # query — bench_sf1 (since deleted) measured decontam at 51.5 s
+        # warm vs 18.5 s cold from exactly this interference, and the r4
+        # slots that "regressed" (passage_dedup, top_ngrams,
+        # decontaminate, quota_per_source) all run after the dedup block.
         spark.catalog.clearCache()
 
     # recall@10 of each approximate ANN path vs the exact scan.

@@ -169,10 +169,11 @@ LSH_BANDS = 16          # bands of r = K / BANDS rows; r=2 -> candidate prob
 # JVM exit releases them; a long-lived session (the correctness driver, a
 # notebook, repeated dedup calls) should call `release_persisted()` after
 # consuming each result, or the MEMORY_AND_DISK blocks accumulate and
-# squeeze later shuffles (review finding; the interference bench_sf1
-# measured as 51.5 s warm vs 18.5 s cold). `dedup_components` (and so
-# `dedup_keep_first`) consumes its pairs eagerly and releases its own pin
-# before it returns, leaving nothing here.
+# squeeze later shuffles (review finding; the interference the deleted
+# tools/bench_sf1.py measured as 51.5 s warm vs 18.5 s cold, recorded in
+# BENCH_sf1.json). `dedup_components` (and so `dedup_keep_first`)
+# consumes its pairs eagerly and releases its own pin before it returns,
+# leaving nothing here.
 _PERSISTED: list = []
 # long-lived-session leak bound (round-5 advice): when a new pin would
 # grow the registry past this, the OLDEST pin is released first. A

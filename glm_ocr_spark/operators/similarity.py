@@ -200,15 +200,9 @@ IVF_NPROBE = 32
 IVF_TRAIN_SAMPLE = 16384
 
 
-# Hot-cell guard for the matmul kernel (round-5 verdict ask #1): a cell's
-# rows arrive as ONE applyInPandas group, so a degenerate hot cell (dense
-# semantic cluster, or n_cells too small for the corpus) would OOM an
-# executor with no actionable message. Cells above this population are
-# routed to the JVM join for that cell only — sort-merge join, spills
-# gracefully, 10-40x slower per pair but memory-safe. 64k
-# rows x 64 doubles ≈ 32 MB per group stack plus the 2048-row gram chunk —
-# comfortable against a multi-GB executor share.
-SEMDEDUP_MAX_CELL_ROWS = 65536
+# Side of the square gram tile `_near_pairs` computes at once: one
+# 2048 x 2048 float64 tile is 32 MiB, whatever the cell's row count.
+GRAM_TILE = 2048
 
 
 def _arrow_matrix(col) -> np.ndarray:
@@ -546,17 +540,20 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.9,
                    points FAR from the centroid survive).
 
     Physical shape: cell assignment is one map-side Arrow matmul (zero
-    shuffle); the rows shuffle once hash-partitioned on `cell` and the
-    quadratic comparison runs only within a cell (`_semdedup_drop_pairs`
-    routes each cell by population). Skew note: a hot cell is quadratic
-    in ITS population; the mitigation is more cells
-    (n_cells scales with corpus size — salting cannot apply because every
-    within-cell pair must meet). Materializing via `ivf_write_partitioned`
-    gives partition PRUNING (process a cell subset without scanning the
-    rest), but NOT exchange elimination — a plain-parquet partitioned
-    read reports no output partitioning to Catalyst, so the self-join
-    still shuffles; exchange-free needs `bucketBy(cell).saveAsTable` or a
-    DSv2 storage-partitioned-join source (e.g. Iceberg) — see SCALE.md.
+    shuffle) that runs once per row; the rows shuffle once hash-partitioned
+    on `cell` and the quadratic comparison runs only within a cell, in
+    `_near_pairs`' tiled gram loop, for cells of any size. Building the
+    plan runs no Spark job (given centroids). A cell's memory is linear in
+    its rows (its normalized matrix) plus one `GRAM_TILE`² tile. Skew
+    note: a hot cell is quadratic in ITS population and runs on one task;
+    the mitigation is more cells (n_cells scales with corpus size —
+    salting cannot apply because every within-cell pair must meet).
+    Materializing via `ivf_write_partitioned` gives partition PRUNING
+    (process a cell subset without scanning the rest), but NOT exchange
+    elimination — a plain-parquet partitioned read reports no output
+    partitioning to Catalyst, so the per-cell group still shuffles;
+    exchange-free needs `bucketBy(cell).saveAsTable` or a DSv2
+    storage-partitioned-join source (e.g. Iceberg) — see SCALE.md.
     The assignment UDF is deliberately NOT persisted: it is one Arrow
     matmul over a column scan (no explosion), and a pinned MEMORY_AND_DISK
     copy of the corpus would cost more than the recompute (the minhash
@@ -565,8 +562,8 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.9,
     _check_order(order)
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_cells)
-    cells = _semdedup_assign(emb, centroids, order)
-    return _semdedup_drop_pairs(cells, threshold, order)
+    return _semdedup_drop_pairs_matmul(
+        _semdedup_assign(emb, centroids, order), threshold)
 
 
 def _check_order(order: str) -> None:
@@ -579,119 +576,64 @@ def _check_order(order: str) -> None:
 def _semdedup_assign(emb: DataFrame, centroids: np.ndarray,
                      order: str) -> DataFrame:
     """(vec_id, embedding, cell, _ord): cell assignment + precedence key,
-    computed in ONE map-side pass so semantic_dedup doesn't run the
-    assignment matmul once for the survivor side and again inside the
-    pair join."""
+    computed in ONE map-side pass. `order` is already validated."""
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     if order == "vec_id":
         return (base.withColumn(
             "cell", ivf_cell_udf(centroids)(F.col("embedding")))
             .withColumn("_ord", F.col("vec_id")))
-    if order == "centroid":
-        cs = ivf_cell_sim_udf(centroids)(F.col("embedding"))
-        return (base.withColumn("_cs", cs)
-                .select("vec_id", "embedding",
-                        F.col("_cs.cell").alias("cell"),
-                        F.col("_cs.cent_sim").alias("_ord")))
-    _check_order(order)
-    raise AssertionError("unreachable")
+    cs = ivf_cell_sim_udf(centroids)(F.col("embedding"))
+    return (base.withColumn("_cs", cs)
+            .select("vec_id", "embedding",
+                    F.col("_cs.cell").alias("cell"),
+                    F.col("_cs.cent_sim").alias("_ord")))
 
 
-def _route_cells(cells: DataFrame, cold, hot) -> DataFrame:
-    """`cold(cells)`, except that cells holding more than
-    `SEMDEDUP_MAX_CELL_ROWS` rows go to `hot` instead and the two results
-    are unioned. Cells are disjoint, so a per-cell kernel routed this way
-    returns exactly its unrouted result. The matmul kernels must not take
-    a hot cell: its rows arrive as ONE Arrow group, and its stack alone
-    could OOM it."""
-    # read at call time (not bound as a default argument), so patching the
-    # module constant reroutes cells
-    cap = SEMDEDUP_MAX_CELL_ROWS
-    # exact short-circuit: when the whole corpus fits the cap no cell can
-    # exceed it — and this count is column-pruned (the assignment UDF's
-    # output is unreferenced, so Catalyst drops the Python eval and the
-    # count reads parquet metadata), so small/medium runs pay ~nothing
-    if cells.count() <= cap:
-        return cold(cells)
-    counts = cells.groupBy("cell").agg(F.count("*").alias("_n"))
-    ids = [r["cell"] for r in counts.filter(F.col("_n") > cap).collect()]
-    if not ids:
-        return cold(cells)
-    is_hot = F.col("cell").isin(ids)
-    return cold(cells.filter(~is_hot)).unionByName(hot(cells.filter(is_hot)))
-
-
-def _semdedup_drop_pairs(cells: DataFrame, threshold: float,
-                         order: str) -> DataFrame:
-    """The within-cell pair kernel, routed per cell by population; both
-    routes emit the same (drop_id, keep_id, cell, cos_sim) rows
-    (equivalence-tested).
-
-    Cells of at most `SEMDEDUP_MAX_CELL_ROWS` rows take the matmul kernel
-    (`_semdedup_drop_pairs_matmul`): ONE shuffle of the corpus rows and
-    the quadratic part as chunked BLAS per cell — 10-40x faster than the
-    JVM join, which materializes two 64-double arrays per candidate pair
-    (BENCH_semdedup.json). Hotter cells take the JVM self-join
-    (`_semdedup_drop_pairs_join`), which streams through sort-merge join
-    and spills."""
-    return _route_cells(
-        cells, lambda c: _semdedup_drop_pairs_matmul(c, threshold),
-        lambda h: _semdedup_drop_pairs_join(h, threshold, order))
-
-
-def _semdedup_survivors(cells: DataFrame, threshold: float,
-                        order: str) -> DataFrame:
-    """(vec_id, cell) of every row `_semdedup_drop_pairs` never names as
-    drop_id, routed the same way. Cold cells come straight out of the
-    matmul survivor kernel: no pair rows, no join. Hot cells keep the JVM
-    join route, and a left-anti join over those cells only removes its
-    drop ids."""
-    def hot(h: DataFrame) -> DataFrame:
-        dropped = _semdedup_drop_pairs_join(h, threshold, order) \
-            .select(F.col("drop_id").alias("vec_id"))
-        return h.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
-
-    return _route_cells(
-        cells, lambda c: _semdedup_survivors_matmul(c, threshold), hot)
-
-
-def _near_pairs(pdf, threshold: float):
-    """THE within-cell gram loop shared by the pair and survivor kernels.
-    `pdf` is one cell's rows already sorted by (_ord, vec_id) — the same
-    strict total order as the join route's precedes predicate. Yields, per
-    2048-row chunk of the gram matrix (a cell never allocates n_c^2
-    doubles at once), the row indices (drop, keep) and the cosine of
-    every pair where keep precedes drop and cosine >= threshold. Zero
-    vectors are masked explicitly (never drop, never dropped), mirroring
-    the join route's guard."""
+def _near_pairs(pdf, threshold: float, tile: int):
+    """THE within-cell gram loop shared by the pair and survivor kernels,
+    and so the one definition of a SemDeDup near-duplicate. `pdf` is one
+    cell's rows already sorted by (_ord, vec_id), a strict total order.
+    Yields, per `tile` x `tile` block of the gram matrix, the row indices
+    (drop, keep) and the cosine of every pair where keep precedes drop and
+    cosine >= threshold. A keep precedes its drop, so row tile [s, e) only
+    meets the column tiles below e. Memory is the cell's normalized rows
+    plus one tile: linear in the cell's rows, never rows x tile. Zero
+    vectors are masked explicitly: they never drop and are never dropped,
+    whatever the threshold."""
     x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     nz = norms[:, 0] > 0
     xn = x / np.where(norms == 0, 1.0, norms)
     n = len(xn)
-    chunk = 2048
-    for s in range(0, n, chunk):
-        e = min(s + chunk, n)
-        g = xn[s:e] @ xn.T  # (chunk, n): rows = drop cands, cols = keeps
-        r, c = np.nonzero(g >= threshold)
-        gi = r + s
-        m = (c < gi) & nz[gi] & nz[c]
-        if m.any():
-            yield gi[m], c[m], g[r[m], c[m]]
+    for s in range(0, n, tile):
+        e = min(s + tile, n)
+        for t in range(0, e, tile):
+            g = xn[s:e] @ xn[t:t + tile].T  # rows = drop cands, cols = keeps
+            r, c = np.nonzero(g >= threshold)
+            d, k = r + s, c + t
+            m = (k < d) & nz[d] & nz[k]
+            cos = g[r[m], c[m]]
+            del g  # free this tile before the next one is computed
+            if m.any():
+                yield d[m], k[m], cos
 
 
 def _semdedup_drop_pairs_matmul(cells: DataFrame,
                                 threshold: float) -> DataFrame:
     """applyInPandas per cell: (drop, keep) for every `_near_pairs`
     pair."""
+    # read when the plan is built: Python workers import this module
+    # afresh, so only the closure carries a patched value to them
+    tile = GRAM_TILE
+
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["_ord", "vec_id"])
         ids = pdf["vec_id"].to_numpy()
         cellv = pdf["cell"].to_numpy()
         out = [pd.DataFrame({"drop_id": ids[d], "keep_id": ids[k],
                              "cell": cellv[d], "cos_sim": np.round(cos, 6)})
-               for d, k, cos in _near_pairs(pdf, threshold)]
+               for d, k, cos in _near_pairs(pdf, threshold, tile)]
         if not out:
             return pd.DataFrame({
                 "drop_id": pd.Series([], dtype="int64"),
@@ -707,10 +649,12 @@ def _semdedup_drop_pairs_matmul(cells: DataFrame,
 def _semdedup_survivors_matmul(cells: DataFrame,
                                threshold: float) -> DataFrame:
     """applyInPandas per cell: the rows no `_near_pairs` pair drops."""
+    tile = GRAM_TILE  # read at plan build, as in the pair kernel
+
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["_ord", "vec_id"])
         dropped = np.zeros(len(pdf), dtype=bool)
-        for d, _, _ in _near_pairs(pdf, threshold):
+        for d, _, _ in _near_pairs(pdf, threshold, tile):
             dropped[d] = True
         return pdf.loc[~dropped, ["vec_id", "cell"]]
 
@@ -718,48 +662,10 @@ def _semdedup_survivors_matmul(cells: DataFrame,
         per_cell, cells.select("vec_id", "cell").schema)
 
 
-def _semdedup_drop_pairs_join(cells: DataFrame, threshold: float,
-                              order: str) -> DataFrame:
-    """Pure-JVM self-join on cell + per-pair aggregate-fold cosine, with
-    the cosine materialized ONCE via withColumn before the threshold
-    filter (Filter/Project CSE boundary — same fix as
-    embedding_neardup_pairs, SCALE.md)."""
-    k = cells.alias("k")
-    d = cells.alias("d")
-    precedes = F.col("k._ord") < F.col("d._ord")
-    if order == "centroid":
-        # _ord is a float similarity — break exact ties by vec_id so the
-        # precedence is a strict total order (vec_id mode needs no tie
-        # rule: vec_id is unique)
-        precedes = precedes | (
-            (F.col("k._ord") == F.col("d._ord"))
-            & (F.col("k.vec_id") < F.col("d.vec_id")))
-    # zero-norm guard: a zero embedding is NEVER a near-dup of anything
-    # (cosine undefined). Without the guard Spark yields NULL (never
-    # drops) while an external verifier computing 0/0 = NaN under
-    # NaN-is-greatest comparison semantics would drop everything after it
-    # in the cell — engine divergence on degenerate input (review
-    # finding). Same guard pattern as cosine_sim_col (-1 here rather than
-    # 0 so "undefined" can never pass even a zero/negative threshold).
-    normprod = _norm(F.col("k.embedding")) * _norm(F.col("d.embedding"))
-    sim = F.when(normprod > 0,
-                 _dot(F.col("k.embedding"), F.col("d.embedding")) / normprod
-                 ).otherwise(F.lit(-1.0))
-    return (
-        k.join(d, (F.col("k.cell") == F.col("d.cell")) & precedes)
-        .withColumn("_cos", sim)
-        .filter(F.col("_cos") >= threshold)
-        .select(F.col("d.vec_id").alias("drop_id"),
-                F.col("k.vec_id").alias("keep_id"),
-                F.col("k.cell").alias("cell"),
-                F.round("_cos", 6).alias("cos_sim"))
-    )
-
-
 def _assigned_with_ord(assigned: DataFrame, order: str) -> DataFrame:
     """Normalize a PRE-ASSIGNED (vec_id, embedding, cell[, cent_sim])
-    table into the (vec_id, embedding, cell, _ord) shape the drop-pair
-    kernel consumes."""
+    table into the (vec_id, embedding, cell, _ord) shape the per-cell
+    kernels consume. Validates the columns before selecting any."""
     _check_order(order)
     cols = set(assigned.columns)
     need = {"vec_id", "embedding", "cell"}
@@ -767,18 +673,15 @@ def _assigned_with_ord(assigned: DataFrame, order: str) -> DataFrame:
         raise ValueError(
             f"assigned table needs columns {sorted(need)}; has "
             f"{sorted(cols)}")
-    base = assigned.select(
+    if order == "centroid" and "cent_sim" not in cols:
+        raise ValueError(
+            "order='centroid' over a pre-assigned table needs a "
+            "cent_sim column — write it with ivf_cell_sim_udf")
+    return assigned.select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("embedding"),
         "cell",
-        *(["cent_sim"] if order == "centroid" else []))
-    if order == "centroid":
-        if "cent_sim" not in cols:
-            raise ValueError(
-                "order='centroid' over a pre-assigned table needs a "
-                "cent_sim column — write it with ivf_cell_sim_udf")
-        return base.withColumnRenamed("cent_sim", "_ord")
-    return base.withColumn("_ord", F.col("vec_id"))
+        F.col("cent_sim" if order == "centroid" else "vec_id").alias("_ord"))
 
 
 def semantic_dedup_pairs_from_assigned(assigned: DataFrame,
@@ -789,12 +692,12 @@ def semantic_dedup_pairs_from_assigned(assigned: DataFrame,
     centroids serve the IVF ANN index), persist as a
     `bucketBy(cell).saveAsTable(...)` (or Iceberg) table, and every dedup
     run skips the assignment matmul entirely. Over a hive-bucketed source
-    the scan reports HashPartitioning(cell), so the within-cell pair join
-    plans with NO shuffle Exchange at all — plan-asserted in
+    the scan reports HashPartitioning(cell), so the per-cell group plans
+    with NO shuffle Exchange at all — plan-asserted in
     tests/test_semantic_dedup.py (a plain partitionBy-parquet read gives
     pruning but still exchanges; see SCALE.md)."""
-    return _semdedup_drop_pairs(
-        _assigned_with_ord(assigned, order), threshold, order)
+    return _semdedup_drop_pairs_matmul(
+        _assigned_with_ord(assigned, order), threshold)
 
 
 def semantic_dedup_from_assigned(assigned: DataFrame,
@@ -803,8 +706,8 @@ def semantic_dedup_from_assigned(assigned: DataFrame,
     """`semantic_dedup` survivors over a pre-assigned table — see
     semantic_dedup_pairs_from_assigned for when and why. Value-identical
     to semantic_dedup with the same centroids (parity-tested)."""
-    return _semdedup_survivors(
-        _assigned_with_ord(assigned, order), threshold, order)
+    return _semdedup_survivors_matmul(
+        _assigned_with_ord(assigned, order), threshold)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.9,
@@ -816,15 +719,16 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.9,
     determinism, and the per-cell cost bound that makes this the
     semantic-dedup shape that survives 100 TB.
 
-    Cost note: the assignment UDF evaluates ONCE per row. The per-cell
-    matmul kernel emits the survivors itself (a row survives iff no
+    Cost note: one pass of the assignment UDF per row, then the per-cell
+    kernel emits the survivors itself (a row survives iff no
     earlier-ordered row of its cell is within the threshold), so there is
-    no drop-pair relation, no distinct and no corpus-wide left-anti join
-    reading the assignment a second time. The cap pre-pass count is
-    column-pruned and evaluates nothing; past the cap, the per-cell counts
-    that find hot cells and the hot cells' JVM join route read it again."""
+    no drop-pair relation, no distinct and no left-anti join reading the
+    assignment a second time. Building the plan runs no Spark job (given
+    centroids; training them collects a sample), and each cell's memory
+    is linear in its rows plus one `GRAM_TILE`² gram tile, for cells of
+    any size."""
     _check_order(order)
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_cells)
-    return _semdedup_survivors(
-        _semdedup_assign(emb, centroids, order), threshold, order)
+    return _semdedup_survivors_matmul(
+        _semdedup_assign(emb, centroids, order), threshold)

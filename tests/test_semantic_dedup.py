@@ -14,10 +14,11 @@ import pytest
 
 from glm_ocr_spark.operators import similarity
 
-# Patching the hot-cell cap to 0 makes every cell "hot", so the whole pair
-# kernel runs on the JVM self-join route; the tests below check that route
-# against the same oracles as the matmul kernel this way.
-ALL_CELLS_HOT = 0
+# Patching the gram tile down to 3 rows makes every cell of more than three
+# rows take `_near_pairs`' multi-tile path (row tiles meeting the column
+# tiles below them); the tests below check it against the same oracles as
+# the default tile, under which every test cell fits one tile.
+TINY_TILE = 3
 
 SF1 = "/root/testdata/sf0.001"
 SF2 = "/root/testdata/sf0.01"
@@ -33,17 +34,20 @@ def _load(sf_dir):
     return ids[order], emb[order]
 
 
-def _np_semdedup(ids, emb, centroids, threshold, order="vec_id"):
+def _np_semdedup_pairs(ids, emb, centroids, threshold, order="vec_id"):
     """Sequential oracle: cosine-argmax cells (ties to lowest cell, like
-    np.argmax in the UDF), then the published upper-triangular drop rule —
-    drop i iff any earlier-ordered same-cell j has cos(i, j) >= threshold.
-    Returns (cells_by_id, dropped_id_set)."""
-    xn = emb / np.linalg.norm(emb, axis=1, keepdims=True)
+    np.argmax in the UDF; a zero vector's norm counts as 1), then every
+    same-cell pair (drop j, keep i) with i earlier-ordered than j and
+    cos(i, j) >= threshold; a zero vector is in no pair (its cosine is
+    undefined). Returns (cells_by_id, {(drop, keep, cell): cosine})."""
+    norms = np.linalg.norm(emb, axis=1, keepdims=True)
+    nz = norms[:, 0] > 0
+    xn = emb / np.where(nz[:, None], norms, 1.0)
     cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
     sims = xn @ cn.T
     cells = np.argmax(sims, axis=1)
     cent_sim = sims[np.arange(len(cells)), cells]
-    dropped = set()
+    pairs = {}
     for c in np.unique(cells):
         m = np.where(cells == c)[0]
         if order == "vec_id":
@@ -53,9 +57,29 @@ def _np_semdedup(ids, emb, centroids, threshold, order="vec_id"):
             m = m[key]
         pair = xn[m] @ xn[m].T
         for j in range(1, len(m)):
-            if np.any(pair[:j, j] >= threshold):
-                dropped.add(int(ids[m[j]]))
-    return {int(i): int(c) for i, c in zip(ids, cells)}, dropped
+            for i in range(j):
+                if nz[m[i]] and nz[m[j]] and pair[i, j] >= threshold:
+                    pairs[(int(ids[m[j]]), int(ids[m[i]]), int(c))] = \
+                        float(pair[i, j])
+    return {int(i): int(c) for i, c in zip(ids, cells)}, pairs
+
+
+def _np_semdedup(ids, emb, centroids, threshold, order="vec_id"):
+    """The published upper-triangular drop rule over `_np_semdedup_pairs`:
+    drop j iff any earlier-ordered same-cell i has cos(i, j) >= threshold.
+    Returns (cells_by_id, dropped_id_set)."""
+    cells, pairs = _np_semdedup_pairs(ids, emb, centroids, threshold, order)
+    return cells, {d for d, _, _ in pairs}
+
+
+def _assert_pairs_match(rows, want):
+    """Spark pair rows equal the oracle's pairs, cosines to the kernel's
+    6-decimal rounding."""
+    got = {(r["drop_id"], r["keep_id"], r["cell"]): r["cos_sim"]
+           for r in rows}
+    assert len(got) == len(rows)  # no pair emitted twice
+    assert got.keys() == want.keys()
+    assert all(abs(got[p] - want[p]) <= 1e-6 for p in want)
 
 
 def _spark_emb(spark, sf_dir):
@@ -99,12 +123,12 @@ def test_semantic_dedup_matches_numpy_oracle_trained_centroids(spark):
     _assert_engine_margins(emb, cents, threshold=0.4)
     cells, dropped = _np_semdedup(ids, emb, cents, 0.4)
     want = {(i, cells[i]) for i in cells if i not in dropped}
-    for cap in (similarity.SEMDEDUP_MAX_CELL_ROWS, ALL_CELLS_HOT):
-        with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", cap):
+    for tile in (similarity.GRAM_TILE, TINY_TILE):
+        with mock.patch.object(similarity, "GRAM_TILE", tile):
             got = {(r["vec_id"], r["cell"])
                    for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
                                            centroids=cents).collect()}
-        assert got == want, cap
+        assert got == want, tile
     # the threshold must actually drop something on the raw corpus, or this
     # test proves only the trivial identity (0.4: 23 in-cell drops at
     # sf0.01 with 8 trained cells; no natural in-cell pair reaches 0.5)
@@ -150,13 +174,13 @@ def test_semantic_dedup_pairs_expose_drop_evidence(spark):
     assert pairs
     assert all(p["keep_id"] < p["drop_id"] and p["cos_sim"] >= 0.4
                for p in pairs)
-    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS",
-                           ALL_CELLS_HOT):
-        join_pairs = semantic_dedup_pairs(sdf, threshold=0.4,
-                                          centroids=cents).collect()
+    with mock.patch.object(similarity, "GRAM_TILE", TINY_TILE):
+        tiled_pairs = semantic_dedup_pairs(sdf, threshold=0.4,
+                                           centroids=cents).collect()
     as_set = lambda rows: {(p["drop_id"], p["keep_id"], p["cell"],
                             p["cos_sim"]) for p in rows}
-    assert as_set(pairs) == as_set(join_pairs)  # routes value-identical
+    assert as_set(pairs) == as_set(tiled_pairs)  # tiles value-identical
+    assert len(tiled_pairs) == len(pairs)
     survivors = {r["vec_id"] for r in semantic_dedup(
         sdf, threshold=0.4, centroids=cents).collect()}
     assert {p["drop_id"] for p in pairs}.isdisjoint(survivors)
@@ -260,20 +284,20 @@ def test_zero_embedding_never_drops_or_is_dropped(spark):
     aug = base.unionByName(zero)
     plain = {r["vec_id"] for r in semantic_dedup(
         base, threshold=0.4, centroids=cents).collect()}
-    for cap in (similarity.SEMDEDUP_MAX_CELL_ROWS, ALL_CELLS_HOT):
-        with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", cap):
+    for tile in (similarity.GRAM_TILE, TINY_TILE):
+        with mock.patch.object(similarity, "GRAM_TILE", tile):
             survivors = {r["vec_id"] for r in semantic_dedup(
                 aug, threshold=0.4, centroids=cents).collect()}
-        assert -1 in survivors, cap  # never dropped
+        assert -1 in survivors, tile  # never dropped
         # same centroids, zero vector planted ahead of everything in its
         # cell -> no other survivor changes (it never drops anyone)
-        assert survivors - {-1} == plain, cap
+        assert survivors - {-1} == plain, tile
 
 
 def test_semdedup_from_assigned_bucketed_no_shuffle(spark):
     """The deployment shape: cells assigned once at write time into a
     bucketBy(cell) table. Two properties, both load-bearing: (1) the
-    within-cell pair join over the bucketed scan plans with ZERO shuffle
+    per-cell pair kernel over the bucketed scan plans with ZERO shuffle
     Exchange (the scan reports HashPartitioning — the thing a plain
     partitionBy-parquet read cannot do, see SCALE.md), and (2) survivors
     are value-identical to the self-assigning semantic_dedup with the
@@ -301,17 +325,12 @@ def test_semdedup_from_assigned_bucketed_no_shuffle(spark):
         # path a big-corpus run would take
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         assigned = spark.table(table)
-        for cap in (similarity.SEMDEDUP_MAX_CELL_ROWS, ALL_CELLS_HOT):
-            with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS",
-                                   cap):
-                pairs = semantic_dedup_pairs_from_assigned(
-                    assigned, threshold=0.4)
-            plan = pairs._jdf.queryExecution().executedPlan().toString()
-            # join route: the bucketed scan reports HashPartitioning so
-            # the SMJ needs no shuffle; matmul: the same distribution
-            # satisfies the groupBy -> FlatMapGroupsInPandas clustering
-            # requirement
-            assert "Exchange" not in plan, (cap, plan[:2000])
+        pairs = semantic_dedup_pairs_from_assigned(assigned, threshold=0.4)
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        # the bucketed scan reports HashPartitioning(cell), which satisfies
+        # the groupBy -> FlatMapGroupsInPandas clustering requirement
+        assert "FlatMapGroupsInPandas" in plan, plan[:2000]
+        assert "Exchange" not in plan, plan[:2000]
         got = {(r["vec_id"], r["cell"]) for r in
                semantic_dedup_from_assigned(assigned, threshold=0.4)
                .collect()}
@@ -325,6 +344,8 @@ def test_semdedup_from_assigned_bucketed_no_shuffle(spark):
 
 
 def test_semdedup_from_assigned_validates_input(spark):
+    import pyspark.sql.functions as F
+
     from glm_ocr_spark.operators.similarity import (
         semantic_dedup_from_assigned,
     )
@@ -334,6 +355,11 @@ def test_semdedup_from_assigned_validates_input(spark):
         semantic_dedup_from_assigned(emb)
     with pytest.raises(ValueError, match="unknown order"):
         semantic_dedup_from_assigned(emb, order="nope")
+    # the cent_sim check runs before any column is selected, so a table
+    # without it raises the documented ValueError, not UNRESOLVED_COLUMN
+    no_cent_sim = emb.withColumn("cell", F.lit(0))
+    with pytest.raises(ValueError, match="cent_sim"):
+        semantic_dedup_from_assigned(no_cent_sim, order="centroid")
 
 
 from hypothesis import HealthCheck, assume, given, settings, strategies as st
@@ -349,8 +375,7 @@ def _random_corpus(draw):
     dim = draw(st.integers(3, 8))
     n_cells = draw(st.integers(2, 4))
     order = draw(st.sampled_from(["vec_id", "centroid"]))
-    cap = draw(st.sampled_from([similarity.SEMDEDUP_MAX_CELL_ROWS,
-                                ALL_CELLS_HOT]))
+    tile = draw(st.sampled_from([similarity.GRAM_TILE, 1, TINY_TILE]))
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     emb = rng.normal(size=(n, dim))
     # centroids from the data (fixed-centroid style) keep everything
@@ -380,7 +405,7 @@ def _random_corpus(draw):
         hi = vals[i] if i < len(vals) else vals[-1] + 0.2
         assume(hi - lo >= 1e-6)
         threshold = (lo + hi) / 2.0
-    return emb, cents, threshold, order, cap
+    return emb, cents, threshold, order, tile
 
 
 @settings(max_examples=8, deadline=None,
@@ -390,12 +415,12 @@ def _random_corpus(draw):
 def test_fuzz_semdedup_matches_numpy(spark, case):
     """Randomized Spark-vs-NumPy parity over corpora the fixed testdata
     never exercises (tiny cells, empty cells, thresholds straddling every
-    realized cosine, both orderings)."""
+    realized cosine, both orderings, one-row and three-row gram tiles)."""
     from pyspark.sql import types as T
 
     from glm_ocr_spark.operators.similarity import semantic_dedup
 
-    emb, cents, threshold, order, cap = case
+    emb, cents, threshold, order, tile = case
     ids = np.arange(len(emb))
     schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
@@ -403,13 +428,13 @@ def test_fuzz_semdedup_matches_numpy(spark, case):
     sdf = spark.createDataFrame(
         [(int(i), [float(v) for v in row]) for i, row in zip(ids, emb)],
         schema)
-    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", cap):
+    with mock.patch.object(similarity, "GRAM_TILE", tile):
         got = {(r["vec_id"], r["cell"]) for r in semantic_dedup(
             sdf, threshold=threshold, centroids=cents,
             order=order).collect()}
     cells, dropped = _np_semdedup(ids, emb, cents, threshold, order=order)
     want = {(i, cells[i]) for i in cells if i not in dropped}
-    assert got == want, (threshold, order, cap)
+    assert got == want, (threshold, order, tile)
 
 
 def test_semantic_dedup_assigns_each_row_once(spark, call_counter):
@@ -433,12 +458,12 @@ def test_semantic_dedup_assigns_each_row_once(spark, call_counter):
 
 
 def test_hot_cell_guard_value_equal_on_pathological_corpus(spark):
-    """Round-5 verdict ask #1 ("done" criterion): a pathological corpus
-    with >= 50% of vectors in ONE cell, run with a cap that forces the
-    hot cell onto the join fallback, must be value-equal to the unguarded
-    matmul kernel. Uses fixed_centroids so cell = vec_id for the first
-    n_cells ids; the planted cluster around centroid 0 puts >50% of the
-    corpus into cell 0."""
+    """A pathological corpus with more than half its vectors in ONE cell:
+    its survivors and pairs must equal the sequential oracle under the
+    default tile (every cell one tile) and under a 3-row tile (the hot
+    cell's 69 rows cross 23 row tiles). Uses fixed_centroids so cell =
+    vec_id for the first n_cells ids; the planted cluster around centroid
+    0 puts 69 of the 120 rows into cell 0."""
     import pandas as pd
 
     from glm_ocr_spark.operators.similarity import (
@@ -464,49 +489,157 @@ def test_hot_cell_guard_value_equal_on_pathological_corpus(spark):
         pd.DataFrame({"vec_id": [r[0] for r in rows],
                       "embedding": [r[1] for r in rows]}))
     cents = fixed_centroids(sdf, n_cells)
+    ids = np.arange(n)
+    emb = np.asarray([r[1] for r in rows])
+    cells, want_pairs = _np_semdedup_pairs(ids, emb, cents, 0.9)
+    dropped = {d for d, _, _ in want_pairs}
+    want = {(i, cells[i]) for i in cells if i not in dropped}
+    assert sum(c == 0 for c in cells.values()) > n / 2  # the hot cell
 
-    # default cap: the 120-row corpus is under it, so every cell takes
-    # the matmul kernel
-    unguarded = {(r["vec_id"], r["cell"])
-                 for r in semantic_dedup(sdf, threshold=0.9,
-                                         centroids=cents).collect()}
-    pairs_un = {(r["drop_id"], r["keep_id"], r["cell"], r["cos_sim"])
-                for r in semantic_dedup_pairs(
-                    sdf, threshold=0.9, centroids=cents).collect()}
-    # cap 10 << the hot cell's ~70 rows: cell 0 (and any other cell over
-    # 10) must take the join fallback; the result must not move
-    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", 10):
-        guarded = {(r["vec_id"], r["cell"])
+    for tile in (similarity.GRAM_TILE, TINY_TILE):
+        with mock.patch.object(similarity, "GRAM_TILE", tile):
+            got = {(r["vec_id"], r["cell"])
                    for r in semantic_dedup(sdf, threshold=0.9,
                                            centroids=cents).collect()}
-        pairs_g = {(r["drop_id"], r["keep_id"], r["cell"], r["cos_sim"])
-                   for r in semantic_dedup_pairs(
-                       sdf, threshold=0.9, centroids=cents).collect()}
-    assert guarded == unguarded
-    assert len(unguarded) < n  # the threshold actually dropped something
-    assert pairs_g == pairs_un
-    assert pairs_un  # non-trivial
+            pairs = semantic_dedup_pairs(
+                sdf, threshold=0.9, centroids=cents).collect()
+        assert got == want, tile
+        _assert_pairs_match(pairs, want_pairs)
+    assert len(want) < n  # the threshold actually dropped something
+    assert want_pairs  # non-trivial
 
 
 def test_hot_cell_guard_default_on_and_cold_path_unchanged(spark):
-    """The guard is always on at SEMDEDUP_MAX_CELL_ROWS; with no hot cell
-    everything takes the matmul kernel, and a cap of 10 (which sends the
-    sf0.001 cells over 10 rows to the join route) leaves the result
+    """The default tile is GRAM_TILE = 2048 rows, under which every sf0.001
+    cell is one tile; a 10-row tile (which splits the sf0.001 cells over
+    10 rows into several row and column tiles) leaves the result
     unchanged."""
     from glm_ocr_spark.operators.similarity import (
-        SEMDEDUP_MAX_CELL_ROWS,
+        GRAM_TILE,
         semantic_dedup,
         train_ivf_centroids,
     )
 
-    assert SEMDEDUP_MAX_CELL_ROWS == 65536
+    assert GRAM_TILE == 2048
     sdf = _spark_emb(spark, SF1)
     cents = train_ivf_centroids(sdf, n_cells=8)
     got_default = {(r["vec_id"], r["cell"])
                    for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
                                            centroids=cents).collect()}
-    with mock.patch.object(similarity, "SEMDEDUP_MAX_CELL_ROWS", 10):
-        got_capped = {(r["vec_id"], r["cell"])
-                      for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
-                                              centroids=cents).collect()}
-    assert got_default == got_capped
+    with mock.patch.object(similarity, "GRAM_TILE", 10):
+        got_tiled = {(r["vec_id"], r["cell"])
+                     for r in semantic_dedup(sdf, threshold=0.4, n_cells=8,
+                                             centroids=cents).collect()}
+    assert got_default == got_tiled
+    assert len(got_default) < sdf.count()  # 0.4 drops something here
+
+
+def test_near_pairs_memory_is_linear_in_cell_rows():
+    """One 16,384 x 64 cell, no Spark: the tiled gram loop holds the cell's
+    normalized rows plus one GRAM_TILE x GRAM_TILE tile (about 50 MB here),
+    never a GRAM_TILE x n row chunk (256 MiB here, 1 GiB at 65k rows)."""
+    import tracemalloc
+
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    n, dim, n_dup = 16_384, 64, 16_384 // 20
+    x = rng.normal(size=(n, dim))
+    x[n - n_dup:] = x[:n_dup] + rng.normal(scale=0.01, size=(n_dup, dim))
+    x[n // 2] = 0.0
+    pdf = pd.DataFrame({"embedding": list(x)})
+    tracemalloc.start()
+    try:
+        found = sum(len(d) for d, _, _ in similarity._near_pairs(
+            pdf, 0.9, similarity.GRAM_TILE))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert found >= n_dup  # every planted duplicate is a pair
+    assert peak < 96 * 2**20, peak
+
+
+def test_semdedup_plan_build_runs_no_spark_job(spark):
+    """Building a SemDeDup plan (centroids given) starts no Spark job: no
+    count pre-pass, no per-cell population probe. Jobs are read from the
+    status tracker by job group; a control job started afterwards on the
+    same thread shows the tracker has caught up (its listener processes
+    events in order)."""
+    import time
+
+    import pyspark.sql.functions as F
+
+    from glm_ocr_spark.operators.similarity import (
+        fixed_centroids,
+        ivf_cell_udf,
+        semantic_dedup,
+        semantic_dedup_pairs_from_assigned,
+    )
+
+    emb = _spark_emb(spark, SF1)
+    cents = fixed_centroids(emb, 16)
+    assigned = emb.withColumn("cell", ivf_cell_udf(cents)(F.col("embedding")))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    in_group("semdedup-plan-build", lambda: (
+        semantic_dedup(emb, centroids=cents),
+        semantic_dedup(emb, centroids=cents, order="centroid"),
+        semantic_dedup_pairs_from_assigned(assigned)))
+    in_group("semdedup-plan-control", emb.count)
+    deadline = time.monotonic() + 30
+    while (not tracker.getJobIdsForGroup("semdedup-plan-control")
+           and time.monotonic() < deadline):
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("semdedup-plan-control")
+    assert list(tracker.getJobIdsForGroup("semdedup-plan-build")) == []
+
+
+@pytest.mark.parametrize("order", ["vec_id", "centroid"])
+def test_one_cell_over_many_tiles_matches_oracle(spark, order):
+    """One 1,000-row cell (a single centroid) with planted duplicates, a
+    duplicate of a duplicate and a zero vector, under a 64-row tile: 16 row
+    tiles meeting 136 (row, column) tile blocks. Survivors and pairs must
+    equal the sequential oracle under both orders."""
+    from pyspark.sql import types as T
+
+    from glm_ocr_spark.operators.similarity import (
+        semantic_dedup,
+        semantic_dedup_pairs,
+    )
+
+    rng = np.random.default_rng(5)
+    n, dim = 1000, 32
+    emb = rng.normal(size=(n, dim))
+    src = rng.choice(900, size=60, replace=False)
+    emb[900:960] = emb[src] + rng.normal(scale=0.02, size=(60, dim))
+    emb[960:990] = emb[900:930] + rng.normal(scale=0.02, size=(30, dim))
+    emb[500] = 0.0
+    ids = rng.permutation(n).astype(np.int64)  # precedence != row order
+    cents = emb[1:2] + 0.1
+    cells, want_pairs = _np_semdedup_pairs(ids, emb, cents, 0.9, order)
+    assert set(cells.values()) == {0}
+    _assert_engine_margins(np.delete(emb, 500, axis=0), cents, 0.9)
+    assert len(want_pairs) >= 60
+    dropped = {d for d, _, _ in want_pairs}
+    sdf = spark.createDataFrame(
+        [(int(i), [float(v) for v in row]) for i, row in zip(ids, emb)],
+        T.StructType([T.StructField("vec_id", T.LongType()),
+                      T.StructField("embedding",
+                                    T.ArrayType(T.DoubleType()))]))
+    with mock.patch.object(similarity, "GRAM_TILE", 64):
+        got = {r["vec_id"] for r in semantic_dedup(
+            sdf, threshold=0.9, centroids=cents, order=order).collect()}
+        pairs = semantic_dedup_pairs(
+            sdf, threshold=0.9, centroids=cents, order=order).collect()
+    assert got == {int(i) for i in ids} - dropped
+    assert int(ids[500]) in got  # the zero vector is never dropped
+    _assert_pairs_match(pairs, want_pairs)
