@@ -57,8 +57,10 @@ def _np_semdedup_pairs(ids, emb, centroids, threshold, order="vec_id"):
             m = m[key]
         pair = xn[m] @ xn[m].T
         for j in range(1, len(m)):
-            for i in range(j):
-                if nz[m[i]] and nz[m[j]] and pair[i, j] >= threshold:
+            if not nz[m[j]]:
+                continue
+            for i in np.nonzero(pair[:j, j] >= threshold)[0]:
+                if nz[m[i]]:
                     pairs[(int(ids[m[j]]), int(ids[m[i]]), int(c))] = \
                         float(pair[i, j])
     return {int(i): int(c) for i, c in zip(ids, cells)}, pairs
