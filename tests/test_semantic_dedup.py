@@ -323,8 +323,8 @@ def test_semdedup_from_assigned_bucketed_no_shuffle(spark):
      .saveAsTable(table))
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # disable broadcast so the plan assert exercises the shuffle-join
-        # path a big-corpus run would take
+        # disable broadcast so the plan assert sees the plan a big-corpus
+        # run would take
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         assigned = spark.table(table)
         pairs = semantic_dedup_pairs_from_assigned(assigned, threshold=0.4)
