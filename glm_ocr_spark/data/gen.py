@@ -359,13 +359,6 @@ def gen_turn_row(conv_idx: int, turn_idx: int) -> dict:
     }
 
 
-def iter_turn_keys(sf: float):
-    """Yield (conv_idx, turn_idx) for every turn at the given scale factor."""
-    for c in range(n_conversations(sf)):
-        for t in range(n_turns(c)):
-            yield c, t
-
-
 def turn_offsets(sf: float) -> list[int]:
     """Cumulative turn offsets per conversation: offsets[c] = first global
     turn ordinal of conversation c; offsets[-1] = total turns. O(n_conv) on

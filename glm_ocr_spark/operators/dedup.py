@@ -26,9 +26,12 @@ checkable (see `simhash64_scalar`).
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -162,59 +165,15 @@ LSH_BANDS = 16          # bands of r = K / BANDS rows; r=2 -> candidate prob
                         # 1-(1-j^2)^16: ≈0.99 at j=0.5, ≈1-1e-7 at j=0.8.
                         # Verified by exact Jaccard, so extra candidates cost
                         # only join width, never precision.
-# Dataflows this module pins with persist() (per-doc band keys and
-# shingle arrays). A returned DataFrame is lazy, so `minhash_lsh_pairs`
-# and `minhash_band_candidates` cannot unpersist their pins themselves —
-# they must outlive the CALLER's action. In a job-per-run deployment the
-# JVM exit releases them; a long-lived session (the correctness driver, a
-# notebook, repeated dedup calls) should call `release_persisted()` after
-# consuming each result, or the MEMORY_AND_DISK blocks accumulate and
-# squeeze later shuffles (review finding; the interference the deleted
-# tools/bench_sf1.py measured as 51.5 s warm vs 18.5 s cold, recorded in
-# BENCH_sf1.json). `dedup_components` (and so `dedup_keep_first`)
-# consumes its pairs eagerly and releases its own pin before it returns,
-# leaving nothing here.
-_PERSISTED: list = []
-# long-lived-session leak bound (round-5 advice): when a new pin would
-# grow the registry past this, the OLDEST pin is released first. A
-# released pin is never a correctness problem — a still-lazy consumer
-# just recomputes.
-_PERSISTED_CAP = 8
-
-
-def _release(df) -> bool:
-    try:
-        df.unpersist()
-        return True
-    except Exception:
-        return False  # session gone or block already dropped
-
-
-def _pin(df) -> None:
-    from pyspark import StorageLevel
-
-    while len(_PERSISTED) >= _PERSISTED_CAP:
-        _release(_PERSISTED.pop(0))
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-
-
-def _unpin(df) -> None:
-    """Release one pin now, once everything that reads it has run."""
-    for i, pinned in enumerate(_PERSISTED):
-        if pinned is df:
-            _release(_PERSISTED.pop(i))
-            return
 
 
 def release_persisted() -> int:
-    """Unpersist every dataflow this module pinned since the last call;
-    returns how many were released. Safe to call at any time — only
-    affects this module's internal caches, never caller-created ones
-    (unlike spark.catalog.clearCache())."""
-    n = sum(_release(df) for df in _PERSISTED)
-    _PERSISTED.clear()
-    return n
+    """Returns 0: no dedup operator leaves a pin behind. Each persists its
+    sketch relation only inside the call that reads it (`_pinned_sketches`),
+    so there is nothing left to release. Kept only because perfbench's
+    dedup workload still calls it after each run; it goes once that call
+    does."""
+    return 0
 
 
 # 31-bit Mersenne prime: with base < 2^31 and a,b < 2^31 the affine form
@@ -298,11 +257,25 @@ def _minhash_sketch_udf(n: int = 3, k: int = MINHASH_K,
 def _sketches(docs: DataFrame, n: int, k: int,
               bands: int = LSH_BANDS) -> DataFrame:
     """(doc_id, sig, sh, bk): one `_minhash_sketch_udf` pass per doc.
-    Callers select the columns they read before pinning."""
+    Callers select the columns they read."""
     return (docs.select("doc_id",
                         _minhash_sketch_udf(n, k, bands)(F.col("text"))
                         .alias("_m"))
             .select("doc_id", "_m.sig", "_m.sh", "_m.bk"))
+
+
+@contextlib.contextmanager
+def _pinned_sketches(docs: DataFrame, n: int, k: int, bands: int, *cols):
+    """(doc_id, *cols) of `_sketches`, persisted for the body of the `with`
+    and unpersisted on exit, so the sketch UDF runs once per doc however
+    many joins read it. The body must materialize whatever it returns:
+    nothing may read the pin after the call that made it."""
+    sk = (_sketches(docs, n, k, bands).select("doc_id", *cols)
+          .persist(StorageLevel.MEMORY_AND_DISK))
+    try:
+        yield sk
+    finally:
+        sk.unpersist()
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3,
@@ -355,23 +328,18 @@ def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     task). Degenerate corpora still pay O(s^2) OUTPUT rows — that is the
     LSH contract. A one-shuffle collect_list plan and a parquet band table
     were measured no faster and removed (BENCH_ab_strategy*.json,
-    BENCH_ab_bandtable.json)."""
-    # materialize the band keys ONCE before the self-join: both join
-    # sides read them, and without a boundary Spark plans two full scans
-    # — the sketch UDF twice over the whole corpus (measured 2x wall
-    # on a 6.3M-doc corpus)
-    keys = _sketches(docs, n, k, bands).select("doc_id", "bk")
-    _pin(keys)
-    return _band_candidates(keys)
+    BENCH_ab_bandtable.json). Returned materialized, like
+    `minhash_lsh_pairs`: its sketch pin lives only inside this call."""
+    # pin the band keys for the self-join: without the pin the sketch UDF
+    # runs 4 times per doc (tests/test_dedup_similarity.py::
+    # test_minhash_band_candidates_sketch_each_doc_once)
+    with _pinned_sketches(docs, n, k, bands, "bk") as keys:
+        return _band_candidates(keys).localCheckpoint(eager=True)
 
 
-def _verified_pairs(docs: DataFrame, n: int, k: int, bands: int,
-                    threshold: float) -> tuple[DataFrame, DataFrame]:
-    """(`minhash_lsh_pairs`' result, the pinned (doc_id, bk, sh) relation
-    it reads), so a caller that consumes the pairs eagerly can release the
-    pin itself."""
-    sk = _sketches(docs, n, k, bands).select("doc_id", "bk", "sh")
-    _pin(sk)
+def _verified_pairs(sk: DataFrame, threshold: float) -> DataFrame:
+    """`minhash_lsh_pairs`' result, lazy over the pinned (doc_id, bk, sh)
+    relation `sk`: the caller materializes it while the pin lives."""
     cands = _band_candidates(sk)
     s1 = sk.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
     s2 = sk.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
@@ -381,13 +349,12 @@ def _verified_pairs(docs: DataFrame, n: int, k: int, bands: int,
     # Filter/Project expression reuse is a codegen optimization, not a
     # plan guarantee (SCALE.md round-4 note; same structural fix as
     # embedding_neardup_pairs)
-    pairs = (
+    return (
         cands.join(s1, "id1").join(s2, "id2")
         .withColumn("_jac", jac)
         .filter(F.col("_jac") >= threshold)
         .select("id1", "id2", F.round("_jac", 6).alias("jaccard"))
     )
-    return pairs, sk
 
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
@@ -406,13 +373,13 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     and shingle array together, and that one (doc_id, bk, sh) relation is
     pinned; the band entries and both verify sides read the pin.
 
-    Lifetime note: this pins the (doc_id, bk, sh) relation with persist()
-    for the duration of the caller's action; long-lived sessions should
-    call `release_persisted()` after consuming the result (see the note at
-    `_PERSISTED`). `dedup_components` consumes the pairs itself and
-    releases its pin before returning.
+    Lifetime: the pin lives only inside this call. The pairs are
+    materialized with an eager localCheckpoint before it is released, so
+    the result never reads the pin and costs no sketch pass when read,
+    however many other dedup calls ran in between.
     """
-    return _verified_pairs(docs, n, k, bands, threshold)[0]
+    with _pinned_sketches(docs, n, k, bands, "bk", "sh") as sk:
+        return _verified_pairs(sk, threshold).localCheckpoint(eager=True)
 
 
 # ------------------------------------------------------- dedup clustering
@@ -577,14 +544,11 @@ def dedup_components(docs: DataFrame, n: int = 3,
     -> connected components. The standard corpus-dedup shape: keep
     component_id == doc_id rows, drop the rest.
 
-    `connected_components` checkpoints the pair graph eagerly and its
-    result never reads the sketch pin, so the pin is released before this
-    returns: nothing is left for `release_persisted()`."""
-    pairs, pin = _verified_pairs(docs, n, MINHASH_K, LSH_BANDS, threshold)
-    try:
-        return connected_components(pairs)
-    finally:
-        _unpin(pin)
+    The sketch pin lives only inside this call: `connected_components`
+    checkpoints the pair graph eagerly and its result never reads the
+    pin."""
+    with _pinned_sketches(docs, n, MINHASH_K, LSH_BANDS, "bk", "sh") as sk:
+        return connected_components(_verified_pairs(sk, threshold))
 
 
 def dedup_keep_first(docs: DataFrame, n: int = 3,

@@ -128,7 +128,6 @@ def test_minhash_band_candidates_match_python_reference(spark):
         MINHASH_K,
         minhash_band_candidates,
         minhash_signatures,
-        release_persisted,
     )
 
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
@@ -143,11 +142,8 @@ def test_minhash_band_candidates_match_python_reference(spark):
                 buckets.setdefault(key, []).append(row["doc_id"])
         want = {pair for ids in buckets.values()
                 for pair in combinations(sorted(ids), 2)}
-        try:
-            got = {(row.id1, row.id2) for row in
-                   minhash_band_candidates(docs, k=k, bands=bands).collect()}
-        finally:
-            release_persisted()
+        got = {(row.id1, row.id2) for row in
+               minhash_band_candidates(docs, k=k, bands=bands).collect()}
         assert got == want, (k, bands)
         assert len(want) > 0
 
@@ -163,26 +159,32 @@ def test_band_keys_pack_r2_exactly():
     assert _band_keys(sig, 4).tolist() == sig.tolist()  # r = 1: the slot
 
 
-def test_release_persisted_frees_minhash_caches(spark):
-    """minhash pins its one (doc_id, sig, sh) relation with persist() and
-    the lazy return means the operator can't unpersist them itself (round-5
-    review finding) — release_persisted() is the caller's handle for
-    long-lived sessions. It must drop exactly this module's pins and
-    leave caller-created caches alone."""
-    from glm_ocr_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        release_persisted,
-    )
+def _cache_holds_only(spark, mine) -> bool:
+    """Spark's cache holds exactly one entry, the caller's `mine`."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return (cm.numCachedEntries() == 1
+            and cm.lookupCachedData(mine._jdf).isDefined())
 
-    release_persisted()  # clean slate from earlier tests in this session
+
+def test_release_persisted_frees_minhash_caches(spark):
+    """Every minhash operator unpersists its sketch pin before it returns:
+    after each call Spark's cache holds only the caller's own persisted
+    frame, which the operators leave alone, and release_persisted() has
+    nothing to free."""
+    from glm_ocr_spark.operators import dedup
+
+    spark.catalog.clearCache()  # clean slate from earlier tests
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
     mine = docs.limit(5).persist()
     mine.count()
-    assert minhash_lsh_pairs(docs, threshold=0.5).count() >= 0
-    released = release_persisted()
-    assert released == 1  # the signature + shingle relation
+    for op in (dedup.minhash_band_candidates, dedup.minhash_lsh_pairs,
+               dedup.dedup_components, dedup.dedup_keep_first):
+        out = op(docs)
+        assert _cache_holds_only(spark, mine), op.__name__
+        assert out.count() > 0, op.__name__
+        assert _cache_holds_only(spark, mine), op.__name__
     assert mine.storageLevel.useMemory  # caller cache untouched
-    assert release_persisted() == 0  # idempotent
+    assert dedup.release_persisted() == 0
     mine.unpersist()
 
 
@@ -193,12 +195,62 @@ def test_minhash_lsh_pairs_shingles_each_doc_once(spark, call_counter):
 
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
     n_docs = docs.count()
-    try:
-        with call_counter(dedup, "shingles_py") as acc:
-            pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
-        assert pairs.count() > 0
-    finally:
-        dedup.release_persisted()
+    with call_counter(dedup, "shingles_py") as acc:
+        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+    assert pairs.count() > 0
+    assert acc.value == n_docs
+
+
+def test_minhash_band_candidates_sketch_each_doc_once(spark, call_counter):
+    """Both sides of the band self-join read one pinned sketch relation:
+    without the pin the sketch UDF runs 4 times per doc."""
+    from glm_ocr_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF1}/documents.parquet")
+    n_docs = docs.count()
+    with call_counter(dedup, "shingles_py") as acc:
+        cands = dedup.minhash_band_candidates(docs)
+    assert cands.count() > 0
+    assert acc.value == n_docs
+
+
+def test_minhash_lsh_pairs_reread_after_dedup_keep_first(spark,
+                                                         call_counter):
+    """A minhash result read again after dedup_keep_first on the same docs
+    costs no sketch pass. Both plans are built under one counter, so their
+    sketch relations are the same plan: a plan-keyed pin that the second
+    call shared and then unpersisted once cost the re-read 5 sketch passes
+    per doc. dedup_keep_first's own pass is not the result's, so it is
+    left out of the count."""
+    from glm_ocr_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF1}/documents.parquet")
+    n_docs = docs.count()
+    with call_counter(dedup, "shingles_py") as acc:
+        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+        first = pairs.count()
+        built = acc.value
+        dedup.dedup_keep_first(docs).count()
+        kept = acc.value
+        assert pairs.count() == first > 0
+    assert built + (acc.value - kept) == n_docs
+
+
+def test_minhash_lsh_pairs_reread_after_eight_more(spark, call_counter):
+    """Building more minhash results cannot evict an earlier one: the
+    first of nine, read after the other eight were built, costs no sketch
+    pass (a FIFO pin registry of 8 once dropped its pin, costing 5 sketch
+    passes per doc on the read)."""
+    from glm_ocr_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF1}/documents.parquet")
+    n_docs = docs.count()
+    with call_counter(dedup, "shingles_py") as acc:
+        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+    more = [dedup.minhash_lsh_pairs(docs.filter(docs.doc_id % 9 != i),
+                                    threshold=0.5) for i in range(8)]
+    assert pairs.count() > 0
+    assert all(m.count() >= 0 for m in more)
     assert acc.value == n_docs
 
 
@@ -410,11 +462,8 @@ def test_dedup_keep_first_same_survivors_on_both_routes(spark):
     from glm_ocr_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
-    try:
-        pairs = [(r.id1, r.id2) for r in
-                 dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()]
-    finally:
-        dedup.release_persisted()
+    pairs = [(r.id1, r.id2) for r in
+             dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()]
     losers = {d for d, c in _reference_components(pairs).items() if d != c}
     want = {r["doc_id"] for r in docs.select("doc_id").collect()} - losers
     assert losers
@@ -426,22 +475,26 @@ def test_dedup_keep_first_same_survivors_on_both_routes(spark):
 
 
 def test_dedup_keep_first_leaves_no_pin(spark):
-    """dedup_components consumes its pairs eagerly and releases the sketch
-    pin before returning, so nothing is left for release_persisted() — and
-    the FIFO eviction in `_pin` cannot drop a pin from under it."""
+    """dedup_keep_first and dedup_components unpersist the sketch pin
+    before they return, so Spark's cache holds only the caller's own
+    frame while their lazy results are read, and the survivors are the
+    docs minus every non-keeper component member."""
     from glm_ocr_spark.operators import dedup
 
-    dedup.release_persisted()  # clean slate from earlier tests
-    docs = spark.read.parquet(f"{SF1}/documents.parquet")
-    kept = {r["doc_id"] for r in dedup.dedup_keep_first(docs).collect()}
-    assert dedup.release_persisted() == 0
+    spark.catalog.clearCache()  # clean slate from earlier tests
+    docs = spark.read.parquet(f"{SF1}/documents.parquet").persist()
+    kept_df = dedup.dedup_keep_first(docs)
+    assert _cache_holds_only(spark, docs)
+    kept = {r["doc_id"] for r in kept_df.collect()}
     comp = dedup.dedup_components(docs)
-    assert dedup._PERSISTED == []
+    assert _cache_holds_only(spark, docs)
     losers = {r["doc_id"] for r in
               comp.filter("component_id != doc_id").collect()}
+    assert _cache_holds_only(spark, docs)
     assert losers
     assert kept == ({r["doc_id"] for r in docs.select("doc_id").collect()}
                     - losers)
+    docs.unpersist()
 
 
 def test_dedup_components_groups_near_dups(spark):
