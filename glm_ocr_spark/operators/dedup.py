@@ -332,7 +332,7 @@ def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     `minhash_lsh_pairs`: its sketch pin lives only inside this call."""
     # pin the band keys for the self-join: without the pin the sketch UDF
     # runs 4 times per doc (tests/test_dedup_similarity.py::
-    # test_minhash_band_candidates_sketch_each_doc_once)
+    # test_minhash_lsh_pairs_shingles_each_doc_once)
     with _pinned_sketches(docs, n, k, bands, "bk") as keys:
         return _band_candidates(keys).localCheckpoint(eager=True)
 

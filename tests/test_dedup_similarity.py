@@ -190,28 +190,18 @@ def test_release_persisted_frees_minhash_caches(spark):
 
 def test_minhash_lsh_pairs_shingles_each_doc_once(spark, call_counter):
     """One Python pass per doc: the signature UDF returns the shingles it
-    hashed, and the verify joins read that same pinned relation."""
+    hashed, and the verify joins read that same pinned relation. The band
+    self-join alone reads it twice: without the pin the sketch UDF runs 4
+    times per doc for `minhash_band_candidates`, 5 for the pairs."""
     from glm_ocr_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
     n_docs = docs.count()
-    with call_counter(dedup, "shingles_py") as acc:
-        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
-    assert pairs.count() > 0
-    assert acc.value == n_docs
-
-
-def test_minhash_band_candidates_sketch_each_doc_once(spark, call_counter):
-    """Both sides of the band self-join read one pinned sketch relation:
-    without the pin the sketch UDF runs 4 times per doc."""
-    from glm_ocr_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF1}/documents.parquet")
-    n_docs = docs.count()
-    with call_counter(dedup, "shingles_py") as acc:
-        cands = dedup.minhash_band_candidates(docs)
-    assert cands.count() > 0
-    assert acc.value == n_docs
+    for op in (dedup.minhash_lsh_pairs, dedup.minhash_band_candidates):
+        with call_counter(dedup, "shingles_py") as acc:
+            out = op(docs)
+        assert out.count() > 0, op.__name__
+        assert acc.value == n_docs, op.__name__
 
 
 def test_minhash_lsh_pairs_reread_after_dedup_keep_first(spark,
