@@ -41,7 +41,11 @@ from glm_ocr_spark.kernel.formatter import (
 )
 from glm_ocr_spark.kernel.textproc import format_content, map_label
 from glm_ocr_spark.kernel.recognize import recognize
-from glm_ocr_spark.kernel.segment import segment, segment_rows
+from glm_ocr_spark.kernel.segment import segment
+
+# extract_turn calls segment through this second name: the stage tracer
+# wraps both names, and counts pages on this one
+segment_rows = segment
 
 _IMAGE_CLS_ID = LABEL2ID["image"]
 id2label = {v: k for k, v in LABEL2ID.items()}
@@ -146,9 +150,10 @@ def extract_turn(payload: str | None, *, segmenter=None,
     ResultFormatter/BasePostProcessor README.md:292-309, task prompt
     dispatch config.yaml:124-133):
       segmenter(payload) -> (page_w, page_h, rows, spans, has_order)
-          detector override; rows = [(cls_id, score, x1, y1, x2, y2,
-          order)], spans the parallel (start, end) char offsets, has_order
-          False to order by XY-cut
+          detector override, replacing `kernel.segment.segment` (the
+          one parse of both payload forms); rows = [(cls_id, score, x1,
+          y1, x2, y2, order)], spans the parallel (start, end) char
+          offsets, has_order False to order by XY-cut
       recognizer(payload, span, task_type) -> str|None — per-task content
       formatter(regions) -> regions — post-process hook over the final
           formatted regions (index, label, native_label, content, bbox_2d,
@@ -159,11 +164,8 @@ def extract_turn(payload: str | None, *, segmenter=None,
     if not payload:
         return dict(_EMPTY)
 
-    if segmenter is None:
-        page_w, page_h, rows, spans, has_order = (
-            segment_rows(payload) or segment(payload))
-    else:
-        page_w, page_h, rows, spans, has_order = segmenter(payload)
+    page_w, page_h, rows, spans, has_order = (
+        (segmenter or segment_rows)(payload))
     if not rows:
         return dict(_EMPTY)
 

@@ -14,10 +14,13 @@ payload is an HTML-ish document in one of two forms:
    inferred from tags/content, scores from Arc90/trafilatura-style
    text-length + link-density features, geometry synthesized top-to-bottom.
 
-Both forms yield the same tuple: (page_w, page_h, rows, spans, has_order),
-rows = [(cls_id, score, x1, y1, x2, y2, order)] in page coords, spans the
-parallel (start, end) char offsets of each block's content in the payload,
-has_order False when the page carries no complete reading order.
+One function, `segment`, parses both forms and yields one tuple:
+(page_w, page_h, rows, spans, has_order), rows = [(cls_id, score, x1, y1,
+x2, y2, order)] in page coords, spans the parallel (start, end) char
+offsets of each block's content in the payload, has_order False when the
+page carries no complete reading order. Annotated blocks are found by one
+regex in one pass, whatever their attribute layout; a payload with none
+takes the plain-DOM parse.
 """
 
 from __future__ import annotations
@@ -28,15 +31,15 @@ import re
 from glm_ocr_spark.config import LABEL2ID, PAGE_HEIGHT, PAGE_WIDTH
 
 _PAGE_RE = re.compile(r'<page\s+w="(\d+)"\s+h="(\d+)"\s*/>')
-_BLOCK_RE = re.compile(r"<block\s+([^>]*?)>(.*?)</block>", re.DOTALL)
+# one block regex: the canonical attribute layout (label, score, bbox[,
+# order] in that order, double-quoted, no extras) fills groups 1-4; any
+# other layout falls to group 5 and is parsed by _ATTR_RE. Both branches
+# end the attributes at the first '>', so every layout yields the same
+# block boundaries as the oracle's <block\s+([^>]*?)>(.*?)</block>.
+_BLOCK_RE = re.compile(
+    r'<block\s+(?:label="([^">]*)" score="([^">]*)" bbox="([^">]*)"'
+    r'(?: order="([^">]*)")?|([^>]*?))>(.*?)</block>', re.DOTALL)
 _ATTR_RE = re.compile(r'(\w+)="([^"]*)"')
-# one-pass combined block+attrs+content regex for the canonical attribute
-# layout (label, score, bbox[, order] in that order, double-quoted, no
-# extras): segment_rows uses it when it provably consumes every '<block'
-# opener in the payload (count check), else the generic segment() parses
-_BLOCK_FAST_RE = re.compile(
-    r'<block label="([^"]*)" score="([^"]*)" bbox="([^"]*)"'
-    r'(?: order="([^"]*)")?>(.*?)</block>', re.DOTALL)
 
 # plain-DOM tags -> 25-class labels
 _TAG_LABEL = {
@@ -127,48 +130,6 @@ def _classify_plain(tag: str | None, fragment: str,
     return "text"
 
 
-def segment(payload: str):
-    """Generic parse of one turn payload: (page_w, page_h, rows, spans,
-    has_order), the same tuple segment_rows returns, with
-    rows = [(cls_id, score, x1, y1, x2, y2, order), ...] and spans the
-    parallel char offsets of each block's content.
-
-    Annotated form takes precedence (any attribute layout); a page with one
-    block missing its order has no model order at all (has_order False,
-    order 0 everywhere -> XY-cut). A payload with no annotated blocks takes
-    the plain-DOM form.
-    """
-    page_w, page_h = parse_page_size(payload)
-    annotated = list(_BLOCK_RE.finditer(payload))
-    if not annotated:
-        return (page_w, page_h, *_plain_rows(payload), True)
-
-    text_id = LABEL2ID["text"]
-    rows: list[tuple] = []
-    spans: list[tuple[int, int]] = []
-    missing = False
-    for m in annotated:
-        attrs = dict(_ATTR_RE.findall(m.group(1)))
-        try:
-            score = float(attrs.get("score", "1.0"))
-        except ValueError:  # malformed annotation: trust-nothing default
-            score = 1.0
-        try:
-            x1, y1, x2, y2 = (float(v)
-                              for v in attrs.get("bbox", "").split(","))
-        except ValueError:
-            x1, y1, x2, y2 = 0.0, 0.0, page_w, page_h
-        try:
-            order = int(attrs["order"])
-        except (KeyError, ValueError):
-            missing = True
-            order = 0
-        rows.append((LABEL2ID.get(attrs.get("label", "text"), text_id), score,
-                     x1, y1, x2, y2, order))
-        spans.append(m.span(2))
-    return page_w, page_h, rows, spans, not missing
-
-
 def _plain_rows(payload: str) -> tuple[list[tuple], list[tuple[int, int]]]:
     """Plain-DOM (rows, spans): tagged elements and untagged paragraph runs
     alternate, geometry synthesized top-to-bottom in document order."""
@@ -203,62 +164,51 @@ def _plain_rows(payload: str) -> tuple[list[tuple], list[tuple[int, int]]]:
     return rows, spans
 
 
-def segment_rows(payload: str):
-    """One-pass segmentation for the canonical payload layout: the
-    segment() tuple, or None when the payload needs the generic parse.
+def segment(payload: str):
+    """Parse one turn payload: (page_w, page_h, rows, spans, has_order),
+    rows = [(cls_id, score, x1, y1, x2, y2, order), ...] and spans the
+    parallel char offsets of each block's content.
 
-    Semantics identical to segment(): the combined regex is only trusted
-    when it provably consumed every '<block' opener (count check) and no
-    attribute value crossed a '>' (which _BLOCK_RE's [^>]*? attrs would
-    have carved differently). Equivalence is enforced by the oracle gate
-    plus tests/test_fuzz_kernel_vs_oracle.py."""
-    n_open = payload.count("<block")
-    if not n_open:
-        return (*parse_page_size(payload), *_plain_rows(payload), True)
+    Annotated form takes precedence (any attribute layout); a page with one
+    block missing its order has no model order at all (has_order False,
+    order 0 everywhere -> XY-cut). A payload with no annotated blocks takes
+    the plain-DOM form. One pass over the payload either way: equivalence
+    with the oracle is enforced by the oracle gate plus
+    tests/test_fuzz_kernel_vs_oracle.py."""
     l2i = LABEL2ID
     text_id = l2i["text"]
     page_w, page_h = parse_page_size(payload)
     rows: list[tuple] = []
     spans: list[tuple[int, int]] = []
     missing = False
-    n_fast = 0
-    for m in _BLOCK_FAST_RE.finditer(payload):
-        n_fast += 1
-        label, score_s, bbox_s, order_s = m.group(1, 2, 3, 4)
-        if ">" in label or ">" in score_s or ">" in bbox_s or (
-                order_s is not None and ">" in order_s):
-            return None  # attr crossed the open tag's '>': generic parse
+    for m in _BLOCK_RE.finditer(payload):
+        label, score_s, bbox_s, order_s, attr_s = m.group(1, 2, 3, 4, 5)
+        if attr_s is not None:  # off the canonical layout
+            attrs = dict(_ATTR_RE.findall(attr_s))
+            label = attrs.get("label", "text")
+            score_s = attrs.get("score", "1.0")
+            bbox_s = attrs.get("bbox", "")
+            order_s = attrs.get("order")
         try:
             score = float(score_s)
         except ValueError:  # malformed annotation: trust-nothing default
             score = 1.0
-        b = bbox_s.split(",")
         try:
-            if len(b) != 4:
-                raise ValueError
-            x1 = float(b[0])
-            y1 = float(b[1])
-            x2 = float(b[2])
-            y2 = float(b[3])
+            x1, y1, x2, y2 = map(float, bbox_s.split(","))
         except ValueError:
             x1, y1, x2, y2 = 0.0, 0.0, page_w, page_h
-        if order_s is None:
+        try:
+            order = int(order_s)
+        except (TypeError, ValueError):
             missing = True
             order = 0
-        else:
-            try:
-                order = int(order_s)
-            except ValueError:
-                missing = True
-                order = 0
         rows.append((l2i.get(label, text_id), score, x1, y1, x2, y2, order))
-        spans.append(m.span(5))
-    if n_fast != n_open:
-        return None  # non-canonical layout (or '<blockquote'): generic
+        spans.append(m.span(6))
+    if not rows:
+        return (page_w, page_h, *_plain_rows(payload), True)
     return page_w, page_h, rows, spans, not missing
 
 
-_PARA_RE = re.compile(r"[^\n](?:.*[^\s])?", re.DOTALL)
 _PARA_SPLIT_RE = re.compile(r"\n\s*\n")
 
 

@@ -296,25 +296,30 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     return _sketches(docs, n, k).select("doc_id", "sig")
 
 
-def _band_candidates(sk: DataFrame) -> DataFrame:
-    """Candidate (id1, id2) pairs from the band keys of a PINNED
-    (doc_id, bk, ...) relation. The keys come from the sketch UDF
-    (`_band_keys`, one numpy fold per batch), so both sides of the
-    self-join only posexplode a stored array: no Python and no per-row
-    hash expression, and the UDF runs once per doc however many times the
-    entries are read. At the shipped shape (r = 2) a key is the band's
-    exact slot values, so equal keys are equal bands; for r > 2 a key
-    collision only widens the candidate set."""
-    band_entries = sk.select(
-        "doc_id", F.posexplode("bk").alias("band_idx", "band_key"))
+def band_candidate_pairs(rows: DataFrame, id_col: str, keys) -> DataFrame:
+    """Distinct candidate (id1, id2) pairs, id1 < id2, of the rows that
+    share a band: posexplode each row's per-band keys (`keys`, an array
+    column or its name), self-join on equal (band_idx, band_key), drop
+    duplicate pairs. The one banded-LSH candidate join: minhash bands here
+    and `similarity.neardup_band_candidates`' hyperplane buckets.
+
+    For minhash, `rows` is the PINNED sketch relation and `keys` its `bk`
+    column from the sketch UDF (`_band_keys`, one numpy fold per batch),
+    so both sides of the self-join only posexplode a stored array: no
+    Python and no per-row hash expression, and the UDF runs once per doc
+    however many times the entries are read. At the shipped shape (r = 2)
+    a key is the band's exact slot values, so equal keys are equal bands;
+    for r > 2 a key collision only widens the candidate set."""
+    band_entries = rows.select(
+        id_col, F.posexplode(keys).alias("band_idx", "band_key"))
     a = band_entries.alias("a")
     b = band_entries.alias("b")
     return (
         a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
                & (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id1"),
-                F.col("b.doc_id").alias("id2"))
+               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .select(F.col(f"a.{id_col}").alias("id1"),
+                F.col(f"b.{id_col}").alias("id2"))
         .dropDuplicates(["id1", "id2"])
     )
 
@@ -334,13 +339,14 @@ def minhash_band_candidates(docs: DataFrame, n: int = 3, k: int = MINHASH_K,
     # runs 4 times per doc (tests/test_dedup_similarity.py::
     # test_minhash_lsh_pairs_shingles_each_doc_once)
     with _pinned_sketches(docs, n, k, bands, "bk") as keys:
-        return _band_candidates(keys).localCheckpoint(eager=True)
+        return band_candidate_pairs(keys, "doc_id", "bk").localCheckpoint(
+            eager=True)
 
 
 def _verified_pairs(sk: DataFrame, threshold: float) -> DataFrame:
     """`minhash_lsh_pairs`' result, lazy over the pinned (doc_id, bk, sh)
     relation `sk`: the caller materializes it while the pin lives."""
-    cands = _band_candidates(sk)
+    cands = band_candidate_pairs(sk, "doc_id", "bk")
     s1 = sk.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
     s2 = sk.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     common = F.size(F.array_intersect("sh1", "sh2"))

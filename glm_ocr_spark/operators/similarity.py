@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from glm_ocr_spark.operators.dedup import band_candidate_pairs
+
 EMB_DIM = 64
 # DEMO-regime band parameters (weak threshold t=0.5): kept as defaults for
 # the low-level band primitives so the bench can measure the weak regime's
@@ -391,19 +393,7 @@ def neardup_band_candidates(emb: DataFrame,
     ratio — the number that decides whether a threshold regime prunes or
     degenerates to all-pairs at scale."""
     buckets = band_buckets_udf(bands, planes_per_band)
-    entries = emb.select(
-        "vec_id",
-        F.posexplode(buckets(F.col("embedding"))).alias("band_idx", "bucket"),
-    )
-    a = entries.alias("a")
-    b = entries.alias("b")
-    return (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
+    return band_candidate_pairs(emb, "vec_id", buckets(F.col("embedding")))
 
 
 def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.9,

@@ -364,7 +364,6 @@ def run_with_snapshots(
     n_buckets: int = 16,
     input_snapshot: str = "v1",
     buckets_per_commit: int | None = None,
-    fail_before_commit_n: int | None = None,
     mode: str = "layout",
     config=None,
 ) -> dict:
@@ -378,9 +377,7 @@ def run_with_snapshots(
     in one SnapshotStore.commit — output data and state become visible in
     the same atomic step (SURVEY §7.3.5). A killed run resumes having lost
     at most one uncommitted batch. A rerun with a different `n_buckets`
-    than the table's raises before any Spark work. `fail_before_commit_n`
-    crashes after the Nth batch's data files are staged but BEFORE its
-    commit: the atomicity test — those files must stay invisible.
+    than the table's raises before any Spark work.
     """
     from glm_ocr_spark.pipeline import extract_transcripts
 
@@ -400,9 +397,6 @@ def run_with_snapshots(
         (extract_transcripts(part, passthrough=("bucket",), mode=mode,
                              config=config)
          .write.mode("overwrite").partitionBy("bucket").parquet(staged))
-        if fail_before_commit_n is not None and \
-                commits + 1 >= fail_before_commit_n:
-            raise RuntimeError("injected crash before snapshot commit")
         entries = {}
         for b in batch:
             bdir = os.path.join(staged, f"bucket={b}")
@@ -428,7 +422,6 @@ def merge_upsert(
     key_cols: list[str],
     n_buckets: int | None = None,
     input_snapshot: str = "v1",
-    fail_before_commit: bool = False,
 ) -> dict:
     """MERGE INTO the snapshot table: matched keys are replaced by their
     update row, unmatched keys are inserted — Iceberg's copy-on-write
@@ -509,8 +502,6 @@ def merge_upsert(
 
     staged = store.staging_dir()
     (merged.write.mode("overwrite").partitionBy("bucket").parquet(staged))
-    if fail_before_commit:
-        raise RuntimeError("injected crash before merge commit")
     entries = {}
     rows_total = 0
     for b in touched:

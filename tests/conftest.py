@@ -1,4 +1,5 @@
 import contextlib
+from unittest import mock
 
 import pytest
 
@@ -37,3 +38,30 @@ def call_counter(spark):
             setattr(module, name, original)
 
     return counting
+
+
+
+@pytest.fixture
+def crash_on_commit():
+    """`with crash_on_commit(n):` — the nth `SnapshotStore.commit` call
+    inside the block, and every later one, raises before writing its
+    manifest: a crash after a batch's data files are staged, before they
+    are published."""
+    from glm_ocr_spark.snapshot import SnapshotStore
+
+    @contextlib.contextmanager
+    def crashing(n):
+        real = SnapshotStore.commit
+        calls = 0
+
+        def commit(self, *args, **kwargs):
+            nonlocal calls
+            calls += 1
+            if calls >= n:
+                raise RuntimeError("injected crash before snapshot commit")
+            return real(self, *args, **kwargs)
+
+        with mock.patch.object(SnapshotStore, "commit", commit):
+            yield
+
+    return crashing

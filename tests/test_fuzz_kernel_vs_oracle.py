@@ -35,6 +35,15 @@ coord = st.one_of(
 )
 
 
+def attr_value(draw, value):
+    """`value`, or `value` with a '>' or a stray '"' drawn into it: the
+    block regex must carve such attributes exactly as the oracle's does."""
+    if draw(st.integers(0, 4)):
+        return value
+    at = draw(st.integers(0, len(value)))
+    return value[:at] + draw(st.sampled_from(['>', '"'])) + value[at:]
+
+
 @st.composite
 def annotated_block(draw):
     label = draw(st.sampled_from(LABELS))
@@ -47,17 +56,28 @@ def annotated_block(draw):
     bbox = ",".join(str(draw(coord)) for _ in range(n_coords))
     order = draw(st.one_of(st.none(), st.integers(-5, 50), st.just("x")))
     content = draw(text_fragment)
-    attrs = f'label="{label}" score="{score}" bbox="{bbox}"'
+    attrs = [("label", label), ("score", score), ("bbox", bbox)]
     if order is not None:
-        attrs += f' order="{order}"'
-    return f"<block {attrs}>{content}</block>"
+        attrs.append(("order", order))
+    if draw(st.integers(0, 3)) == 0:
+        attrs.append((draw(st.sampled_from(["id", "class", "label"])),
+                      draw(text_fragment)))
+    if draw(st.integers(0, 3)) == 0:
+        attrs = draw(st.permutations(attrs))
+    attr_s = " ".join(f'{k}="{attr_value(draw, str(v))}"' for k, v in attrs)
+    space = draw(st.sampled_from([" ", "  ", "\t", "\n", " \n "]))
+    close = "" if draw(st.integers(0, 9)) == 0 else "</block>"
+    return f"<block{space}{attr_s}>{content}{close}"
 
 
 @st.composite
 def payload(draw):
     kind = draw(st.integers(0, 2))
-    if kind == 0:  # annotated soup
-        blocks = draw(st.lists(annotated_block(), max_size=8))
+    if kind == 0:  # annotated soup, maybe with <blockquote> among the blocks
+        blocks = draw(st.lists(st.one_of(
+            annotated_block(),
+            text_fragment.map(lambda t: f"<blockquote>{t}</blockquote>"),
+        ), max_size=8))
         page = draw(st.one_of(st.just(""), st.just('<page w="800" h="1200"/>')))
         return page + "\n".join(blocks)
     if kind == 1:  # plain-DOM soup

@@ -50,14 +50,15 @@ def test_full_run_and_state(spark, small_transcripts, tmp_path):
     assert all(r["completed_at"] is not None for r in state)
 
 
-def test_crash_before_commit_is_invisible(spark, small_transcripts, tmp_path):
+def test_crash_before_commit_is_invisible(spark, small_transcripts, tmp_path,
+                                          crash_on_commit):
     """Data files staged but not committed must not be readable — the
     atomic multi-table guarantee (no output without watermark)."""
     root = str(tmp_path / "cat")
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with pytest.raises(RuntimeError, match="injected crash"), \
+            crash_on_commit(2):
         run_with_snapshots(spark, small_transcripts, root,
-                           n_buckets=N_BUCKETS, buckets_per_commit=3,
-                           fail_before_commit_n=2)
+                           n_buckets=N_BUCKETS, buckets_per_commit=3)
     store = SnapshotStore(root)
     # exactly one commit (3 buckets) landed; the staged 4th-6th bucket files
     # exist on disk but are orphans
@@ -138,15 +139,15 @@ def test_cas_retry_merges_over_interloper(tmp_path):
     assert m["parent"] == 1
 
 
-def test_expire_snapshots_gc(spark, small_transcripts, tmp_path):
+def test_expire_snapshots_gc(spark, small_transcripts, tmp_path,
+                             crash_on_commit):
     """Expiry drops old manifests + unreferenced data files; the kept
     snapshot stays fully readable (its file list is untouched)."""
     root = str(tmp_path / "cat")
     # crash leaves an orphaned staging attempt, then a full run commits all
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError), crash_on_commit(2):
         run_with_snapshots(spark, small_transcripts, root,
-                           n_buckets=N_BUCKETS, buckets_per_commit=3,
-                           fail_before_commit_n=2)
+                           n_buckets=N_BUCKETS, buckets_per_commit=3)
     run_with_snapshots(spark, small_transcripts, root, n_buckets=N_BUCKETS)
     store = SnapshotStore(root)
     cur = store.current_id()
@@ -262,7 +263,7 @@ def test_merge_upsert_update_insert_and_cow(spark, small_transcripts,
 
 
 def test_merge_upsert_crash_is_invisible(spark, small_transcripts,
-                                         tmp_path):
+                                         tmp_path, crash_on_commit):
     import pyspark.sql.functions as F
 
     from glm_ocr_spark.snapshot import merge_upsert
@@ -274,9 +275,10 @@ def test_merge_upsert_crash_is_invisible(spark, small_transcripts,
     pre_sid = store.current_id()
     updates = (store.read_output(spark).limit(3).drop("bucket")
                .withColumn("extracted_text", F.lit("LOST")))
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with pytest.raises(RuntimeError, match="injected crash"), \
+            crash_on_commit(1):
         merge_upsert(spark, store, updates, ["conv_id", "turn_idx"],
-                     n_buckets=N_BUCKETS, fail_before_commit=True)
+                     n_buckets=N_BUCKETS)
     assert store.current_id() == pre_sid
     assert _logical(spark, store) == before
 

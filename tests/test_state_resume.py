@@ -30,7 +30,8 @@ def _collect_output(spark, root):
     )
 
 
-def test_kill_and_resume_identical_output(spark, small_transcripts, tmp_path):
+def test_kill_and_resume_identical_output(spark, small_transcripts, tmp_path,
+                                          crash_on_commit):
     cat_a = str(tmp_path / "cat_single")
     cat_b = str(tmp_path / "cat_resumed")
 
@@ -40,10 +41,10 @@ def test_kill_and_resume_identical_output(spark, small_transcripts, tmp_path):
     assert m["processed_buckets"] == N_BUCKETS
 
     # killed run: one bucket per commit, crash before the 4th commit
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with pytest.raises(RuntimeError, match="injected crash"), \
+            crash_on_commit(4):
         run_with_snapshots(spark, small_transcripts, cat_b,
-                           n_buckets=N_BUCKETS, buckets_per_commit=1,
-                           fail_before_commit_n=4)
+                           n_buckets=N_BUCKETS, buckets_per_commit=1)
     done_after_kill = SnapshotStore(cat_b).completed_buckets("v1")
     assert len(done_after_kill) == 3
 
