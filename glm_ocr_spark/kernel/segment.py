@@ -172,9 +172,9 @@ def segment(payload: str):
     Annotated form takes precedence (any attribute layout); a page with one
     block missing its order has no model order at all (has_order False,
     order 0 everywhere -> XY-cut). A payload with no annotated blocks takes
-    the plain-DOM form. One pass over the payload either way: equivalence
-    with the oracle is enforced by the oracle gate plus
-    tests/test_fuzz_kernel_vs_oracle.py."""
+    the plain-DOM form. One `_BLOCK_RE` pass finds every annotated block,
+    whatever its attribute layout; equivalence with the oracle is enforced
+    by the oracle gate plus tests/test_fuzz_kernel_vs_oracle.py."""
     l2i = LABEL2ID
     text_id = l2i["text"]
     page_w, page_h = parse_page_size(payload)

@@ -40,7 +40,6 @@ def call_counter(spark):
     return counting
 
 
-
 @pytest.fixture
 def crash_on_commit():
     """`with crash_on_commit(n):` — the nth `SnapshotStore.commit` call

@@ -1,7 +1,7 @@
 """The benchmark's stage tracer (`perfbench/tracing.py`) wraps kernel stage
-functions by module attribute. A rename in the kernel would silently leave
-`--trace 1` counting nothing; this pins the names and the counters on five
-pages that cover every segmenter branch, no Spark needed."""
+functions by module attribute. A rename in the kernel would make
+`--trace 1` fail, or leave it counting nothing; this pins the names and the
+counters on five pages that cover every segmenter branch, no Spark needed."""
 
 import random
 
