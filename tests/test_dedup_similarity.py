@@ -287,10 +287,17 @@ def test_minhash_oracle_margin_no_borderline_pairs():
 
 def _round_loop(cap: int = 0):
     """Patch connected_components' driver-route cap: at 0 every non-empty
-    pair graph takes the Spark round loop (-1: the empty graph too)."""
+    pair graph takes the Spark star rounds (-1: the empty graph too)."""
     from glm_ocr_spark.operators import dedup
 
     return mock.patch.object(dedup, "CC_DRIVER_MAX_EDGES", cap)
+
+
+def _max_rounds(n: int):
+    """Patch connected_components' bound on star rounds."""
+    from glm_ocr_spark.operators import dedup
+
+    return mock.patch.object(dedup, "CC_MAX_ROUNDS", n)
 
 
 def _reference_components(edges) -> dict:
@@ -315,9 +322,7 @@ def _reference_components(edges) -> dict:
 def _graph_families(path_len: int = 12, cycle_len: int = 16) -> list:
     """Edge lists in disjoint id ranges: a shuffled-id path, a star whose
     centre is not its minimum, a shuffled cycle, self-loops, duplicate and
-    reversed edges, and a random graph. The default lengths keep the
-    round loop under max_iter: its rounds grow with a shuffled path's
-    length (about 68 for 300 nodes), where union-find's do not."""
+    reversed edges, and a random graph."""
     import random
 
     rng = random.Random(7)
@@ -348,11 +353,10 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_long_path_converges(spark):
-    """On the round loop (cap 0: only that route iterates), a 300-node
-    ordered-id path (diameter 300) must converge within the default max_iter=25 —
-    evidence the path-halving jump delivers the O(log d)
-    round bound (plain neighbor-min would need ~300 rounds and, per
-    round-2 advice, used to return silently wrong labels at the cap)."""
+    """On the star rounds (cap 0: only that route iterates), a 300-node
+    ordered-id path (diameter 300) converges within `CC_MAX_ROUNDS`:
+    the rounds grow with the log of the diameter (plain neighbour-min
+    would need ~300 rounds)."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     n = 300
@@ -365,61 +369,96 @@ def test_connected_components_long_path_converges(spark):
 
 
 def test_connected_components_raises_at_cap(spark):
-    """On the round loop, exhausting max_iter with labels still moving
-    raises instead of returning non-converged components."""
-    import pytest
-
+    """On the star rounds, exhausting `CC_MAX_ROUNDS` with edges still
+    off a star raises instead of returning non-converged components."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id1 long, id2 long")
-    with _round_loop(), pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=2)
+    with _round_loop(), _max_rounds(2), \
+            pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs)
 
 
 def test_connected_components_disjoint_pairs_converge_in_one_round(spark):
-    """Seeded with min(node, min neighbour), a graph of disjoint pairs has
-    its final labels before the round loop's round 1, which only confirms
-    nothing moves."""
+    """A graph of disjoint pairs is already a set of stars, so the first
+    count of edges off a star reads 0 and no star round runs."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(2 * i + 1, 2 * i) for i in range(50)], "id1 long, id2 long")
-    with _round_loop():
+    with _round_loop(), _max_rounds(0):
         got = {r["doc_id"]: r["component_id"]
-               for r in connected_components(pairs, max_iter=1).collect()}
+               for r in connected_components(pairs).collect()}
     assert got == {i: i - i % 2 for i in range(100)}
 
 
-@pytest.mark.parametrize("id_type", ["int", "bigint"])
-def test_connected_components_routes_match_reference(spark, id_type):
-    """Both routes — driver union-find under the cap, the Spark round loop
-    at cap 0 — label every family exactly as a BFS reference does, and
-    keep the id column's type."""
+def test_connected_components_star_on_its_maximum(spark):
+    """A star centred on its maximum id is not yet a star of the star
+    rounds (its centre has many lower neighbours), though no edge breaks
+    the down-row test: its first count must see it and run a round."""
+    from glm_ocr_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(10, i) for i in range(10)] + [(21, 20)], "id1 long, id2 long")
+    with _round_loop():
+        got = {r["doc_id"]: r["component_id"]
+               for r in connected_components(pairs).collect()}
+    assert got == {**{i: 0 for i in range(11)}, 20: 20, 21: 20}
+
+
+@pytest.mark.parametrize("id_type,sizes", [
+    ("int", {}), ("bigint", {}),
+    ("int", {"path_len": 1000, "cycle_len": 300}),
+    ("bigint", {"path_len": 1000, "cycle_len": 300}),
+], ids=["int", "bigint", "int-path1000", "bigint-path1000"])
+def test_connected_components_routes_match_reference(spark, id_type, sizes):
+    """Both routes — driver union-find under the cap, the Spark star
+    rounds at cap 0 — label every family exactly as a BFS reference does,
+    and keep the id column's type. A 1000-node shuffled-id path converges
+    in a few star rounds, none of whose checkpointed plans holds a join,
+    and the result's size estimate stays bounded (joins multiplied it
+    round after round until the driver ran out of heap)."""
     from glm_ocr_spark.operators import dedup
 
-    edges = _graph_families()
+    edges = _graph_families(**sizes)
     pairs = spark.createDataFrame(edges, f"id1 {id_type}, id2 {id_type}")
     want = _reference_components(edges)
+    plans = []
+    cls = type(pairs)
+
+    def recording(name):
+        original = getattr(cls, name)
+
+        def ckpt(df, eager=True):
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+            return original(df, eager)
+        return mock.patch.object(cls, name, ckpt)
+
     for cap in (dedup.CC_DRIVER_MAX_EDGES, 0):
-        with _round_loop(cap):
+        with _round_loop(cap), recording("checkpoint"), \
+                recording("localCheckpoint"):
             comp = dedup.connected_components(pairs)
             got = {r["doc_id"]: r["component_id"] for r in comp.collect()}
         assert got == want, cap
         assert [(f.name, f.dataType.simpleString()) for f in comp.schema] \
             == [("doc_id", id_type), ("component_id", id_type)], cap
+    assert len(plans) > 2 and not any("Join" in p for p in plans)
+    stats = comp._jdf.queryExecution().optimizedPlan().stats()
+    assert stats.sizeInBytes().bit_length() < 128
 
 
 def test_connected_components_driver_route_any_diameter(spark):
     """Under the cap, a 300-node shuffled-id path and a 60-node shuffled
-    cycle label in one pass: union-find's cost does not depend on the
-    diameter (the round loop needs about 68 rounds for such a path)."""
+    cycle label in one pass with no star round: union-find's cost does
+    not depend on the diameter."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     edges = _graph_families(path_len=300, cycle_len=60)
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
-    got = {r["doc_id"]: r["component_id"]
-           for r in connected_components(pairs, max_iter=1).collect()}
+    with _max_rounds(0):
+        got = {r["doc_id"]: r["component_id"]
+               for r in connected_components(pairs).collect()}
     assert got == _reference_components(edges)
 
 
@@ -447,7 +486,7 @@ def test_connected_components_empty_graph(spark):
 
 def test_dedup_keep_first_same_survivors_on_both_routes(spark):
     """SF1 survivors are identical with the components on the driver and
-    on the Spark round loop, and equal the reference built from the
+    on the Spark star rounds, and equal the reference built from the
     verified pairs."""
     from glm_ocr_spark.operators import dedup
 
@@ -791,19 +830,22 @@ def test_ann_ivf_planted_neighbors_equal_brute_force(spark):
 
 
 def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
-    """Round-5 verdict ask #3: reliable=True (checkpoint() into a set
-    checkpoint dir) must converge to identical labels as the default
-    localCheckpoint path on the round loop."""
+    """With a checkpoint dir set, the star rounds checkpoint reliably
+    into it (files appear under the dir) and converge to the labels of
+    the localCheckpoint rounds. The dir stays set for the rest of the
+    Spark session, so later callers checkpoint reliably too."""
     from glm_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9), (10, 11), (11, 12), (12, 13)],
         ["id1", "id2"])
+    ckpt_dir = tmp_path / "ckpt"
     with _round_loop():
         base = {(r["doc_id"], r["component_id"])
                 for r in connected_components(pairs).collect()}
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        spark.sparkContext.setCheckpointDir(str(ckpt_dir))
         rel = {(r["doc_id"], r["component_id"])
-               for r in connected_components(pairs, reliable=True).collect()}
+               for r in connected_components(pairs).collect()}
     assert rel == base
     assert (3, 1) in base and (13, 10) in base
+    assert any(p.is_file() for p in ckpt_dir.rglob("*"))

@@ -83,6 +83,37 @@ def test_feature_gate_stub_path_without_pil(spark):
             assert len(r["feature"]) == 8
 
 
+def test_read_binary_documents_feeds_media_features(spark, tmp_path):
+    """S1 for raw files: the binaryFile scan yields (media_id, payload,
+    mime, path, byte_len) with the bytes intact and media_id =
+    xxhash64(path), and extract_media_features takes the frame as is and
+    sniffs the PNG magic."""
+    from pyspark.sql import functions as F
+
+    from glm_ocr_spark.operators.multimodal import extract_media_features
+    from glm_ocr_spark.sources import read_binary_documents
+
+    files = {"page.png": b"\x89PNG\r\n\x1a\n" + bytes(range(40)),
+             "note.txt": b"plain text, no magic"}
+    for name, data in files.items():
+        (tmp_path / name).write_bytes(data)
+    docs = read_binary_documents(spark, str(tmp_path / "*"))
+    assert [(f.name, f.dataType.simpleString()) for f in docs.schema] == [
+        ("media_id", "bigint"), ("payload", "binary"), ("mime", "string"),
+        ("path", "string"), ("byte_len", "bigint")]
+    rows = {r["path"].rsplit("/", 1)[-1]: r for r in docs.collect()}
+    assert set(rows) == set(files)
+    for name, data in files.items():
+        r = rows[name]
+        assert bytes(r["payload"]) == data and r["byte_len"] == len(data)
+        want_id = spark.range(1).select(F.xxhash64(F.lit(r["path"]))).head()[0]
+        assert r["media_id"] == want_id
+    feats = {r["media_id"]: r["mime"]
+             for r in extract_media_features(docs).collect()}
+    assert feats == {rows["page.png"]["media_id"]: "image/png",
+                     rows["note.txt"]["media_id"]: "application/octet-stream"}
+
+
 def test_feature_gate_real_decode_with_pil(spark):
     """With PIL installed the gate flips: a real PNG fixture comes back
     with its true pixel dimensions (round-3 verdict ask #6). Skipped in
