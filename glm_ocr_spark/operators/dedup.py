@@ -403,20 +403,20 @@ CC_DRIVER_MAX_EDGES = 1 << 19
 CC_MAX_ROUNDS = 25
 
 
-def _union_find(h: list, l: list) -> dict:
-    """node -> min node of its component over the edges (h[i], l[i]).
+def _union_find(hi: list, lo: list) -> dict:
+    """node -> min node of its component over the edges (hi[i], lo[i]).
     Union-find with path halving where the smaller root wins, so every
     root is its component's minimum id; the cost does not depend on the
     graph's diameter."""
-    parent = dict(zip(h, h))
-    parent.update(zip(l, l))
+    parent = dict(zip(hi, hi))
+    parent.update(zip(lo, lo))
 
     def find(x):
         while (p := parent[x]) != x:
             parent[x] = x = parent[p]  # halve the path as it is walked
         return x
 
-    for x, y in zip(h, l):
+    for x, y in zip(hi, lo):
         rx, ry = find(x), find(y)
         if rx < ry:
             parent[ry] = rx
@@ -444,8 +444,8 @@ def connected_components(pairs: DataFrame) -> DataFrame:
       in practice for any id order, and plan size estimates that add up
       per round instead of multiplying. The keyed relation is checkpointed
       lazily and the count of its rows off a star materializes it: one
-      job per round. At 0 the labels are read from its checkpointed
-      blocks.
+      job per round. When that count is 0, the labels are read from the
+      checkpointed blocks.
 
     Checkpoints are reliable `checkpoint()` when the SparkContext has a
     checkpoint dir (they survive executor loss, at a file-system write
