@@ -24,9 +24,9 @@ Environment variables (each overrides the YAML value)::
     GLMOCR_SPARK_UNCLIP_RATIO=1.2,1.1
     GLMOCR_SPARK_MODE=ocr_only
 
-A ``.env`` file (KEY=VALUE lines, # comments) is read first and fills ONLY
-unset process env vars, exactly like python-dotenv's default no-override
-behavior.
+A ``.env`` file is read with python-dotenv (quotes, inline comments and
+``export`` prefixes as it parses them) and fills ONLY unset process env
+vars, like python-dotenv's default no-override behavior.
 """
 
 from __future__ import annotations
@@ -37,21 +37,6 @@ from typing import Any
 ENV_PREFIX = "GLMOCR_SPARK_"
 
 _ENV_KEYS = ("score_threshold", "nms_enabled", "unclip_ratio", "mode")
-
-
-def _parse_dotenv(path: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    try:
-        with open(path, encoding="utf-8") as f:
-            for line in f:
-                line = line.strip()
-                if not line or line.startswith("#") or "=" not in line:
-                    continue
-                k, _, v = line.partition("=")
-                out[k.strip()] = v.strip().strip("'\"")
-    except OSError:
-        pass
-    return out
 
 
 def _coerce_bool(v: str) -> bool:
@@ -113,9 +98,12 @@ def load_config(config_path: str | None = None,
         data.update(loaded.get("extract") or {})
 
     # 2. <- .env (fills only unset process env) then process env
+    from dotenv import dotenv_values
+
     environ = dict(env if env is not None else os.environ)
-    for k, v in _parse_dotenv(dotenv_path).items():
-        environ.setdefault(k, v)
+    for k, v in dotenv_values(dotenv_path).items():
+        if v is not None:  # a bare `KEY` line sets nothing
+            environ.setdefault(k, v)
     for key in _ENV_KEYS:
         ev = environ.get(ENV_PREFIX + key.upper())
         if ev is not None:

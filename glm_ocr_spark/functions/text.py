@@ -1,8 +1,13 @@
-"""Column-expression versions of the T-ops (SURVEY.md §2.7).
+"""Column-expression T-ops (SURVEY.md §2.7) and the ordered group concat.
 
-The kernel implements T1-T8 in Python for the per-turn pandas path; these
-are the same semantics as reusable Catalyst column expressions for
-relational pipelines (whole-stage codegen, no Python). Where Java regex
+The kernel implements T1-T8 in Python for the per-turn path. These are the
+relational spellings that the relational slices (`operators.relational`)
+and their DuckDB oracles mirror: Catalyst column expressions (whole-stage
+codegen, no Python), one definition each. They do not carry the kernel's
+semantics: T5 strips leading `#-*` markers before prefixing (`'- Intro'`
+-> `'# Intro'`, where the kernel gives `'# - Intro'`), and T7 leaves an
+enumeration without a space alone (`'1.item'` stays, where the kernel
+gives `'1. item'`). Where Java regex
 backreferences would be needed (`(\\.)\\1{2,}`), the pattern is rewritten
 backreference-free (`\\.{4,}`) with identical output.
 """
@@ -50,6 +55,19 @@ def enum_normalize_col(c: Column) -> Column:
     c = F.regexp_replace(c, r"^\*\s+", "- ")
     c = F.regexp_replace(c, r"^\((\d+)\)\s*", r"($1) ")
     return c
+
+
+def ordered_join_col(key: str, value: str, sep: str,
+                     keep: Column | None = None) -> Column:
+    """A5 (aggregate): the group's `value`s joined with `sep` in ascending
+    `key` order (result_formatter.py:206-210). Rows where `keep` is not
+    true are left out, leaving no separator; null values are skipped by
+    `array_join`."""
+    s = F.struct(key, value)
+    if keep is not None:
+        s = F.when(keep, s)
+    return F.array_join(
+        F.transform(F.array_sort(F.collect_list(s)), lambda x: x[value]), sep)
 
 
 def map_label_col(c: Column) -> Column:

@@ -27,7 +27,6 @@ from glm_ocr_spark.config import (
     LABEL_TO_TASK,
     LAYOUT_MERGE_BBOXES_MODE,
     LAYOUT_UNCLIP_RATIO,
-    PRESERVE_CLASS_IDS,
     SCORE_THRESHOLD,
     SCORE_THRESHOLD_BY_CLASS,
 )
@@ -68,15 +67,14 @@ class ExtractConfig:
     inside the UDF closure; defaults reproduce GLM-OCR's shipped config."""
 
     __slots__ = ("score_threshold", "score_threshold_by_class", "nms_enabled",
-                 "unclip_ratio", "merge_modes", "preserve_ids",
-                 "merge_large_ids", "merge_small_ids")
+                 "unclip_ratio", "merge_modes", "merge_large_ids",
+                 "merge_small_ids")
 
     def __init__(self, score_threshold: float = SCORE_THRESHOLD,
                  score_threshold_by_class: dict[int, float] | None = None,
                  nms_enabled: bool = True,
                  unclip_ratio: tuple[float, float] = LAYOUT_UNCLIP_RATIO,
-                 merge_modes: dict[int, str] | None = None,
-                 preserve_ids: frozenset[int] = PRESERVE_CLASS_IDS):
+                 merge_modes: dict[int, str] | None = None):
         self.score_threshold = score_threshold
         self.score_threshold_by_class = (
             dict(SCORE_THRESHOLD_BY_CLASS) if score_threshold_by_class is None
@@ -85,7 +83,6 @@ class ExtractConfig:
         self.unclip_ratio = unclip_ratio
         self.merge_modes = (dict(LAYOUT_MERGE_BBOXES_MODE) if merge_modes is None
                             else merge_modes)
-        self.preserve_ids = preserve_ids
         # derived once: geometry_py.survivors_small consumes these instead
         # of re-deriving the large/small class sets per page
         self.merge_large_ids = frozenset(

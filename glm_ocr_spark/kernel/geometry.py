@@ -21,6 +21,7 @@ from glm_ocr_spark.config import (
     NMS_IOU_SAME,
     OVERSIZE_AREA_THRESHOLD_LANDSCAPE,
     OVERSIZE_AREA_THRESHOLD_PORTRAIT,
+    PRESERVE_CLASS_IDS,
 )
 # called through this module's global: the stage tracer wraps it by name
 from glm_ocr_spark.kernel.geometry_py import xy_cut_order
@@ -238,7 +239,7 @@ def survivors_numpy(rows: list[tuple], spans: list, config,
     if config.nms_enabled:
         take(nms(arr))
     take(filter_oversized_images(arr, image_cls_id, page_w, page_h))
-    take(apply_merge_modes(arr, config.merge_modes, config.preserve_ids))
+    take(apply_merge_modes(arr, config.merge_modes, PRESERVE_CLASS_IDS))
     if len(arr) == 0:
         return []
     if has_order:

@@ -22,6 +22,7 @@ from glm_ocr_spark.config import (
     NMS_IOU_SAME,
     OVERSIZE_AREA_THRESHOLD_LANDSCAPE,
     OVERSIZE_AREA_THRESHOLD_PORTRAIT,
+    PRESERVE_CLASS_IDS,
 )
 
 SMALL_N = 64
@@ -130,7 +131,7 @@ def survivors_small(rows: list[tuple], spans: list, config,
     # just large-pass survivors) ----
     m = len(idx)
     if m > 1:  # a single box can neither contain nor be contained
-        preserve_ids = config.preserve_ids
+        preserve_ids = PRESERVE_CLASS_IDS
         # membership checks drop the int() casts — float cls ids
         # hash/compare equal to their int values
         large = config.merge_large_ids

@@ -2,9 +2,11 @@
 before it (per key). Spark lacks a native ASOF JOIN (DuckDB/kdb/Pandas have
 one); the scalable formulation is the union-sort-window trick:
 
-  1. tag left(1) and right(0) rows, union on (key, ts, tag);
-  2. one window per key ordered by (ts, tag): last non-null right payload
-     at or before each row = the as-of match;
+  1. tag left(1) and right(0) rows, union on (key, ts, tag); each right
+     row carries its values as one struct, NULL on left rows;
+  2. one window per key ordered by (ts, tag): the last non-null struct at
+     or before each row = the as-of match, whole (a NULL value in it stays
+     NULL rather than falling back to an older row's value);
   3. keep left rows.
 
 One shuffle on the key (the same partitioning both inputs would need
@@ -77,19 +79,15 @@ def asof_join(left: DataFrame, right: DataFrame, on: str, by: str,
         value_cols = [c for c in right.columns if c not in (on, by)]
 
     lhs = left.withColumn("_tag", F.lit(1))
-    for c in value_cols:
-        lhs = lhs.withColumn(f"{c}{suffix}", F.lit(None).cast(right.schema[c].dataType))
     rhs = right.select(
         F.col(by),
         F.col(on),
         F.lit(0).alias("_tag"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+        F.struct(*[F.col(c).alias(f"{c}{suffix}") for c in value_cols])
+        .alias("_r"),
     )
-    for c in left.columns:
-        if c not in (on, by):
-            rhs = rhs.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-
-    unioned = lhs.unionByName(rhs.select(lhs.columns))
+    # the columns one side lacks (left payload, `_r`) are NULL on its rows
+    unioned = lhs.unionByName(rhs, allowMissingColumns=True)
     # right rows sort before left rows at equal `on` (tag 0 < 1), so an
     # exactly-simultaneous right row IS visible to the left row (<= match)
     w = (
@@ -97,12 +95,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: str, by: str,
         .orderBy(F.col(on).asc(), F.col("_tag").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    filled = unioned.select(
-        *[c for c in left.columns],
-        "_tag",
-        *[
-            F.last(f"{c}{suffix}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
-            for c in value_cols
-        ],
+    return (
+        unioned.withColumn("_r", F.last("_r", ignorenulls=True).over(w))
+        .filter(F.col("_tag") == 1)
+        .select(*left.columns, "_r.*")
     )
-    return filled.filter(F.col("_tag") == 1).drop("_tag")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from glm_ocr_spark.operators.norm import norm_text_col, real_words_col
+from glm_ocr_spark.operators.norm import content_hash_col, real_words_col
 
 # ------------------------------------------------------------- PII scrubbing
 # Shared spec constants — the SQL oracles in __spark_entry__ must use the
@@ -233,8 +233,7 @@ def curation_pipeline(docs: DataFrame, benchmark_sources: list[str],
         base.join(overlap, "doc_id", "left")
         .filter(F.coalesce(F.col("n_overlap"), F.lit(0)) <= max_overlap)
     )
-    fp = decon.withColumn(
-        "fingerprint", F.md5(F.encode(norm_text_col(), "UTF-8")))
+    fp = decon.withColumn("fingerprint", content_hash_col())
     w_fp = Window.partitionBy("fingerprint").orderBy(F.asc("doc_id"))
     dedup = (
         fp.withColumn("rk", F.row_number().over(w_fp))

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 # ----------------------------------------------------------------- shingles
 
 from glm_ocr_spark.operators.norm import (  # noqa: E402 - shared norm spec
+    content_hash_col,
     norm_text_col,
     norm_text_py,
     real_words_col,
@@ -105,9 +106,8 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     Map-side partial agg then one shuffle on the 128-bit hash — the same
     plan shape at 500 rows and 10^11 rows.
     """
-    h = F.md5(F.encode(norm_text_col(), "UTF-8"))
     return (
-        docs.select(F.col("doc_id"), h.alias("content_hash"))
+        docs.select(F.col("doc_id"), content_hash_col().alias("content_hash"))
         .groupBy("content_hash")
         .agg(
             F.count("*").alias("n_copies"),

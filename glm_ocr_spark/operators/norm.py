@@ -34,6 +34,12 @@ def norm_text_col(col: str = "text") -> Column:
     return F.lower(F.regexp_replace(F.trim(F.col(col)), r"\s+", " "))
 
 
+def content_hash_col(col: str = "text") -> Column:
+    """md5 hex of the UTF-8 normalized text: the one content hash that
+    exact dedup, fingerprints, curation and streaming dedup agree on."""
+    return F.md5(F.encode(norm_text_col(col), "UTF-8"))
+
+
 def norm_words_col(col: str = "text") -> Column:
     """Normalized text split on single spaces — MAY contain empty tokens
     for text with leading/trailing non-space whitespace (see module

@@ -24,37 +24,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from glm_ocr_spark.functions.text import (
+    clean_punct_runs_col,
+    enum_normalize_col,
+    ordered_join_col,
+    title_format_col,
+)
+
 # ------------------------------------------------- extraction analogs (T ops)
 
 def t1_clean_punct_runs(docs: DataFrame) -> DataFrame:
-    """T1 punctuation-run collapse (result_formatter.py:228-231) as pure
-    regexp_replace chain — backreference-free so RE2 oracles can run it."""
-    c = F.col("text")
-    c = F.regexp_replace(c, r"\.{4,}", "...")
-    c = F.regexp_replace(c, "·{4,}", "···")
-    c = F.regexp_replace(c, "_{4,}", "___")
-    return docs.select("doc_id", c.alias("cleaned"))
+    """T1 punctuation-run collapse (`clean_punct_runs_col`)."""
+    return docs.select(
+        "doc_id", clean_punct_runs_col(F.col("text")).alias("cleaned"))
 
 
 def t5_title_format(docs: DataFrame) -> DataFrame:
-    """T5 title normalization (result_formatter.py:247-256): strip leading
-    #/- markers, prefix by class; class derived from source parity here."""
-    stripped = F.regexp_replace(F.col("text"), r"^[#\-\*\s]+", "")
-    is_doc_title = F.col("doc_id") % 2 == 0
-    return docs.select(
-        "doc_id",
-        F.when(is_doc_title, F.concat(F.lit("# "), stripped))
-        .otherwise(F.concat(F.lit("## "), stripped)).alias("title"),
-    )
+    """T5 title normalization (`title_format_col`); the class is derived
+    from doc_id parity here."""
+    return docs.select("doc_id", title_format_col(
+        F.col("text"), F.col("doc_id") % 2 == 0).alias("title"))
 
 
 def t7_enum_normalize(docs: DataFrame) -> DataFrame:
-    """T7 bullet/enumeration normalization (result_formatter.py:272-297)."""
-    c = F.trim(F.col("text"))
-    c = F.regexp_replace(c, r"^[·•]\s*", "- ")
-    c = F.regexp_replace(c, r"^\*\s+", "- ")
-    c = F.regexp_replace(c, r"^\((\d+)\)\s*", r"($1) ")
-    return docs.select("doc_id", c.alias("normalized"))
+    """T7 bullet/enumeration normalization (`enum_normalize_col`) of the
+    trimmed text."""
+    return docs.select(
+        "doc_id",
+        enum_normalize_col(F.trim(F.col("text"))).alias("normalized"))
 
 
 def f9_nonempty_filter(docs: DataFrame) -> DataFrame:
@@ -75,18 +72,12 @@ def o3_reindex(docs: DataFrame) -> DataFrame:
 
 def a5_concat_per_group(docs: DataFrame) -> DataFrame:
     """A5 markdown concatenation: ordered per-group join with '\\n\\n'
-    (result_formatter.py:206-210) via sorted collect_list."""
+    (`ordered_join_col`)."""
     return (
         docs.select("source", "doc_id", F.substring("text", 1, 30).alias("frag"))
         .groupBy("source")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("doc_id", "frag"))),
-                    lambda s: s["frag"],
-                ),
-                "\n\n",
-            ).alias("markdown"),
+            ordered_join_col("doc_id", "frag", "\n\n").alias("markdown"),
             F.count("*").alias("n_blocks"),
         )
     )

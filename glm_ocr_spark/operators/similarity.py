@@ -6,10 +6,10 @@ Two paths:
                        Python. Exact baseline; at 100 TB it's one scan +
                        a k-row takeOrdered — no shuffle of the vectors.
   lsh_bucketed_topk  — random-hyperplane LSH: deterministic pseudo-random
-                       hyperplanes, sign-bit bucket id computed map-side;
-                       margin-ordered multi-probe restricts the scan to the
-                       most promising buckets (partition-prunable if the
-                       table is written bucketed/partitioned by `bucket`).
+                       hyperplanes, sign-bit bucket id computed map-side
+                       (`band_buckets_udf`, one band); margin-ordered
+                       multi-probe restricts the scan to the most
+                       promising buckets.
                        On weak-similarity corpora (neighbors at cos ~0.3)
                        it needs a large probe set to reach usable recall —
                        ivf_topk is the recommended approximate path here.
@@ -63,29 +63,43 @@ def _norm(a):
     ))
 
 
-def cosine_sim_col(vec_col, query: list[float]):
-    q = F.array(*[F.lit(float(v)) for v in query])
+def _query_norm(query: list[float]) -> float:
+    """The query's L2 norm; a zero query has no cosine with anything, so it
+    is refused at plan build instead of dividing by zero in every task."""
     qn = sum(float(v) * float(v) for v in query) ** 0.5
+    if qn == 0:
+        raise ValueError("cosine similarity needs a non-zero query vector")
+    return qn
+
+
+def cosine_sim_col(vec_col, query: list[float]):
+    qn = _query_norm(query)
+    q = F.array(*[F.lit(float(v)) for v in query])
     return F.when(
         _norm(vec_col) > 0,
         _dot(vec_col, q) / (_norm(vec_col) * F.lit(qn)),
     ).otherwise(F.lit(0.0))
 
 
-def cosine_topk(emb: DataFrame, query: list[float], k: int = 10,
-                exclude_id: int | None = None) -> DataFrame:
-    """Exact top-k by cosine similarity (rounded to 6dp for stable compares).
-
-    orderBy+limit compiles to TakeOrderedAndProject — each partition keeps
-    only k rows, the driver merges; no full sort, no wide shuffle.
-    """
-    df = emb.select(
+def _topk(cand: DataFrame, query: list[float], k: int,
+          exclude_id: int | None = None) -> DataFrame:
+    """The top-k tail every search path shares: (vec_id, cos_sim) of the
+    `k` candidates most cosine-similar to the query, cos_sim rounded to 6dp
+    for stable compares, ties by ascending vec_id. orderBy+limit compiles
+    to TakeOrderedAndProject: each partition keeps only k rows and the
+    driver merges, so there is no full sort and no wide shuffle."""
+    if exclude_id is not None:
+        cand = cand.filter(F.col("vec_id") != exclude_id)
+    return cand.select(
         "vec_id",
         F.round(cosine_sim_col(F.col("embedding"), query), 6).alias("cos_sim"),
-    )
-    if exclude_id is not None:
-        df = df.filter(F.col("vec_id") != exclude_id)
-    return df.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
+    ).orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
+
+
+def cosine_topk(emb: DataFrame, query: list[float], k: int = 10,
+                exclude_id: int | None = None) -> DataFrame:
+    """Exact top-k by cosine similarity over every row."""
+    return _topk(emb, query, k, exclude_id)
 
 
 # ------------------------------------------------------------ LSH buckets
@@ -101,21 +115,6 @@ def _hyperplanes(n_planes: int, dim: int = EMB_DIM) -> list[list[float]]:
             row.append((state / float(1 << 63)) * 2.0 - 1.0)
         planes.append(row)
     return planes
-
-
-def bucket_col(vec_col, planes: list[list[float]]):
-    """Sign-bit bucket id from hyperplane dot products (pure column math)."""
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(v) for v in p])
-        bit = F.when(_dot(vec_col, plane) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
-
-
-def with_lsh_bucket(emb: DataFrame, n_planes: int = 8) -> DataFrame:
-    planes = _hyperplanes(n_planes)
-    return emb.withColumn("bucket", bucket_col(F.col("embedding"), planes))
 
 
 LSH_N_PROBES = 96
@@ -160,14 +159,11 @@ def lsh_bucketed_topk(emb: DataFrame, query: list[float], k: int = 10,
     recommended approximate path; this one is floor-tested at >= 0.5 on
     the same corpus + query the bench measures.
     """
-    planes = _hyperplanes(n_planes)
-    probes = multi_probe_buckets(query, planes, n_probes)
-    bucketed = with_lsh_bucket(emb, n_planes)
-    cand = bucketed.filter(F.col("bucket").isin(probes))
-    return cand.select(
-        "vec_id",
-        F.round(cosine_sim_col(F.col("embedding"), query), 6).alias("cos_sim"),
-    ).orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
+    probes = multi_probe_buckets(query, _hyperplanes(n_planes), n_probes)
+    # one band of all n_planes planes: the sign-bit bucket id of each row
+    bucket = F.element_at(
+        band_buckets_udf(1, n_planes)(F.col("embedding")), 1)
+    return _topk(emb.filter(bucket.isin(probes)), query, k)
 
 
 def band_buckets_udf(bands: int = NEARDUP_DEMO_BANDS,
@@ -177,8 +173,8 @@ def band_buckets_udf(bands: int = NEARDUP_DEMO_BANDS,
 
     One float64 matmul per Arrow batch against the deterministic hyperplane
     matrix — the whole multi-band signature costs one (n x dim) @ (dim x B*P)
-    product, map-side, no shuffle. Sign convention matches the JVM `_dot`
-    (>= 0 -> bit set)."""
+    product, map-side, no shuffle. A plane's bit is set when the dot
+    product is >= 0; plane j of band b is weighted 1 << j."""
     mat = np.array(_hyperplanes(bands * planes_per_band, dim),
                    dtype=np.float64).T  # (dim, bands*planes_per_band)
     weights = (1 << np.arange(planes_per_band)).astype(np.int64)
@@ -255,11 +251,10 @@ def train_ivf_centroids(emb: DataFrame, n_cells: int = IVF_CELLS,
 def _cell_argmax(emb_batch, cn: np.ndarray):
     """THE cell-assignment kernel: normalized rows x normalized-centroid
     matmul, argmax with ties to the lowest cell (np.argmax), zero vectors
-    guarded by treating their norm as 1. Single definition shared by
-    `ivf_cell_udf` and `ivf_cell_sim_udf` so the IVF index and semantic
-    dedup can never assign the same corpus to different cells (review
-    finding: the two UDFs used to duplicate this math). Returns
-    (cells int array, per-row similarity-to-every-cell matrix)."""
+    guarded by treating their norm as 1. It runs only inside
+    `ivf_cell_sim_udf`, so the IVF index and semantic dedup can never
+    assign the same corpus to different cells. Returns (cells int array,
+    per-row similarity-to-every-cell matrix)."""
     m = np.stack([np.asarray(v, dtype=np.float64) for v in emb_batch])
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
@@ -267,21 +262,31 @@ def _cell_argmax(emb_batch, cn: np.ndarray):
     return np.argmax(sims, axis=1), sims
 
 
-def ivf_cell_udf(centroids: np.ndarray):
-    """pandas UDF: embedding -> nearest-centroid cell id (cosine argmax).
-
-    One matmul per Arrow batch; map-side. Writing the table partitioned by
-    this column makes probe-time scans partition-prunable."""
+def ivf_cell_sim_udf(centroids: np.ndarray):
+    """pandas UDF: embedding -> struct(cell, cent_sim), where cell is the
+    nearest-centroid id (cosine argmax) and cent_sim the cosine to that
+    centroid. One `_cell_argmax` matmul per Arrow batch, map-side."""
     cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
-    @F.pandas_udf(T.IntegerType())
-    def _cell(emb: pd.Series) -> pd.Series:
+    @F.pandas_udf("cell int, cent_sim double")
+    def _cell_sim(emb: pd.Series) -> pd.DataFrame:
         if len(emb) == 0:
-            return pd.Series([], dtype="int32")
-        cells, _ = _cell_argmax(emb, cn)
-        return pd.Series(cells.astype(np.int32))
+            return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
+                                 "cent_sim": pd.Series([], dtype="float64")})
+        cells, sims = _cell_argmax(emb, cn)
+        return pd.DataFrame({
+            "cell": cells.astype(np.int32),
+            "cent_sim": sims[np.arange(len(cells)), cells]})
 
-    return _cell
+    return _cell_sim
+
+
+def ivf_cell_udf(centroids: np.ndarray):
+    """embedding column (or its name) -> nearest-centroid cell id: the
+    `cell` field of `ivf_cell_sim_udf`. Writing the table partitioned by
+    this column makes probe-time scans partition-prunable."""
+    cell_sim = ivf_cell_sim_udf(centroids)
+    return lambda emb: cell_sim(emb).getField("cell")
 
 
 def probe_cells(query: list[float], centroids: np.ndarray,
@@ -313,18 +318,14 @@ def ivf_topk(emb: DataFrame, query: list[float], k: int = 10,
     Cell assignment is one map-side matmul; with the table written
     partitionBy(cell), probing is partition-prunable.
     """
+    _query_norm(query)  # refuse a zero query before training centroids
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_cells)
     probes = probe_cells(query, centroids, nprobe)
     cell = ivf_cell_udf(centroids)
     cand = emb.withColumn("cell", cell(F.col("embedding"))).filter(
         F.col("cell").isin(probes))
-    if exclude_id is not None:
-        cand = cand.filter(F.col("vec_id") != exclude_id)
-    return cand.select(
-        "vec_id",
-        F.round(cosine_sim_col(F.col("embedding"), query), 6).alias("cos_sim"),
-    ).orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
+    return _topk(cand, query, k, exclude_id)
 
 
 def ivf_write_partitioned(emb: DataFrame, path: str,
@@ -350,12 +351,7 @@ def ivf_topk_partitioned(spark, path: str, query: list[float],
     post-scan filter."""
     probes = probe_cells(query, centroids, nprobe)
     cand = spark.read.parquet(path).filter(F.col("cell").isin(probes))
-    if exclude_id is not None:
-        cand = cand.filter(F.col("vec_id") != exclude_id)
-    return cand.select(
-        "vec_id",
-        F.round(cosine_sim_col(F.col("embedding"), query), 6).alias("cos_sim"),
-    ).orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
+    return _topk(cand, query, k, exclude_id)
 
 
 def neardup_params(threshold: float, target_miss: float = 0.005,
@@ -491,27 +487,6 @@ def fixed_centroids(emb: DataFrame, n_cells: int) -> np.ndarray:
     return _arrow_matrix(tbl.column("embedding"))
 
 
-def ivf_cell_sim_udf(centroids: np.ndarray):
-    """pandas UDF: embedding -> struct(cell, cent_sim) where cell is the
-    nearest-centroid id and cent_sim the cosine to that centroid — the
-    same `_cell_argmax` kernel as `ivf_cell_udf` (single definition, so
-    the two can never disagree), keeping the cent_sim that kernel already
-    computes. One matmul per Arrow batch, map-side."""
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    @F.pandas_udf("cell int, cent_sim double")
-    def _cell_sim(emb: pd.Series) -> pd.DataFrame:
-        if len(emb) == 0:
-            return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
-                                 "cent_sim": pd.Series([], dtype="float64")})
-        cells, sims = _cell_argmax(emb, cn)
-        return pd.DataFrame({
-            "cell": cells.astype(np.int32),
-            "cent_sim": sims[np.arange(len(cells)), cells]})
-
-    return _cell_sim
-
-
 def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.9,
                          n_cells: int = IVF_CELLS,
                          centroids: np.ndarray | None = None,
@@ -565,19 +540,13 @@ def _check_order(order: str) -> None:
 
 def _semdedup_assign(emb: DataFrame, centroids: np.ndarray,
                      order: str) -> DataFrame:
-    """(vec_id, embedding, cell, _ord): cell assignment + precedence key,
-    computed in ONE map-side pass. `order` is already validated."""
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    if order == "vec_id":
-        return (base.withColumn(
-            "cell", ivf_cell_udf(centroids)(F.col("embedding")))
-            .withColumn("_ord", F.col("vec_id")))
+    """(vec_id, embedding, cell, _ord): the cell assignment, one map-side
+    `ivf_cell_sim_udf` pass, shaped by `_assigned_with_ord` as a
+    pre-assigned table would be."""
     cs = ivf_cell_sim_udf(centroids)(F.col("embedding"))
-    return (base.withColumn("_cs", cs)
-            .select("vec_id", "embedding",
-                    F.col("_cs.cell").alias("cell"),
-                    F.col("_cs.cent_sim").alias("_ord")))
+    return _assigned_with_ord(
+        emb.select("vec_id", "embedding", cs.alias("_cs")).select(
+            "vec_id", "embedding", "_cs.*"), order)
 
 
 def _near_pairs(pdf, threshold: float, tile: int):

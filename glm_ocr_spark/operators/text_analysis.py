@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from glm_ocr_spark.operators.norm import (
-    norm_text_col,
+    content_hash_col,
     norm_text_py,
     real_words_col,
 )
@@ -95,10 +95,7 @@ def with_lang_id(docs: DataFrame) -> DataFrame:
 def with_fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized lowercase text
     (the content-hash half of the dedup family)."""
-    return docs.select(
-        "doc_id",
-        F.md5(F.encode(norm_text_col(), "UTF-8")).alias("fingerprint")
-    )
+    return docs.select("doc_id", content_hash_col().alias("fingerprint"))
 
 
 # BPE-style pre-tokenizer classes: letter runs, digit runs, single

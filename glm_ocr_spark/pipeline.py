@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from glm_ocr_spark.functions.text import ordered_join_col
 from glm_ocr_spark.kernel.extract import extract_turn
 from glm_ocr_spark.sources import read_transcripts
 
@@ -221,14 +222,8 @@ def ocr_only_conversation_markdown(extracted: DataFrame) -> DataFrame:
         extracted.groupBy("conv_id")
         .agg(
             F.count("*").alias("n_turns"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("turn_idx", "markdown"))),
-                    lambda s: s["markdown"],
-                ),
-                "\n\n---\n\n",
-            ).alias("conversation_markdown"),
+            ordered_join_col("turn_idx", "markdown", "\n\n---\n\n")
+            .alias("conversation_markdown"),
         )
     )
 
@@ -260,16 +255,8 @@ def conversation_rollup(extracted: DataFrame,
             F.count("*").alias("n_turns"),
             F.sum("n_blocks").alias("n_blocks_total"),
             F.count("markdown").alias("n_md"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("markdown").isNotNull(),
-                                   F.struct("turn_idx", "markdown")))),
-                    lambda s: s["markdown"],
-                ),
-                "\n\n",
-            ).alias("md"),
+            ordered_join_col("turn_idx", "markdown", "\n\n",
+                             keep=F.col("markdown").isNotNull()).alias("md"),
         )
     )
     return (
@@ -277,16 +264,8 @@ def conversation_rollup(extracted: DataFrame,
         .agg(
             F.sum("n_turns").alias("n_turns"),
             F.sum("n_blocks_total").alias("n_blocks_total"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("n_md") > 0,
-                                   F.struct("blk", "md")))),
-                    lambda s: s["md"],
-                ),
-                "\n\n",
-            ).alias("conversation_markdown"),
+            ordered_join_col("blk", "md", "\n\n", keep=F.col("n_md") > 0)
+            .alias("conversation_markdown"),
         )
     )
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from glm_ocr_spark.operators.norm import norm_text_col
+from glm_ocr_spark.operators.norm import content_hash_col
 from glm_ocr_spark.pipeline import extract_transcripts
 
 
@@ -96,12 +96,11 @@ def streaming_exact_dedup(transcripts: DataFrame,
     `dropDuplicatesWithinWatermark` keeps state only until the watermark
     passes a key's event time — bounded state at unbounded stream length,
     the streaming analog of the batch hash-groupBy dedup. Content hash is
-    the same md5(normalized text) used by `operators.dedup.exact_dedup`,
-    so batch and stream agree on what counts as a duplicate.
+    `norm.content_hash_col`, as in `operators.dedup.exact_dedup`, so batch
+    and stream agree on what counts as a duplicate.
     """
-    h = F.md5(F.encode(norm_text_col(), "UTF-8"))
     return (
-        transcripts.withColumn("content_hash", h)
+        transcripts.withColumn("content_hash", content_hash_col())
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["content_hash"])
     )

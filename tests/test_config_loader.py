@@ -52,14 +52,20 @@ def test_env_overrides_yaml(tmp_path):
 
 def test_dotenv_fills_only_unset(tmp_path):
     d = tmp_path / ".env"
-    d.write_text("GLMOCR_SPARK_SCORE_THRESHOLD=0.33\n"
-                 "GLMOCR_SPARK_MODE=ocr_only\n"
+    # parsed as python-dotenv parses it: inline comments, `export`
+    # prefixes and quoted values with spaces
+    d.write_text("GLMOCR_SPARK_SCORE_THRESHOLD=0.5  # tuned\n"
+                 "export GLMOCR_SPARK_MODE=ocr_only\n"
+                 'GLMOCR_SPARK_UNCLIP_RATIO="1.2, 1.1" # c\n'
                  "# comment line\n")
     cfg, job = load_config(
         dotenv_path=str(d),
         env={"GLMOCR_SPARK_MODE": "layout"})  # env wins over .env
-    assert cfg.score_threshold == 0.33       # from .env (unset in env)
+    assert cfg.score_threshold == 0.5        # from .env (unset in env)
+    assert cfg.unclip_ratio == (1.2, 1.1)
     assert job["mode"] == "layout"
+    _, job = load_config(dotenv_path=str(d), env={})
+    assert job["mode"] == "ocr_only"
 
 
 def test_kwargs_win(tmp_path):

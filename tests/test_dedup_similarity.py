@@ -713,6 +713,24 @@ def test_ann_ivf_recall_floor(spark):
     assert recall >= 0.7, recall
 
 
+def test_zero_query_refused_at_plan_build(spark):
+    """A zero query has no cosine with anything: the search raises
+    ValueError while the plan is built (ivf_topk before it trains
+    centroids), instead of the job dying on a division by zero."""
+    from glm_ocr_spark.operators import similarity
+
+    emb = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 0.0])],
+                                "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="non-zero query"):
+        similarity.cosine_topk(emb, [0.0, 0.0])
+    with mock.patch.object(similarity, "train_ivf_centroids") as train:
+        with pytest.raises(ValueError, match="non-zero query"):
+            similarity.ivf_topk(emb, [0.0, 0.0])
+    train.assert_not_called()
+    assert [tuple(r) for r in similarity.cosine_topk(
+        emb, [2.0, 0.0]).collect()] == [(0, 1.0), (1, 0.0)]
+
+
 # ------------------------------------------------------------------ winnowing
 
 def test_winnow_shared_substring_guarantee():
