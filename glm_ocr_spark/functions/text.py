@@ -7,9 +7,9 @@ codegen, no Python), one definition each. They do not carry the kernel's
 semantics: T5 strips leading `#-*` markers before prefixing (`'- Intro'`
 -> `'# Intro'`, where the kernel gives `'# - Intro'`), and T7 leaves an
 enumeration without a space alone (`'1.item'` stays, where the kernel
-gives `'1. item'`). Where Java regex
-backreferences would be needed (`(\\.)\\1{2,}`), the pattern is rewritten
-backreference-free (`\\.{4,}`) with identical output.
+gives `'1. item'`). Where Java regex backreferences would be needed
+(`(\\.)\\1{2,}`), the pattern is rewritten backreference-free (`\\.{4,}`)
+with identical output.
 """
 
 from __future__ import annotations

@@ -4,8 +4,9 @@ Two families:
 
 1. Extraction analogs over `documents`/`events` — the reference's T/F/O/J/A
    ops (SURVEY.md §2) re-expressed as Catalyst-native column expressions and
-   window functions, so the DuckDB oracle can verify the exact semantics the
-   pandas-UDF kernel implements (same regexes, same thresholds).
+   window functions that the DuckDB oracle verifies. The T-op columns are
+   `functions/text.py`'s relational spellings, which differ from the
+   kernel's on some inputs (see that module).
 
 2. Classic relational queries over the TPC-H-ish tables — aggregation, joins,
    windows, sessionization — demonstrating the shuffle-conscious plan shapes

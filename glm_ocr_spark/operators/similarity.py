@@ -159,10 +159,13 @@ def lsh_bucketed_topk(emb: DataFrame, query: list[float], k: int = 10,
     recommended approximate path; this one is floor-tested at >= 0.5 on
     the same corpus + query the bench measures.
     """
-    probes = multi_probe_buckets(query, _hyperplanes(n_planes), n_probes)
+    # planes as wide as the query, so embeddings of any width bucket (at
+    # the default width they are the EMB_DIM planes)
+    dim = len(query)
+    probes = multi_probe_buckets(query, _hyperplanes(n_planes, dim), n_probes)
     # one band of all n_planes planes: the sign-bit bucket id of each row
     bucket = F.element_at(
-        band_buckets_udf(1, n_planes)(F.col("embedding")), 1)
+        band_buckets_udf(1, n_planes, dim)(F.col("embedding")), 1)
     return _topk(emb.filter(bucket.isin(probes)), query, k)
 
 

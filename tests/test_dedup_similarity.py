@@ -703,6 +703,36 @@ def test_ann_lsh_recall_floor(spark):
     assert recall >= 0.5, recall
 
 
+def test_ann_lsh_scans_the_probed_buckets_any_width(spark):
+    """lsh_bucketed_topk is the exact top-k over the rows whose sign-bit
+    bucket (a numpy reference over planes as wide as the query) is probed,
+    also for embeddings narrower than EMB_DIM."""
+    from pyspark.sql import functions as F
+
+    from glm_ocr_spark.operators.similarity import (
+        _hyperplanes,
+        cosine_topk,
+        lsh_bucketed_topk,
+        multi_probe_buckets,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(60, 3)).astype(np.float32).astype(np.float64)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    q = [0.3, -1.0, 0.5]
+    planes = _hyperplanes(4, 3)
+    bucket = (vecs @ np.array(planes).T >= 0) @ (1 << np.arange(4))
+    probes = set(multi_probe_buckets(q, planes, 4))
+    scanned = [i for i in range(60) if bucket[i] in probes]
+    assert 5 < len(scanned) < 60
+    want = cosine_topk(emb.filter(F.col("vec_id").isin(scanned)), q, k=5)
+    got = lsh_bucketed_topk(emb, q, k=5, n_planes=4, n_probes=4)
+    assert [tuple(r) for r in got.collect()] == [
+        tuple(r) for r in want.collect()]
+
+
 def test_ann_ivf_recall_floor(spark):
     """IVF (128 cells, nprobe 32, ~25% scan) measures recall 0.8 on the
     bench corpus/query — floored at 0.7."""
