@@ -42,6 +42,7 @@ from glm_ocr_spark.operators.norm import (  # noqa: E402 - shared norm spec
     content_hash_col,
     norm_text_col,
     norm_text_py,
+    norm_words_col,
     real_words_col,
 )
 
@@ -60,7 +61,7 @@ def shingles_col(n: int = 3):
     Python `shingles_py` inside a pandas UDF instead (one regex pass/doc,
     ~50x here).
     """
-    words = F.split(norm_text_col(), " ")
+    words = norm_words_col()
     ngrams = F.transform(
         F.sequence(F.lit(0), F.size(words) - n),
         lambda i: F.concat_ws(

@@ -164,6 +164,7 @@ def lsh_bucketed_topk(emb: DataFrame, query: list[float], k: int = 10,
     dim = len(query)
     probes = multi_probe_buckets(query, _hyperplanes(n_planes, dim), n_probes)
     # one band of all n_planes planes: the sign-bit bucket id of each row
+    # (null for a null row or one of another width, which the filter drops)
     bucket = F.element_at(
         band_buckets_udf(1, n_planes, dim)(F.col("embedding")), 1)
     return _topk(emb.filter(bucket.isin(probes)), query, k)
@@ -177,19 +178,24 @@ def band_buckets_udf(bands: int = NEARDUP_DEMO_BANDS,
     One float64 matmul per Arrow batch against the deterministic hyperplane
     matrix — the whole multi-band signature costs one (n x dim) @ (dim x B*P)
     product, map-side, no shuffle. A plane's bit is set when the dot
-    product is >= 0; plane j of band b is weighted 1 << j."""
+    product is >= 0; plane j of band b is weighted 1 << j. A row that is
+    null or not `dim` wide has no bucket: its array is null."""
     mat = np.array(_hyperplanes(bands * planes_per_band, dim),
                    dtype=np.float64).T  # (dim, bands*planes_per_band)
     weights = (1 << np.arange(planes_per_band)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _buckets(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        bits = (m @ mat >= 0).astype(np.int64)          # (n, bands*ppb)
-        bk = bits.reshape(len(emb), bands, planes_per_band) @ weights
-        return pd.Series(list(bk.astype(np.int32)))
+        out = [None] * len(emb)
+        rows = [i for i, v in enumerate(emb) if v is not None and len(v) == dim]
+        if rows:
+            m = np.stack([np.asarray(emb.iat[i], dtype=np.float64)
+                          for i in rows])
+            bits = (m @ mat >= 0).astype(np.int64)      # (n, bands*ppb)
+            bk = bits.reshape(len(rows), bands, planes_per_band) @ weights
+            for i, b in zip(rows, bk.astype(np.int32)):
+                out[i] = b
+        return pd.Series(out, dtype=object)
 
     return _buckets
 

@@ -706,7 +706,8 @@ def test_ann_lsh_recall_floor(spark):
 def test_ann_lsh_scans_the_probed_buckets_any_width(spark):
     """lsh_bucketed_topk is the exact top-k over the rows whose sign-bit
     bucket (a numpy reference over planes as wide as the query) is probed,
-    also for embeddings narrower than EMB_DIM."""
+    also for embeddings narrower than EMB_DIM. A null embedding, or one not
+    as wide as the query, has no bucket and is not scanned."""
     from pyspark.sql import functions as F
 
     from glm_ocr_spark.operators.similarity import (
@@ -719,7 +720,8 @@ def test_ann_lsh_scans_the_probed_buckets_any_width(spark):
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(60, 3)).astype(np.float32).astype(np.float64)
     emb = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+        + [(60, None), (61, [1.0, 2.0, 3.0, 4.0])],
         "vec_id long, embedding array<float>")
     q = [0.3, -1.0, 0.5]
     planes = _hyperplanes(4, 3)
