@@ -70,7 +70,10 @@ def asof_join(left: DataFrame, right: DataFrame, on: str, by: str,
               suffix: str = "_right") -> DataFrame:
     """For every `left` row, attach the latest `right` row with
     right[on] <= left[on], matching on `by`. Rows with no prior right row
-    get nulls (left outer as-of).
+    get nulls (left outer as-of). A NULL `by` or `on` matches nothing, as
+    under SQL's `=` and `>=`: right rows holding one are dropped before
+    the union, where the window would otherwise group NULL keys together
+    and sort NULL `on` first, visible to every later left row.
 
     `on`: ordering column (e.g. ts); `by`: equi-key (e.g. user_id);
     `value_cols`: right columns to carry (default: all but on/by).
@@ -79,7 +82,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str, by: str,
         value_cols = [c for c in right.columns if c not in (on, by)]
 
     lhs = left.withColumn("_tag", F.lit(1))
-    rhs = right.select(
+    rhs = right.filter(F.col(by).isNotNull() & F.col(on).isNotNull()).select(
         F.col(by),
         F.col(on),
         F.lit(0).alias("_tag"),

@@ -14,9 +14,7 @@ Scale notes (100 TB / 10^12 turns):
   - No groupBy/join anywhere in the hot path: throughput scales linearly with
     executors; scaling efficiency is bounded only by input split balance.
   - Skew: a single 10^6-turn conversation is harmless because the unit of
-    parallelism is the *turn*, not the conversation. `repartition_salted` is
-    provided for writers that want conv_id-clustered output without hot
-    partitions (salt = turn_idx // block).
+    parallelism is the *turn*, not the conversation.
   - Arrow batches bound executor memory (spark.sql.execution.arrow.
     maxRecordsPerBatch); payloads never accumulate beyond one batch.
   - Filter/prune: reading from parquet/Iceberg, only the 5 input columns are
@@ -267,22 +265,6 @@ def conversation_rollup(extracted: DataFrame,
             ordered_join_col("blk", "md", "\n\n", keep=F.col("n_md") > 0)
             .alias("conversation_markdown"),
         )
-    )
-
-
-def repartition_salted(df: DataFrame, num_partitions: int,
-                       salt_block: int = 64) -> DataFrame:
-    """Repartition by (conv_id, turn_idx // salt_block).
-
-    Keeps a conversation's turns mostly co-located for clustered writes while
-    splitting pathological 10^5-turn conversations across partitions
-    (SURVEY.md §4 "skew handling"; reference has no analog — its skew story
-    is the 128-worker cap, pipeline.py:432).
-    """
-    return df.repartition(
-        num_partitions,
-        F.col("conv_id"),
-        (F.col("turn_idx") / F.lit(salt_block)).cast("long"),
     )
 
 

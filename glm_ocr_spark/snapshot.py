@@ -25,20 +25,14 @@ design relies on:
 
 At 10^12 rows the manifest is O(buckets) (thousands of entries), not
 O(files-per-bucket x history): each manifest carries the full current
-bucket map, copy-on-write from its parent. A production deployment swaps
-this module for real Iceberg without touching callers (the reference
-analogy: apps/backend task DB + portalocker, replaced here by CAS commits).
+bucket map, copy-on-write from its parent (the reference analogy:
+apps/backend task DB + portalocker, replaced here by CAS commits).
 
-Deployment constraint (stated, not hidden): the manifest CAS is
-``os.link``, which is atomic only on a POSIX filesystem — so the CATALOG
-(manifests) must live on a local/NFS-POSIX store, and concurrent writers
-are only safe against each other on that one store. Object stores (S3/GS)
-have no atomic create-if-absent link; real Iceberg solves this with a
-catalog service (Hive/REST/Glue) holding the pointer CAS, which is exactly
-what you swap in at deployment. DATA file listing/GC, by contrast, goes
-through ``pyarrow.fs`` and runs unchanged against s3:// / hdfs:// / gs://;
-manifests record data files as scheme-full URIs so ``read_output`` can
-hand them straight to ``spark.read.parquet`` on those stores too.
+The catalog is one local POSIX directory tree: manifests and data files
+both live under the root, because the CAS is ``os.link``, atomic only on
+a POSIX filesystem, and a URI root is refused. An object-store deployment
+swaps this module for Iceberg and its catalog service (Hive/REST/Glue),
+which holds the pointer CAS, without touching callers.
 """
 
 from __future__ import annotations
@@ -46,6 +40,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,8 +70,11 @@ def _check_bucketing(manifest: dict | None, n_buckets: int | None,
 
 class SnapshotStore:
     def __init__(self, root: str):
-        self.root = root
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
+        if "://" in root:
+            raise ValueError(f"snapshot catalog root must be a local "
+                             f"directory, not a URI: {root!r}")
+        self.root = os.path.abspath(root)
+        os.makedirs(os.path.join(self.root, "data"), exist_ok=True)
 
     # ------------------------------------------------------------ manifests
 
@@ -123,7 +121,14 @@ class SnapshotStore:
         `n_buckets` records the table's bucketing in the manifest (carried
         forward from the parent when None) so later writers can validate
         they hash keys with the same layout (`_check_bucketing`).
-        Retries on concurrent-commit collision (CAS loop)."""
+        Retries on concurrent-commit collision (CAS loop). A file path that
+        is a URI raises: it could never match the local listing, so expiry
+        would delete the file it names as an orphan."""
+        for entry in bucket_entries.values():
+            for p in entry["files"]:
+                if "://" in p:
+                    raise ValueError(f"snapshot data files must be local "
+                                     f"paths, not URIs: {p!r}")
         while True:
             cur = self.manifest()
             buckets = dict(cur["buckets"]) if cur else {}
@@ -214,82 +219,35 @@ class SnapshotStore:
         Readers of kept snapshots are unaffected — their file lists stay
         intact.
 
-        The data-file sweep goes through `pyarrow.fs` (like
-        `_staged_parquet_stats`), so the same GC runs against s3:// /
-        hdfs:// / gs:// data roots; only the manifest CAS itself is
-        POSIX-bound (module docstring)."""
-        import time as _time
-
-        from pyarrow import fs as pafs
-
+        One bottom-up walk of data/: a file goes unless a kept manifest
+        names it or it is younger than `min_orphan_age_sec`; each emptied
+        directory goes with `os.rmdir`, which refuses a directory that is
+        not empty, so a file a concurrent writer stages after the walk
+        listed its directory keeps that directory."""
         ids = self._manifest_ids()
         keep_ids = [i for i in ids if i >= keep_from]
         if not keep_ids:
             raise ValueError("expiry would drop every snapshot")
-        fs, data_root = _fs_and_path(os.path.join(self.root, "data"))
-        local = isinstance(fs, pafs.LocalFileSystem)
-        # Normalize manifest paths the same way the listing produces them:
-        # local roots list as absolute POSIX paths (abspath matches both
-        # the os.walk-era manifests and the pyarrow-era ones); non-local
-        # roots list scheme-less ("bucket/cat/data/…") while manifests now
-        # record scheme-FULL URIs ("s3://bucket/cat/data/…", so read_output
-        # can hand them to spark.read) — strip the scheme for the orphan
-        # compare (a no-op on older scheme-less manifests).
-        referenced: set[str] = set()
-        for sid in keep_ids:
-            referenced.update(
-                os.path.abspath(p) if local and "://" not in p
-                else (p.split("://", 1)[1] if "://" in p else p)
-                for p in self.output_files(sid))
-        now = _time.time()
+        referenced = {os.path.abspath(p) for sid in keep_ids
+                      for p in self.output_files(sid)}
+        cutoff = time.time() - min_orphan_age_sec
         removed_files = 0
-        sel = pafs.FileSelector(data_root, recursive=True,
-                                allow_not_found=True)
-        infos = fs.get_file_info(sel)
-        survivors: set[str] = set()
-        dirs: list[str] = []
-        for info in infos:
-            if info.type == pafs.FileType.Directory:
-                dirs.append(info.path)
-                continue
-            if info.type != pafs.FileType.File:
-                continue
-            p = info.path
-            if p in referenced:
-                survivors.add(p)
-                continue
-            if info.mtime_ns is not None:
-                age = now - info.mtime_ns / 1e9
-            else:
-                # unknown mtime: only deletable when the caller asked for
-                # no age protection at all — never assume "old enough"
-                # (the in-flight-writer guard must fail safe)
-                age = float("inf") if min_orphan_age_sec <= 0 else -1.0
-            if age < min_orphan_age_sec:
-                survivors.add(p)
-                continue
-            try:
-                fs.delete_file(p)
-                removed_files += 1
-            except OSError:
-                survivors.add(p)
-        # Drop staging dirs emptied by the sweep (deepest first so nested
-        # partition dirs fall before their parents). pyarrow delete_dir is
-        # RECURSIVE, so re-list each candidate immediately before deleting
-        # — a concurrent writer may have staged files after our snapshot
-        # listing, and blind delete_dir would destroy them (the age
-        # threshold protects files, this re-check protects the dir sweep).
-        for d in sorted(dirs, key=len, reverse=True):
-            if any(s.startswith(d + "/") for s in survivors):
-                continue
-            recheck = fs.get_file_info(
-                pafs.FileSelector(d, recursive=True, allow_not_found=True))
-            if any(i.type == pafs.FileType.File for i in recheck):
-                continue
-            try:
-                fs.delete_dir(d)
-            except OSError:
-                pass
+        data = os.path.join(self.root, "data")
+        for d, _subdirs, names in os.walk(data, topdown=False):
+            for n in names:
+                p = os.path.join(d, n)
+                try:
+                    if p in referenced or os.stat(p).st_mtime > cutoff:
+                        continue
+                    os.unlink(p)
+                    removed_files += 1
+                except OSError:
+                    pass
+            if d != data:
+                try:
+                    os.rmdir(d)
+                except OSError:
+                    pass  # still holds kept or freshly staged files
         removed_manifests = 0
         for i in ids:
             if i < keep_from:
@@ -312,49 +270,35 @@ class SnapshotStore:
         ]
 
 
-def _fs_and_path(path: str):
-    """(pyarrow filesystem, normalized path) — s3://, hdfs://, gs:// or
-    local. All data-file I/O in the snapshot store goes through it, so it
-    is object-store-capable; only the manifest CAS is POSIX-bound (module
-    docstring)."""
-    from pyarrow import fs as pafs
-
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), os.path.abspath(path)
-
-
 def _staged_parquet_stats(d: str) -> tuple[list[str], int, int]:
-    """(parquet files, rows from footers, bytes) for one staged write.
-
-    Footer-only reads via `pyarrow.fs` — no data re-scan, runs unchanged
-    against object storage. Manifest paths are recorded WITH the root's
-    filesystem scheme (``s3://bucket/...``): pyarrow listings come back
-    scheme-less, but `read_output` feeds manifest paths straight to
-    `spark.read.parquet`, which cannot resolve a scheme-less object-store
-    path (review finding) — so the scheme is re-prefixed at record time.
-    Local roots record plain absolute paths, as before."""
+    """(parquet files, rows from footers, bytes) for one staged write:
+    footer-only reads, no data re-scan. Paths are absolute."""
     import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
 
-    scheme = d.split("://", 1)[0] + "://" if "://" in d else ""
-    # Spark-on-Hadoop resolves object stores via s3a:// (s3:// and s3n://
-    # are the legacy EMR/retired connectors), while pyarrow accepts
-    # plain s3:// — normalize at record time so read_output can hand
-    # manifest paths straight to spark.read.parquet (round-5 advice).
-    scheme = {"s3://": "s3a://", "s3n://": "s3a://"}.get(scheme, scheme)
-    fs, base = _fs_and_path(d)
-    sel = pafs.FileSelector(base, recursive=True, allow_not_found=True)
-    files, rows, total = [], 0, 0
-    for info in fs.get_file_info(sel):
-        if info.type != pafs.FileType.File:
-            continue
-        total += info.size or 0
-        if info.path.endswith(".parquet"):
-            files.append(scheme + info.path)
-            with fs.open_input_file(info.path) as f:
-                rows += pq.ParquetFile(f).metadata.num_rows
-    return sorted(files), rows, total
+    files, total = [], 0
+    for dirpath, _subdirs, names in os.walk(os.path.abspath(d)):
+        for n in names:
+            p = os.path.join(dirpath, n)
+            total += os.path.getsize(p)
+            if n.endswith(".parquet"):
+                files.append(p)
+    files.sort()
+    return files, sum(pq.read_metadata(p).num_rows for p in files), total
+
+
+def _stage(store: SnapshotStore, df: DataFrame,
+           buckets: list[int]) -> dict[int, dict]:
+    """Write `df` partitionBy("bucket") into a fresh staging dir (invisible
+    until committed) and return the manifest entry of each bucket in
+    `buckets`, with rows and bytes read from the parquet footers."""
+    staged = store.staging_dir()
+    df.write.mode("overwrite").partitionBy("bucket").parquet(staged)
+    entries = {}
+    for b in buckets:
+        files, rows, nbytes = _staged_parquet_stats(
+            os.path.join(staged, f"bucket={b}"))
+        entries[b] = {"files": files, "rows_out": rows, "bytes_out": nbytes}
+    return entries
 
 
 def run_with_snapshots(
@@ -393,16 +337,8 @@ def run_with_snapshots(
     for i in range(0, len(pending), chunk):
         batch = pending[i:i + chunk]
         part = src.filter(F.col("bucket").isin(batch))
-        staged = store.staging_dir()
-        (extract_transcripts(part, passthrough=("bucket",), mode=mode,
-                             config=config)
-         .write.mode("overwrite").partitionBy("bucket").parquet(staged))
-        entries = {}
-        for b in batch:
-            bdir = os.path.join(staged, f"bucket={b}")
-            files, rows, nbytes = _staged_parquet_stats(bdir)
-            entries[b] = {"files": files, "rows_out": rows,
-                          "bytes_out": nbytes}
+        entries = _stage(store, extract_transcripts(
+            part, passthrough=("bucket",), mode=mode, config=config), batch)
         store.commit(entries, input_snapshot, n_buckets=n_buckets)
         commits += 1
         processed += len(batch)
@@ -500,21 +436,15 @@ def merge_upsert(
     else:
         merged = upd
 
-    staged = store.staging_dir()
-    (merged.write.mode("overwrite").partitionBy("bucket").parquet(staged))
-    entries = {}
-    rows_total = 0
-    for b in touched:
-        bdir = os.path.join(staged, f"bucket={b}")
-        files, rows, nbytes = _staged_parquet_stats(bdir)
-        if not files:
+    entries = _stage(store, merged, touched)
+    for b, e in entries.items():
+        if not e["files"]:
             # defensive: committing files=[] for a touched bucket would
             # erase its pre-merge rows; fail loudly instead
             raise RuntimeError(
                 f"merge staged no files for touched bucket {b} — "
                 "refusing to commit an empty bucket entry")
-        entries[b] = {"files": files, "rows_out": rows, "bytes_out": nbytes}
-        rows_total += rows
     sid = store.commit(entries, input_snapshot, n_buckets=n_buckets)
-    return {"touched_buckets": touched, "rows_out": rows_total,
+    return {"touched_buckets": touched,
+            "rows_out": sum(e["rows_out"] for e in entries.values()),
             "snapshot_id": sid}

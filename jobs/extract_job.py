@@ -41,7 +41,8 @@ def main() -> None:
     out = ap.add_mutually_exclusive_group(required=True)
     out.add_argument("--output", help="single-shot output dir")
     out.add_argument("--snapshot-catalog",
-                     help="checkpointed snapshot catalog root (snapshot.py)")
+                     help="checkpointed snapshot catalog root, a local "
+                          "directory (snapshot.py)")
     ap.add_argument("--buckets", type=int, default=256)
     ap.add_argument("--snapshot", default="v1")
     ap.add_argument("--format", default="parquet")

@@ -5,34 +5,6 @@ SURVEY.md §7.3.4)."""
 from pyspark.sql import functions as F
 
 from glm_ocr_spark.data.gen import transcripts_df
-from glm_ocr_spark.pipeline import extract_transcripts, repartition_salted
-
-
-def test_salted_repartition_spreads_hot_conversation(spark):
-    # one conversation with 2000 turns + a few small ones
-    hot = spark.range(2000).select(
-        F.lit("hot").alias("conv_id"),
-        F.col("id").cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.concat(F.lit("<p>turn "), F.col("id"), F.lit("</p>")).alias("text"),
-        F.lit("").alias("tool"),
-        F.current_timestamp().alias("ts"),
-    )
-    salted = repartition_salted(hot, num_partitions=8, salt_block=64)
-    sizes = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid").count().collect()
-    )
-    non_empty = [r["count"] for r in sizes if r["count"] > 0]
-    # 2000 turns / salt_block 64 = ~32 salt groups over 8 partitions: the hot
-    # conversation must not pin a single partition
-    assert len(non_empty) >= 4
-    assert max(non_empty) < 2000
-
-    # extraction over the salted layout stays correct and complete
-    out = extract_transcripts(salted)
-    assert out.count() == 2000
-    assert out.filter("extracted_text LIKE 'turn %'").count() == 2000
 
 
 def test_salted_rollup_on_100k_turn_conversation(spark):

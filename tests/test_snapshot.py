@@ -370,7 +370,7 @@ def test_merge_upsert_validates_bucketing(spark, small_transcripts, tmp_path):
 def test_expire_respects_orphan_age(spark, small_transcripts, tmp_path):
     """A freshly staged (uncommitted) file must survive GC when it is
     younger than min_orphan_age_sec — the protection for an in-flight
-    concurrent writer (age read via pyarrow.fs mtime)."""
+    concurrent writer (age read via os.stat mtime)."""
     root = str(tmp_path / "cat")
     run_with_snapshots(spark, small_transcripts, root, n_buckets=4)
     store = SnapshotStore(root)
@@ -387,57 +387,51 @@ def test_expire_respects_orphan_age(spark, small_transcripts, tmp_path):
     assert res2["removed_files"] >= 1
 
 
-def test_staged_stats_records_scheme_full_uris(spark, tmp_path):
-    """ADVICE r4: for object-store roots the manifest used to record
-    pyarrow's scheme-less listing paths, which spark.read.parquet cannot
-    resolve — read_output broke on exactly the roots the docstring claimed
-    to support. Paths must now be recorded WITH the root's scheme.
-    `file://` exercises the same code path as s3://gs://hdfs:// (the
-    "://" branch of _fs_and_path) while staying runnable in this sandbox.
-    """
-    import pyspark.sql.functions as F
-
-    from glm_ocr_spark.snapshot import _staged_parquet_stats
-
-    d = str(tmp_path / "staged")
-    spark.range(7).select(F.col("id")).write.parquet(d)
-
-    files, rows, nbytes = _staged_parquet_stats(f"file://{d}")
-    assert rows == 7 and nbytes > 0 and files
-    assert all(p.startswith("file:///") for p in files)
-    # the recorded paths must be directly consumable by spark.read
-    assert spark.read.parquet(*files).count() == 7
-
-    # local (scheme-less) roots keep recording plain absolute paths
-    lfiles, lrows, _ = _staged_parquet_stats(d)
-    assert lrows == 7
-    assert all(p.startswith("/") and "://" not in p for p in lfiles)
+def test_uri_root_refused(tmp_path, monkeypatch):
+    """Manifests and data share one local tree: a URI root would put the
+    manifests under a cwd-relative "file:" directory while Spark wrote the
+    data to the URI's path. It must raise before creating anything; a
+    relative local root is stored (and its paths recorded) absolute."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="not a URI"):
+        SnapshotStore(f"file://{tmp_path}/cat")
+    assert not os.path.exists(tmp_path / "file:")
+    assert not os.path.exists(tmp_path / "cat")
+    store = SnapshotStore("cat")
+    assert store.root == str(tmp_path / "cat")
+    assert store.staging_dir().startswith(str(tmp_path / "cat" / "data"))
 
 
-def test_expire_keeps_files_referenced_by_scheme_full_manifests(
-        spark, small_transcripts, tmp_path):
-    """GC must not treat scheme-full manifest paths as orphans: the orphan
-    compare strips the scheme before matching pyarrow's scheme-less
-    listing output."""
-    import pyspark.sql.functions as F
+def test_commit_refuses_uri_paths(tmp_path):
+    """A URI file path could never match expiry's local listing, so GC
+    would delete the file it names as an orphan; commit refuses it and
+    publishes nothing."""
+    store = SnapshotStore(str(tmp_path / "cat"))
+    with pytest.raises(ValueError, match="not URIs"):
+        store.commit({0: {"files": [f"file://{tmp_path}/a.parquet"],
+                          "rows_out": 1, "bytes_out": 1}})
+    assert store.current_id() is None
 
-    from glm_ocr_spark.snapshot import _staged_parquet_stats
 
-    root = str(tmp_path / "cat")
-    store = SnapshotStore(root)
-    staged = store.staging_dir()
-    small_transcripts.limit(10).withColumn("bucket", F.lit(0)) \
-        .write.mode("overwrite").partitionBy("bucket").parquet(staged)
-    files, rows, nbytes = _staged_parquet_stats(
-        f"file://{staged}/bucket=0")
-    assert all(p.startswith("file://") for p in files)
-    store.commit({0: {"files": files, "rows_out": rows,
-                      "bytes_out": nbytes}})
-    res = store.expire_snapshots(keep_from=0)
-    # _SUCCESS / .crc sidecars are legitimately swept as orphans; what must
-    # survive is every manifest-referenced parquet file
-    import os as _os
-    for p in files:
-        assert _os.path.exists(p[len("file://"):]), p
-    assert res["kept_snapshots"] == [0]
-    assert store.read_output(spark).count() == 10
+def test_expire_walk_removes_only_emptied_dirs(tmp_path):
+    """GC without Spark: an old orphan and its emptied staging dirs go; a
+    referenced file, a young orphan, their dirs and data/ itself stay."""
+    store = SnapshotStore(str(tmp_path / "cat"))
+
+    def staged_file(name):
+        d = os.path.join(store.staging_dir(), "bucket=0")
+        os.makedirs(d)
+        p = os.path.join(d, name)
+        with open(p, "wb") as f:
+            f.write(b"x")
+        return p
+
+    kept, old, young = (staged_file(n) for n in
+                        ("kept.parquet", "old.parquet", "young.parquet"))
+    store.commit({0: {"files": [kept], "rows_out": 1, "bytes_out": 1}})
+    os.utime(old, (0, 0))
+    res = store.expire_snapshots(keep_from=0, min_orphan_age_sec=3600)
+    assert res["removed_files"] == 1
+    assert os.path.exists(kept) and os.path.exists(young)
+    assert not os.path.exists(os.path.dirname(os.path.dirname(old)))
+    assert os.path.isdir(os.path.join(store.root, "data"))
